@@ -496,11 +496,12 @@ object Graft {
     * sampled spherical k-means over the input).
     * Input: (vec_id, embedding: array<float|double>).
     *
-    * NOTE this call is EAGER: the codebook fit runs at call time (a
-    * count + init + [[operators.IvfCodebook.Iters]] Lloyd passes over a
-    * ≤[[operators.IvfCodebook.SampleTarget]]-row sample, persisted inside
-    * the fit so upstream plans execute once — pass a cheap/cached
-    * `embeddings` plan anyway if calling repeatedly). */
+    * NOTE this call is EAGER: the codebook fit runs at call time — two
+    * Spark jobs over `embeddings` (a count, then one collect of a
+    * ≤[[operators.IvfCodebook.SampleTarget]]-row sample), then init and
+    * [[operators.IvfCodebook.Iters]] Lloyd iterations on the driver. Pass
+    * a cheap/cached `embeddings` plan if calling repeatedly: the fit and
+    * the returned pairs each execute it. */
   def embedNearDupIvf(spark: SparkSession, embeddings: DataFrame, threshold: Double,
                       nlist: Int = 16, nprobe: Int = 2): DataFrame = {
     // Cosine near-dup thresholds live in (0, 1]; nprobe = 0 probes no

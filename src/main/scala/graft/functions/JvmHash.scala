@@ -11,12 +11,12 @@ import java.security.MessageDigest
 object JvmHash {
   val P: Long = PortableHash.P
 
+  private val md5 = ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+
   /** First 15 hex chars of md5(s) parsed as a long (= PortableHash.h60). */
   def h60(s: String): Long = {
-    // Thread-local would avoid per-call getInstance; MessageDigest.getInstance
-    // is cheap enough (no contention) for current volumes.
-    val md = MessageDigest.getInstance("MD5")
-    val dig = md.digest(s.getBytes(StandardCharsets.UTF_8))
+    // digest() resets the instance, so one per thread serves every call.
+    val dig = md5.get().digest(s.getBytes(StandardCharsets.UTF_8))
     // 15 hex chars = 60 bits = first 7 bytes + high nibble of byte 8.
     var v = 0L
     var i = 0
@@ -28,10 +28,12 @@ object JvmHash {
   def h60p(s: String): Long = h60(s) % P
 
   /** Seeded universal hash (= PortableHash.seeded). */
-  def seeded(hModP: Long, seed: Int): Long = {
-    val a = (2654435761L * (seed + 1)) % P
-    val b = (40503L * (seed + 7)) % P
-    (a * hModP + b) % P
-  }
+  def seeded(hModP: Long, seed: Int): Long =
+    (seedA(seed) * hModP + seedB(seed)) % P
+
+  /** The (a, b) coefficients of [[seeded]] for `seed` — hoistable out of
+    * a per-shingle loop. */
+  def seedA(seed: Int): Long = (2654435761L * (seed + 1)) % P
+  def seedB(seed: Int): Long = (40503L * (seed + 7)) % P
 
 }

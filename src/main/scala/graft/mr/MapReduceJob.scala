@@ -130,6 +130,21 @@ object MapReduceJob {
     if (sortedByKey) reduced.orderBy("_1") else reduced
   }
 
+  // The AQE-off child of each caller session, held weakly: a child does
+  // not reference its parent, so a dropped caller session frees its
+  // entry. A fresh child per job would make every job generate and
+  // compile its whole-stage code again instead of hitting Spark's
+  // codegen cache.
+  private val children = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  private def childOf(spark: SparkSession): SparkSession =
+    children.computeIfAbsent(spark, parent => {
+      val child = parent.newSession()
+      child.conf.set("spark.sql.adaptive.enabled", "false")
+      child
+    })
+
   /** Asynchronous start (≡ startMapReduceJob): returns immediately with a
     * handle exposing progress and join.
     *
@@ -138,6 +153,7 @@ object MapReduceJob {
     * job, which breaks the stageId-based MAP/SHUFFLE/REDUCE attribution.
     * Scoping the conf to the child session means the caller's session — and
     * any concurrent handle — keeps AQE untouched (no save/restore race).
+    * Every job of one caller session shares one child ([[childOf]]).
     * The input dataset is carried across via its RDD lineage (RDDs are
     * SparkContext-level, session-agnostic); the input subtree itself still
     * executes under the plan it was built with. */
@@ -148,8 +164,7 @@ object MapReduceJob {
       sortedByKey: Boolean = false)(
       implicit e1: Encoder[(K1, V1)], e2: Encoder[(K2, V2)], ek2: Encoder[K2],
       e3: Encoder[(K3, V3)]): MapReduceJobHandle[K3, V3] = {
-    val exec = spark.newSession()
-    exec.conf.set("spark.sql.adaptive.enabled", "false")
+    val exec = childOf(spark)
     // The plan is built LAZILY inside the handle's runner thread (after
     // setJobGroup): input.rdd on the caller's thread would — under the
     // parent session's AQE — materialize the input's shuffle stages

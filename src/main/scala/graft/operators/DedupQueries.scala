@@ -5,6 +5,7 @@ import graft.Portable.round6
 import graft.functions.PortableHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for LLM-data pipelines (north star, BASELINE.json):
   * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -54,46 +55,54 @@ object DedupQueries extends QueryPack {
     docs
       .select("doc_id", "text").as[(Long, String)]
       .flatMap { case (id, text) =>
-        val t = if (text == null) Array.empty[String] else text.split(" ", -1)
-        if (t.length < 3) Iterator.empty
-        else {
-          // LinkedHashSet: dedup while keeping first-occurrence order
-          // (order is irrelevant to callers — all joins/aggs — but
-          // determinism helps debugging).
-          val set = new scala.collection.mutable.LinkedHashSet[String]
-          var i = 0
-          while (i <= t.length - 3) {
-            set.add(t(i) + " " + t(i + 1) + " " + t(i + 2)); i += 1
-          }
-          val n = set.size
-          set.iterator.map(sh => (id, n, sh))
-        }
+        val set = shingleSet(text)
+        val n = set.size
+        set.asScala.iterator.map(sh => (id, n, sh))
       }
       .toDF(idName, nName, shName)
   }
 
   /** True Jaccard over candidate pairs (da, db) — the verify step for the
-    * minhash LSH candidates. The corpus is semi-join-filtered to candidate
-    * docs BEFORE shingling, so verify cost scales with candidates, not
-    * corpus size (the property that matters at 100 TB). The candidate
-    * subtree is evaluated three times (pairs + two id sets) — it is a
-    * cheap shuffle-free map over signatures, and re-evaluation beats a
-    * persist() cache boundary here (measured: caching broke AQE plan
-    * reuse and cost more than it saved). AQE broadcasts the semi joins
-    * when the candidate id set is small (the normal case). */
+    * minhash LSH candidates. Each pair is joined to both documents' text
+    * by id, and ONE typed map per pair shingles both sides and counts the
+    * shared shingles: (da, db, na, nb, i, jac) with na, nb the distinct
+    * word 3-gram counts ([[shingleFrameOf]]'s shingles) and i the
+    * intersection. A pair with no shared shingle, or with a side under 3
+    * tokens, emits nothing. Verify cost scales with candidates, not
+    * corpus size (the property that matters at 100 TB), and the plan is
+    * two id joins — no shingle rows, no join on the shingle string. */
   def jaccardOfDocs(s: SparkSession, docs: DataFrame, cand: DataFrame): DataFrame = {
-    val candA = cand.select(col("da").as("doc_id")).distinct()
-    val candB = cand.select(col("db").as("doc_id")).distinct()
-    val docsA = docs.join(candA, Seq("doc_id"), "left_semi")
-    val docsB = docs.join(candB, Seq("doc_id"), "left_semi")
-    val shA = shingleFrameOf(s, docsA, "da", "sh_a", "na")
-    val shB = shingleFrameOf(s, docsB, "db2", "sh_b", "nb")
-    cand
-      .join(shA, "da")
-      .join(shB, col("db") === col("db2") && col("sh_a") === col("sh_b"))
-      .groupBy("da", "db", "na", "nb")
-      .agg(count(lit(1)).as("i"))
+    import s.implicits._
+    val text = docs.select(col("doc_id"), col("text"))
+    cand.select(col("da"), col("db"))
+      .join(text.select(col("doc_id").as("da"), col("text").as("ta")), "da")
+      .join(text.select(col("doc_id").as("db"), col("text").as("tb")), "db")
+      .select(col("da").cast("long"), col("db").cast("long"), col("ta"), col("tb"))
+      .as[(Long, Long, String, String)]
+      .flatMap { case (da, db, ta, tb) =>
+        val a = shingleSet(ta); val b = shingleSet(tb)
+        val (small, big) = if (a.size <= b.size) (a, b) else (b, a)
+        var i = 0L
+        val it = small.iterator()
+        while (it.hasNext) if (big.contains(it.next())) i += 1
+        if (i == 0) Iterator.empty
+        else Iterator.single((da, db, a.size, b.size, i))
+      }
+      .toDF("da", "db", "na", "nb", "i")
       .withColumn("jac", col("i") / (col("na") + col("nb") - col("i")))
+  }
+
+  /** The distinct word 3-gram shingles of `text`, empty under 3 tokens.
+    * Insertion-ordered: order is irrelevant to callers (all joins, aggs
+    * and set tests), but determinism helps debugging. */
+  private def shingleSet(text: String): java.util.LinkedHashSet[String] = {
+    val t = if (text == null) Array.empty[String] else text.split(" ", -1)
+    val set = new java.util.LinkedHashSet[String](math.max(16, t.length * 2))
+    var i = 0
+    while (i <= t.length - 3) {
+      set.add(t(i) + " " + t(i + 1) + " " + t(i + 2)); i += 1
+    }
+    set
   }
 
   /** Prefix-filtered exact Jaccard ≥ 0.5 pairs over ANY (doc_id, text)
@@ -233,6 +242,9 @@ object DedupQueries extends QueryPack {
     * expressions). */
   def minhashBandsOf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
+    // JvmHash.seeded with its 32 (a_k, b_k) hoisted out of the shingle loop.
+    val ca = Array.tabulate(32)(graft.functions.JvmHash.seedA)
+    val cb = Array.tabulate(32)(graft.functions.JvmHash.seedB)
     docs.select("doc_id", "text").as[(Long, String)]
       .flatMap { case (id, text) =>
         val t = if (text == null) Array.empty[String] else text.split(" ", -1)
@@ -247,7 +259,7 @@ object DedupQueries extends QueryPack {
               val h0m = graft.functions.JvmHash.h60p(sh)
               var k = 0
               while (k < 32) {
-                val hv = graft.functions.JvmHash.seeded(h0m, k)
+                val hv = (ca(k) * h0m + cb(k)) % P
                 if (hv < mins(k)) mins(k) = hv
                 k += 1
               }
@@ -290,10 +302,9 @@ object DedupQueries extends QueryPack {
       .select(col("p.da"), col("p.db"))
       .distinct()
 
-  /** Min-label propagation over the near-dup pair graph → (id, lbl) with
-    * lbl = component minimum. Pregel-style: O(diameter) rounds, each
-    * localCheckpoint()ed to truncate lineage; the driver only inspects a
-    * convergence COUNT per round. */
+  /** Connected components of the near-dup pair graph → (id, lbl) with
+    * lbl = component minimum ([[componentLabelsFromPairs]]: per-partition
+    * union-find contraction, min-label propagation only as a fallback). */
   def componentLabels(s: SparkSession, d: String): DataFrame = {
     // NOT computeIfAbsent: the computation itself consults the same map
     // (via minhashPairs), and ConcurrentHashMap forbids recursive updates
@@ -316,17 +327,95 @@ object DedupQueries extends QueryPack {
     componentLabelsFromPairs(
       minhashPairsOf(s, docs, threshold).select("da", "db").localCheckpoint(eager = false))
 
-  /** Min-label propagation over a precomputed (da, db) pair frame. */
+  /** Connected components of a precomputed (da, db) pair frame → (id,
+    * lbl) with lbl = component minimum, by local contraction first
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014):
+    *  - each partition runs a union-find over its own edges and maps
+    *    every id it holds to its LOCAL component minimum (the root);
+    *  - ONE aggregate checks whether any id got two different roots. If
+    *    none did, the roots are the answer: every edge lies inside one
+    *    partition's component, so the root is constant on each global
+    *    component, and the global minimum is its own root;
+    *  - otherwise min-label propagation ([[propagateLabels]]) runs over
+    *    the contracted star edges (id — root), seeded with each id's
+    *    minimum root — same components, far shorter paths.
+    * The contraction-only case is one Spark action (the count); the
+    * fallback adds one per propagation round. Memory per task is O(ids in the
+    * partition). Output column types follow the input's. */
   private[operators] def componentLabelsFromPairs(pairs: DataFrame): DataFrame = {
+    val idType = pairs.schema("da").dataType
+    val s = pairs.sparkSession
+    import s.implicits._
+    // Lazy checkpoints: both are materialized by the count below, then
+    // read by the answer (or the fallback) without recomputing.
+    val roots = pairs.select(col("da").cast("long"), col("db").cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions(localRoots)
+      .toDF("id", "root")
+      .localCheckpoint(eager = false)
+    val byId = roots.groupBy("id")
+      .agg(min("root").as("lbl"), max("root").as("hi"))
+      .localCheckpoint(eager = false)
+    val split = byId.filter(col("lbl") =!= col("hi")).count()
+    val labels =
+      if (split == 0) byId.select(col("id"), col("lbl"))
+      else {
+        val star = roots.filter(col("id") =!= col("root"))
+          .select(col("id").as("src"), col("root").as("dst"))
+        propagateLabels(star.union(star.select(col("dst"), col("src"))),
+          byId.select(col("id"), col("lbl")))
+      }
+    labels.select(col("id").cast(idType), col("lbl").cast(idType))
+  }
+
+  /** One partition's union-find over its (da, db) edges: every id it
+    * holds, paired with the minimum id of its local component. */
+  private def localRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val index = new LongIndex
+    var parent = new Array[Int](64)
+    var minId = new Array[Long](64)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x // path compression
+      while (parent(y) != r) { val nx = parent(y); parent(y) = r; y = nx }
+      r
+    }
+    def node(id: Long): Int = {
+      val n = index.size
+      val i = index.getOrAdd(id)
+      if (i == n) {
+        if (i == parent.length) {
+          parent = java.util.Arrays.copyOf(parent, i * 2)
+          minId = java.util.Arrays.copyOf(minId, i * 2)
+        }
+        parent(i) = i; minId(i) = id
+      }
+      i
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(node(a)); val rb = find(node(b))
+      if (ra != rb) {
+        parent(rb) = ra
+        minId(ra) = math.min(minId(ra), minId(rb))
+      }
+    }
+    Iterator.range(0, index.size).map(i => (index.key(i), minId(find(i))))
+  }
+
+  /** Min-label propagation over a symmetric (src, dst) edge frame from
+    * seed labels (id, lbl) — every id of the graph, each seeded with an
+    * id of its own component. Pregel-style: each round localCheckpoint()ed
+    * to truncate lineage; the driver only inspects a convergence COUNT
+    * per round. */
+  private def propagateLabels(edges: DataFrame, seed: DataFrame): DataFrame = {
       // All checkpoints are LAZY (eager = false): each is materialized by
       // the round's single convergence count() instead of its own eager
       // job, so a round costs ONE Spark job, not three. Lineage truncation
       // is identical — the RDD is cached on first computation, and shared
       // plan branches reference the same RDD node (computed once).
-      val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
-        .union(pairs.select(col("db").as("src"), col("da").as("dst")))
-      var labels = pairs.select(col("da").as("id")).union(pairs.select(col("db").as("id")))
-        .distinct().withColumn("lbl", col("id")).localCheckpoint(eager = false)
+      var labels = seed
       var changed = 1L
       var rounds = 0
       while (changed > 0 && rounds < 25) {
@@ -355,6 +444,49 @@ object DedupQueries extends QueryPack {
       require(changed == 0,
         s"componentLabels did not converge in $rounds rounds — graph diameter > 2^25?")
       labels
+  }
+
+  /** Open-addressing long → dense index map (0, 1, 2, … in insertion
+    * order) on primitive arrays: the union-find's node table, without a
+    * boxed key per edge endpoint. */
+  private final class LongIndex {
+    private var keys = new Array[Long](128)
+    private var slots = Array.fill(128)(-1) // dense index, -1 = empty
+    private var order = new Array[Long](64) // dense index → key
+    var size = 0
+
+    def key(i: Int): Long = order(i)
+
+    def getOrAdd(k: Long): Int = {
+      var p = slot(k)
+      if (slots(p) >= 0) slots(p)
+      else {
+        if (size * 2 >= slots.length) { grow(); p = slot(k) }
+        if (size == order.length) order = java.util.Arrays.copyOf(order, size * 2)
+        keys(p) = k; slots(p) = size; order(size) = k
+        size += 1
+        size - 1
+      }
+    }
+
+    private def slot(k: Long): Int = {
+      val mask = slots.length - 1
+      var p = (java.lang.Long.hashCode(k * 0x9E3779B97F4A7C15L)) & mask
+      while (slots(p) >= 0 && keys(p) != k) p = (p + 1) & mask
+      p
+    }
+
+    private def grow(): Unit = {
+      val n = slots.length * 2
+      keys = new Array[Long](n)
+      slots = Array.fill(n)(-1)
+      var i = 0
+      while (i < size) {
+        val p = slot(order(i))
+        keys(p) = order(i); slots(p) = i
+        i += 1
+      }
+    }
   }
 
   // Derived-index cache: the LSH pair set and the component labels over a
@@ -458,12 +590,9 @@ object DedupQueries extends QueryPack {
       s"near-dup threshold must be in (0, 1], got $threshold")
     require(maxBucket >= 2,
       s"maxBucket below 2 can never emit a pair, got $maxBucket")
-    // NOT checkpointed, reconfirmed r22: a lazy cut on cand here measured
-    // within noise and slightly worse (Lab medians 1.11 → 1.16 s on
-    // dedup_minhash_capped) — the scaladoc's re-evaluation-beats-caching
-    // claim holds for signature-derived candidates, unlike the
-    // incremental-neardup twins whose cand carries a corpus×batch join +
-    // distinct per evaluation.
+    // NOT checkpointed: the verify reads `cand` once (and a lazy cut here
+    // measured within noise even when it read it three times, r22 Lab
+    // medians 1.11 → 1.16 s on dedup_minhash_capped).
     val cand = bucketPairs(minhashBandsOf(s, docs), Seq("band", "bkey"), maxBucket)
     jaccardOfDocs(s, docs, cand).filter(col("jac") >= threshold)
   }
@@ -1088,12 +1217,12 @@ object DedupQueries extends QueryPack {
         .join(minhashBandsOf(s, batch).as("b"), Seq("band", "bkey"))
         .select(col("c.doc_id").as("da"), col("b.doc_id").as("db"))
         .distinct()
-        // Lazy checkpoint: jaccardOfDocs reads `cand` three times (pairs
-        // + both semi-join id sets); unlike the LSH twins' cheap
-        // signature-map candidates, THIS candidate subtree carries a
-        // corpus-band compute/index read, a join and a distinct exchange
-        // per evaluation — materializing it once measured ~20% off the
-        // derived-frame twin, ~4% off the indexed one (OPTIMIZATION_r22.md).
+        // Lazy checkpoint: unlike the LSH twins' cheap signature-map
+        // candidates, THIS candidate subtree carries a corpus-band
+        // compute/index read, a join and a distinct exchange. The cut
+        // measured ~20% (derived) / ~4% (indexed) when the verify read
+        // `cand` three times (OPTIMIZATION_r22.md); the per-pair verify
+        // reads it once, and the cut is not re-measured since.
         .localCheckpoint(eager = false)
       jaccardOfDocs(s, docs.unionByName(batch), cand)
         .filter(col("jac") >= 0.7)
@@ -1120,12 +1249,12 @@ object DedupQueries extends QueryPack {
         .join(minhashBandsOf(s, batch).as("b"), Seq("band", "bkey"))
         .select(col("c.doc_id").as("da"), col("b.doc_id").as("db"))
         .distinct()
-        // Lazy checkpoint: jaccardOfDocs reads `cand` three times (pairs
-        // + both semi-join id sets); unlike the LSH twins' cheap
-        // signature-map candidates, THIS candidate subtree carries a
-        // corpus-band compute/index read, a join and a distinct exchange
-        // per evaluation — materializing it once measured ~20% off the
-        // derived-frame twin, ~4% off the indexed one (OPTIMIZATION_r22.md).
+        // Lazy checkpoint: unlike the LSH twins' cheap signature-map
+        // candidates, THIS candidate subtree carries a corpus-band
+        // compute/index read, a join and a distinct exchange. The cut
+        // measured ~20% (derived) / ~4% (indexed) when the verify read
+        // `cand` three times (OPTIMIZATION_r22.md); the per-pair verify
+        // reads it once, and the cut is not re-measured since.
         .localCheckpoint(eager = false)
       jaccardOfDocs(s, docs.unionByName(batch), cand)
         .filter(col("jac") >= 0.7)
@@ -1202,11 +1331,11 @@ object DedupQueries extends QueryPack {
 
     // Connected components over the near-dup pairs — the cluster-
     // canonicalization step a real dedup pipeline runs after LSH (keep one
-    // doc per component). Pregel-style min-label propagation: O(diameter)
-    // rounds of join+min, each round localCheckpoint()ed to truncate
-    // lineage (the standard iterative-Spark pattern; at scale this is
-    // exactly large-star/small-star with per-round materialization).
-    // Driver only checks a converged COUNT per round — no data collects.
+    // doc per component). componentLabelsFromPairs: a union-find per
+    // partition contracts the graph, one aggregate checks that every id
+    // got a single root, and only if not does min-label propagation run
+    // over the contracted star edges, each round localCheckpoint()ed.
+    // Driver only reads COUNTs — no data collects.
     "dedup_components" -> ((s, d) => {
       val labels = componentLabels(s, d)
       val sizes = labels.groupBy("lbl").agg(count(lit(1)).cast("int").as("cluster_size"))
@@ -1639,8 +1768,8 @@ object DedupQueries extends QueryPack {
     // verbatim: cluster the embeddings (the shared IVF k-means
     // assignment, strictly one cell each — the paper blocks by cluster),
     // connect within-cluster pairs above the cosine threshold into
-    // semantic-duplicate GROUPS (connected components — pointer-jumping
-    // min-label, the dedup_components machinery over the new pair set),
+    // semantic-duplicate GROUPS (connected components — the
+    // dedup_components machinery over the new pair set),
     // and keep ONE representative per group: the member LEAST similar
     // to its centroid (the paper's diversity-keeping rule; round6'd
     // cosine + vec_id as the deterministic total order). Per-cluster

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Stage, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Learned IVF codebook: deterministic sampled spherical k-means.
   *
@@ -15,12 +16,14 @@ import org.apache.spark.sql.functions._
   *  - The k-means input is a HASH-SAMPLED subset capped at [[SampleTarget]]
   *    rows (deterministic Bernoulli on xxhash64(vec_id) — no sort, no
   *    collect of the corpus). At 100 TB the sample is the only thing the
-  *    fit ever scans twice.
-  *  - Each Lloyd iteration is one pass over the sample: broadcast the k
-  *    current centroids, argmax cosine per vector via max(struct) (map-side
-  *    partial agg — ships one candidate per vector per partition), then a
-  *    (cid, dim) grouped sum — k×64 rows collected to the driver, never
-  *    the data.
+  *    fit ever reads past the sizing count.
+  *  - The fit is two Spark jobs whatever the iteration count: the count
+  *    that sizes the sample, then one collect of the sample (≤ 100k
+  *    64-dim vectors ≈ 50 MB). Init and every Lloyd iteration run on the
+  *    driver, split over its cores in fixed chunks — a per-iteration
+  *    Spark pass over a few thousand rows was all fixed cost (planning,
+  *    codegen, scheduling), and the driver's work is bounded by
+  *    SampleTarget·k·dim·[[Iters]] whatever the corpus size.
   *  - The fitted codebook (k rows) is staged to parquet and read back, so
   *    every consumer — the Spark assignment AND the DuckDB oracle CTE —
   *    reads the IDENTICAL bytes. Cross-engine equality is by construction,
@@ -30,8 +33,8 @@ import org.apache.spark.sql.functions._
   * Determinism: init picks the k sample vectors with the smallest
   * xxhash64(vec_id) (a seeded pseudo-random draw with no RNG state);
   * every updated centroid component is rounded to 6 dp before the next
-  * iteration, which collapses the last-ulp differences a shuffled
-  * double-sum can produce, so repeated fits are bit-stable. An empty
+  * iteration, which collapses the last-ulp differences a different
+  * summation order can produce, so repeated fits are bit-stable. An empty
   * cluster keeps its previous centroid (no resampling — resampling would
   * reintroduce order dependence).
   *
@@ -47,7 +50,7 @@ object IvfCodebook {
   val K = 16
 
   /** Lloyd iterations: 5 is past the knee on every fixture (assignment
-    * churn is ~0 by iteration 4) and keeps the fit at 5 sample passes. */
+    * churn is ~0 by iteration 4). */
   val Iters = 5
 
   /** Upper bound on the k-means input regardless of corpus size. 100k
@@ -94,7 +97,7 @@ object IvfCodebook {
     // bytes: REUSE it instead of overwriting. Overwriting has two costs —
     // it invalidates any cached plan in another session of this JVM that
     // pins the old part files (FAILED_READ.FILE_NOT_EXIST on next use,
-    // found by IvfCodebookSpec's refit test), and it re-runs the 5-pass
+    // found by IvfCodebookSpec's refit test), and it re-runs the
     // fit once per JVM for output that cannot change. FitVersion in the
     // path keeps an older algorithm's bytes from being picked up; the
     // shape check below rejects a torn or foreign directory.
@@ -134,7 +137,8 @@ object IvfCodebook {
     * (arbitrary k there). Zero-norm vectors are excluded (cosine is
     * undefined for them); an empty input yields an empty codebook —
     * callers that require data assert themselves. Returns (cid, w, wnrm)
-    * with cid = 0..k'-1, k' = min(k, sample size). */
+    * with cid = 0..k'-1, k' = min(k, sample size). Two Spark jobs: the
+    * count that sizes the sample, and the collect of the sample. */
   def fitCodebook(s: SparkSession, vecs: DataFrame,
                   k: Int): Seq[(Long, Array[Double], Double)] = {
     require(k >= 1, s"codebook size must be >= 1, got $k")
@@ -149,69 +153,122 @@ object IvfCodebook {
 
     // Deterministic Bernoulli sample bounded at SampleTarget: keep rows
     // whose xxhash64 bucket (out of 1e6) falls under the sampling rate.
-    // One count() to size the rate — metadata-cheap next to the fit.
-    val n = e.count()
-    // persist(): init + every Lloyd pass re-reads the sample, and without
-    // a cache boundary each of those ~Iters+1 actions would re-execute the
-    // caller's FULL upstream plan (expensive when `vecs` is derived —
-    // round-8 ADVICE). Unpersisted in the finally below; MEMORY_AND_DISK
-    // because the sample is bounded (≤ SampleTarget × dim doubles) but a
-    // small-memory executor should spill, not recompute.
-    val sample = (
+    // One count to size the rate — metadata-cheap next to the fit. Counted
+    // off the row RDD: Dataset.count() is an aggregate, which adaptive
+    // execution submits as two jobs.
+    val n = e.select().queryExecution.toRdd.count()
+    val sample =
       if (n <= SampleTarget) e
       else e.filter(
         pmod(xxhash64(col("vec_id")), lit(1000000L)) <
           lit((SampleTarget * 1000000L) / n))
-      ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-
-    // Seeded init: the k sample vectors with the smallest vec_id hash —
-    // a uniform pseudo-random draw that needs no RNG state. k rows
-    // collected; the corpus never is.
-    val dot = graft.functions.expressions.GraftFunctions.dotCol _
-    var cents: Array[(Long, Array[Double])] = sample
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(k)
-      .select(expr("transform(v, x -> CAST(x AS DOUBLE))").as("w"))
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Double](0).toArray) }
-
+    // The id as a long: integral ids widen losslessly (order and equality
+    // kept); any other id type stands in as a second, independent hash.
+    val idKey = e.schema("vec_id").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => col("vec_id").cast("long")
+      case _ => xxhash64(lit("vec_id"), col("vec_id"))
+    }
     import s.implicits._
+    // The whole bounded sample in one collect; a null component reads as
+    // 0 (graft_dot skips it, and Spark's sum ignores it but counts it).
+    val rows = sample
+      .select(xxhash64(col("vec_id")), idKey,
+        expr("transform(v, x -> coalesce(CAST(x AS DOUBLE), 0D))"),
+        col("nrm").cast("double"))
+      .as[(Long, Long, Array[Double], Double)]
+      .collect()
+    lloyd(rows, k)
+  }
+
+  /** Rows assigned per task in [[lloyd]]. Fixed, so the chunking — and
+    * with it the order of every floating-point sum — does not depend on
+    * the driver's core count. */
+  private val ChunkRows = 2048
+
+  /** Init + [[Iters]] Lloyd passes over the collected sample (xxhash64,
+    * id key, v, nrm), in plain Scala on the driver: bounded at
+    * SampleTarget·k·dim·Iters multiply-adds whatever the corpus size.
+    * Rules (FitVersion 1's staged bytes depend on every one):
+    *  - init takes the k rows with the smallest (xxhash64(vec_id), vec_id);
+    *  - a repeated vec_id counts once, as its first row;
+    *  - the dot product is graft_dot's index-order fold, the cosine
+    *    dot / (nrm · wnrm), and the cell the argmax cosine with ties to
+    *    the smaller cid (NaN above every number, a zero divisor below);
+    *  - a centroid is the per-dimension mean rounded to 6 dp, so
+    *    repeated fits are bit-stable; an empty cell keeps its centroid
+    *    (no resampling — resampling would reintroduce order dependence).
+    * Assignment runs in fixed [[ChunkRows]] chunks across the driver's
+    * cores; the per-chunk sums merge in chunk order. */
+  private def lloyd(rows: Array[(Long, Long, Array[Double], Double)],
+                    k: Int): Seq[(Long, Array[Double], Double)] = {
+    def norm(w: Array[Double]) = math.sqrt(w.map(x => x * x).sum)
+    var cents: Array[Array[Double]] = rows
+      .sortBy(r => (r._1, r._2))
+      .take(k)
+      .map(_._3)
+    val seen = new java.util.HashSet[Long]()
+    val pts = rows.filter(r => seen.add(r._2))
+    val dim = if (cents.isEmpty) 0 else cents(0).length
+    val nChunks = (pts.length + ChunkRows - 1) / ChunkRows
     for (_ <- 1 to Iters if cents.nonEmpty) {
-      val centDf = cents.toSeq
-        .map { case (cid, w) => (cid, w, math.sqrt(w.map(x => x * x).sum)) }
-        .toDF("cid", "w", "wnrm")
-      // Assign: argmax cosine via max(struct) — partial-aggregates
-      // map-side; ties broken toward the smallest cid like the query-side
-      // assignment. Then per-(cell, dim) sums: k×dim rows to the driver.
-      val sums = sample.crossJoin(broadcast(centDf))
-        .withColumn("ccos", dot(col("v"), col("w")) / (col("nrm") * col("wnrm")))
-        .groupBy("vec_id")
-        .agg(max(struct(col("ccos"), (-col("cid")).as("negid"))).as("m"),
-          first(col("v")).as("v"))
-        .select((-col("m.negid")).as("cid"), col("v"))
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("cnt"))
-        .collect()
-      val byCell = sums.groupBy(_.getLong(0))
-      cents = cents.map { case (cid, prev) =>
-        byCell.get(cid) match {
-          case Some(rows) =>
-            val w = new Array[Double](prev.length)
-            rows.foreach { r =>
-              w(r.getInt(1)) = round6d(r.getDouble(2) / r.getLong(3))
-            }
-            (cid, w)
-          case None => (cid, prev) // empty cell keeps its centroid
+      val cur = cents
+      val wnrm = cur.map(norm)
+      val sums = new Array[Array[Array[Double]]](nChunks)
+      val cnts = new Array[Array[Long]](nChunks)
+      java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
+        val sx = Array.ofDim[Double](cur.length, dim)
+        val cnt = new Array[Long](cur.length)
+        var i = c * ChunkRows
+        val end = math.min(i + ChunkRows, pts.length)
+        while (i < end) {
+          val (_, _, v, nrm) = pts(i)
+          val best = nearest(v, nrm, cur, wnrm)
+          val acc = sx(best)
+          var d = 0
+          while (d < dim) { acc(d) += v(d); d += 1 }
+          cnt(best) += 1
+          i += 1
+        }
+        sums(c) = sx; cnts(c) = cnt
+      }
+      cents = Array.tabulate(cur.length) { cid =>
+        val n = cnts.iterator.map(_(cid)).sum
+        if (n == 0) cur(cid) // empty cell keeps its centroid
+        else Array.tabulate(dim) { d =>
+          var x = 0.0
+          var c = 0
+          while (c < nChunks) { x += sums(c)(cid)(d); c += 1 }
+          round6d(x / n)
         }
       }
     }
+    cents.toSeq.zipWithIndex.map { case (w, cid) => (cid.toLong, w, norm(w)) }
+  }
 
-    cents.toSeq.map { case (cid, w) =>
-      (cid, w, math.sqrt(w.map(x => x * x).sum))
+  /** The cell of `v`: argmax over cids of dot(v, w) / (nrm · wnrm). */
+  private def nearest(v: Array[Double], nrm: Double,
+                      cents: Array[Array[Double]], wnrm: Array[Double]): Int = {
+    var best = 0
+    var bestCos = Double.NaN
+    var bestNull = true
+    var cid = 0
+    while (cid < cents.length) {
+      val w = cents(cid)
+      if (w.length != v.length)
+        throw new IllegalArgumentException(
+          s"graft_dot: array length mismatch (${v.length} vs ${w.length})")
+      var dot = 0.0
+      var d = 0
+      while (d < v.length) { dot += v(d) * w(d); d += 1 }
+      val den = nrm * wnrm(cid)
+      if (den != 0.0) {
+        val cos = dot / den
+        // Spark's double order: NaN sorts above every number.
+        val better = bestNull || (!bestCos.isNaN && (cos.isNaN || cos > bestCos))
+        if (better) { best = cid; bestCos = cos; bestNull = false }
+      }
+      cid += 1
     }
-    } finally sample.unpersist(blocking = false)
+    best
   }
 }

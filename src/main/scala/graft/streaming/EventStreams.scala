@@ -93,6 +93,7 @@ object EventStreams {
     * under the gate's declared read schema exactly as Spark's own writer
     * output does — pinned by EventStreamsSpec's round-trip test. */
   private[graft] def writeLocalParquet(df: DataFrame, dest: String): Boolean = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.types._
     import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA, Type => PType, Types => PTypes}
@@ -120,10 +121,21 @@ object EventStreams {
           .foldLeft(PTypes.buildMessage(): PTypes.GroupBuilder[
             org.apache.parquet.schema.MessageType])(_.addField(_))
           .named("spark_schema")
+        // Staged under a dot-prefixed name in dest's dir (a file stream
+        // source skips those), then renamed into place: a running stream
+        // polling that dir can never list a file whose footer is not yet
+        // written. The raw local file system writes no .crc sidecar.
+        val target = Paths.get(dest)
+        val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+        val conf = df.sparkSession.sessionState.newHadoopConf()
+        conf.setClass("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem],
+          classOf[org.apache.hadoop.fs.FileSystem])
+        conf.setBoolean("fs.file.impl.disable.cache", true)
         val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-          .builder(new org.apache.hadoop.fs.Path(dest))
+          .builder(new org.apache.hadoop.fs.Path(tmp.toUri))
           .withType(msg)
-          .withConf(df.sparkSession.sessionState.newHadoopConf())
+          .withConf(conf)
+          .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
           .withCompressionCodec(
             org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
           .build()
@@ -144,6 +156,7 @@ object EventStreams {
           }
           writer.write(g)
         } finally writer.close()
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
         true
       case _ => false
     }

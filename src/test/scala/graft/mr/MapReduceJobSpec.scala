@@ -197,6 +197,23 @@ class MapReduceJobSpec extends SparkSpec {
     handle.close()
   }
 
+  test("async handle: a repeated job on the same session compiles no new code") {
+    // startJob runs in one AQE-off child per caller session; a fresh
+    // child per job used to regenerate and recompile every whole-stage
+    // class of the job instead of hitting Spark's codegen cache.
+    import spark.implicits._
+    val input = (1 to 200).map(i => (s"g$i", s"w${i % 5} w${i % 2}")).toDS()
+    val first = MapReduceJob.startJob(spark, input, FileWordCounter.client)
+    val want = first.waitForJob().toMap
+    first.close()
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = MapReduceJob.startJob(spark, input, FileWordCounter.client)
+    assert(second.waitForJob().toMap == want)
+    second.close()
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the second identical job compiled new code")
+  }
+
   test("async handle: progress reaches REDUCE/100% and result matches MapReduceJob.run()") {
     import spark.implicits._
     val input = (1 to 200).map(i => (s"f$i", s"w${i % 7} w${i % 3}")).toDS()

@@ -102,6 +102,54 @@ class IvfCodebookSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("the sf0.001 fit is pinned bit for bit") {
+    // SHA-256 over (cid, dim, every component's bits, wnrm's bits) in cid
+    // order. The value is the codebook of the earlier fit that ran each
+    // Lloyd iteration as a grouped Spark pass; the driver-side fit must
+    // reproduce it exactly (FitVersion stays 1, staged bytes unchanged).
+    val cents = IvfCodebook.fitCodebook(spark, SimilarityQueries.vecs(spark, dir), IvfCodebook.K)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def put(x: Long): Unit = { buf.clear(); buf.putLong(x); md.update(buf.array()) }
+    cents.foreach { case (cid, w, wnrm) =>
+      put(cid); put(w.length.toLong)
+      w.foreach(x => put(java.lang.Double.doubleToLongBits(x)))
+      put(java.lang.Double.doubleToLongBits(wnrm))
+    }
+    val digest = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(digest == "e2f45e82766db0f62751649f8c590c6ea7fdf9cda29b53eac8cb4af32623d10c")
+  }
+
+  test("fitCodebook submits at most 2 Spark jobs") {
+    // The count that sizes the sample and the collect of the sample; init
+    // and every Lloyd iteration run on the driver. Listener events arrive
+    // asynchronously but in order, so a fence job in its own group marks
+    // the point by which every fit job has been seen.
+    val sc = spark.sparkContext
+    val fitJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("ivf-fit") => fitJobs.incrementAndGet(): Unit
+          case Some("ivf-fence") => fenceSeen.countDown()
+          case _ => ()
+        }
+    }
+    val vecs = SimilarityQueries.vecs(spark, dir)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("ivf-fit", "codebook fit")
+      val cents = try IvfCodebook.fitCodebook(spark, vecs, IvfCodebook.K)
+        finally sc.clearJobGroup()
+      assert(cents.length == IvfCodebook.K)
+      sc.setJobGroup("ivf-fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never seen")
+      assert(fitJobs.get >= 1 && fitJobs.get <= 2, s"fit submitted ${fitJobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("learned codebook spreads the corpus over multiple cells") {
     val cells = SimilarityQueries.ivfScoredAssignment(spark, dir, nprobe = 1)
       .select(countDistinct(col("cluster"))).head().getLong(0)

@@ -400,33 +400,55 @@ class SkewAndBucketingSpec extends SparkSpec {
   }
 
   test("componentLabelsFromPairs matches union-find on random graphs") {
-    // The iterative min-label propagation (lazy checkpoints + pointer
-    // jumping) is only oracle-checked on the fixture's pair graph; this
-    // checks it against a trivially-correct union-find on seeded random
-    // graphs, including path-shaped components deeper than one hop.
+    // Checks the local contraction (a union-find per partition) and its
+    // fallback (min-label propagation over the contracted star edges)
+    // against a trivially-correct union-find on seeded random graphs,
+    // each with a path-shaped component longer than the partition count.
+    // The same edge set is spread over 1, 3 and 8 partitions: one
+    // partition is always contraction-only, while a path spread over
+    // several gives some id two local roots and takes the fallback.
     import spark.implicits._
-    val rnd = new scala.util.Random(813)
-    for (trial <- 1 to 4) {
-      val nIds = 3 + rnd.nextInt(23)
-      val nEdges = rnd.nextInt(40)
-      val edges = (1 to nEdges).map { _ =>
-        val a = rnd.nextInt(nIds); val b = rnd.nextInt(nIds)
-        (math.min(a, b).toLong, math.max(a, b).toLong)
-      }.filter(e => e._1 != e._2).distinct
-      // Union-find ground truth: component label = min member id.
-      val parent = Array.tabulate(nIds)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+    // Union-find ground truth: component label = min member id.
+    def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
       edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
+        val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val inGraph = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val want = inGraph.map(id => id -> find(id.toInt).toLong).toMap
-      val got = DedupQueries.componentLabelsFromPairs(
-          edges.toDF("da", "db").localCheckpoint(eager = false))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"trial $trial: labels diverge from union-find")
+      parent.keys.map(id => id -> find(id)).toMap
     }
+    val rnd = new scala.util.Random(813)
+    val fallback = scala.collection.mutable.Set.empty[Boolean]
+    for (trial <- 1 to 6) {
+      val nIds = 3 + rnd.nextInt(23)
+      val nEdges = rnd.nextInt(40)
+      val random = (1 to nEdges).map { _ =>
+        val a = rnd.nextInt(nIds); val b = rnd.nextInt(nIds)
+        (math.min(a, b).toLong, math.max(a, b).toLong)
+      }
+      // A path over 12 + trial shuffled ids, so its minimum sits inside.
+      val path = rnd.shuffle((100L until 112L + trial).toList)
+        .sliding(2).map { case Seq(a, b) => (math.min(a, b), math.max(a, b)) }
+      val edges = (random ++ path).filter(e => e._1 != e._2).distinct
+      val want = components(edges)
+      for (parts <- Seq(1, 3, 8)) {
+        val df = edges.toDF("da", "db").repartition(parts).localCheckpoint()
+        // Whether the contraction alone settles it: no id gets two
+        // different local roots across the partitions.
+        val roots = df.rdd.glom().collect().toSeq.flatMap(rows =>
+          components(rows.toSeq.map(r => (r.getLong(0), r.getLong(1)))).toSeq)
+        fallback += roots.groupBy(_._1).exists(_._2.map(_._2).distinct.size > 1)
+        val got = DedupQueries.componentLabelsFromPairs(df)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == want, s"trial $trial, $parts partitions: labels diverge from union-find")
+      }
+    }
+    assert(fallback == Set(true, false),
+      "the trials must run both the contraction-only path and the fallback")
   }
 
   test("hive-style partitioned layout prunes partitions at plan time") {

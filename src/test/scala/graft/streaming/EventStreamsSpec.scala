@@ -475,4 +475,37 @@ class EventStreamsSpec extends SparkSpec {
     assert(!EventStreams.writeLocalParquet(
       spark.range(5).toDF("event_id"), s"${base.getAbsolutePath}/nope.parquet"))
   }
+
+  test("writeLocalParquet stages whole files under a running ProcessingTime(0) stream") {
+    // A live gate stages its follow-up file into the dir its stream is
+    // polling. Each file must appear whole (a micro-batch that lists a
+    // file before its footer is written fails the query) and leave no
+    // .crc sidecar behind.
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("event_type", StringType)))
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_stage_").toFile
+    val files = 40
+    val rowsPerFile = 1000
+    val q = spark.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
+      .writeStream.format("memory").queryName("staged_under_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .start()
+    try {
+      for (f <- 0 until files) {
+        val rows = java.util.Arrays.asList((0 until rowsPerFile).map(i =>
+          org.apache.spark.sql.Row(f.toLong * rowsPerFile + i, "e" * 40)): _*)
+        assert(EventStreams.writeLocalParquet(spark.createDataFrame(rows, schema),
+          s"${srcDir.getAbsolutePath}/z$f.parquet"))
+      }
+      q.processAllAvailable()
+      assert(q.exception.isEmpty && q.isActive, s"a micro-batch failed: ${q.exception}")
+      val ids = spark.table("staged_under_stream").select("event_id").as[Long].collect()
+      val missing = (0L until files.toLong * rowsPerFile).toSet -- ids
+      assert(missing.isEmpty && ids.length == files * rowsPerFile,
+        s"read ${ids.length} rows; ${missing.size} staged rows never read")
+    } finally q.stop()
+    assert(srcDir.list().filter(_.endsWith(".crc")).isEmpty, "a .crc file was left in the source dir")
+  }
 }

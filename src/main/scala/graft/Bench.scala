@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -13,21 +13,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
+    // Failures are reported with their cause on stderr; stdout stays the
+    // two JSON lines.
+    def failed(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
 
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"))
       try Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => }
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => }
+      catch { case NonFatal(e) => failed(s"touch of $t", e) }
+    try Tables.events(spark, sfDir).count()
+    catch { case NonFatal(e) => failed("touch of events", e) }
 
     // JIT/codegen warm-up: run every query once at the smallest SF. The
     // generated code is identical across SFs (paths live in scan metadata,
@@ -43,24 +41,27 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     val warmed = new java.io.File(warmDir).isDirectory && warmDir != sfDir
     if (warmed) {
-      selected.values.foreach { fn =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
+      selected.foreach { case (name, fn) =>
+        try fn(spark, warmDir).count()
+        catch { case NonFatal(e) => failed(s"warm-up of $name", e) }
       }
       // Drop the warm-up pass's SESSION STATE before the timed battery
       // (round-19 verdict #1b): ~90 checkpoint/persist sites lazily
       // localCheckpoint shared frames, so the warm-up leaves warmDir-keyed
       // RDD blocks riding the block manager — memory pressure the timed
       // sfDir queries then pay for. CLEAR CACHE drops SQL-cached plans;
-      // evictDir drops + unpersists every registered derived-frame cache
-      // entry for warmDir; the persistent-RDD sweep frees any block the
-      // caches no longer reference (at this point only warm-up blocks
-      // exist — the timed battery hasn't started). JIT/codegen warmth —
-      // the thing the warm-up is FOR — lives in the JVM, not the block
-      // manager, and survives all three.
-      try spark.sql("CLEAR CACHE") catch { case _: Throwable => }
+      // evictDir drops every Tables.derived frame for warmDir and frees
+      // their checkpoint blocks; the persistent-RDD sweep frees every
+      // other block, such as a query's own localCheckpoints (at this point
+      // only warm-up blocks exist — the timed battery hasn't started).
+      // JIT/codegen warmth — the thing the warm-up is FOR — lives in the
+      // JVM, not the block manager, and survives all three.
+      try spark.sql("CLEAR CACHE") catch { case NonFatal(e) => failed("CLEAR CACHE", e) }
       Tables.evictDir(spark, warmDir)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => })
+      spark.sparkContext.getPersistentRDDs.values.foreach { r =>
+        try r.unpersist(blocking = false)
+        catch { case NonFatal(e) => failed(s"unpersist of rdd ${r.id}", e) }
+      }
     }
 
     // Machine-load stamp (round-8 post-mortem: BENCH_r08 recorded 3.13×
@@ -69,17 +70,18 @@ object Bench {
     def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(e) => failed("read of /proc/loadavg", e); -1.0 }
     val loadStart = loadavg()
 
     // Best-of-2 per query for the heavies; a single run suffices when the
     // first run is already < 0.15 s (the JVM fixed floor dominates there
     // and a re-run only buys machine noise, see NOTES.md). A failure in
     // either run marks the query -1.
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 } // explicit failure marker
+      catch { case NonFatal(e) => failed(name, e); -1.0 } // explicit failure marker
     }
     // Outlier defense (round-8 verdict #1b): a query whose measurement is
     // >5× the running median of completed queries gets ONE more timed
@@ -115,12 +117,12 @@ object Bench {
     // stray spike can't fake a drift.
     val canaryName = "wordcount"
     def canaryRun(): Double = selected.get(canaryName).map { fn =>
-      val a = timeOnce(fn)
-      if (a < 0) a else math.min(a, timeOnce(fn))
+      val a = timeOnce(canaryName, fn)
+      if (a < 0) a else math.min(a, timeOnce(canaryName, fn))
     }.getOrElse(-1.0)
     val canaryFirst = canaryRun()
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val a = timeOnce(fn)
+      val a = timeOnce(name, fn)
       var best =
         if (a < 0) -1.0
         // Fast query: floor-dominated, skip the re-run. Live streaming
@@ -131,11 +133,11 @@ object Bench {
         // median outlier re-time below still protects them from load spikes.
         else if (a < 0.15 || isLive(name)) a
         else {
-          val b = timeOnce(fn)
+          val b = timeOnce(name, fn)
           if (b < 0) -1.0 else math.min(a, b)
         }
       if (best > 0 && best > 5 * runningMedian) {
-        val c = timeOnce(fn)
+        val c = timeOnce(name, fn)
         if (c >= 0) {
           retimedFrom(name) = math.max(best, c) // the discarded outlier draw
           best = math.min(best, c); retimed += 1
@@ -347,7 +349,7 @@ object Bench {
       val w = new java.io.PrintWriter(outPath)
       try w.println(full) finally w.close()
     } catch {
-      case t: Throwable => System.err.println(s"[bench] could not write $outPath: $t")
+      case NonFatal(t) => System.err.println(s"[bench] could not write $outPath: $t")
     }
     spark.stop()
     println(full)  // full per-query map (second-to-last stdout line)

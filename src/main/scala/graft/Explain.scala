@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the headline queries to a markdown
   * file — the ".explain and iterate" evidence trail (see SCALE.md and
   * PlanSpec for the asserted properties). Usage:
@@ -219,12 +217,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "EXPLAIN.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev-only A/B measurement harness (not a declared query; never run by
   * the driver). Times the named queries with INTERLEAVED draws in one
@@ -16,28 +16,22 @@ object Lab {
     val draws = if (args.length > 1) args(1).toInt else 5
     val planDir = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
+    def failed(what: String, e: Throwable): Unit =
+      System.err.println(s"[lab] $what failed: ${e.getClass.getName}: ${e.getMessage}")
 
     def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(e) => failed("read of /proc/loadavg", e); -1.0 }
 
     val qs = names.map(n => n -> SparkEntry.queries.getOrElse(n,
       sys.error(s"unknown query $n"))).toSeq
 
     // Warm: one run each at sf0.001, then one at the target SF.
-    for ((_, fn) <- qs) {
-      try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => }
-      try fn(spark, sfDir).count() catch { case _: Throwable => }
-    }
+    for ((n, fn) <- qs; dir <- Seq("/root/testdata/sf0.001", sfDir))
+      try fn(spark, dir).count()
+      catch { case NonFatal(e) => failed(s"warm-up of $n on $dir", e) }
 
     planDir.foreach { dir =>
       new java.io.File(dir).mkdirs()
@@ -49,30 +43,18 @@ object Lab {
       }
     }
 
-    // GRAFT_LAB_UNPERSIST=alternate — A/B the cross-query block-manager
-    // accumulation: odd draws leave leaked checkpoint blocks in place (the
-    // current bench behavior), even draws sweep ALL persistent RDDs before
-    // timing. Only valid for queries with no registered-cache reuse.
-    val unpersistMode = sys.env.getOrElse("GRAFT_LAB_UNPERSIST", "off")
-    val results = scala.collection.mutable.Map.empty[String, Vector[(Double, Boolean)]].withDefaultValue(Vector())
+    val results = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector())
     for (i <- 1 to draws; (n, fn) <- qs) {
-      val swept = unpersistMode == "alternate" && i % 2 == 0
-      if (swept)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => })
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val s = (System.nanoTime() - t0) / 1e9
-      results(n) = results(n) :+ ((s, swept))
-      println(f"[lab] draw $i${if (swept) "S" else " "} $n%-40s $s%7.3f s  (load ${loadavg()}%.2f, cachedRdds ${spark.sparkContext.getPersistentRDDs.size})")
+      results(n) = results(n) :+ s
+      println(f"[lab] draw $i $n%-40s $s%7.3f s  (load ${loadavg()}%.2f, cachedRdds ${spark.sparkContext.getPersistentRDDs.size})")
     }
     println("[lab] ===== medians =====")
     for ((n, _) <- qs) {
-      def med(v: Seq[Double]): Double =
-        if (v.isEmpty) -1 else v.sorted.apply(v.size / 2)
-      val all = results(n)
-      val (sw, unsw) = all.partition(_._2)
-      println(f"[lab] $n%-40s median ${med(all.map(_._1))}%7.3f  swept ${med(sw.map(_._1))}%7.3f (n=${sw.size})  unswept ${med(unsw.map(_._1))}%7.3f (n=${unsw.size})")
+      val v = results(n).sorted
+      if (v.nonEmpty) println(f"[lab] $n%-40s median ${v(v.size / 2)}%7.3f")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev-only sweep harness: dumps every declared query's formatted plan
   * to a directory (one file per query) WITHOUT executing the queries —
@@ -15,14 +15,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/plandump"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     var failed = 0
@@ -33,9 +26,9 @@ object PlanDump {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/$n.txt"), f): Unit
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           failed += 1
-          println(s"[plandump] $n failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          System.err.println(s"[plandump] $n failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     println(s"[plandump] done, $failed failed, out=$outDir")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -10,17 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (column pruning + predicate pushdown reach the parquet scan).
   */
 object Tables {
-  // Resolved-relation cache: `spark.read.parquet` builds a fresh
-  // InMemoryFileIndex (file listing + footer/schema read) on EVERY call,
-  // which at 70+ queries × 10 tables is pure fixed overhead — and on an
-  // object store at 100 TB, repeated LIST calls. The cached value is a
-  // PLAN (schema + file index), not data; correct as long as the fixture
-  // files don't change under a live session, which is the contract here.
-  // Keyed by sessionUUID (unique, unlike identityHashCode) and capped so
-  // a session-churning JVM can't grow it without bound.
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
   // Issues a stable per-session UUID with no reflection (sessionUUID is
   // private[sql] — reading it reflectively was a Spark-upgrade tripwire).
   // Weak keys: a collected session's id mapping disappears on its own.
@@ -44,7 +34,7 @@ object Tables {
   /** True when the session that issued `key` is GC'd or stopped. An ABSENT
     * registry entry also means dead: `sessionKey` always registers the id
     * before any cache insert, so a missing key can only mean it was pruned
-    * as dead by an earlier eviction pass (over this or a sibling cache). */
+    * as dead by an earlier eviction pass. */
   private def sessionDead(key: String): Boolean = {
     val ref = liveSessions.get(key)
     ref == null || { val s = ref.get(); s == null || s.sparkContext.isStopped }
@@ -58,7 +48,7 @@ object Tables {
     * frees nothing (one long-lived session reading thousands of distinct
     * dirs/tables), a hard cap evicts entries down to half the cap rather
     * than clearing outright — everything here is re-derivable, but some
-    * values (the dedup index cache's checkpointed LSH/label frames) cost
+    * values (the near-dup index's checkpointed LSH/label frames) cost
     * seconds to rebuild, so keeping half bounds both the map and the
     * worst-case re-derivation. The over-cap pass spares the CALLING
     * session's entries (`liveKey`) — dropping them in iteration order
@@ -94,55 +84,98 @@ object Tables {
       }
     }
 
-  // Registry of every (session, dir, name)-keyed derived-frame cache in
-  // the repo (this one plus the dedup/ANN index caches) so a caller can
-  // purge ONE dir's entries across all of them — the Bench post-warm-up
-  // purge (round-19 verdict #1b): without it, the warm-up pass's
-  // localCheckpoint/persist blocks ride the block manager through the
-  // timed battery.
-  private val registeredCaches =
-    new java.util.concurrent.CopyOnWriteArrayList[
-      java.util.concurrent.ConcurrentHashMap[(String, String, String), _]]()
+  private val frames =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
+  private val buildLocks =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), BuildLock]()
 
-  private[graft] def registerCache[V](
-      m: java.util.concurrent.ConcurrentHashMap[(String, String, String), V])
-      : java.util.concurrent.ConcurrentHashMap[(String, String, String), V] = {
-    registeredCaches.add(m)
-    m
+  /** A build lock and the number of callers holding or waiting on it. */
+  private final class BuildLock { var users = 0 }
+
+  /** Runs `body` holding the (dir, name) build lock. The entry leaves
+    * `buildLocks` with its last user, so the map holds only the keys
+    * being built right now. `users` changes only inside `compute`, which
+    * is atomic per key. */
+  private def withBuildLock[A](key: (String, String))(body: => A): A = {
+    val lock = buildLocks.compute(key, (_, l) => {
+      val held = if (l == null) new BuildLock else l
+      held.users += 1
+      held
+    })
+    try lock.synchronized(body)
+    finally buildLocks.compute(key, (_, l) => { l.users -= 1; if (l.users == 0) null else l })
   }
-  registerCache(relCache)
 
-  /** Evict every registered cache entry for (this session, `dir`) and
-    * unpersist any DataFrame value's blocks — the warm-up purge. Only
-    * the CALLING session's entries are touched (a sibling session's
-    * state is its own). Cheap: cache sizes are tens of entries. */
+  /** Every derived frame in graft — the fixture relations of [[table]],
+    * the near-dup and ANN indexes, the staged codebooks — is owned here.
+    *
+    * Key: (session key, `dir`, `name`). A frame is a pure function of the
+    * fixture under `dir`, so one is built per session and dir and shared
+    * by every query that asks for `name`; the names are distinct across
+    * owners (the fixture table names, `pairs`, `ivfcent`, `pqcent_<kind>`,
+    * …).
+    *
+    * Lock: a miss builds under one lock per (`dir`, `name`), shared across
+    * sessions, and checks the map again once it holds it. The codebooks'
+    * stage paths are functions of (dir, name), so two sessions racing a
+    * first fit serialize and the loser adopts the winner's staged bytes.
+    *
+    * Not `computeIfAbsent`: builds nest (`ivfpq` → `pqcent_ivfres` →
+    * `ivf2` → `ivfcent` → `embeddings`), and a nested `computeIfAbsent`
+    * on the same map throws "Recursive update" or deadlocks once two keys
+    * share a bin. Nested build locks cannot deadlock because the build
+    * graph is acyclic. A build that throws leaves no entry.
+    *
+    * Eviction: every call runs [[evictDead]] on the one map, so dead
+    * sessions' frames go first and the caller's own frames last.
+    * [[evictDir]] drops one session's frames for one dir. */
+  private[graft] def derived(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame = {
+    val key = (sessionKey(s), dir, name)
+    evictDead(frames, key._1)
+    val hit = frames.get(key)
+    if (hit != null) hit
+    else withBuildLock((dir, name)) {
+      val again = frames.get(key)
+      if (again != null) again
+      else { val df = build; frames.put(key, df); df }
+    }
+  }
+
+  /** Drop the CALLING session's derived frames for `dir` and free the
+    * blocks of those that are lazily local-checkpointed (the warm-up
+    * purge). A sibling session's frames are its own. Safe because the
+    * entry is removed first: nothing can reuse the truncated-lineage
+    * frame afterwards. One pass over the map. */
   private[graft] def evictDir(spark: SparkSession, dir: String): Unit = {
     val key = sessionKey(spark)
-    registeredCaches.forEach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 == key && e.getKey._2 == dir) {
-          e.getValue match {
-            case df: DataFrame =>
-              // Frees the lazily-localCheckpointed blocks; safe because
-              // the entry is removed — nothing can reuse the truncated-
-              // lineage frame afterwards.
-              try df.unpersist(blocking = false) catch { case _: Throwable => }
-            case _ =>
-          }
-          it.remove()
+    val it = frames.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey._1 == key && e.getKey._2 == dir) {
+        it.remove()
+        val df = e.getValue
+        // Dataset.unpersist only reaches the cache manager; a
+        // localCheckpoint is a persisted RDD under a LogicalRDD.
+        try df.queryExecution.analyzed match {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+          case _ => df.unpersist(blocking = false)
+        } catch {
+          case NonFatal(t) => System.err.println(
+            s"[tables] unpersist of ${e.getKey._3} in $dir failed: ${t.getClass.getName}: ${t.getMessage}")
         }
       }
     }
   }
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = sessionKey(spark)
-    evictDead(relCache, key)
-    relCache.computeIfAbsent((key, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
-  }
+  /** The fixture relation `dir/name.parquet`, a [[derived]] frame. It is a
+    * PLAN (schema + file index), not data: `spark.read.parquet` lists the
+    * files and reads the footers on every call, which at 70+ queries × 10
+    * tables is pure fixed overhead, and repeated LIST calls on an object
+    * store. Correct as long as the fixture files do not change under a
+    * live session, which is the contract here. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    derived(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

@@ -305,22 +305,11 @@ object DedupQueries extends QueryPack {
   /** Connected components of the near-dup pair graph → (id, lbl) with
     * lbl = component minimum ([[componentLabelsFromPairs]]: per-partition
     * union-find contraction, min-label propagation only as a fallback). */
-  def componentLabels(s: SparkSession, d: String): DataFrame = {
-    // NOT computeIfAbsent: the computation itself consults the same map
-    // (via minhashPairs), and ConcurrentHashMap forbids recursive updates
-    // when the nested key lands in the same bin. get/putIfAbsent instead;
-    // a racing duplicate computation is benign (same deterministic plan).
-    val key = (Tables.sessionKey(s), d, "labels")
-    val cached = indexCache.get(key)
-    if (cached != null) cached
-    else {
-      // minhashPairs is already lazily checkpointed — selecting off it
-      // shares the materialized blocks, no second checkpoint needed.
-      val labels = componentLabelsFromPairs(minhashPairs(s, d).select("da", "db"))
-      indexCache.putIfAbsent(key, labels)
-      indexCache.get(key)
-    }
-  }
+  def componentLabels(s: SparkSession, d: String): DataFrame =
+    // minhashPairs is already lazily checkpointed — selecting off it
+    // shares the materialized blocks, no second checkpoint needed.
+    Tables.derived(s, d, "labels")(
+      componentLabelsFromPairs(minhashPairs(s, d).select("da", "db")))
 
   /** Near-dup connected components over ANY (doc_id, text) frame. */
   def componentLabelsOf(s: SparkSession, docs: DataFrame, threshold: Double): DataFrame =
@@ -489,29 +478,24 @@ object DedupQueries extends QueryPack {
     }
   }
 
-  // Derived-index cache: the LSH pair set and the component labels over a
-  // fixture dir are deterministic pure functions of (session, dir) — the
-  // near-dup INDEX a real pipeline materializes once and reuses across
-  // downstream jobs (pairs → components → canonical corpus). The cached
-  // value is a lazily-checkpointed DataFrame: first action computes and
-  // caches the RDD blocks; later queries over the same corpus reuse them.
-  private val indexCache =
-    Tables.registerCache(
-      new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]())
+  // The near-dup INDEX: the LSH pair set, the exact-Jaccard pair set and
+  // the component labels over a fixture dir are deterministic pure
+  // functions of (session, dir) — what a real pipeline materializes once
+  // and reuses across downstream jobs (pairs → components → canonical
+  // corpus). Each is a [[Tables.derived]] frame, lazily checkpointed: the
+  // first action computes and caches the RDD blocks; later queries over
+  // the same corpus reuse them.
 
   /** MinHash LSH pairs with true Jaccard ≥ 0.7 (shared by dedup_minhash,
     * dedup_components, dedup_canonical and dedup_contamination — computed
-    * once per session+dir; keyed like Tables.relCache). The cached frame is
+    * once per session+dir; a [[Tables.derived]] frame). The cached frame is
     * lazily CHECKPOINTED: the first action (whichever downstream query runs
     * first) materializes the pair RDD blocks, and every later consumer
     * reuses them instead of re-running the full LSH candidate+verify plan
     * (which cost dedup_contamination an extra ~1.7 s per query at sf0.1). */
-  def minhashPairs(s: SparkSession, d: String): DataFrame = {
-    Tables.evictDead(indexCache, Tables.sessionKey(s))
-    indexCache.computeIfAbsent((Tables.sessionKey(s), d, "pairs"),
-      _ => minhashPairsOf(s, Tables.documents(s, d), 0.7)
-        .localCheckpoint(eager = false))
-  }
+  def minhashPairs(s: SparkSession, d: String): DataFrame =
+    Tables.derived(s, d, "pairs")(
+      minhashPairsOf(s, Tables.documents(s, d), 0.7).localCheckpoint(eager = false))
 
   /** EXACT Jaccard over every co-shingle pair, UNFILTERED — shared by
     * dedup_ngram_jaccard (which filters ≥ 0.5) and dedup_threshold_curve
@@ -529,21 +513,18 @@ object DedupQueries extends QueryPack {
     * exactly the frame both queries would otherwise each recompute. A
     * pathological boilerplate corpus should go through the maxBucket-capped
     * LSH path instead, never the brute pair universe. */
-  def exactJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    Tables.evictDead(indexCache, Tables.sessionKey(s))
-    indexCache.computeIfAbsent((Tables.sessionKey(s), d, "exactjac"),
-      _ => {
-        val shA = shingleFrame(s, d, "da", "sh_a", "na")
-        val shB = shingleFrame(s, d, "db2", "sh_b", "nb")
-        shA
-          .join(shB, col("sh_a") === col("sh_b") && col("da") < col("db2"))
-          .groupBy(col("da"), col("db2").as("db"), col("na"), col("nb"))
-          .agg(count(lit(1)).as("i"))
-          .withColumn("jac", col("i") / (col("na") + col("nb") - col("i")))
-          .select("da", "db", "jac")
-          .localCheckpoint(eager = false)
-      })
-  }
+  def exactJaccardPairs(s: SparkSession, d: String): DataFrame =
+    Tables.derived(s, d, "exactjac") {
+      val shA = shingleFrame(s, d, "da", "sh_a", "na")
+      val shB = shingleFrame(s, d, "db2", "sh_b", "nb")
+      shA
+        .join(shB, col("sh_a") === col("sh_b") && col("da") < col("db2"))
+        .groupBy(col("da"), col("db2").as("db"), col("na"), col("nb"))
+        .agg(count(lit(1)).as("i"))
+        .withColumn("jac", col("i") / (col("na") + col("nb") - col("i")))
+        .select("da", "db", "jac")
+        .localCheckpoint(eager = false)
+    }
 
   /** Fixed-point integer PageRank over an undirected pair frame (da, db;
     * each edge exactly once) — the graph_pagerank kernel, reusable by
@@ -1217,13 +1198,6 @@ object DedupQueries extends QueryPack {
         .join(minhashBandsOf(s, batch).as("b"), Seq("band", "bkey"))
         .select(col("c.doc_id").as("da"), col("b.doc_id").as("db"))
         .distinct()
-        // Lazy checkpoint: unlike the LSH twins' cheap signature-map
-        // candidates, THIS candidate subtree carries a corpus-band
-        // compute/index read, a join and a distinct exchange. The cut
-        // measured ~20% (derived) / ~4% (indexed) when the verify read
-        // `cand` three times (OPTIMIZATION_r22.md); the per-pair verify
-        // reads it once, and the cut is not re-measured since.
-        .localCheckpoint(eager = false)
       jaccardOfDocs(s, docs.unionByName(batch), cand)
         .filter(col("jac") >= 0.7)
         .select(col("db").as("batch_id"), col("da").as("corpus_id"),
@@ -1249,13 +1223,6 @@ object DedupQueries extends QueryPack {
         .join(minhashBandsOf(s, batch).as("b"), Seq("band", "bkey"))
         .select(col("c.doc_id").as("da"), col("b.doc_id").as("db"))
         .distinct()
-        // Lazy checkpoint: unlike the LSH twins' cheap signature-map
-        // candidates, THIS candidate subtree carries a corpus-band
-        // compute/index read, a join and a distinct exchange. The cut
-        // measured ~20% (derived) / ~4% (indexed) when the verify read
-        // `cand` three times (OPTIMIZATION_r22.md); the per-pair verify
-        // reads it once, and the cut is not re-measured since.
-        .localCheckpoint(eager = false)
       jaccardOfDocs(s, docs.unionByName(batch), cand)
         .filter(col("jac") >= 0.7)
         .select(col("db").as("batch_id"), col("da").as("corpus_id"),
@@ -1632,10 +1599,8 @@ object DedupQueries extends QueryPack {
       // minhashPairs discipline): BOTH pair-join sides derive from it,
       // so without the lazy checkpoint the segment+explode+distinct
       // chain runs once per side per downstream stage.
-      Tables.evictDead(indexCache, Tables.sessionKey(s))
-      val withN = indexCache.computeIfAbsent(
-        (Tables.sessionKey(s), d, "scriptjac"),
-        _ => scriptShingleIndexOf(s.read.parquet(stageCjkCorpus(s, d)))
+      val withN = Tables.derived(s, d, "scriptjac")(
+        scriptShingleIndexOf(s.read.parquet(stageCjkCorpus(s, d)))
           .localCheckpoint(eager = false))
       scriptJaccardPairsOf(withN)
     }),

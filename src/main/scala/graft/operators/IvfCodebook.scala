@@ -64,31 +64,22 @@ object IvfCodebook {
     * under a path the newer code never reads. */
   private val FitVersion = 1
 
-  private val cache =
-    Tables.registerCache(
-      new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]())
-
-  // Per-stage-path fit lock: two SESSIONS in one JVM racing their first
-  // IVF query would both miss the per-session cache and write the same
-  // stage path concurrently (overwrite-mode committers clobbering each
-  // other). The loser of the race now adopts the winner's bytes via
-  // existingStage. Cross-PROCESS races remain excluded by the driver's
-  // single-runner-per-dataset contract (see Stage's scaladoc).
-  private val fitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** The staged codebook parquet for `dataDir` — the oracle CTEs name
     * this path (see the packs' oracleSqlFor overrides). */
   def stagePath(dataDir: String): String =
     Stage.dir(dataDir, s"ivf_centroids_v$FitVersion")
 
   /** The fitted codebook as a 16-row (cid: long, w: array<double>,
-    * wnrm: double) frame read from the staged parquet — fit once per
-    * (session, dir), shared by every IVF consumer. */
-  def centroids(s: SparkSession, d: String): DataFrame = {
-    Tables.evictDead(cache, Tables.sessionKey(s))
-    cache.computeIfAbsent((Tables.sessionKey(s), d, "ivfcent"), _ => fitAndStage(s, d))
-  }
+    * wnrm: double) frame read from the staged parquet — the
+    * [[Tables.derived]] frame `ivfcent` of (session, dir), shared by every
+    * IVF consumer. Its build lock is per (dir, `ivfcent`), so per stage
+    * path: two SESSIONS in one JVM racing their first IVF query serialize
+    * instead of writing the stage concurrently (overwrite-mode committers
+    * clobbering each other), and the loser adopts the winner's bytes via
+    * existingStage. Cross-PROCESS races remain excluded by the driver's
+    * single-runner-per-dataset contract (see Stage's scaladoc). */
+  def centroids(s: SparkSession, d: String): DataFrame =
+    Tables.derived(s, d, "ivfcent")(fitAndStage(s, d))
 
   private def round6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
@@ -102,9 +93,7 @@ object IvfCodebook {
     // path keeps an older algorithm's bytes from being picked up; the
     // shape check below rejects a torn or foreign directory.
     val path = stagePath(d)
-    fitLocks.computeIfAbsent(path, _ => new Object).synchronized {
-      existingStage(s, path).getOrElse(fitInto(s, d, path))
-    }
+    existingStage(s, path).getOrElse(fitInto(s, d, path))
   }
 
   private def existingStage(s: SparkSession, path: String): Option[DataFrame] =

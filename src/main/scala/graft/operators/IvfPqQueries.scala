@@ -69,22 +69,17 @@ object IvfPqQueries extends QueryPack {
     PqCodebook.codebookFor(s, d, "ivfres",
       residuals(s, d).select(col("vec_id"), col("v")))
 
-  // The encoded index: (vec_id, cluster, codes array<int>[M]) — built
-  // once per (session, dir). At 100 TB this pair of columns IS the
-  // stored index: 1 byte of cell id + M bytes of code per vector.
-  private val codesCache =
-    Tables.registerCache(
-      new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]())
-
-  private[operators] def ivfpqCodes(s: SparkSession, d: String): DataFrame = {
-    Tables.evictDead(codesCache, Tables.sessionKey(s))
-    codesCache.computeIfAbsent((Tables.sessionKey(s), d, "ivfpq"), _ => {
+  // The encoded index: (vec_id, cluster, codes array<int>[M]) — a
+  // [[Tables.derived]] frame per (session, dir). At 100 TB this pair of
+  // columns IS the stored index: 1 byte of cell id + M bytes of code per
+  // vector.
+  private[operators] def ivfpqCodes(s: SparkSession, d: String): DataFrame =
+    Tables.derived(s, d, "ivfpq") {
       val res = residuals(s, d)
       PqCodebook.encode(res, residualCodebook(s, d))
         .join(res.select("vec_id", "cluster"), Seq("vec_id"))
         .localCheckpoint(eager = false)
-    })
-  }
+    }
 
   val queries: Map[String, Q] = Map(
     // Residual-encode audit per CELL: vectors, distinct codewords, and

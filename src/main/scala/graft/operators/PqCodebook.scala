@@ -64,12 +64,6 @@ object PqCodebook {
     * [[IvfCodebook]]'s FitVersion scaladoc — stages are REUSED). */
   private val FitVersion = 1
 
-  private val cache =
-    Tables.registerCache(
-      new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]())
-  private val fitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** The staged codebook parquet for `dataDir` — oracle CTEs name this
     * path. Columns: (m: int, cid: long, w: array<double>). `kind`
     * separates independently-fit codebooks over different inputs (""
@@ -99,22 +93,20 @@ object PqCodebook {
     * `kind` — the residual-quantization entry point (IvfPqQueries fits
     * one over IVF residuals). `input` is by-name: only evaluated on a
     * cache+stage miss, so consumers don't rebuild the input frame when
-    * the staged bytes already exist. */
+    * the staged bytes already exist. The frame is the [[Tables.derived]]
+    * `pqcent_<kind>` of (session, dir); its build lock, per (dir, kind),
+    * is per stage path, so racing sessions serialize their first fit
+    * and the loser adopts the winner's stage (as in [[IvfCodebook]]). */
   def codebookFor(s: SparkSession, d: String, kind: String,
-                  input: => DataFrame): DataFrame = {
-    Tables.evictDead(cache, Tables.sessionKey(s))
-    cache.computeIfAbsent((Tables.sessionKey(s), d, s"pqcent_$kind"),
-      _ => fitAndStage(s, d, kind, input))
-  }
+                  input: => DataFrame): DataFrame =
+    Tables.derived(s, d, s"pqcent_$kind")(fitAndStage(s, d, kind, input))
 
   private def round6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   private def fitAndStage(s: SparkSession, d: String, kind: String,
                           input: => DataFrame): DataFrame = {
     val path = stagePath(d, kind)
-    fitLocks.computeIfAbsent(path, _ => new Object).synchronized {
-      existingStage(s, path).getOrElse(fitInto(s, input, path))
-    }
+    existingStage(s, path).getOrElse(fitInto(s, input, path))
   }
 
   private def existingStage(s: SparkSession, path: String): Option[DataFrame] =

@@ -55,20 +55,14 @@ object PqQueries extends QueryPack {
 
   private def dot = graft.functions.expressions.GraftFunctions.dotCol _
 
-  // The encoded corpus, built once per (session, dir) and shared by all
-  // three gates: (vec_id, codes array<int>[M]) — the "PQ index".
-  private val codesCache =
-    Tables.registerCache(
-      new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]())
-
   /** Encode every vector against the staged codebook
-    * ([[PqCodebook.encode]] documents the argmin shape). */
-  private[operators] def pqCodes(s: SparkSession, d: String): DataFrame = {
-    Tables.evictDead(codesCache, Tables.sessionKey(s))
-    codesCache.computeIfAbsent((Tables.sessionKey(s), d, "pqcodes"), _ =>
+    * ([[PqCodebook.encode]] documents the argmin shape): the "PQ index"
+    * (vec_id, codes array<int>[M]), a [[Tables.derived]] frame shared
+    * by all three gates. */
+  private[operators] def pqCodes(s: SparkSession, d: String): DataFrame =
+    Tables.derived(s, d, "pqcodes")(
       PqCodebook.encode(SimilarityQueries.vecs(s, d), PqCodebook.codebook(s, d))
         .localCheckpoint(eager = false))
-  }
 
   val queries: Map[String, Q] = Map(
     // Encode audit: per label, vectors encoded, distinct codewords in

@@ -66,20 +66,15 @@ object SimilarityQueries extends QueryPack {
     * materialization. Tie-break (ccos DESC, cid) and nprobe semantics
     * live HERE — the three queries' DuckDB oracles replicate this block,
     * so a change must touch this helper and the oracle CTEs together. */
-  // The checkpointed nprobe=2 assignment, cached per (session, dir) —
-  // the IVF "index" is built once and shared by sim_knn_ivf,
-  // sim_knn_ivf2 and dedup_embed_ivf (same pattern as the dedup pair
-  // index cache; nprobe=1 consumers filter rk = 1 off the shared frame,
-  // which also reuses its materialized blocks).
-  private val assignCache =
-    Tables.registerCache(
-      new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]())
-
+  // The checkpointed nprobe=2 assignment is a [[Tables.derived]] frame
+  // per (session, dir) — the IVF "index" is built once and shared by
+  // sim_knn_ivf, sim_knn_ivf2 and dedup_embed_ivf, like the near-dup
+  // pair index; nprobe=1 consumers filter rk = 1 off the shared frame,
+  // which also reuses its materialized blocks.
   private[operators] def ivfScoredAssignment(s: SparkSession, d: String, nprobe: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= 2,
       s"shared IVF index keeps rk <= 2 (and nprobe=0 probes nothing), asked for nprobe=$nprobe")
-    Tables.evictDead(assignCache, Tables.sessionKey(s))
-    val full = assignCache.computeIfAbsent((Tables.sessionKey(s), d, "ivf2"), _ => {
+    val full = Tables.derived(s, d, "ivf2") {
       val e = vecs(s, d)
       val cent = IvfCodebook.centroids(s, d)
       val byVec = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
@@ -89,7 +84,7 @@ object SimilarityQueries extends QueryPack {
         .filter(col("rk") <= 2)
         .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cluster"), col("rk"))
         .localCheckpoint(eager = false)
-    })
+    }
     if (nprobe == 2) full else full.filter(col("rk") <= nprobe)
   }
 

@@ -68,19 +68,6 @@ object EventStreams {
     * the fixture generator only emits non-negative ids. */
   val SentinelUser = -1L
 
-  // Dev-only stage timing for the live gates (GRAFT_PROFILE_LIVE=1):
-  // prints how each fixed-cost component of a run spends its time. Inert
-  // (one env read, no allocation) when unset.
-  private val profileLive = sys.env.get("GRAFT_PROFILE_LIVE").contains("1")
-  @inline private def ptime[A](label: String)(f: => A): A =
-    if (!profileLive) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[live-stage] $label%-34s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-
   /** Jobless parquet staging for driver-local frames: when `df` optimizes
     * to a LocalRelation (every watermark sentinel and doctored duplicate
     * does — they are literal projections of one cached fixture row), its
@@ -189,7 +176,7 @@ object EventStreams {
     * re-derived both per run (three footer reads + three full-fixture
     * top-1 scans per bench pass over the same immutable file). Bounded:
     * one (schema, Row) pair per distinct fixture path; same immutable-
-    * fixture contract as Tables.relCache. */
+    * fixture contract as [[graft.Tables.table]]. */
   private val fixtureMeta = new java.util.concurrent.ConcurrentHashMap[
     String, (org.apache.spark.sql.types.StructType, org.apache.spark.sql.Row)]()
 
@@ -271,7 +258,6 @@ object EventStreams {
     trackForCleanup(base)
     val srcDir = s"$base/src"
     new java.io.File(srcDir).mkdirs()
-    ptime("begin")(())
 
     // The run gets its OWN session: micro-batch cost scales with the
     // state-store/sink task count (= shuffle partitions × #batches), and
@@ -279,7 +265,7 @@ object EventStreams {
     // session keeps its cluster-sized setting. Results are
     // partition-count-independent; the parent session's frames and confs
     // are untouched (sessions share only the SparkContext).
-    val sess = ptime("newSession")(spark.newSession())
+    val sess = spark.newSession()
     // 2 partitions, not 4: every micro-batch pays a state-store
     // load+commit per stateful partition, and the fixtures' per-key state
     // fits one partition with room to spare — halving the partition count
@@ -296,7 +282,7 @@ object EventStreams {
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     if (!sess.conf.getOption(nanosKey).contains("true")) sess.conf.set(nanosKey, "true")
     sessionConfs.foreach { case (k, v) => sess.conf.set(k, v) }
-    val stage = ptime("LiveStage")(new LiveStage(sess, s"$dataDir/events.parquet"))
+    val stage = new LiveStage(sess, s"$dataDir/events.parquet")
     /** Writes `df` as a single parquet file at `dest` (staged source files
       * must be one file each so file↔micro-batch mapping is exact). The
       * sentinel/doctored frames are 1-row driver-local relations, so the
@@ -317,42 +303,37 @@ object EventStreams {
     // files share the first micro-batch (watermark semantics are
     // per-BATCH, not per-file, so the co-batched sentinel cannot
     // late-drop the real events).
-    ptime("copy fixture")(
-      Files.copy(Paths.get(s"$dataDir/events.parquet"), Paths.get(s"$srcDir/batch0.parquet")): Unit)
-    ptime("stage batch0Extra")(batch0Extra(stage).foreach { extra =>
+    Files.copy(Paths.get(s"$dataDir/events.parquet"), Paths.get(s"$srcDir/batch0.parquet"))
+    batch0Extra(stage).foreach { extra =>
       stageOneFile(extra, s"$base/b0", s"$srcDir/batch0b.parquet")
       rmTree(s"$base/b0")
-    })
+    }
 
     // A FACTORY rather than a frame: a transform that needs several
     // independent sources (a two-source stream-stream join) calls it once
     // per side; single-source transforms call it once.
-    val q = ptime("start query")(transform(() => fromParquetDir(sess, srcDir,
+    val q = transform(() => fromParquetDir(sess, srcDir,
         maxFilesPerTrigger = 2, knownSchema = Some(stage.schema)))
       .writeStream.format("parquet")
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
       .outputMode("append")
-      .start())
+      .start()
     val fuDirs = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
-      ptime("batch 0 drain")(
-        q.processAllAvailable()) // batch 0: every real event folded into state
+      q.processAllAvailable() // batch 0: every real event folded into state
       val fus = followups(stage)
       // With maxFilesPerTrigger=2, two follow-up files could share one
       // micro-batch and lose the between-batch watermark advance; every
       // gate stages ≤ 1 today, so fail loudly rather than silently merge.
       require(fus.size <= 1,
         s"runLive stages at most one follow-up batch (got ${fus.size})")
-      ptime("stage follow-up")(fus.zipWithIndex.foreach { case (df, i) =>
+      fus.zipWithIndex.foreach { case (df, i) =>
         fuDirs += s"$base/fu$i"
         stageOneFile(df, s"$base/fu$i", s"$srcDir/z$i.parquet")
-      })
-      ptime("follow-up drain")(
-        q.processAllAvailable()) // the follow-up micro-batch, if staged
-      if (profileLive) q.recentProgress.foreach(p =>
-        println(s"[live-batch ${p.batchId}] rows=${p.numInputRows} durationMs=${p.durationMs}"))
-    } finally ptime("stop")(q.stop())
+      }
+      q.processAllAvailable() // the follow-up micro-batch, if staged
+    } finally q.stop()
     // The source staging and checkpoint are dead once the run stopped;
     // only the sink outlives this call (the returned frame reads it
     // lazily) — reclaimed by the shutdown hook.

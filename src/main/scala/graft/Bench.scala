@@ -201,116 +201,8 @@ object Bench {
     // The per-query map is ~2 kB and can overflow a tail-window parse, so
     // the FINAL stdout line is a short total-only summary (~250 bytes);
     // the full line goes out just before it and to BENCH_local.json.
-    // Denominator (round-11 verdict #3 — SINGLE-SOURCED): the constant
-    // below is the one number; BASELINE.md documents the same measurement
-    // and the emitted "baseline_sec" field makes every artifact
-    // self-describe the denominator it used. Re-derived 2026-08-14
-    // (round 13) via scripts/baseline.py over all 173 oracle SQLs: four
-    // direct draws 56.76 / 56.92 / 57.06 / 59.73 s (threads=32, loadavg
-    // rising 2.2→4.1), agreeing with the conservative composition
-    // 42.6 (the round-12 composed 167-SQL floor) + 14.24 (measured
-    // per-query MINIMUM cost of the six round-13 SQLs — text_bpe_learn's
-    // 13.6 s dominates: its oracle unrolls ten list-retokenization CTE
-    // rounds that Spark's driver loop runs in ~1 s) gave 56.7. The
-    // final 175-SQL close re-derivation: warc_gz_ingest shares
-    // warc_ingest's SQL (~0.005 s) and text_bpe_encode's 3-round
-    // histogram oracle measured 0.227 s minimum over three draws, so
-    // the composition moves to 56.9 — with direct 175-SQL draws at
-    // 58.0 / 58.7 / 59.5 all ABOVE it, the reported vs_baseline can
-    // only overstate, never flatter, Spark's relative cost.
-    // Round-14 re-derivation (2026-08-14, 187 SQLs): the ten new
-    // oracles cost 0.623 s total (per-query minima over three draws;
-    // text_line_dedup 0.301 dominates, the rest 0.008-0.095), so the
-    // composition moves to 57.5 = 56.9 + 0.6. Direct 187-SQL draws
-    // that session ran 73.9 / 81.8 / 87.0 under loadavg 4-8 (the
-    // round's own three-SF verify battery trailing) — an A/B of the
-    // dominant text_bpe_learn oracle's pre/post-totality-fix forms on
-    // the same box measured 18.4 vs 17.9 s (r13 quiet: 13.6), pinning
-    // the inflation on box load, not SQL. The shipped 57.5 stays at
-    // the conservative composition, below every direct draw ever
-    // measured. Round-15 re-derivation (2026-08-15, 203 SQLs): the 15
-    // new oracles cost 6.468 s total (per-query minima over three
-    // draws on a load<2 box) — the three raw-PQ oracles dominate at
-    // ~1.6 s each (DuckDB re-derives the 8×256-centroid argmin encode
-    // from scratch: ~10M scored rows per query at sf0.1; Spark pays
-    // that once in a cached/staged index, the SQL twin pays it per
-    // query), the three IVF-PQ oracles ~0.4-0.5 s on the same shape,
-    // the other nine 0.3 s combined. Composition: 57.5 + 6.5 = 64.0.
-    // Second-session re-derivation (206 SQLs): the three additions cost
-    // 6.05 s minima — mm_wav_adpcm's 5.69 dominates (its oracle replays
-    // the IMA recurrence as a ~5.4M-evaluation integer fold; already
-    // 4.6× optimized by hoisting the step tables out of the lambda —
-    // Spark decodes the same blocks in ~0.2 s through the typed
-    // mapPartitions path), text_quality_rules 0.05,
-    // dedup_contamination_ngram 0.31. Composition: 64.0 + 6.0 = 70.0.
-    // Fourth-session re-derivation (223 SQLs): the 17 additions cost
-    // 1.312 s of three-draw DuckDB minima (largest: sim_hard_negatives
-    // 0.23, mm_ogg_pages 0.17 — its oracle materializes per-byte
-    // payload sums via lateral range, text_lm_perplexity 0.17,
-    // text_nb_classify 0.16; the rest ≤ 0.14 each).
-    // Composition: 70.0 + 1.3 = 71.3. Close re-derivation (226 SQLs):
-    // the last three additions cost 2.401 s minima — dedup_semdedup's
-    // oracle dominates at 2.25 s (full within-cluster pair scan over
-    // 64-dim list folds + a recursive-CTE components pass, the
-    // dedup_embed_ivf oracle's cost family); mm_wds_audio_pipeline
-    // 0.03, text_lm_buckets 0.13. Composition: 71.3 + 2.4 = 73.7.
-    // Round-16 re-derivation (2026-08-15, 231 SQLs): the five additions
-    // cost 1.469 s of three-draw minima on a load<1 box —
-    // pipeline_crawl_corpus 0.755 (its oracle replays the whole
-    // WARC→quality→LM→dedup→mix funnel from parquet) and
-    // dedup_span_merged 0.570 (per-pair island coalescing over the
-    // shared-gram join) dominate; mm_flac_pcm 0.077 (closed-form sample
-    // model replay), text_bm25_indexed 0.059 (shares text_bm25's SQL),
-    // warc_charset_extract 0.007. Composition: 73.7 + 1.5 = 75.2.
-    // Round-16 second re-derivation (238 SQLs): the seven later
-    // additions cost 1.9 s of cross-session three-draw minima —
-    // mm_phash_dedup 1.40 dominates (the oracle replays the separable
-    // integer DCT over 64 blocks × 8 bins twice per doc: ~31M
-    // intermediate rows at sf0.1); mm_ahash_dedup 0.21, crawl_host_rank
-    // 0.13 (three unrolled PageRank iterations), the rest ≤ 0.06.
-    // Composition: 75.2 + 1.9 = 77.1. Plus dedup_prefix_jaccard (239th;
-    // its oracle is deliberately the brute shingle join) at 1.246 s of
-    // three-draw minima: 77.1 + 1.2 = 78.3. Plus pdf_extract (240th) at
-    // 0.031 s: stays 78.3 (the conservative floor — sub-0.05 additions
-    // round DOWN, every direct draw sits higher). Plus
-    // csv_multiline_roundtrip 0.013 + text_lang_profile 0.239 (241st,
-    // 242nd): 78.3 + 0.25 = 78.5. text_nfc_dedup (243rd) at 0.024 s
-    // rounds down: stays 78.5.
-    // Round 18 FULL re-derivation (direct draws, scripts/baseline.py over
-    // all 245 oracle SQLs incl. the two new ones): 74.28 / 71.87 / 72.20 s.
-    // The drop from the 78.5 composition is REAL and conservative: the
-    // BPE round CTEs are now AS MATERIALIZED (DuckDB re-inlined the
-    // chain per reference — exponential in k; text_bpe_bytes alone drew
-    // 10.8 s plain vs 0.12 s materialized), so the old composition
-    // carried several seconds of artificial DuckDB cost that flattered
-    // the ratio. The minimum draw is the recorded denominator
-    // (smaller denominator = larger reported ratio = the conservative
-    // direction). BASELINE.md round-18 row documents the three draws.
-    // Round-18 LATE session re-derivations. First battery over 253
-    // SQLs (+ avro_roundtrip/avro_evolution, WordPiece learn/encode,
-    // text_unigram_viterbi): 62.36 / 82.95 / 65.40 s (the middle draw
-    // rode a loadavg-8 spike). Final battery over the closing 256-SQL
-    // set (+ warc_zstdict_ingest, avro_ingest_live,
-    // jsonl_bz2_roundtrip): 63.51 / 64.79 / 70.58 s at loadavg 0.1-2.2.
-    // The recorded constant is the minimum over the FINAL set — the
-    // apples-to-apples denominator for the 256-query numerator; it
-    // stays well under the close session's 71.9 because this box was
-    // quieter than those draws. BASELINE.md round-18-late rows have the
-    // full ledger. Round-19 re-derivation (265 SQLs — the five
-    // additions docx_extract 0.007 / sim_ivfpq_refine 0.575 /
-    // q_timetravel_read 0.096 / q_txlog_compact 0.068 /
-    // dedup_span_suffix 0.576 cost 1.32 s of three-draw minima):
-    // composition 63.5 + 1.3 = 64.8, with four direct 265-SQL draws at
-    // 67.59 / 68.93 / 71.65 / 74.29 s ALL ABOVE it on a load<1-start
-    // box — the recorded constant stays the conservative composition
-    // floor (smaller denominator = larger reported ratio). BASELINE.md
-    // round-19 row has the ledger. Round-20 re-derivation (275 SQLs —
-    // the four additions odt_extract 0.010 / rtf_extract 0.010 /
-    // q_txlog_stats_prune 0.025 / dedup_script_jaccard 0.304 cost
-    // 0.348 s of three-draw minima): composition 64.8 + 0.3 = 65.1,
-    // with three direct 275-SQL draws at 72.12 / 72.59 / 72.90 s ALL
-    // ABOVE it the same session — the constant stays the conservative
-    // composition floor. Env overrides for re-derived
+    // Denominator: BASELINE.md's "denominator" rows log every
+    // re-derivation of the constant below. Env overrides for re-derived
     // denominators; the fallback keeps `vs_baseline` on the driver's
     // line, which sets no env. Only meaningful at sf0.1.
     val FallbackBaselineSec = 65.1

@@ -754,7 +754,13 @@ object Graft {
     * (`vec_id`, `embedCol`: array<float|double> of 64 dims — 8
     * subspaces × 8 dims at 256 centroids each; see PqCodebook for the
     * sampled deterministic fit). Returns the (m, cid, w) codebook frame
-    * consumed by [[pqEncode]]/[[pqTopK]]. */
+    * consumed by [[pqEncode]]/[[pqTopK]].
+    *
+    * NOTE this call is EAGER: the fit runs at call time — two Spark jobs
+    * over `embeddings` (a count, then one collect of a
+    * ≤[[operators.PqCodebook.SampleTarget]]-row sample), then the same
+    * driver-side k-means kernel as [[embedNearDupIvf]]'s codebook, with
+    * the L2 assignment rule, once per subspace. */
   def pqFit(spark: SparkSession, embeddings: DataFrame,
             embedCol: String = "embedding"): DataFrame =
     operators.PqCodebook.fitFrame(spark,

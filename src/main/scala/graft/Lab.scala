@@ -5,16 +5,16 @@ import scala.util.control.NonFatal
 /** Dev-only A/B measurement harness (not a declared query; never run by
   * the driver). Times the named queries with INTERLEAVED draws in one
   * warm session — the only decidable protocol on a box with ±15-20%
-  * per-draw noise (round-21 §1.2) — and can dump formatted plans.
+  * per-draw noise (round-21 §1.2). Formatted plans come from
+  * [[PlanDump]], which writes one for every declared query.
   *
-  * Usage: sbt "runMain graft.Lab q1,q2 [draws] [planDir]"
+  * Usage: sbt "runMain graft.Lab q1,q2 [draws]"
   *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench.
   */
 object Lab {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("wordcount").split(",").map(_.trim).filter(_.nonEmpty)
     val draws = if (args.length > 1) args(1).toInt else 5
-    val planDir = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
@@ -32,16 +32,6 @@ object Lab {
     for ((n, fn) <- qs; dir <- Seq("/root/testdata/sf0.001", sfDir))
       try fn(spark, dir).count()
       catch { case NonFatal(e) => failed(s"warm-up of $n on $dir", e) }
-
-    planDir.foreach { dir =>
-      new java.io.File(dir).mkdirs()
-      for ((n, fn) <- qs) {
-        val f = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$n.txt"), f)
-        println(s"[lab] plan -> $dir/$n.txt")
-      }
-    }
 
     val results = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector())
     for (i <- 1 to draws; (n, fn) <- qs) {

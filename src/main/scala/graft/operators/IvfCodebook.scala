@@ -1,11 +1,14 @@
 package graft.operators
 
 import graft.{Stage, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import scala.util.control.NonFatal
 
-/** Learned IVF codebook: deterministic sampled spherical k-means.
+/** Learned IVF codebook: deterministic sampled spherical k-means — and
+  * graft's one k-means kernel, which [[PqCodebook]] runs with the L2
+  * assignment rule once per subspace.
   *
   * Replaces the round-4..7 stand-in centroids (`vec_id < 16`) with a
   * codebook actually fit to the corpus — the thing a real 100 TB ANN
@@ -60,7 +63,7 @@ object IvfCodebook {
 
   /** Bump whenever the fit algorithm changes its output (sampling rule,
     * init, iteration count, rounding, K): an existing stage is REUSED
-    * (see fitAndStage), so bytes written by an older algorithm must land
+    * (see [[staged]]), so bytes written by an older algorithm must land
     * under a path the newer code never reads. */
   private val FitVersion = 1
 
@@ -76,49 +79,55 @@ object IvfCodebook {
     * path: two SESSIONS in one JVM racing their first IVF query serialize
     * instead of writing the stage concurrently (overwrite-mode committers
     * clobbering each other), and the loser adopts the winner's bytes via
-    * existingStage. Cross-PROCESS races remain excluded by the driver's
+    * [[staged]]. Cross-PROCESS races remain excluded by the driver's
     * single-runner-per-dataset contract (see Stage's scaladoc). */
   def centroids(s: SparkSession, d: String): DataFrame =
-    Tables.derived(s, d, "ivfcent")(fitAndStage(s, d))
+    Tables.derived(s, d, "ivfcent")(
+      staged(s, stagePath(d), Seq("cid", "w", "wnrm"), K) {
+        val cents = fitCodebook(s, SimilarityQueries.vecs(s, d), K)
+        require(cents.nonEmpty, s"IVF codebook: no sample vectors in $d")
+        import s.implicits._
+        cents.toDF("cid", "w", "wnrm")
+      })
 
-  private def round6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+  /** The codebook staged at `path`, fitting and staging it first if no
+    * usable stage is there; the returned frame READS the stage back, so
+    * the Spark plans and the DuckDB oracle consume identical bytes.
+    *
+    * The fits are deterministic, so an existing stage holds the identical
+    * bytes: REUSE it instead of overwriting. Overwriting has two costs —
+    * it invalidates any cached plan in another session of this JVM that
+    * pins the old part files (FAILED_READ.FILE_NOT_EXIST on next use,
+    * found by IvfCodebookSpec's refit test), and it re-runs the fit once
+    * per JVM for output that cannot change. FitVersion in the path keeps
+    * an older algorithm's bytes from being picked up. A `_SUCCESS` stage
+    * is used when its columns are `cols` and it has 1..`maxRows` rows; a
+    * torn, foreign or unreadable one is reported on stderr and refit. */
+  private[operators] def staged(s: SparkSession, path: String, cols: Seq[String],
+                                maxRows: Long)(fit: => DataFrame): DataFrame =
+    existingStage(s, path, cols, maxRows).getOrElse {
+      fit.coalesce(1).write.mode("overwrite").parquet(path)
+      s.read.parquet(path)
+    }
 
-  private def fitAndStage(s: SparkSession, d: String): DataFrame = {
-    // The fit is deterministic, so an existing stage holds the identical
-    // bytes: REUSE it instead of overwriting. Overwriting has two costs —
-    // it invalidates any cached plan in another session of this JVM that
-    // pins the old part files (FAILED_READ.FILE_NOT_EXIST on next use,
-    // found by IvfCodebookSpec's refit test), and it re-runs the
-    // fit once per JVM for output that cannot change. FitVersion in the
-    // path keeps an older algorithm's bytes from being picked up; the
-    // shape check below rejects a torn or foreign directory.
-    val path = stagePath(d)
-    existingStage(s, path).getOrElse(fitInto(s, d, path))
-  }
-
-  private def existingStage(s: SparkSession, path: String): Option[DataFrame] =
-    try {
-      if (!new java.io.File(path, "_SUCCESS").exists()) None
+  private def existingStage(s: SparkSession, path: String, cols: Seq[String],
+                            maxRows: Long): Option[DataFrame] =
+    if (!new java.io.File(path, "_SUCCESS").exists()) None
+    else try {
+      val df = s.read.parquet(path)
+      val n = df.count()
+      if (df.columns.toSeq == cols && n >= 1 && n <= maxRows) Some(df)
       else {
-        val df = s.read.parquet(path)
-        val n = df.count()
-        if (df.columns.toSeq == Seq("cid", "w", "wnrm") && n >= 1 && n <= K)
-          Some(df)
-        else None
+        System.err.println(s"[codebook] stage $path rejected, refitting: columns " +
+          s"${df.columns.mkString("(", ", ", ")")}, $n rows")
+        None
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def fitInto(s: SparkSession, d: String, path: String): DataFrame = {
-    val cents = fitCodebook(s, SimilarityQueries.vecs(s, d), K)
-    require(cents.nonEmpty, s"IVF codebook: no sample vectors in $d")
-    // Stage the fitted codebook; the returned frame READS it back, so the
-    // Spark plans and the DuckDB oracle consume identical bytes.
-    import s.implicits._
-    cents.toDF("cid", "w", "wnrm")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
-  }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[codebook] stage $path unreadable, refitting: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+        None
+    }
 
   /** The deterministic sampled spherical k-means fit over ANY
     * (vec_id, v, nrm) frame — the reusable kernel behind the staged
@@ -126,8 +135,8 @@ object IvfCodebook {
     * (arbitrary k there). Zero-norm vectors are excluded (cosine is
     * undefined for them); an empty input yields an empty codebook —
     * callers that require data assert themselves. Returns (cid, w, wnrm)
-    * with cid = 0..k'-1, k' = min(k, sample size). Two Spark jobs: the
-    * count that sizes the sample, and the collect of the sample. */
+    * with cid = 0..k'-1, k' = min(k, sample size). Two Spark jobs (see
+    * [[sample]]). */
   def fitCodebook(s: SparkSession, vecs: DataFrame,
                   k: Int): Seq[(Long, Array[Double], Double)] = {
     require(k >= 1, s"codebook size must be >= 1, got $k")
@@ -139,14 +148,32 @@ object IvfCodebook {
     val e = vecs
       .filter(col("nrm") > 0 && !isnan(col("nrm")))
       .select(col("vec_id"), col("v"), col("nrm"))
+    val smp = sample(s, e, k, col("nrm").cast("double"))
+    lloyd(smp.init, smp.pts, smp.aux, Spherical).toSeq.zipWithIndex
+      .map { case (w, cid) => (cid.toLong, w, Spherical.centAux(w)) }
+  }
 
-    // Deterministic Bernoulli sample bounded at SampleTarget: keep rows
-    // whose xxhash64 bucket (out of 1e6) falls under the sampling rate.
-    // One count to size the rate — metadata-cheap next to the fit. Counted
-    // off the row RDD: Dataset.count() is an aggregate, which adaptive
-    // execution submits as two jobs.
+  /** A collected fit sample: the `k` init vectors and the points (one
+    * per id) with their per-point scalar `aux`. */
+  private[operators] final class Sample(val init: Array[Array[Double]],
+                                        val pts: Array[Array[Double]],
+                                        val aux: Array[Double])
+
+  /** The bounded, deterministic sample of a (vec_id, v, ...) frame that
+    * both codebook fits read, in two Spark jobs: a count of `e`'s row RDD
+    * (a `Dataset.count()` is an aggregate, which adaptive execution
+    * submits as two jobs), then one collect of the rows whose
+    * xxhash64(vec_id) bucket (out of 1e6) falls under the rate that caps
+    * the sample at [[SampleTarget]] rows. `aux` is a per-row double
+    * carried along for the assignment rule. A null component reads as 0
+    * (graft_dot skips it, and Spark's sum ignores it but counts it); a
+    * null vector has nothing to fit and is dropped after the sizing count.
+    * Init takes the k rows with the smallest (xxhash64(vec_id), vec_id);
+    * a repeated vec_id is one point, its first row. */
+  private[operators] def sample(s: SparkSession, e: DataFrame, k: Int,
+                                aux: Column): Sample = {
     val n = e.select().queryExecution.toRdd.count()
-    val sample =
+    val kept =
       if (n <= SampleTarget) e
       else e.filter(
         pmod(xxhash64(col("vec_id")), lit(1000000L)) <
@@ -158,50 +185,110 @@ object IvfCodebook {
       case _ => xxhash64(lit("vec_id"), col("vec_id"))
     }
     import s.implicits._
-    // The whole bounded sample in one collect; a null component reads as
-    // 0 (graft_dot skips it, and Spark's sum ignores it but counts it).
-    val rows = sample
+    val rows = kept
+      .filter(col("v").isNotNull)
       .select(xxhash64(col("vec_id")), idKey,
-        expr("transform(v, x -> coalesce(CAST(x AS DOUBLE), 0D))"),
-        col("nrm").cast("double"))
+        expr("transform(v, x -> coalesce(CAST(x AS DOUBLE), 0D))"), aux)
       .as[(Long, Long, Array[Double], Double)]
       .collect()
-    lloyd(rows, k)
+    val seen = new java.util.HashSet[Long]()
+    val pts = rows.filter(r => seen.add(r._2))
+    new Sample(rows.sortBy(r => (r._1, r._2)).take(k).map(_._3),
+      pts.map(_._3), pts.map(_._4))
   }
+
+  /** How [[lloyd]] assigns a point to a cell: `nearest` picks the cell of
+    * point `v` (with its caller-supplied scalar `aux`) among `cents`,
+    * whose scalars `centAux` computes once per iteration. */
+  private[operators] sealed abstract class Rule {
+    def centAux(w: Array[Double]): Double
+    def nearest(v: Array[Double], aux: Double,
+                cents: Array[Array[Double]], caux: Array[Double]): Int
+  }
+
+  /** The IVF cell: argmax cosine dot(v, w) / (nrm · wnrm), with aux = nrm
+    * and centAux the centroid's norm; ties go to the smaller cid, NaN
+    * sorts above every number and a zero divisor below. */
+  private[operators] object Spherical extends Rule {
+    def centAux(w: Array[Double]): Double = math.sqrt(L2.centAux(w))
+    def nearest(v: Array[Double], nrm: Double,
+                cents: Array[Array[Double]], wnrm: Array[Double]): Int = {
+      var best = 0
+      var bestCos = Double.NaN
+      var bestNull = true
+      var cid = 0
+      while (cid < cents.length) {
+        val dt = dot(v, cents(cid))
+        val den = nrm * wnrm(cid)
+        if (den != 0.0) {
+          val cos = dt / den
+          // Spark's double order: NaN sorts above every number.
+          val better = bestNull || (!bestCos.isNaN && (cos.isNaN || cos > bestCos))
+          if (better) { best = cid; bestCos = cos; bestNull = false }
+        }
+        cid += 1
+      }
+      best
+    }
+  }
+
+  /** The PQ cell: argmin of d2 = (xx + cc) − 2.0·dot(x, c), with aux = xx
+    * = dot(x, x) and centAux cc = Σ c²; lexicographic on (d2, cid), as
+    * Spark's min(struct(d2, cid)) orders it (NaN above every number,
+    * −0.0 equal to 0.0). */
+  private[operators] object L2 extends Rule {
+    def centAux(w: Array[Double]): Double = w.map(x => x * x).sum
+    def nearest(x: Array[Double], xx: Double,
+                cents: Array[Array[Double]], cc: Array[Double]): Int = {
+      var best = 0
+      var bestD2 = 0.0
+      var cid = 0
+      while (cid < cents.length) {
+        val d2 = (xx + cc(cid)) - 2.0 * dot(x, cents(cid))
+        if (cid == 0 || (d2 != bestD2 && java.lang.Double.compare(d2, bestD2) < 0)) {
+          best = cid; bestD2 = d2
+        }
+        cid += 1
+      }
+      best
+    }
+  }
+
+  /** graft_dot's index-order fold, with its length-mismatch error. */
+  private[operators] def dot(v: Array[Double], w: Array[Double]): Double = {
+    if (w.length != v.length)
+      throw new IllegalArgumentException(
+        s"graft_dot: array length mismatch (${v.length} vs ${w.length})")
+    var s = 0.0
+    var d = 0
+    while (d < v.length) { s += v(d) * w(d); d += 1 }
+    s
+  }
+
+  private def round6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   /** Rows assigned per task in [[lloyd]]. Fixed, so the chunking — and
     * with it the order of every floating-point sum — does not depend on
     * the driver's core count. */
   private val ChunkRows = 2048
 
-  /** Init + [[Iters]] Lloyd passes over the collected sample (xxhash64,
-    * id key, v, nrm), in plain Scala on the driver: bounded at
-    * SampleTarget·k·dim·Iters multiply-adds whatever the corpus size.
-    * Rules (FitVersion 1's staged bytes depend on every one):
-    *  - init takes the k rows with the smallest (xxhash64(vec_id), vec_id);
-    *  - a repeated vec_id counts once, as its first row;
-    *  - the dot product is graft_dot's index-order fold, the cosine
-    *    dot / (nrm · wnrm), and the cell the argmax cosine with ties to
-    *    the smaller cid (NaN above every number, a zero divisor below);
-    *  - a centroid is the per-dimension mean rounded to 6 dp, so
-    *    repeated fits are bit-stable; an empty cell keeps its centroid
-    *    (no resampling — resampling would reintroduce order dependence).
-    * Assignment runs in fixed [[ChunkRows]] chunks across the driver's
-    * cores; the per-chunk sums merge in chunk order. */
-  private def lloyd(rows: Array[(Long, Long, Array[Double], Double)],
-                    k: Int): Seq[(Long, Array[Double], Double)] = {
-    def norm(w: Array[Double]) = math.sqrt(w.map(x => x * x).sum)
-    var cents: Array[Array[Double]] = rows
-      .sortBy(r => (r._1, r._2))
-      .take(k)
-      .map(_._3)
-    val seen = new java.util.HashSet[Long]()
-    val pts = rows.filter(r => seen.add(r._2))
+  /** [[Iters]] Lloyd passes from `init` over `pts` under `rule`, in plain
+    * Scala on the driver: bounded at SampleTarget·k·dim·Iters
+    * multiply-adds whatever the corpus size. A centroid is the
+    * per-dimension mean rounded to 6 dp, so repeated fits are bit-stable;
+    * an empty cell keeps its centroid (no resampling — resampling would
+    * reintroduce order dependence). Assignment runs in fixed [[ChunkRows]]
+    * chunks across the driver's cores; the per-chunk sums merge in chunk
+    * order. The staged IVF and PQ codebooks' bytes (FitVersion 1) depend
+    * on these rules and on `rule`'s. */
+  private[operators] def lloyd(init: Array[Array[Double]], pts: Array[Array[Double]],
+                               aux: Array[Double], rule: Rule): Array[Array[Double]] = {
+    var cents = init
     val dim = if (cents.isEmpty) 0 else cents(0).length
     val nChunks = (pts.length + ChunkRows - 1) / ChunkRows
     for (_ <- 1 to Iters if cents.nonEmpty) {
       val cur = cents
-      val wnrm = cur.map(norm)
+      val caux = cur.map(rule.centAux)
       val sums = new Array[Array[Array[Double]]](nChunks)
       val cnts = new Array[Array[Long]](nChunks)
       java.util.stream.IntStream.range(0, nChunks).parallel().forEach { c =>
@@ -210,8 +297,8 @@ object IvfCodebook {
         var i = c * ChunkRows
         val end = math.min(i + ChunkRows, pts.length)
         while (i < end) {
-          val (_, _, v, nrm) = pts(i)
-          val best = nearest(v, nrm, cur, wnrm)
+          val v = pts(i)
+          val best = rule.nearest(v, aux(i), cur, caux)
           val acc = sx(best)
           var d = 0
           while (d < dim) { acc(d) += v(d); d += 1 }
@@ -231,33 +318,6 @@ object IvfCodebook {
         }
       }
     }
-    cents.toSeq.zipWithIndex.map { case (w, cid) => (cid.toLong, w, norm(w)) }
-  }
-
-  /** The cell of `v`: argmax over cids of dot(v, w) / (nrm · wnrm). */
-  private def nearest(v: Array[Double], nrm: Double,
-                      cents: Array[Array[Double]], wnrm: Array[Double]): Int = {
-    var best = 0
-    var bestCos = Double.NaN
-    var bestNull = true
-    var cid = 0
-    while (cid < cents.length) {
-      val w = cents(cid)
-      if (w.length != v.length)
-        throw new IllegalArgumentException(
-          s"graft_dot: array length mismatch (${v.length} vs ${w.length})")
-      var dot = 0.0
-      var d = 0
-      while (d < v.length) { dot += v(d) * w(d); d += 1 }
-      val den = nrm * wnrm(cid)
-      if (den != 0.0) {
-        val cos = dot / den
-        // Spark's double order: NaN sorts above every number.
-        val better = bestNull || (!bestCos.isNaN && (cos.isNaN || cos > bestCos))
-        if (better) { best = cid; bestCos = cos; bestNull = false }
-      }
-      cid += 1
-    }
-    best
+    cents
   }
 }

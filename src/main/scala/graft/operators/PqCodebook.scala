@@ -17,19 +17,20 @@ import org.apache.spark.sql.functions._
   * and the probe is a map-only scan of it; the full-precision vectors are
   * only ever read once, at encode time.
   *
-  * Scale shape (mirrors [[IvfCodebook]], which documents the rationale):
-  * hash-sampled input capped at [[SampleTarget]]; each Lloyd iteration is
-  * ONE pass over the sample for ALL M subspaces at once (the subspace id
-  * is just another grouping column); per-iteration driver traffic is
-  * M·K·SubDim grouped sums (1024 rows), never the data. The fitted
-  * codebook (M·K rows) stages to parquet so the Spark encode and the
-  * DuckDB oracle read IDENTICAL bytes rather than re-deriving the fit.
+  * Scale shape: the fit is [[IvfCodebook]]'s (which documents the
+  * rationale) with the L2 assignment rule — the hash-sampled input capped
+  * at [[SampleTarget]] is collected once, in the same two Spark jobs as an
+  * IVF fit, and the kernel ([[IvfCodebook.lloyd]]) runs on the driver once
+  * per subspace: at most SampleTarget·K·SubDim·M·Iters multiply-adds
+  * whatever the corpus size. The fitted codebook (M·K rows) stages to
+  * parquet so the Spark encode and the DuckDB oracle read IDENTICAL bytes
+  * rather than re-deriving the fit.
   *
   * Determinism: init takes the K sample vectors with the smallest
   * xxhash64(vec_id) and slices each into its M sub-vectors (all
   * subspaces share the draw — a per-subspace draw would add nothing but
   * RNG surface); centroid components round to 6 dp per iteration to
-  * collapse shuffled-double-sum ulps; empty cells keep their previous
+  * collapse summation-order ulps; empty cells keep their previous
   * centroid. Assignment is argmin of d² = |x|² + |c|² − 2⟨x,c⟩ with ties
   * toward the smaller cid — the same (d2, cid) lexicographic rule the
   * encode path and every oracle CTE replicate.
@@ -54,11 +55,11 @@ object PqCodebook {
     * one broadcast array row. */
   val K = 256
 
-  /** Lloyd iterations; same knee argument as [[IvfCodebook.Iters]]. */
-  val Iters = 5
+  /** Lloyd iterations: the shared kernel's [[IvfCodebook.Iters]]. */
+  val Iters = IvfCodebook.Iters
 
-  /** Sampled-fit bound, as [[IvfCodebook.SampleTarget]]. */
-  val SampleTarget = 100000L
+  /** Sampled-fit bound: the shared sample's [[IvfCodebook.SampleTarget]]. */
+  val SampleTarget = IvfCodebook.SampleTarget
 
   /** Bump when the fit algorithm changes its output (see
     * [[IvfCodebook]]'s FitVersion scaladoc — stages are REUSED). */
@@ -77,8 +78,8 @@ object PqCodebook {
     * (vec_id, m, sub) with sub = v[m·SubDim+1 .. (m+1)·SubDim] kept at
     * the source element type (graft_dot widens floats itself, exactly
     * like the oracle's CAST AS DOUBLE — see DotProduct). Shared by the
-    * fit, the encode, and the probe-LUT build so the slicing rule has
-    * one home. */
+    * encode and the probe-LUT builds so the slicing rule has one home in
+    * Spark; the fit slices its collected sample the same way. */
   private[operators] def subVectors(vecsDf: DataFrame): DataFrame =
     vecsDf.select(col("vec_id"), posexplode(expr(
       s"transform(sequence(0, ${M - 1}), m -> slice(v, m * $SubDim + 1, $SubDim))"
@@ -99,37 +100,13 @@ object PqCodebook {
     * and the loser adopts the winner's stage (as in [[IvfCodebook]]). */
   def codebookFor(s: SparkSession, d: String, kind: String,
                   input: => DataFrame): DataFrame =
-    Tables.derived(s, d, s"pqcent_$kind")(fitAndStage(s, d, kind, input))
-
-  private def round6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
-  private def fitAndStage(s: SparkSession, d: String, kind: String,
-                          input: => DataFrame): DataFrame = {
-    val path = stagePath(d, kind)
-    existingStage(s, path).getOrElse(fitInto(s, input, path))
-  }
-
-  private def existingStage(s: SparkSession, path: String): Option[DataFrame] =
-    try {
-      if (!new java.io.File(path, "_SUCCESS").exists()) None
-      else {
-        val df = s.read.parquet(path)
-        val n = df.count()
-        if (df.columns.toSeq == Seq("m", "cid", "w") && n >= 1 && n <= M.toLong * K)
-          Some(df)
-        else None
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def fitInto(s: SparkSession, input: DataFrame, path: String): DataFrame = {
-    val cents = fit(s, input)
-    require(cents.nonEmpty, s"PQ codebook: no sample vectors for $path")
-    import s.implicits._
-    cents.toDF("m", "cid", "w")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
-  }
+    Tables.derived(s, d, s"pqcent_$kind")(
+      IvfCodebook.staged(s, stagePath(d, kind), Seq("m", "cid", "w"), M.toLong * K) {
+        val cents = fit(s, input)
+        require(cents.nonEmpty, s"PQ codebook: no sample vectors for ${stagePath(d, kind)}")
+        import s.implicits._
+        cents.toDF("m", "cid", "w")
+      })
 
   /** Per-call fit over an arbitrary (vec_id, v) frame, returned as the
     * (m, cid, w) codebook frame WITHOUT staging — the facade entry point
@@ -164,68 +141,17 @@ object PqCodebook {
   /** The deterministic sampled per-subspace L2 k-means. Input contract:
     * (vec_id, v) with |v| = M·SubDim. Returns (m, cid, w) rows,
     * cid = 0..k'−1 per subspace, k' = min(K, sample size). Unlike the
-    * spherical IVF fit, zero vectors are legal L2 inputs and stay in. */
+    * spherical IVF fit, zero vectors are legal L2 inputs and stay in.
+    * Two Spark jobs (see [[IvfCodebook.sample]]); the per-point scalar
+    * the L2 rule needs is |x|² of each slice, computed here. */
   private def fit(s: SparkSession, vecsDf: DataFrame): Seq[(Int, Long, Array[Double])] = {
-    val e = vecsDf.select(col("vec_id"), col("v"))
-    val n = e.count()
-    val sample = (
-      if (n <= SampleTarget) e
-      else e.filter(
-        pmod(xxhash64(col("vec_id")), lit(1000000L)) <
-          lit((SampleTarget * 1000000L) / n))
-      ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dot = graft.functions.expressions.GraftFunctions.dotCol _
-
-      // Seeded init: the K smallest-hash sample vectors, sliced into
-      // their M sub-vectors on the driver (K full vectors collected; the
-      // corpus never is).
-      val initVecs: Array[Array[Double]] = sample
-        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-        .limit(K)
-        .select(expr("transform(v, x -> CAST(x AS DOUBLE))").as("w"))
-        .collect()
-        .map(_.getSeq[Double](0).toArray)
-      var cents: Array[((Int, Long), Array[Double])] =
-        (for (m <- 0 until M; (w, cid) <- initVecs.zipWithIndex)
-          yield ((m, cid.toLong), w.slice(m * SubDim, (m + 1) * SubDim))).toArray
-
-      val subs = subVectors(sample)
-        .withColumn("xx", dot(col("sub"), col("sub")))
-        .select(col("vec_id"), col("m"), col("sub"), col("xx"))
-
-      import s.implicits._
-      for (_ <- 1 to Iters if cents.nonEmpty) {
-        val centDf = cents.toSeq
-          .map { case ((m, cid), w) => (m, cid, w, w.map(x => x * x).sum) }
-          .toDF("m", "cid", "w", "cc")
-        // Assign: argmin d² via min(struct(d2, cid)) — lexicographic min
-        // IS (smallest d2, then smallest cid), and it partial-aggregates
-        // map-side. Then per-(m, cell, dim) sums: M·K·SubDim rows to the
-        // driver per iteration.
-        val sums = subs.join(broadcast(centDf), Seq("m"))
-          .withColumn("d2",
-            col("xx") + col("cc") - lit(2.0) * dot(col("sub"), col("w")))
-          .groupBy("vec_id", "m")
-          .agg(min(struct(col("d2"), col("cid"))).as("mn"), first(col("sub")).as("sub"))
-          .select(col("m"), col("mn.cid").as("cid"), posexplode(col("sub")).as(Seq("pos", "x")))
-          .groupBy("m", "cid", "pos")
-          .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("cnt"))
-          .collect()
-        val byCell = sums.groupBy(r => (r.getInt(0), r.getLong(1)))
-        cents = cents.map { case (key, prev) =>
-          byCell.get(key) match {
-            case Some(rows) =>
-              val w = new Array[Double](SubDim)
-              rows.foreach { r =>
-                w(r.getInt(2)) = round6d(r.getDouble(3) / r.getLong(4))
-              }
-              (key, w)
-            case None => (key, prev) // empty cell keeps its centroid
-          }
-        }
-      }
-      cents.toSeq.map { case ((m, cid), w) => (m, cid, w) }
-    } finally sample.unpersist(blocking = false)
+    val smp = IvfCodebook.sample(s, vecsDf, K, lit(0D))
+    def slice(v: Array[Double], m: Int) = v.slice(m * SubDim, (m + 1) * SubDim)
+    (0 until M).flatMap { m =>
+      val subs = smp.pts.map(slice(_, m))
+      val xx = subs.map(x => IvfCodebook.dot(x, x))
+      IvfCodebook.lloyd(smp.init.map(slice(_, m)), subs, xx, IvfCodebook.L2)
+        .toSeq.zipWithIndex.map { case (w, cid) => (m, cid.toLong, w) }
+    }
   }
 }

@@ -15,8 +15,9 @@ class PqSpec extends SparkSpec {
     val cb = PqCodebook.codebook(spark, dir).collect()
     val perM = cb.groupBy(_.getInt(0)).view.mapValues(_.length).toMap
     assert(perM.keySet == (0 until PqCodebook.M).toSet)
-    // sf0.001 has fewer vectors than K=256: every subspace carries
-    // k' = min(K, sample) centroids — same count in each (shared init draw).
+    // Every subspace carries k' = min(K, sample) centroids — K at sf0.001,
+    // whose 500 embeddings exceed K=256 — the same count in each (shared
+    // init draw).
     assert(perM.values.toSet.size == 1, s"uneven subspace codebooks: $perM")
     cb.foreach(r => assert(r.getSeq[Double](2).size == PqCodebook.SubDim))
     // Re-request hits the stage-reuse path and returns identical bytes.
@@ -96,5 +97,81 @@ class PqSpec extends SparkSpec {
     assert(row.getLong(1) >= PqQueries.RecallFloorHits,
       s"recall gate below floor on sf0.001: $row")
     assert(row.getBoolean(3))
+  }
+
+  private lazy val freshCopy = {
+    // A new data dir ⇒ a new stage path, so the fit runs instead of
+    // reusing a stage an earlier run left behind.
+    val copy = java.nio.file.Files.createTempDirectory("pq_pin_corpus")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(dir, "embeddings.parquet"),
+      copy.resolve("embeddings.parquet"))
+    copy.toString
+  }
+
+  /** SHA-256 over (m, cid, dim, every component's bits) in (m, cid) order. */
+  private def digest(codebook: org.apache.spark.sql.DataFrame): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def put(x: Long): Unit = { buf.clear(); buf.putLong(x); md.update(buf.array()) }
+    codebook.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
+      .sortBy(r => (r._1, r._2))
+      .foreach { case (m, cid, w) =>
+        put(m.toLong); put(cid); put(w.length.toLong)
+        w.foreach(x => put(java.lang.Double.doubleToLongBits(x)))
+      }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  // The pinned values are the codebooks of the earlier fit that ran each
+  // Lloyd iteration as a grouped Spark pass; the driver-side fit must
+  // reproduce them exactly (FitVersion stays 1, staged bytes unchanged).
+  test("the sf0.001 raw codebook is pinned bit for bit") {
+    assert(digest(PqCodebook.codebook(spark, freshCopy)) ==
+      "457503deb9f6245ae7673794ba7dccfd2a61d95516474b94cb553ae59d8a6c73")
+  }
+
+  test("the sf0.001 IVF-residual codebook is pinned bit for bit") {
+    assert(digest(IvfPqQueries.residualCodebook(spark, freshCopy)) ==
+      "e41511a1a34d254a812aa0c5bca0755c6375cd57595fdb02ba4423f53ca6aee2")
+  }
+
+  test("PqCodebook.fitFrame submits at most 2 Spark jobs") {
+    // The count that sizes the sample and the collect of the sample; init
+    // and every Lloyd iteration of every subspace run on the driver. The
+    // listener and fence job are IvfCodebookSpec's.
+    val sc = spark.sparkContext
+    val fitJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("pq-fit") => fitJobs.incrementAndGet(): Unit
+          case Some("pq-fence") => fenceSeen.countDown()
+          case _ => ()
+        }
+    }
+    val vecs = SimilarityQueries.vecs(spark, dir)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pq-fit", "codebook fit")
+      val cb = try PqCodebook.fitFrame(spark, vecs) finally sc.clearJobGroup()
+      sc.setJobGroup("pq-fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never seen")
+      assert(fitJobs.get >= 1 && fitJobs.get <= 2, s"fit submitted ${fitJobs.get} jobs")
+      assert(cb.count() == PqCodebook.M.toLong * PqCodebook.K)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a null vector is left out of the fit") {
+    // Zero vectors are legal L2 inputs; a null one has no components and
+    // must neither fail the fit nor move a centroid.
+    val vecs = SimilarityQueries.vecs(spark, dir).select("vec_id", "v")
+    val withNull = vecs.union(vecs.limit(1)
+      .select(lit(-1L).as("vec_id"), lit(null).cast(vecs.schema("v").dataType).as("v")))
+    assert(digest(PqCodebook.fitFrame(spark, withNull)) ==
+      digest(PqCodebook.fitFrame(spark, vecs)))
   }
 }

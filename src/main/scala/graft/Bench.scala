@@ -32,11 +32,7 @@ object Bench {
     // not in codegen sources), so this compiles the exact plans the timed
     // runs execute — standard steady-state benchmarking (cf. JMH warmup).
     // Data at the target SF is NOT touched, let alone cached.
-    // Dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 warms and times just those
-    // queries. Unset (the driver's case) runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(ns => SparkEntry.queries.filter(kv => ns(kv._1)))
+    val selected = SparkEntry.selectedQueries
 
     val warmDir = "/root/testdata/sf0.001"
     val warmed = new java.io.File(warmDir).isDirectory && warmDir != sfDir
@@ -67,11 +63,7 @@ object Bench {
     // Machine-load stamp (round-8 post-mortem: BENCH_r08 recorded 3.13×
     // from a loaded box while the binaries measured 0.88× quiet — the
     // artifact now carries the evidence to read such a number correctly).
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble
-      catch { case NonFatal(e) => failed("read of /proc/loadavg", e); -1.0 }
-    val loadStart = loadavg()
+    val loadStart = LocalSession.loadavg(failed)
 
     // Best-of-2 per query for the heavies; a single run suffices when the
     // first run is already < 0.15 s (the JVM fixed floor dominates there
@@ -149,7 +141,7 @@ object Bench {
     val canaryLast = canaryRun()
     val canaryDrift =
       if (canaryFirst > 0 && canaryLast > 0) canaryLast / canaryFirst else -1.0
-    val loadEnd = loadavg()
+    val loadEnd = LocalSession.loadavg(failed)
     results.filter(_._2 < 0).foreach { case (n, _) =>
       System.err.println(s"[bench] $n FAILED") }
     // Fixed-notation doubles (never scientific) keep every line safe for

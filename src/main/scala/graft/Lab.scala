@@ -9,21 +9,18 @@ import scala.util.control.NonFatal
   * [[PlanDump]], which writes one for every declared query.
   *
   * Usage: sbt "runMain graft.Lab q1,q2 [draws]"
-  *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench.
+  *   SPARK_GRAFT_SF_DIR as in Bench; SPARK_GRAFT_CPUS defaults to the
+  *   machine's core count.
   */
 object Lab {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("wordcount").split(",").map(_.trim).filter(_.nonEmpty)
     val draws = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = LocalSession(sys.env.get("SPARK_GRAFT_CPUS").fold(LocalSession.cores)(_.toInt))
     spark.sparkContext.setLogLevel("ERROR")
     def failed(what: String, e: Throwable): Unit =
       System.err.println(s"[lab] $what failed: ${e.getClass.getName}: ${e.getMessage}")
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-      catch { case NonFatal(e) => failed("read of /proc/loadavg", e); -1.0 }
 
     val qs = names.map(n => n -> SparkEntry.queries.getOrElse(n,
       sys.error(s"unknown query $n"))).toSeq
@@ -39,7 +36,7 @@ object Lab {
       fn(spark, sfDir).count()
       val s = (System.nanoTime() - t0) / 1e9
       results(n) = results(n) :+ s
-      println(f"[lab] draw $i $n%-40s $s%7.3f s  (load ${loadavg()}%.2f, cachedRdds ${spark.sparkContext.getPersistentRDDs.size})")
+      println(f"[lab] draw $i $n%-40s $s%7.3f s  (load ${LocalSession.loadavg(failed)}%.2f, cachedRdds ${spark.sparkContext.getPersistentRDDs.size})")
     }
     println("[lab] ===== medians =====")
     for ((n, _) <- qs) {

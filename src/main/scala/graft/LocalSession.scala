@@ -14,4 +14,16 @@ object LocalSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** This machine's core count: the dev harnesses' default session width. */
+  def cores: Int = Runtime.getRuntime.availableProcessors
+
+  /** The 1-minute load average, stamped next to timings so a loaded-box
+    * reading identifies itself; -1.0 (after `failed` reports why) where
+    * /proc/loadavg cannot be read. */
+  def loadavg(failed: (String, Throwable) => Unit): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
+    catch {
+      case scala.util.control.NonFatal(e) => failed("read of /proc/loadavg", e); -1.0
+    }
 }

@@ -38,6 +38,13 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     assembled(packs.map(_.queries))
 
+  /** [[queries]] under the mains' dev-loop filter: SPARK_GRAFT_ONLY=q1,q2
+    * keeps just those queries; unset keeps every query. */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .fold(queries)(ns => queries.filter(kv => ns(kv._1)))
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. Rendered
     * at the driver's gate dir (Stage.GateDir) — the three file round-trip

@@ -40,4 +40,66 @@ object Stage {
 
   /** Stage dir for one query kind under `root(dataDir)`. */
   def dir(dataDir: String, kind: String): String = s"${root(dataDir)}/$kind"
+
+  /** Stage a marker-guarded fixture: runs `write` into `dir` (created
+    * first) unless `dir/marker` exists, then creates the marker. Every
+    * file fixture the queries read back (the format modules'
+    * `stage*Fixture`s, the WebDataset media shards, the CJK corpus, the
+    * mixed document dir) stages through here, under one contract:
+    *  - the marker is named `_STAGED_<FIXTURE>_V<n>`; a change to a
+    *    fixture's bytes takes the next version, so a dir staged by an
+    *    older build is restaged rather than reused;
+    *  - the marker is written last, so a dir that has it holds the whole
+    *    fixture, and a call that finds it writes nothing;
+    *  - the bytes are a pure function of the fixture (and of the data dir
+    *    for corpus-derived ones), so a rewrite after an interrupted stage
+    *    is byte-identical;
+    *  - one runner per dir: concurrent first calls on the same dir write
+    *    the same bytes but are not atomic against each other, the same
+    *    single-runner contract as the overwrite stages under [[root]]. */
+  def once(dir: String, marker: String)(write: => Unit): Unit = {
+    val d = new java.io.File(dir)
+    val m = new java.io.File(d, marker)
+    if (!m.exists()) {
+      d.mkdirs()
+      write
+      m.createNewFile(): Unit
+    }
+  }
+
+  /** [[once]] for a fixture of numbered files: file `i` of `paths` gets
+    * `bytes(i)`. Returns `paths`. */
+  def files(dir: String, marker: String, paths: Seq[String])(
+      bytes: Int => Array[Byte]): Seq[String] = {
+    once(dir, marker) {
+      paths.zipWithIndex.foreach { case (p, i) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(p), bytes(i))
+      }
+    }
+    paths
+  }
+
+  /** The documents a per-document fixture stages, sorted: doc_id ≡ 0
+    * (mod 101), a file count bounded at every scale factor. */
+  def keptDocIds(spark: org.apache.spark.sql.SparkSession, dataDir: String): Array[Long] = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    Tables.documents(spark, dataDir)
+      .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
+      .as[Long].collect().sorted
+  }
+
+  /** [[once]] for a per-document fixture: one file `<prefix><id><ext>`
+    * holding `bytes(id)` per [[keptDocIds]] doc. Returns `dir`. */
+  def keptDocs(spark: org.apache.spark.sql.SparkSession, dataDir: String,
+               dir: String, marker: String, prefix: String, ext: String)(
+      bytes: Long => Array[Byte]): String = {
+    once(dir, marker) {
+      keptDocIds(spark, dataDir).foreach { id =>
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$dir/$prefix$id$ext"), bytes(id))
+      }
+    }
+    dir
+  }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = LocalSession(sys.env.get("SPARK_GRAFT_CPUS").fold(LocalSession.cores)(_.toInt))
     spark.sparkContext.setLogLevel("WARN")
 
     // 10× replication by key-shifted union (shared by every stress
@@ -36,12 +36,6 @@ object Stress {
         .select((lit(900000000L) + lit(c) * 1000L + col("copy")).as("doc_id"), col("text"))
     }.reduce(_ union _)
     val corpus = tenx.union(mega).localCheckpoint() // freeze input: time the dedup, not the build
-
-    def rmTree(p: String): Unit = {
-      val f = new java.io.File(p)
-      if (f.isDirectory) f.listFiles().foreach(c => rmTree(c.getAbsolutePath))
-      f.delete(): Unit
-    }
 
     def time(label: String, f: => Long): (Double, Long) = {
       val t0 = System.nanoTime(); val n = f; val sec = (System.nanoTime() - t0) / 1e9
@@ -482,7 +476,7 @@ object Stress {
       val nBatches = progs.length
       q.stop()
       val sinkRows = sess.read.parquet(s"$base/out").count()
-      rmTree(base)
+      graft.sources.FileSources.rmTree(base)
       // Eviction must be REAL (closed sessions leave the store) and state
       // must track active keys, not stream length: with 12 sessions/user
       // over the run, unbounded retention would hold ~12×users rows.
@@ -752,7 +746,7 @@ object Stress {
       sources.AvroSource.read(spark, avroDir).count())
     require(avReadRows == nAvroRows, s"avro stress lost rows: $avReadRows != $nAvroRows")
     println(f"[stress] avro: $nAvroRows%,d rows / $avroBytes%,d bytes write $avWriteSec%.2f s read $avReadSec%.2f s")
-    rmTree(avroDir)
+    graft.sources.FileSources.rmTree(avroDir)
 
     val warcBytes = warcShards.map(_._2.length.toLong).reduce(_ + _)
     val (warcSec, warcRecs) = time("warc parse 100k records", {

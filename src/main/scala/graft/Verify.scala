@@ -9,12 +9,8 @@ object Verify {
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-loop filter (same contract as Bench): SPARK_GRAFT_ONLY=a,b dumps
-    // just those queries and their oracles. Unset (the driver's case)
-    // dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(ns => SparkEntry.queries.filter(kv => ns(kv._1)))
+    // SPARK_GRAFT_ONLY also limits the dumped oracles to these queries.
+    val selected = SparkEntry.selectedQueries
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

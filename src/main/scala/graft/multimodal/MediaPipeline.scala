@@ -1634,22 +1634,10 @@ object MediaPipeline {
     archive(ms.result())
   }
 
-  /** Idempotent staging, same marker discipline as every fixture. */
-  def stageWdsFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    // V2: pixelPng gained the palette profile — shards must restage so
-    // the pipeline actually carries color-type-3 members.
-    val marker = new java.io.File(d, "_STAGED_WDS_MEDIA_V2")
-    val paths = wdsFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), wdsShard(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  // V2: pixelPng gained the palette profile — shards must restage so
+  // the pipeline actually carries color-type-3 members.
+  def stageWdsFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WDS_MEDIA_V2", wdsFixtureFiles(dir))(wdsShard)
 
   // ---- WebDataset AUDIO shards (the mm_wds_audio_pipeline fixture) ----
   //
@@ -1676,19 +1664,8 @@ object MediaPipeline {
     archive(ms.result())
   }
 
-  def stageWdsAudioFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WDS_AUDIO_V1")
-    val paths = wdsAudioFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), wdsAudioShard(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  def stageWdsAudioFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WDS_AUDIO_V1", wdsAudioFixtureFiles(dir))(wdsAudioShard)
 
   /** One decoded WAV member row (the [[DecodedPcm]] statistics keyed by
     * shard + member name) — the audio twin of decodedPngMembers. */

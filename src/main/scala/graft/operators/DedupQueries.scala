@@ -933,14 +933,12 @@ object DedupQueries extends QueryPack {
     * id + 10000000 — the projected text with its first character
     * dropped, the planted recall target a word-tokenizer provably
     * misses (the whole CJK doc is one "word"; no word shingle is ever
-    * shared). The projection runs distributed (per-row pure map);
-    * idempotent via marker. Returns the parquet path. */
+    * shared). The projection runs distributed (per-row pure map).
+    * Returns the parquet path. */
   private[graft] def stageCjkCorpus(s: SparkSession, d: String): String = {
     val dir = Stage.dir(d, "cjk")
     val out = new java.io.File(dir, "cjk.parquet")
-    val marker = new java.io.File(dir, "_STAGED_CJK_V1")
-    if (!marker.exists()) {
-      new java.io.File(dir).mkdirs()
+    Stage.once(dir, "_STAGED_CJK_V1") {
       import s.implicits._
       val base = Tables.documents(s, d).select("doc_id", "text")
         .as[(Long, String)]
@@ -957,7 +955,6 @@ object DedupQueries extends QueryPack {
       }.filter(_._2.nonEmpty)
       mapped.union(twins).toDF("doc_id", "text")
         .coalesce(4).write.mode("overwrite").parquet(out.getPath)
-      marker.createNewFile(): Unit
     }
     out.getPath
   }

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * Product quantization is the memory side of the ANN story the IVF
   * family ([[IvfCodebook]]) leaves open: IVF prunes WHICH vectors a probe
   * scans, PQ shrinks WHAT each scanned vector costs. A 64-dim float
-  * vector (256 B) encodes to [[M]]=8 centroid ids of 4 bits each —
-  * 32× smaller — and a probe scores codes against a precomputed
-  * 8×16-entry lookup table instead of touching the original floats
+  * vector (256 B) encodes to [[M]]=8 centroid ids of 8 bits each
+  * ([[K]]=256) — 32× smaller — and a probe scores codes against a
+  * precomputed 8×256 = 2048-entry lookup table instead of touching the
+  * original floats
   * (asymmetric distance computation). At 100 TB the codes table is ~3 TB
   * and the probe is a map-only scan of it; the full-precision vectors are
   * only ever read once, at encode time.

@@ -56,22 +56,14 @@ object SourceQueries extends QueryPack {
     * by id%4 to .docx / .pptx / .epub / .odt (the three OPC prose
     * containers plus the ODF one, reusing their byte builders), PLUS
     * two poison plants the front door must drop — a corrupt .docx
-    * (garbage bytes under a plausible name) and an unknown extension.
-    * Idempotent via marker; a V1 (pre-odt, id%3-routed) staging is
-    * WIPED first — its leftover files carry the wrong extension for
-    * their ids under the new routing. */
+    * (garbage bytes under a plausible name) and an unknown extension. */
   private def stageMixed(s: org.apache.spark.sql.SparkSession, dataDir: String): String = {
     val dir = mixedStage(dataDir)
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_MIXED_V2")
-    if (!marker.exists()) {
-      d.mkdirs()
-      d.listFiles().foreach(f => if (f.isFile) f.delete())
-      import s.implicits._
-      val ids = Tables.documents(s, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
+    Stage.once(dir, "_STAGED_MIXED_V2") {
+      // A V1 (pre-odt, id%3-routed) staging is WIPED first — its leftover
+      // files carry the wrong extension for their ids under the new routing.
+      new java.io.File(dir).listFiles().foreach(f => if (f.isFile) f.delete())
+      Stage.keptDocIds(s, dataDir).foreach { id =>
         val (ext, bytes) = (id % 4) match {
           case 0 => ("docx", graft.sources.DocxSource.docxBytes(id))
           case 1 => ("pptx", graft.sources.PptxSource.pptxBytes(id))
@@ -89,7 +81,6 @@ object SourceQueries extends QueryPack {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/doc888888888.xyz"),
         "not a container".getBytes("UTF-8"))
-      marker.createNewFile(): Unit
     }
     dir
   }
@@ -102,32 +93,23 @@ object SourceQueries extends QueryPack {
   private[graft] def mixedExtractRows(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val raw = graft.sources.FileSources.readWholeFilesBytes(s,
-        new java.io.File(dir).listFiles()
-          .filter(f => f.isFile && f.getName.startsWith("doc"))
-          .map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val stem = name.substring(0, name.lastIndexOf('.'))
-        val id = stem.stripPrefix("doc").toLong
-        name.substring(name.lastIndexOf('.') + 1) match {
-          case "docx" =>
-            graft.sources.DocxSource.extractDocx(name, bytes)
-              .map { case (t, _) => (id, "docx", t) }
-          case "pptx" =>
-            graft.sources.PptxSource.extractPptx(name, bytes)
-              .map { case (t, _, _) => (id, "pptx", t) }
-          case "epub" =>
-            graft.sources.EpubSource.extractEpub(name, bytes)
-              .map(chs => (id, "epub", chs.map(_._3).mkString("\n")))
-          case "odt" =>
-            graft.sources.OdtSource.extractOdt(name, bytes)
-              .map { case (t, _) => (id, "odt", t) }
-          case _ => None // unknown format: quarantine, never guessed
-        }
-      })
-      .toDF("doc_id", "format", "raw")
+    val raw = graft.sources.FileSources.docFiles(s, dir, "doc", "") { (id, name, bytes) =>
+      name.substring(name.lastIndexOf('.') + 1) match {
+        case "docx" =>
+          graft.sources.DocxSource.extractDocx(name, bytes)
+            .map { case (t, _) => (id, "docx", t) }
+        case "pptx" =>
+          graft.sources.PptxSource.extractPptx(name, bytes)
+            .map { case (t, _, _) => (id, "pptx", t) }
+        case "epub" =>
+          graft.sources.EpubSource.extractEpub(name, bytes)
+            .map(chs => (id, "epub", chs.map(_._3).mkString("\n")))
+        case "odt" =>
+          graft.sources.OdtSource.extractOdt(name, bytes)
+            .map { case (t, _) => (id, "odt", t) }
+        case _ => None // unknown format: quarantine, never guessed
+      }
+    }.toDF("doc_id", "format", "raw")
     val epub = TextAnalysis.htmlToText(
       raw.filter(col("format") === "epub"), "raw", "text")
     raw.filter(col("format") =!= "epub")

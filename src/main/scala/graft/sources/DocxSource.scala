@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** DOCX text extraction — the dominant enterprise/document arrival
   * format after PDF. A .docx file is an OPC package (ECMA-376 Part 2):
@@ -343,41 +342,18 @@ object DocxSource {
         descriptor = false, localExtra = Array.emptyByteArray)),
       comment = s"graft docx $id")
 
-  /** Stage one `.docx` per kept doc (doc_id ≡ 0 mod 101). Idempotent
-    * via marker. Returns the dir. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_DOCX_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/doc$id.docx"), docxBytes(id))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `doc<id>.docx` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_DOCX_V1", "doc", ".docx")(docxBytes)
 
   /** (doc_id, text, n_paras, n_chars) over a directory of `.docx`
     * files — parse-as-filter, map-only (the pdf/tex/md family). */
   def extractedDocx(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".docx")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("doc").stripSuffix(".docx").toLong
-        extractDocx(name, bytes).map { case (text, np) =>
-          (id, text, np.toLong, text.length.toLong)
-        }
-      })
-      .toDF("doc_id", "text", "n_paras", "n_chars")
+    FileSources.docFiles(spark, dir, "doc", ".docx") { (id, name, bytes) =>
+      extractDocx(name, bytes).map { case (text, np) =>
+        (id, text, np.toLong, text.length.toLong)
+      }
+    }.toDF("doc_id", "text", "n_paras", "n_chars")
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** EPUB chapter extraction — the BOOK corpus container (long-form
   * public-domain and licensed book corpora ship as EPUB): a plain ZIP
@@ -218,41 +217,19 @@ object EpubSource {
       comment = s"graft epub $id")
   }
 
-  /** Stage one `.epub` per kept doc. Idempotent via marker. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_EPUB_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/book$id.epub"), epubBytes(id))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `book<id>.epub` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_EPUB_V1", "book", ".epub")(epubBytes)
 
   /** (doc_id, chap_idx, href, xhtml) rows over a directory of `.epub`
     * files — the container walk only; callers run htmlToText on the
     * xhtml column (codegen'd, the one HTML semantics in this repo). */
   def chapters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".epub")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("book").stripSuffix(".epub").toLong
-        extractEpub(name, bytes).toSeq.flatten.map { case (idx, href, xhtml) =>
-          (id, idx, href, xhtml)
-        }
-      })
-      .toDF("doc_id", "chap_idx", "href", "xhtml")
+    FileSources.docFiles(spark, dir, "book", ".epub") { (id, name, bytes) =>
+      extractEpub(name, bytes).toSeq.flatten.map { case (idx, href, xhtml) =>
+        (id, idx, href, xhtml)
+      }
+    }.toDF("doc_id", "chap_idx", "href", "xhtml")
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File sources/sinks (SURVEY.md §2.2 A).
@@ -169,6 +169,56 @@ object FileSources {
       .toDF("path", "content")
   }
 
+  /** Whole-file parse of explicit `paths`: each file is read whole in a
+    * task ([[readWholeFilesBytes]]) and `parse(path, basename, bytes)`
+    * turns it into rows. */
+  private def parsedFiles[T: Encoder](spark: SparkSession, paths: Seq[String])(
+      parse: (String, String, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    import spark.implicits._
+    readWholeFilesBytes(spark, paths).as[(String, Array[Byte])]
+      .flatMap { case (path, bytes) =>
+        parse(path, path.substring(path.lastIndexOf('/') + 1), bytes)
+      }
+  }
+
+  /** [[parsedFiles]] over a per-document fixture dir: every
+    * `<prefix><id><ext>` file ([[graft.Stage.keptDocs]]'s layout), in
+    * name order, parsed by `parse(id, basename, bytes)` — map-only, one
+    * task per file. */
+  private[graft] def docFiles[T: Encoder](spark: SparkSession, dir: String,
+      prefix: String, ext: String)(
+      parse: (Long, String, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    val paths = new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && f.getName.startsWith(prefix) && f.getName.endsWith(ext))
+      .map(_.getPath).sorted.toSeq
+    parsedFiles(spark, paths) { (_, name, bytes) =>
+      parse(name.substring(prefix.length, name.lastIndexOf('.')).toLong, name, bytes)
+    }
+  }
+
+  /** How a framed-shard format words its loud failure: "<path>: <damage>
+    * after <n> <unit> (<causes>; pass tolerateUnclean=true to salvage)". */
+  private[sources] final case class Unclean(damage: String, unit: String, causes: String)
+
+  /** Distributed reader over framed shards (WARC, CDX, tar, zip): one
+    * task per shard, read whole, and `emit(basename, bytes)` walks it
+    * once, reporting (rows, cleanEof). An unclean shard (bytes that do
+    * not frame) FAILS the read loudly: a silently short-read shard is a
+    * data-loss bug, not a row to drop. `tolerateUnclean = true` keeps the
+    * parsed prefix instead (the salvage mode a backfill over damaged
+    * shards wants). */
+  private[sources] def framedShards[T: Encoder](spark: SparkSession,
+      paths: Seq[String], tolerateUnclean: Boolean, unclean: Unclean)(
+      emit: (String, Array[Byte]) => (Seq[T], Boolean)): Dataset[T] =
+    parsedFiles(spark, paths) { (path, name, bytes) =>
+      val (out, clean) = emit(name, bytes)
+      if (!clean && !tolerateUnclean)
+        throw new IllegalArgumentException(
+          s"$path: ${unclean.damage} after ${out.size} ${unclean.unit} " +
+          s"(${unclean.causes}; pass tolerateUnclean=true to salvage)")
+      out
+    }
+
   /** One row per line: (path, line) — the scalable variant for big files. */
   def textLines(spark: SparkSession, dir: String): DataFrame =
     spark.read.text(dir)
@@ -207,6 +257,15 @@ object FileSources {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
   }
 
+  /** Delete `path` and everything under it; a missing path is a no-op. */
+  def rmTree(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    rm(new java.io.File(path))
+  }
+
   /** Bucketed parquet table (bucketBy needs a catalog table name, not a
     * bare path): rows are pre-shuffled into `nBuckets` by hash of
     * `bucketCols` and sorted within each bucket. Joins and aggregations
@@ -225,14 +284,7 @@ object FileSources {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir"))
     val whPath = Option(wh.getPath).getOrElse(wh.toString)
-    val loc = new java.io.File(whPath, table.toLowerCase(java.util.Locale.ROOT))
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(loc)
-    }
+    rmTree(new java.io.File(whPath, table.toLowerCase(java.util.Locale.ROOT)).getPath)
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)

@@ -101,26 +101,8 @@ object NotebookSource {
     s"""{"cells":$cells,"metadata":{"kernelspec":{"language":"${nbLanguage(id)}","name":"k"}},"nbformat":4,"nbformat_minor":5}"""
   }
 
-  /** Stage one `.ipynb` per kept doc (doc_id ≡ 0 mod 101 — bounded file
-    * count at every SF). Idempotent via marker. Returns the dir. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_IPYNB_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      // The kept-id list is fixture-sized (1/101 of the corpus) — a
-      // driver staging loop like every other container fixture.
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/nb$id.ipynb"),
-          nbJson(id).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `nb<id>.ipynb` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_IPYNB_V1", "nb", ".ipynb")(
+      nbJson(_).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** ODS cell extraction — the OpenDocument spreadsheet (LibreOffice
   * Calc's native format), completing the ODF pair the way XlsxSource
@@ -371,41 +370,18 @@ object OdsSource {
         descriptor = false, localExtra = Array.emptyByteArray)),
       comment = s"graft ods $id")
 
-  /** Stage one `.ods` per kept doc (doc_id ≡ 0 mod 101). Idempotent
-    * via marker. Returns the dir. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_ODS_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/doc$id.ods"), odsBytes(id))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `doc<id>.ods` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_ODS_V1", "doc", ".ods")(odsBytes)
 
   /** (doc_id, row, col, kind, value) over a directory of `.ods` files —
     * parse-as-filter, map-only (the xlsx/docx/odt family). */
   def extractedOds(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".ods")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("doc").stripSuffix(".ods").toLong
-        extractOds(name, bytes).toSeq.flatten.map { c =>
-          (id, c.row, c.col, c.kind, c.value)
-        }
-      })
-      .toDF("doc_id", "row", "col", "kind", "value")
+    FileSources.docFiles(spark, dir, "doc", ".ods") { (id, name, bytes) =>
+      extractOds(name, bytes).toSeq.flatten.map { c =>
+        (id, c.row, c.col, c.kind, c.value)
+      }
+    }.toDF("doc_id", "row", "col", "kind", "value")
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** ODT text extraction — the OpenDocument sibling of DOCX (LibreOffice/
   * OpenOffice's native format, the second-most-common "word document"
@@ -293,41 +292,18 @@ object OdtSource {
         descriptor = false, localExtra = Array.emptyByteArray)),
       comment = s"graft odt $id")
 
-  /** Stage one `.odt` per kept doc (doc_id ≡ 0 mod 101). Idempotent
-    * via marker. Returns the dir. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_ODT_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/doc$id.odt"), odtBytes(id))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `doc<id>.odt` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_ODT_V1", "doc", ".odt")(odtBytes)
 
   /** (doc_id, text, n_paras, n_chars) over a directory of `.odt`
     * files — parse-as-filter, map-only (the docx/pdf/tex family). */
   def extractedOdt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".odt")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("doc").stripSuffix(".odt").toLong
-        extractOdt(name, bytes).map { case (text, np) =>
-          (id, text, np.toLong, text.length.toLong)
-        }
-      })
-      .toDF("doc_id", "text", "n_paras", "n_chars")
+    FileSources.docFiles(spark, dir, "doc", ".odt") { (id, name, bytes) =>
+      extractOdt(name, bytes).map { case (text, np) =>
+        (id, text, np.toLong, text.length.toLong)
+      }
+    }.toDF("doc_id", "text", "n_paras", "n_chars")
   }
 }

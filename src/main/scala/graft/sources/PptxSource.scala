@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** PPTX text extraction — the third OPC arrival format (slide decks
   * carry a real fraction of enterprise prose). A .pptx is a plain ZIP
@@ -204,40 +203,18 @@ object PptxSource {
         deflate = true, descriptor = false, localExtra = Array.emptyByteArray)),
       comment = s"graft pptx $id")
 
-  /** Stage one `.pptx` per kept doc. Idempotent via marker. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_PPTX_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/deck$id.pptx"), pptxBytes(id))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `deck<id>.pptx` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_PPTX_V1", "deck", ".pptx")(pptxBytes)
 
   /** (doc_id, text, n_slides, n_paras, n_chars) over a directory of
     * `.pptx` files — parse-as-filter, map-only. */
   def extractedPptx(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".pptx")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("deck").stripSuffix(".pptx").toLong
-        extractPptx(name, bytes).map { case (text, ns, np) =>
-          (id, text, ns.toLong, np.toLong, text.length.toLong)
-        }
-      })
-      .toDF("doc_id", "text", "n_slides", "n_paras", "n_chars")
+    FileSources.docFiles(spark, dir, "deck", ".pptx") { (id, name, bytes) =>
+      extractPptx(name, bytes).map { case (text, ns, np) =>
+        (id, text, ns.toLong, np.toLong, text.length.toLong)
+      }
+    }.toDF("doc_id", "text", "n_slides", "n_paras", "n_chars")
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** RTF text extraction — the legacy interchange format a real document
   * corpus still carries in volume (every Word/Wordpad era export).
@@ -248,42 +247,19 @@ object RtfSource {
   /** Paragraph count of the fixture document (constant). */
   val ExpectedParas: Int = 6
 
-  /** Stage one `.rtf` per kept doc (doc_id ≡ 0 mod 101). Idempotent
-    * via marker. Returns the dir. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_RTF_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/doc$id.rtf"),
-          rtfDoc(id).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `doc<id>.rtf` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_RTF_V1", "doc", ".rtf")(
+      rtfDoc(_).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
 
   /** (doc_id, text, n_paras, n_chars) over a directory of `.rtf`
     * files — parse-as-filter, map-only (the docx/pdf/tex family). */
   def extractedRtf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".rtf")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("doc").stripSuffix(".rtf").toLong
-        extractRtf(name, bytes).map { case (text, np) =>
-          (id, text, np.toLong, text.length.toLong)
-        }
-      })
-      .toDF("doc_id", "text", "n_paras", "n_chars")
+    FileSources.docFiles(spark, dir, "doc", ".rtf") { (id, name, bytes) =>
+      extractRtf(name, bytes).map { case (text, np) =>
+        (id, text, np.toLong, text.length.toLong)
+      }
+    }.toDF("doc_id", "text", "n_paras", "n_chars")
   }
 }

@@ -162,24 +162,19 @@ object TarSource {
     (out, clean)
   }
 
+  /** The loud-failure wording of the tar readers
+    * ([[FileSources.framedShards]]). */
+  private val Unclean = FileSources.Unclean(
+    "unframeable bytes", "members", "bad checksum, truncation or desync")
+  private val UncleanGz = Unclean.copy(causes = "gzip corruption, " + Unclean.causes)
+
   /** Distributed member reader: one task per shard (the WebDataset scale
     * shape), single forward block walk per shard, everything downstream
     * ordinary codegen'd DataFrame ops. */
   def entries(spark: SparkSession, paths: Seq[String],
               tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark, paths)
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val (out, clean) = parseTar(name, bytes)
-        if (!clean && !tolerateUnclean)
-          throw new IllegalArgumentException(
-            s"$path: unframeable bytes after ${out.size} members " +
-            "(bad checksum, truncation or desync; pass tolerateUnclean=true to salvage)")
-        out
-      }
-      .toDF()
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean)(parseTar).toDF()
   }
 
   /** [[entries]] with payload BYTES — the reader a WebDataset decode
@@ -189,18 +184,7 @@ object TarSource {
   def members(spark: SparkSession, paths: Seq[String],
               tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark, paths)
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val (out, clean) = parseTarMembers(name, bytes)
-        if (!clean && !tolerateUnclean)
-          throw new IllegalArgumentException(
-            s"$path: unframeable bytes after ${out.size} members " +
-            "(bad checksum, truncation or desync; pass tolerateUnclean=true to salvage)")
-        out
-      }
-      .toDF()
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean)(parseTarMembers).toDF()
   }
 
   /** [[entries]] over gzip-compressed shards (`.tar.gz` — the compressed
@@ -218,20 +202,11 @@ object TarSource {
   def entriesGz(spark: SparkSession, paths: Seq[String],
                 tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark, paths)
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val (plain, gzClean) = WarcSource.gunzipAll(bytes)
-        val (out, tarClean) = parseTar(name, plain)
-        if (!(gzClean && tarClean) && !tolerateUnclean)
-          throw new IllegalArgumentException(
-            s"$path: unframeable bytes after ${out.size} members " +
-            "(gzip corruption, bad checksum, truncation or desync; " +
-            "pass tolerateUnclean=true to salvage)")
-        out
-      }
-      .toDF()
+    FileSources.framedShards(spark, paths, tolerateUnclean, UncleanGz) { (name, bytes) =>
+      val (plain, gzClean) = WarcSource.gunzipAll(bytes)
+      val (out, tarClean) = parseTar(name, plain)
+      (out, gzClean && tarClean)
+    }.toDF()
   }
 
   // ------------------------------------------------------------------
@@ -325,36 +300,11 @@ object TarSource {
   /** Stage the `.tar.gz` fixture: the SAME 16 shards as [[stageFixture]]
     * byte-for-byte after decompression, each split into 1500-byte gzip
     * members — boundaries that never align with 512-byte tar blocks, so
-    * per-member parsing (instead of concatenate-then-walk) is fatal.
-    * Idempotent via marker. */
-  def stageGzFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_TGZ_V1")
-    val paths = gzFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        val plain = fixtureShard(f)
-        val gz = plain.grouped(1500).map(WarcSource.gzipMember).reduce(_ ++ _)
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), gz)
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+    * per-member parsing (instead of concatenate-then-walk) is fatal. */
+  def stageGzFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_TGZ_V1", gzFixtureFiles(dir))(
+      fixtureShard(_).grouped(1500).map(WarcSource.gzipMember).reduce(_ ++ _))
 
-  /** Idempotent staging, same marker discipline as WarcSource. */
-  def stageFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_TAR_V1")
-    val paths = fixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), fixtureShard(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  def stageFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_TAR_V1", fixtureFiles(dir))(fixtureShard)
 }

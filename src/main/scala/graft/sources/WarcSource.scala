@@ -101,7 +101,7 @@ object WarcSource {
   def cdxIndex(spark: SparkSession, paths: Seq[String],
                tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    framedShards(spark, paths, tolerateUnclean)(parseCdx).toDF()
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean)(parseCdx).toDF()
   }
 
   /** The shared framing walk: calls `f(idx, type, uri, recordOffset,
@@ -174,37 +174,19 @@ object WarcSource {
   }
 
   /** Distributed WARC record frame over explicit shard paths — one task
-    * per shard via [[FileSources.readWholeFilesBytes]]. Unclean shards
-    * (trailing unframeable bytes) FAIL the read loudly: a silently
-    * short-read crawl shard is a data-loss bug, not a row to drop. Pass
-    * `tolerateUnclean = true` to keep the parsed prefix instead (the
-    * salvage mode a backfill over damaged shards wants). */
+    * per shard. Unclean shards (trailing unframeable bytes) FAIL the read
+    * loudly unless `tolerateUnclean = true`, which keeps the parsed prefix
+    * ([[FileSources.framedShards]]). */
   def records(spark: SparkSession, paths: Seq[String],
               tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    framedShards(spark, paths, tolerateUnclean)(parseWarc).toDF()
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean)(parseWarc).toDF()
   }
 
-  /** Shared per-shard scaffolding for the distributed readers: whole-file
-    * read, basename extraction, and the ONE loud-failure/salvage contract
-    * both [[records]] and [[httpResponses]] follow. The emitter walks the
-    * shard once and reports (rows, cleanEof). */
-  private def framedShards[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, paths: Seq[String], tolerateUnclean: Boolean)(
-      emit: (String, Array[Byte]) => (Seq[T], Boolean)): org.apache.spark.sql.Dataset[T] = {
-    import spark.implicits._
-    FileSources.readWholeFilesBytes(spark, paths)
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val (out, clean) = emit(name, bytes)
-        if (!clean && !tolerateUnclean)
-          throw new IllegalArgumentException(
-            s"$path: unframeable trailing bytes after ${out.size} records " +
-            "(truncated or corrupt WARC; pass tolerateUnclean=true to salvage)")
-        out
-      }
-  }
+  /** The loud-failure wording every WARC/CDX reader shares
+    * ([[FileSources.framedShards]]). */
+  private val Unclean = FileSources.Unclean(
+    "unframeable trailing bytes", "records", "truncated or corrupt WARC")
 
   // ---- Deterministic gate fixture (see SourceQueries.warc_ingest) ----
   //
@@ -256,23 +238,9 @@ object WarcSource {
   private[graft] def fixtureShard(f: Int): Array[Byte] =
     fixtureShardRecords(f).reduce(_ ++ _)
 
-  /** Stage the fixture under `dir` (idempotent: the bytes are a pure
-    * function of the shard number, so re-writing is byte-identical; the
-    * marker file skips the rewrite on reuse — same single-runner-per-dir
-    * contract as every [[graft.Stage]] consumer). Returns the shard paths. */
-  def stageFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WARC_V1")
-    val paths = fixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), fixtureShard(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  /** Stage the fixture under `dir`; returns the shard paths. */
+  def stageFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WARC_V1", fixtureFiles(dir))(fixtureShard)
 
   // ---- Gzipped shards (the actual Common Crawl wire format) ----
 
@@ -368,7 +336,7 @@ object WarcSource {
   def recordsGz(spark: SparkSession, paths: Seq[String],
                 tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    framedShards(spark, paths, tolerateUnclean) { (name, bytes) =>
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean) { (name, bytes) =>
       val (plain, gzClean) = gunzipAll(bytes)
       val (recs, warcClean) = parseWarc(name, plain)
       (recs, gzClean && warcClean)
@@ -380,22 +348,10 @@ object WarcSource {
 
   /** Stage the gzip fixture: the SAME 24 shards as [[stageFixture]],
     * each record wrapped in its own gzip member (so the staged files
-    * exercise the multi-member path on every shard). Idempotent via
-    * marker, like every Stage consumer. */
-  def stageGzFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WARC_GZ_V1")
-    val paths = gzFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        val gz = fixtureShardRecords(f).map(gzipMember).reduce(_ ++ _)
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), gz)
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+    * exercise the multi-member path on every shard). */
+  def stageGzFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WARC_GZ_V1", gzFixtureFiles(dir))(
+      fixtureShardRecords(_).map(gzipMember).reduce(_ ++ _))
 
   // ---- zstd shards (the Common Crawl .warc.zst alternative format) ----
 
@@ -553,7 +509,7 @@ object WarcSource {
   def recordsZst(spark: SparkSession, paths: Seq[String],
                  tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    framedShards(spark, paths, tolerateUnclean) { (name, bytes) =>
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean) { (name, bytes) =>
       val (plain, zClean) = unzstdAll(bytes)
       val (recs, warcClean) = parseWarc(name, plain)
       (recs, zClean && warcClean)
@@ -576,49 +532,30 @@ object WarcSource {
     * skips the slot instead of loading it fails every record frame's
     * dictID check — loud, pinned in WarcSourceSpec. Content is
     * byte-identical to the plain shards, so warc_ingest's oracle holds
-    * verbatim. Idempotent via marker. */
+    * verbatim. */
   def stageZstDictFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WARC_ZSTDICT_V1")
-    val paths = zstDictFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      // One dictionary over the whole fixture's records — the shared-
-      // dictionary economics the slot exists for (per-record frames,
-      // shard-level ratios).
-      val dict = trainZstDict(
-        (0 until 24).flatMap(f => fixtureShardRecords(f)))
-      paths.zipWithIndex.foreach { case (p, f) =>
-        val slot =
-          if (f % 2 == 1) skippableFrame(zstFrame(dict), ZstDictSlotMagic)
-          else skippableFrame(dict, ZstDictSlotMagic)
-        val zs = slot +: fixtureShardRecords(f).map(zstFrameDict(_, dict))
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), zs.reduce(_ ++ _))
-      }
-      marker.createNewFile(): Unit
+    // One dictionary over the whole fixture's records — the shared-
+    // dictionary economics the slot exists for (per-record frames,
+    // shard-level ratios). Lazy: a staged dir trains nothing.
+    lazy val dict = trainZstDict(
+      (0 until 24).flatMap(f => fixtureShardRecords(f)))
+    graft.Stage.files(dir, "_STAGED_WARC_ZSTDICT_V1", zstDictFixtureFiles(dir)) { f =>
+      val slot =
+        if (f % 2 == 1) skippableFrame(zstFrame(dict), ZstDictSlotMagic)
+        else skippableFrame(dict, ZstDictSlotMagic)
+      (slot +: fixtureShardRecords(f).map(zstFrameDict(_, dict))).reduce(_ ++ _)
     }
-    paths
   }
 
   /** Stage the zstd fixture: the SAME 24 shards as [[stageFixture]],
     * one checksummed zstd frame per record, preceded by a skippable
     * dictionary-slot frame — every shard exercises multi-frame walk,
-    * skippable skip and checksum verify. Idempotent via marker. */
-  def stageZstFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WARC_ZST_V1")
-    val paths = zstFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        val zs = skippableFrame(s"graft-dict-slot-$f".getBytes("US-ASCII")) +:
-          fixtureShardRecords(f).map(zstFrame)
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), zs.reduce(_ ++ _))
-      }
-      marker.createNewFile(): Unit
+    * skippable skip and checksum verify. */
+  def stageZstFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WARC_ZST_V1", zstFixtureFiles(dir)) { f =>
+      (skippableFrame(s"graft-dict-slot-$f".getBytes("US-ASCII")) +:
+        fixtureShardRecords(f).map(zstFrame)).reduce(_ ++ _)
     }
-    paths
-  }
 
   // ---- HTTP extraction (the WARC → WET text-extraction chain) ----
 
@@ -737,7 +674,7 @@ object WarcSource {
   def httpResponses(spark: SparkSession, paths: Seq[String],
                     tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    framedShards(spark, paths, tolerateUnclean) { (name, bytes) =>
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean) { (name, bytes) =>
       val out = Seq.newBuilder[HttpRecord]
       val clean = walkWarc(bytes) { (idx, recType, uri, _, payOff, payLen) =>
         if (recType == "response") {
@@ -833,21 +770,9 @@ object WarcSource {
     buf.result()
   }
 
-  /** Stage the HTTP fixture (same idempotence contract as
-    * [[stageFixture]]; V2 marker — V1 predates the chunked rows). */
-  def stageHttpFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WARC_HTTP_V2")
-    val paths = httpFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), httpFixtureShard(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  /** Stage the HTTP fixture (V2 marker — V1 predates the chunked rows). */
+  def stageHttpFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WARC_HTTP_V2", httpFixtureFiles(dir))(httpFixtureShard)
 
   // ---- Charset-aware WET text extraction ----
   //
@@ -927,7 +852,7 @@ object WarcSource {
   def httpTexts(spark: SparkSession, paths: Seq[String],
                 tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    framedShards(spark, paths, tolerateUnclean) { (name, bytes) =>
+    FileSources.framedShards(spark, paths, tolerateUnclean, Unclean) { (name, bytes) =>
       val out = Seq.newBuilder[HttpTextRecord]
       val clean = walkWarc(bytes) { (idx, recType, uri, _, payOff, payLen) =>
         if (recType == "response") {
@@ -1018,17 +943,14 @@ object WarcSource {
                         dir: String): Seq[String] = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val d = new java.io.File(dir)
+    val paths = (0 until 6).map(f => f"$dir/crawl$f%02d.warc")
     // V3 fixture: bodies are HTML pages (nav + content + footer blocks)
     // so the funnel's boilerplate stage has real markup to strip.
-    val marker = new java.io.File(d, "_STAGED_WARC_CRAWL_V3")
-    val paths = (0 until 6).map(f => f"$dir/crawl$f%02d.warc")
-    if (!marker.exists()) {
-      d.mkdirs()
+    graft.Stage.once(dir, "_STAGED_WARC_CRAWL_V3") {
       // Retire superseded fixture markers so a shared staging dir does
       // not accumulate stale V1/V2 flags across upgrades.
       Seq("_STAGED_WARC_CRAWL_V1", "_STAGED_WARC_CRAWL_V2")
-        .foreach(m => new java.io.File(d, m).delete())
+        .foreach(m => new java.io.File(dir, m).delete())
       val base = graft.Tables.documents(spark, dataDir)
         .filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), col("text"))
@@ -1071,24 +993,12 @@ object WarcSource {
         }
       val got = written.collect().toSet // 6-row action, metadata only
       require(got == paths.toSet, s"staged shards $got != expected $paths")
-      marker.createNewFile(): Unit
     }
     paths
   }
 
-  /** Stage the charset fixture (same idempotence contract as
-    * [[stageFixture]]). */
-  def stageCharsetFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_WARC_CHARSET_V1")
-    val paths = charsetFixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), charsetFixtureShard(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  /** Stage the charset fixture. */
+  def stageCharsetFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_WARC_CHARSET_V1", charsetFixtureFiles(dir))(
+      charsetFixtureShard)
 }

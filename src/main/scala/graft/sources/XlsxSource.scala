@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** XLSX cell extraction — the OTHER dominant OPC arrival format
   * (enterprise tabular data ships as spreadsheets; a curation engine
@@ -263,39 +262,17 @@ object XlsxSource {
         deflate = true, descriptor = false, localExtra = Array.emptyByteArray)),
       comment = s"graft xlsx $id")
 
-  /** Stage one `.xlsx` per kept doc. Idempotent via marker. */
-  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_XLSX_V1")
-    if (!marker.exists()) {
-      d.mkdirs()
-      import spark.implicits._
-      val ids = graft.Tables.documents(spark, dataDir)
-        .select(col("doc_id")).filter(col("doc_id") % 101 === 0)
-        .as[Long].collect().sorted
-      ids.foreach { id =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/sheet$id.xlsx"), xlsxBytes(id))
-      }
-      marker.createNewFile(): Unit
-    }
-    dir
-  }
+  /** Stage one `sheet<id>.xlsx` per kept doc. Returns the dir. */
+  def stageFixture(spark: SparkSession, dataDir: String, dir: String): String =
+    graft.Stage.keptDocs(spark, dataDir, dir, "_STAGED_XLSX_V1", "sheet", ".xlsx")(xlsxBytes)
 
   /** (doc_id, row, col, ref, kind, value) over a directory of `.xlsx`
     * files — parse-as-filter, map-only. */
   def extractedXlsx(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark,
-        new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".xlsx")).map(_.getPath).sorted.toSeq)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = name.stripPrefix("sheet").stripSuffix(".xlsx").toLong
-        extractXlsx(name, bytes).toSeq.flatten.map(c =>
-          (id, c.row, c.col, c.ref, c.kind, c.value))
-      })
-      .toDF("doc_id", "row", "col", "ref", "kind", "value")
+    FileSources.docFiles(spark, dir, "sheet", ".xlsx") { (id, name, bytes) =>
+      extractXlsx(name, bytes).toSeq.flatten.map(c =>
+        (id, c.row, c.col, c.ref, c.kind, c.value))
+    }.toDF("doc_id", "row", "col", "ref", "kind", "value")
   }
 }

@@ -208,19 +208,9 @@ object ZipSource {
   def entries(spark: SparkSession, paths: Seq[String],
               tolerateUnclean: Boolean = false): DataFrame = {
     import spark.implicits._
-    FileSources.readWholeFilesBytes(spark, paths)
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val (out, clean) = parseZip(name, bytes)
-        if (!clean && !tolerateUnclean)
-          throw new IllegalArgumentException(
-            s"$path: unverifiable ZIP structure after ${out.size} members " +
-            "(bad signature/name/size/crc, truncation or ZIP64; " +
-            "pass tolerateUnclean=true to salvage)")
-        out
-      }
-      .toDF()
+    FileSources.framedShards(spark, paths, tolerateUnclean, FileSources.Unclean(
+      "unverifiable ZIP structure", "members",
+      "bad signature/name/size/crc, truncation or ZIP64"))(parseZip).toDF()
   }
 
   // ------------------------------------------------------------------
@@ -349,18 +339,6 @@ object ZipSource {
     archive(members, s"graft zip shard $f", orphanAfter = 1)
   }
 
-  /** Idempotent staging, same marker discipline as TarSource. */
-  def stageFixture(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_STAGED_ZIP_V1")
-    val paths = fixtureFiles(dir)
-    if (!marker.exists()) {
-      d.mkdirs()
-      paths.zipWithIndex.foreach { case (p, f) =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), fixtureArchive(f))
-      }
-      marker.createNewFile(): Unit
-    }
-    paths
-  }
+  def stageFixture(dir: String): Seq[String] =
+    graft.Stage.files(dir, "_STAGED_ZIP_V1", fixtureFiles(dir))(fixtureArchive)
 }

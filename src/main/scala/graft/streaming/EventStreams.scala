@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.FileSources.rmTree
 
 /** Structured Streaming surface (SURVEY.md §2.2 I — ABSENT in the
   * reference, which is strictly batch; the closest analogue is its
@@ -147,12 +148,6 @@ object EventStreams {
         true
       case _ => false
     }
-  }
-
-  private def rmTree(p: String): Unit = {
-    val f = new java.io.File(p)
-    if (f.isDirectory) f.listFiles().foreach(c => rmTree(c.getAbsolutePath))
-    f.delete(): Unit
   }
 
   /** Sink base dirs leaked by [[runLive]]: the returned frame reads its

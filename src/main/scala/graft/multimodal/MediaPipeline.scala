@@ -1,5 +1,9 @@
 package graft.multimodal
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,6 +40,50 @@ object MediaPipeline {
   /** Typed metadata the decoder extracts per payload. */
   case class MediaMeta(doc_id: Long, source: String, bytes: Long,
                        width: Int, height: Int, n_frames: Int)
+
+  /** The one typed Dataset pass under every stager and decode pass:
+    * `rows` read as `I`, `f` run on each row inside mapPartitions
+    * (iterator in, iterator out, one partition per task, one element
+    * materialized at a time — the batch shape a real decoder needs), and
+    * whatever `f` yields comes back as a frame of `T`. */
+  private def typedPass[I <: Product : TypeTag, T <: Product : TypeTag](
+      s: SparkSession, rows: DataFrame)(f: I => IterableOnce[T]): DataFrame = {
+    import s.implicits._
+    rows.as[I].mapPartitions(_.flatMap(f)).toDF()
+  }
+
+  /** The one decode pass: `row` runs on every [[MediaRow]] of `mediaDf`.
+    * A decoder yields nothing for bytes it does not parse, so the decode
+    * is the filter: rows of other formats and bare payloads drop out,
+    * and no gate depends on row position. */
+  private[graft] def decodePass[T <: Product : TypeTag](s: SparkSession, mediaDf: DataFrame)(
+      row: MediaRow => IterableOnce[T]): DataFrame =
+    typedPass[MediaRow, T](s, mediaDf)(row)
+
+  /** The one stager: a [[MediaRow]] per (doc_id, source) row of `ids`
+    * with media `payload(doc_id)`. It reads no other column, so a
+    * fully synthetic corpus never scans `text`. */
+  private def staged(s: SparkSession, ids: DataFrame)(payload: Long => Array[Byte]): DataFrame =
+    typedPass[(Long, String), MediaRow](s, ids) { case (id, src) =>
+      Some(MediaRow(id, src, payload(id)))
+    }
+
+  /** [[staged]] over `dir`'s documents with their text: media is
+    * `payload(doc_id, UTF-8 bytes of text)`, for the corpora that wrap
+    * or append the document itself. */
+  private def stagedText(s: SparkSession, dir: String)(
+      payload: (Long, Array[Byte]) => Array[Byte]): DataFrame =
+    typedPass[(Long, String, String), MediaRow](s,
+      graft.Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text"))) {
+      case (id, src, text) => Some(MediaRow(id, src, payload(id, text.getBytes(UTF_8))))
+    }
+
+  /** The (doc_id, source) rows of `dir`'s documents. */
+  private def docIds(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.documents(s, dir).select(col("doc_id"), col("source"))
+
+  /** The bare payload of a doc a synthetic corpus does not stage. */
+  private def bare(id: Long): Array[Byte] = s"doc $id".getBytes(UTF_8)
 
   /** STUB decoder — deterministic fake derived from the payload length,
     * for payloads in no recognized container format. All six container
@@ -193,18 +241,13 @@ object MediaPipeline {
   /** PNG decode pass over the mixed container-staged corpus: rows whose
     * bytes parse (signature + IHDR + CRC) yield [[PngMeta]]; everything
     * else — bare payloads AND the BMP-staged rows — is dropped by the
-    * flatMap. The parse itself is the filter, same contract as
-    * [[decodedWav]]. */
-  def decodedPng(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mediaTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodePng(r.media).map { case (w, h, depth, color) =>
-          PngMeta(r.doc_id, r.source, r.media.length.toLong, w, h, depth, color)
-        }
-      })
-      .toDF()
-  }
+    * flatMap. */
+  def decodedPng(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, mediaTableStaged(s, dir)) { r =>
+      decodePng(r.media).map { case (w, h, depth, color) =>
+        PngMeta(r.doc_id, r.source, r.media.length.toLong, w, h, depth, color)
+      }
+    }
 
   /** JPEG/JFIF container prefix the fixture staging writes: SOI + APP0
     * (JFIF, 16-byte length) + COM ("graft", 7-byte length) + SOF0
@@ -307,18 +350,13 @@ object MediaPipeline {
   /** JPEG decode pass over the mixed container-staged corpus: rows whose
     * bytes survive the marker walk yield [[JpegMeta]]; everything else —
     * bare payloads AND the BMP/PNG-staged rows — is dropped by the
-    * flatMap. The parse itself is the filter, same contract as
-    * [[decodedPng]]/[[decodedWav]]. */
-  def decodedJpeg(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mediaTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeJpeg(r.media).map { case (w, h, prec, comps) =>
-          JpegMeta(r.doc_id, r.source, r.media.length.toLong, w, h, prec, comps)
-        }
-      })
-      .toDF()
-  }
+    * flatMap. */
+  def decodedJpeg(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, mediaTableStaged(s, dir)) { r =>
+      decodeJpeg(r.media).map { case (w, h, prec, comps) =>
+        JpegMeta(r.doc_id, r.source, r.media.length.toLong, w, h, prec, comps)
+      }
+    }
 
   /** Typed audio metadata [[decodeWav]] extracts per PCM payload. */
   case class AudioMeta(doc_id: Long, source: String, bytes: Long,
@@ -396,20 +434,11 @@ object MediaPipeline {
     * REAL canonical PCM WAV header (parameters from [[wavRate]] /
     * [[wavChannels]]), the rest stay bare ASCII — so the audio decode
     * pass must dispatch on real magic bytes, not row position. */
-  def audioTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 3 == 0) wavHeader(wavRate(id), wavChannels(id), payload.length) ++ payload
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def audioTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir) { (id, text) =>
+      if (id % 3 == 0) wavHeader(wavRate(id), wavChannels(id), text.length) ++ text
+      else text
+    }
 
   /** Audio decode pass over the WAV-staged mixed corpus: rows whose bytes
     * parse as canonical PCM WAV yield [[AudioMeta]]; non-audio payloads
@@ -417,19 +446,12 @@ object MediaPipeline {
     * zero-byte argument on [[decodeWav]]). duration_ms is integer floor
     * arithmetic so the oracle can replicate it exactly. */
   def decodedWav(s: SparkSession, dir: String): DataFrame =
-    decodedWavOf(s, audioTableStaged(s, dir))
-
-  def decodedWavOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeWav(r.media).map { case (rate, ch, nSamples) =>
-          AudioMeta(r.doc_id, r.source, r.media.length.toLong, rate, ch,
-            nSamples, nSamples * 1000L / rate)
-        }
-      })
-      .toDF()
-  }
+    decodePass(s, audioTableStaged(s, dir)) { r =>
+      decodeWav(r.media).map { case (rate, ch, nSamples) =>
+        AudioMeta(r.doc_id, r.source, r.media.length.toLong, rate, ch,
+          nSamples, nSamples * 1000L / rate)
+      }
+    }
 
   /** Typed movie metadata [[decodeMp4]] extracts per ISO-BMFF payload. */
   case class Mp4Meta(doc_id: Long, source: String, bytes: Long,
@@ -553,39 +575,26 @@ object MediaPipeline {
     * [[mp4Timescale]] / [[mp4Duration]]), the rest stay bare — so the
     * video decode pass must dispatch on a real box walk, not row
     * position. */
-  def videoTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 3 == 0)
-            mp4Header(mp4Brand(id), mp4Timescale(id), mp4Duration(id),
-              v1 = id % 6 == 0, largeFree = id % 9 == 0, payload.length) ++ payload
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def videoTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir) { (id, text) =>
+      if (id % 3 == 0)
+        mp4Header(mp4Brand(id), mp4Timescale(id), mp4Duration(id),
+          v1 = id % 6 == 0, largeFree = id % 9 == 0, text.length) ++ text
+      else text
+    }
 
   /** Movie-metadata pass over the MP4-staged mixed corpus: rows whose
     * bytes survive the box walk yield [[Mp4Meta]]; bare payloads are
     * dropped by the parse itself (see the buffer-bound size argument on
     * [[decodeMp4]]). duration_ms is integer floor arithmetic so the
     * oracle can replicate it exactly. */
-  def decodedMp4(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    videoTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeMp4(r.media).map { case (brand, ts, dur) =>
-          Mp4Meta(r.doc_id, r.source, r.media.length.toLong, brand, ts, dur,
-            dur * 1000L / ts)
-        }
-      })
-      .toDF()
-  }
+  def decodedMp4(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, videoTableStaged(s, dir)) { r =>
+      decodeMp4(r.media).map { case (brand, ts, dur) =>
+        Mp4Meta(r.doc_id, r.source, r.media.length.toLong, brand, ts, dur,
+          dur * 1000L / ts)
+      }
+    }
 
   /** Raw media table from documents (payload = utf-8 bytes of text — a
     * stand-in for real blobs, with realistic size variance). The byte-
@@ -605,46 +614,29 @@ object MediaPipeline {
     * (mm_meta_stats / mm_frame_sample / mm_resize_plan / mm_png_meta /
     * mm_jpeg_meta) decode, so all three real parse paths (fixed-offset LE,
     * fixed-offset BE, marker walk) AND the stub fallback are exercised by
-    * every gate over it. Typed mapPartitions staging, same batch shape as
-    * the decode pass itself. */
-  def mediaTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 4 == 0) bmpHeader(bmpWidth(id), bmpHeight(id), payload.length) ++ payload
-          else if (id % 4 == 1) jpegHeader(jpegWidth(id), jpegHeight(id)) ++ payload
-          else if (id % 4 == 2) pngHeader(pngWidth(id), pngHeight(id)) ++ payload
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+    * every gate over it. */
+  def mediaTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir) { (id, text) =>
+      if (id % 4 == 0) bmpHeader(bmpWidth(id), bmpHeight(id), text.length) ++ text
+      else if (id % 4 == 1) jpegHeader(jpegWidth(id), jpegHeight(id)) ++ text
+      else if (id % 4 == 2) pngHeader(pngWidth(id), pngHeight(id)) ++ text
+      else text
+    }
 
-  /** Decode pass over the mixed-format staged corpus: typed Dataset +
-    * mapPartitions — the batch shape a real decoder needs (iterator in,
-    * iterator out, one partition per task). */
+  /** Decode pass over the mixed-format staged corpus. */
   def decoded(s: SparkSession, dir: String): DataFrame =
     decodedOf(s, mediaTableStaged(s, dir))
 
   /** Decode pass over ANY (doc_id, source, media) frame. Callers that only
     * need a few payloads should filter BEFORE this call: the typed
     * mapPartitions is a pushdown barrier, so a filter above it still
-    * decodes (and scans) the whole corpus. */
-  def decodedOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val (w, h, f) = decodeMedia(r.media)
-          MediaMeta(r.doc_id, r.source, r.media.length.toLong, w, h, f)
-        }
-      }
-      .toDF()
-  }
+    * decodes (and scans) the whole corpus. Every row decodes: bytes in
+    * no known container fall back to [[decodeStub]]. */
+  def decodedOf(s: SparkSession, mediaDf: DataFrame): DataFrame =
+    decodePass(s, mediaDf) { r =>
+      val (w, h, f) = decodeMedia(r.media)
+      Some(MediaMeta(r.doc_id, r.source, r.media.length.toLong, w, h, f))
+    }
 
   // ──────────────────── pixel / sample DECODE (round 12) ────────────────────
   // The decode STEP itself — not just container metadata — for the formats
@@ -1189,33 +1181,19 @@ object MediaPipeline {
   }
 
   /** ADPCM-staged media table: every EVEN doc's payload is a complete
-    * IMA-ADPCM WAV, odd docs stay bare text — decode-as-filter, its own
-    * table like the PNG-pixel corpus. */
-  def adpcmTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 2 == 0) adpcmWav(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+    * IMA-ADPCM WAV, odd docs stay bare text — its own table like the
+    * PNG-pixel corpus. */
+  def adpcmTableStaged(s: SparkSession, dir: String): DataFrame =
+    staged(s, docIds(s, dir))(id => if (id % 2 == 0) adpcmWav(id) else bare(id))
 
   final case class AdpcmStats(doc_id: Long, source: String, n_blocks: Int,
                               n_samples: Long, s_sum: Long, pred_moment: Long)
 
-  def decodedAdpcm(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    adpcmTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeWavAdpcm(r.media).map(a =>
-          AdpcmStats(r.doc_id, r.source, a.nBlocks, a.nSamples, a.sSum, a.predMoment))
-      })
-      .toDF()
-  }
+  def decodedAdpcm(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, adpcmTableStaged(s, dir)) { r =>
+      decodeWavAdpcm(r.media).map(a =>
+        AdpcmStats(r.doc_id, r.source, a.nBlocks, a.nSamples, a.sSum, a.predMoment))
+    }
 
   /** Staged full-PNG dims — distinct arithmetic from the BMP/PPM models
     * so a query reading the wrong staged family fails its oracle. */
@@ -1510,23 +1488,17 @@ object MediaPipeline {
     * (the oracle needs closed-form pixel values); the text column only
     * contributes the row set. */
   def pixelTableStaged(s: SparkSession, dir: String): DataFrame =
-    pixelMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
+    pixelMediaOf(s, docIds(s, dir))
 
   /** The pixel staging over ANY (doc_id, source) frame — lets the stress
     * harness stage replicated corpora through the same code path. */
-  def pixelMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 4 == 0) pixelBmp(id)
-          else if (id % 4 == 2) pixelPpm(id)
-          else if (id % 4 == 1) pcmWav(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def pixelMediaOf(s: SparkSession, ids: DataFrame): DataFrame =
+    staged(s, ids) { id =>
+      if (id % 4 == 0) pixelBmp(id)
+      else if (id % 4 == 2) pixelPpm(id)
+      else if (id % 4 == 1) pcmWav(id)
+      else bare(id)
+    }
 
   /** PNG-pixel-staged media table: every 3rd doc's payload is a COMPLETE
     * spec-conformant RGB PNG (deflated IDAT, all five filters, two IDAT
@@ -1534,58 +1506,37 @@ object MediaPipeline {
     * [[pixelTableStaged]]'s mod-4 scheme) so the full-PNG corpus can
     * grow independently, mirroring [[audioTableStaged]]. */
   def pngPixelTableStaged(s: SparkSession, dir: String): DataFrame =
-    pngPixelMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
+    pngPixelMediaOf(s, docIds(s, dir))
 
   /** Per-image pixel statistics row the pixel decode passes emit. */
   case class PixelStats(doc_id: Long, source: String, width: Int, height: Int,
                         r_sum: Long, g_sum: Long, b_sum: Long,
                         r_moment: Long, tl_luma: Long)
 
+  /** The [[PixelStats]] row of `r`'s decoded pixels. */
+  private def pixelStats(r: MediaRow)(p: DecodedPixels): PixelStats =
+    PixelStats(r.doc_id, r.source, p.width, p.height, p.rSum, p.gSum,
+      p.bSum, p.rMoment, p.tlLuma)
+
   /** BMP pixel-decode pass: rows whose bytes fully decode as uncompressed
     * 24-bit BMP yield [[PixelStats]]; everything else (PPM, WAV, bare) is
-    * dropped by the flatMap — the decode itself is the filter. */
+    * dropped. */
   def decodedBmpPixels(s: SparkSession, dir: String): DataFrame =
     decodedBmpPixelsOf(s, pixelTableStaged(s, dir))
 
-  def decodedBmpPixelsOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeBmpPixels(r.media).map(p =>
-          PixelStats(r.doc_id, r.source, p.width, p.height, p.rSum, p.gSum,
-            p.bSum, p.rMoment, p.tlLuma))
-      })
-      .toDF()
-  }
+  def decodedBmpPixelsOf(s: SparkSession, mediaDf: DataFrame): DataFrame =
+    decodePass(s, mediaDf)(r => decodeBmpPixels(r.media).map(pixelStats(r)))
 
-  /** Full-PNG pixel-decode pass over the PNG-staged corpus, same
-    * contract as [[decodedBmpPixels]]: the decode is the filter. */
+  /** Full-PNG pixel-decode pass over the PNG-staged corpus. */
   def decodedPngPixels(s: SparkSession, dir: String): DataFrame =
     decodedPngPixelsOf(s, pngPixelTableStaged(s, dir))
 
-  def decodedPngPixelsOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodePngPixels(r.media).map(p =>
-          PixelStats(r.doc_id, r.source, p.width, p.height, p.rSum, p.gSum,
-            p.bSum, p.rMoment, p.tlLuma))
-      })
-      .toDF()
-  }
+  def decodedPngPixelsOf(s: SparkSession, mediaDf: DataFrame): DataFrame =
+    decodePass(s, mediaDf)(r => decodePngPixels(r.media).map(pixelStats(r)))
 
   /** The PNG staging over ANY (doc_id, source) frame (stress harness). */
-  def pngPixelMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 0) pixelPng(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def pngPixelMediaOf(s: SparkSession, ids: DataFrame): DataFrame =
+    staged(s, ids)(id => if (id % 3 == 0) pixelPng(id) else bare(id))
 
   // ---- WebDataset media shards (the mm_wds_pipeline arrival fixture) ----
 
@@ -1595,20 +1546,15 @@ object MediaPipeline {
                              r_sum: Long, g_sum: Long, b_sum: Long,
                              r_moment: Long, tl_luma: Long)
 
-  /** PNG decode pass over (name, site, data) member rows, decode-as-
-    * filter like every pixel pass: JSON sidecars and anything else that
-    * is not a conformant RGB PNG drop out of the flatMap. */
-  def decodedPngMembers(s: SparkSession, members: DataFrame): DataFrame = {
-    import s.implicits._
-    members.select(col("name"), col("site"), col("data"))
-      .as[(String, String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (name, site, data) =>
-        decodePngPixels(data).map(p =>
-          NamedPixelStats(name, site, p.width, p.height, p.rSum, p.gSum,
-            p.bSum, p.rMoment, p.tlLuma))
-      })
-      .toDF()
-  }
+  /** PNG decode pass over (name, site, data) member rows: JSON sidecars
+    * and anything else that is not a conformant RGB PNG drop out. */
+  def decodedPngMembers(s: SparkSession, members: DataFrame): DataFrame =
+    typedPass[(String, String, Array[Byte]), NamedPixelStats](s,
+      members.select(col("name"), col("site"), col("data"))) { case (name, site, data) =>
+      decodePngPixels(data).map(p =>
+        NamedPixelStats(name, site, p.width, p.height, p.rSum, p.gSum,
+          p.bSum, p.rMoment, p.tlLuma))
+    }
 
   /** WebDataset media fixture: 8 tar shards; shard f carries a directory
     * member d{f}/ then 4 + f%3 samples; sample i (key = f·100+i):
@@ -1673,32 +1619,19 @@ object MediaPipeline {
                             sum_abs: Long, sum_sq: Long, max_s: Int,
                             min_s: Int, channels: Int, mom0: Long, mom1: Long)
 
-  /** WAV sample decode over a TarSource.members-shaped frame: the decode
-    * is the filter (JSON sidecars and non-WAV members drop out). */
-  def decodedWavMembers(s: SparkSession, members: DataFrame): DataFrame = {
-    import s.implicits._
-    members
-      .select(col("file"), col("name"), col("data"))
-      .as[(String, String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (file, name, data) =>
-        decodeWavPcm(data).map(p =>
-          WavMemberStats(file, name, p.nSamples, p.sumAbs, p.sumSq,
-            p.maxS, p.minS, p.channels, p.mom0, p.mom1))
-      })
-      .toDF()
-  }
+  /** WAV sample decode over a TarSource.members-shaped frame: JSON
+    * sidecars and non-WAV members drop out. */
+  def decodedWavMembers(s: SparkSession, members: DataFrame): DataFrame =
+    typedPass[(String, String, Array[Byte]), WavMemberStats](s,
+      members.select(col("file"), col("name"), col("data"))) { case (file, name, data) =>
+      decodeWavPcm(data).map(p =>
+        WavMemberStats(file, name, p.nSamples, p.sumAbs, p.sumSq,
+          p.maxS, p.minS, p.channels, p.mom0, p.mom1))
+    }
 
-  /** PPM pixel-decode pass, same contract as [[decodedBmpPixels]]. */
-  def decodedPpmPixels(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    pixelTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodePpmPixels(r.media).map(p =>
-          PixelStats(r.doc_id, r.source, p.width, p.height, p.rSum, p.gSum,
-            p.bSum, p.rMoment, p.tlLuma))
-      })
-      .toDF()
-  }
+  /** PPM pixel-decode pass over the pixel-staged corpus. */
+  def decodedPpmPixels(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, pixelTableStaged(s, dir))(r => decodePpmPixels(r.media).map(pixelStats(r)))
 
   /** Per-thumbnail statistics row the EXECUTED resize emits (vs
     * mm_resize_plan, which only computes target dims). */
@@ -1714,29 +1647,25 @@ object MediaPipeline {
     * sampled R by its thumbnail raster position, so a wrong sample
     * coordinate (center convention, transposed axes, clamped edges)
     * breaks the hash even when the sums collide. */
-  def resizedBmpThumbs(s: SparkSession, dir: String, t: Int = 4): DataFrame = {
-    import s.implicits._
-    pixelTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        bmpPixelAccessor(r.media).map { case (w, h, at) =>
-          var tr = 0L; var tg = 0L; var tb = 0L; var tm = 0L
-          var oy = 0
-          while (oy < t) {
-            var ox = 0
-            while (ox < t) {
-              val sx = ox * w / t; val sy = oy * h / t
-              val rv = at(sx, sy, 0)
-              tr += rv; tg += at(sx, sy, 1); tb += at(sx, sy, 2)
-              tm += (oy.toLong * t + ox) * rv
-              ox += 1
-            }
-            oy += 1
+  def resizedBmpThumbs(s: SparkSession, dir: String, t: Int = 4): DataFrame =
+    decodePass(s, pixelTableStaged(s, dir)) { r =>
+      bmpPixelAccessor(r.media).map { case (w, h, at) =>
+        var tr = 0L; var tg = 0L; var tb = 0L; var tm = 0L
+        var oy = 0
+        while (oy < t) {
+          var ox = 0
+          while (ox < t) {
+            val sx = ox * w / t; val sy = oy * h / t
+            val rv = at(sx, sy, 0)
+            tr += rv; tg += at(sx, sy, 1); tb += at(sx, sy, 2)
+            tm += (oy.toLong * t + ox) * rv
+            ox += 1
           }
-          ThumbStats(r.doc_id, r.source, w, h, tr, tg, tb, tm)
+          oy += 1
         }
-      })
-      .toDF()
-  }
+        ThumbStats(r.doc_id, r.source, w, h, tr, tg, tb, tm)
+      }
+    }
 
   /** Per-stream PCM sample statistics row the sample decode pass emits. */
   case class PcmStats(doc_id: Long, source: String, n_samples: Long,
@@ -1745,32 +1674,24 @@ object MediaPipeline {
 
   /** PCM sample-decode pass over the pixel-staged corpus: rows whose
     * bytes decode as mono/stereo 16-bit PCM WAV yield [[PcmStats]]. */
-  def decodedWavPcm(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    pixelTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeWavPcm(r.media).map(p =>
-          PcmStats(r.doc_id, r.source, p.nSamples, p.sumAbs, p.sumSq,
-            p.maxS, p.minS, p.channels, p.mom0, p.mom1))
-      })
-      .toDF()
-  }
+  def decodedWavPcm(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, pixelTableStaged(s, dir)) { r =>
+      decodeWavPcm(r.media).map(p =>
+        PcmStats(r.doc_id, r.source, p.nSamples, p.sumAbs, p.sumSq,
+          p.maxS, p.minS, p.channels, p.mom0, p.mom1))
+    }
 
   case class PcmEnergyStats(doc_id: Long, source: String, n_windows: Int,
                             e_total: Long, e_max: Long, e_moment: Long,
                             channels: Int)
 
   /** Windowed-energy pass over the pixel-staged corpus. */
-  def decodedWavEnergy(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    pixelTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeWavEnergy(r.media).map(p =>
-          PcmEnergyStats(r.doc_id, r.source, p.nWindows, p.eTotal, p.eMax,
-            p.eMoment, p.channels))
-      })
-      .toDF()
-  }
+  def decodedWavEnergy(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, pixelTableStaged(s, dir)) { r =>
+      decodeWavEnergy(r.media).map(p =>
+        PcmEnergyStats(r.doc_id, r.source, p.nWindows, p.eTotal, p.eMax,
+          p.eMoment, p.channels))
+    }
 
   case class DftStats(doc_id: Long, source: String, n_frames: Long,
                       x1: Long, p1_e6: Long, x2: Long, p2_e6: Long,
@@ -1778,16 +1699,12 @@ object MediaPipeline {
 
   /** Spectral-correlation pass over the pixel-staged corpus (see
     * [[decodeWavDft]]). */
-  def decodedWavDft(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    pixelTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeWavDft(r.media).map(p =>
-          DftStats(r.doc_id, r.source, p.nFrames, p.x1, p.p1E6, p.x2, p.p2E6,
-            p.x3, p.p3E6, p.domBin))
-      })
-      .toDF()
-  }
+  def decodedWavDft(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, pixelTableStaged(s, dir)) { r =>
+      decodeWavDft(r.media).map(p =>
+        DftStats(r.doc_id, r.source, p.nFrames, p.x1, p.p1E6, p.x2, p.p2E6,
+          p.x3, p.p3E6, p.domBin))
+    }
 
   // ---------------------------------------------------------------- GIF
 
@@ -1925,35 +1842,19 @@ object MediaPipeline {
     * with the doc payload appended AFTER the trailer (real files often
     * carry trailing junk; the walk must stop at 0x3B, not at EOF), the
     * rest stay bare — the animation pass must dispatch on real bytes. */
-  def gifTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 3 == 0) gifBytes(id) ++ payload
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def gifTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir)((id, text) => if (id % 3 == 0) gifBytes(id) ++ text else text)
 
   /** Animation-metadata pass over the GIF-staged mixed corpus: rows whose
     * bytes survive the block walk yield [[GifMeta]]; bare payloads fail
     * the magic check and are dropped by the parse itself. */
-  def decodedGif(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gifTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeGif(r.media).map { case (ver, w, h, gct, frames, db) =>
-          GifMeta(r.doc_id, r.source, r.media.length.toLong, ver, w, h,
-            gct, frames, db)
-        }
-      })
-      .toDF()
-  }
+  def decodedGif(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, gifTableStaged(s, dir)) { r =>
+      decodeGif(r.media).map { case (ver, w, h, gct, frames, db) =>
+        GifMeta(r.doc_id, r.source, r.media.length.toLong, ver, w, h,
+          gct, frames, db)
+      }
+    }
 
   // ------------------------------------------------- GIF pixel decode
   //
@@ -2294,36 +2195,18 @@ object MediaPipeline {
     * table, like the PNG pixel staging, so the decode must dispatch on
     * real magic bytes. */
   def gifPixelTableStaged(s: SparkSession, dir: String): DataFrame =
-    gifPixelMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
+    gifPixelMediaOf(s, docIds(s, dir))
 
   /** The GIF pixel staging over ANY (doc_id, source) frame (stress). */
-  def gifPixelMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 0) pixelGif(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def gifPixelMediaOf(s: SparkSession, ids: DataFrame): DataFrame =
+    staged(s, ids)(id => if (id % 3 == 0) pixelGif(id) else bare(id))
 
-  /** GIF pixel-decode pass, same contract as [[decodedPngPixels]]: the
-    * decode is the filter. */
+  /** GIF pixel-decode pass over the GIF-pixel-staged corpus. */
   def decodedGifPixels(s: SparkSession, dir: String): DataFrame =
     decodedGifPixelsOf(s, gifPixelTableStaged(s, dir))
 
-  def decodedGifPixelsOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeGifPixels(r.media).map(p =>
-          PixelStats(r.doc_id, r.source, p.width, p.height, p.rSum, p.gSum,
-            p.bSum, p.rMoment, p.tlLuma))
-      })
-      .toDF()
-  }
+  def decodedGifPixelsOf(s: SparkSession, mediaDf: DataFrame): DataFrame =
+    decodePass(s, mediaDf)(r => decodeGifPixels(r.media).map(pixelStats(r)))
 
   // ------------------------------------ MP4 sample-table (demux) decode
   //
@@ -2696,19 +2579,7 @@ object MediaPipeline {
   /** MP4-sample-staged media table: every 3rd doc a COMPLETE sample-
     * table MP4 ([[sampleMp4]]), the rest bare text. */
   def mp4SampleTableStaged(s: SparkSession, dir: String): DataFrame =
-    mp4SampleMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
-
-  def mp4SampleMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 0) sampleMp4(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+    staged(s, docIds(s, dir))(id => if (id % 3 == 0) sampleMp4(id) else bare(id))
 
   case class Mp4SampleStats(doc_id: Long, source: String, n_samples: Int,
                             total_bytes: Long, max_size: Int, dur_units: Long,
@@ -2716,21 +2587,14 @@ object MediaPipeline {
                             size_moment: Long, stsc_moment: Long,
                             has_ctts: Int, ctts_sum: Long, ctts_moment: Long)
 
-  /** MP4 sample-table decode pass: the decode is the filter. */
+  /** MP4 sample-table decode pass. */
   def decodedMp4Samples(s: SparkSession, dir: String): DataFrame =
-    decodedMp4SamplesOf(s, mp4SampleTableStaged(s, dir))
-
-  def decodedMp4SamplesOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeMp4Samples(r.media).map(m =>
-          Mp4SampleStats(r.doc_id, r.source, m.nSamples, m.totalBytes,
-            m.maxSize, m.durUnits, m.timescale, m.nChunks, m.chunkOffSum,
-            m.sizeMoment, m.stscMoment, m.hasCtts, m.cttsSum, m.cttsMoment))
-      })
-      .toDF()
-  }
+    decodePass(s, mp4SampleTableStaged(s, dir)) { r =>
+      decodeMp4Samples(r.media).map(m =>
+        Mp4SampleStats(r.doc_id, r.source, m.nSamples, m.totalBytes,
+          m.maxSize, m.durUnits, m.timescale, m.nChunks, m.chunkOffSum,
+          m.sizeMoment, m.stscMoment, m.hasCtts, m.cttsSum, m.cttsMoment))
+    }
 
   /** Keyframe (sync-sample) statistics for one MP4 — the demux step a
     * frame-sampling pipeline keys on (decode only keyframes, seek to
@@ -2798,16 +2662,12 @@ object MediaPipeline {
                           n_sync: Int, sync_sum: Long, sync_bytes: Long)
 
   /** Keyframe-extraction pass over the MP4-staged corpus. */
-  def decodedMp4Sync(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mp4SampleTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeMp4Sync(r.media).map(m =>
-          Mp4SyncStats(r.doc_id, r.source, m.hasStss, m.nSync, m.syncSum,
-            m.syncBytes))
-      })
-      .toDF()
-  }
+  def decodedMp4Sync(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, mp4SampleTableStaged(s, dir)) { r =>
+      decodeMp4Sync(r.media).map(m =>
+        Mp4SyncStats(r.doc_id, r.source, m.hasStss, m.nSync, m.syncSum,
+          m.syncBytes))
+    }
 
   // ------------------------------ Fragmented MP4 (moof/traf/trun) demux
   //
@@ -3120,40 +2980,21 @@ object MediaPipeline {
   /** fMP4-staged media table: every 3rd doc a COMPLETE fragmented MP4
     * ([[fragMp4]]), the rest bare text. */
   def mp4FragmentStaged(s: SparkSession, dir: String): DataFrame =
-    mp4FragmentMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
-
-  def mp4FragmentMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 0) fragMp4(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+    staged(s, docIds(s, dir))(id => if (id % 3 == 0) fragMp4(id) else bare(id))
 
   case class Mp4FragStats(doc_id: Long, source: String, n_frags: Int,
                           seq_sum: Long, n_samples: Int, total_bytes: Long,
                           dur_total: Long, size_moment: Long, tfdt_sum: Long,
                           data_off_sum: Long, timescale: Int)
 
-  /** Fragmented-MP4 demux pass: the decode is the filter. */
+  /** Fragmented-MP4 demux pass. */
   def decodedMp4Fragments(s: SparkSession, dir: String): DataFrame =
-    decodedMp4FragmentsOf(s, mp4FragmentStaged(s, dir))
-
-  def decodedMp4FragmentsOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeMp4Fragments(r.media).map(m =>
-          Mp4FragStats(r.doc_id, r.source, m.nFrags, m.seqSum, m.nSamples,
-            m.totalBytes, m.durTotal, m.sizeMoment, m.tfdtSum,
-            m.dataOffSum, m.timescale))
-      })
-      .toDF()
-  }
+    decodePass(s, mp4FragmentStaged(s, dir)) { r =>
+      decodeMp4Fragments(r.media).map(m =>
+        Mp4FragStats(r.doc_id, r.source, m.nFrags, m.seqSum, m.nSamples,
+          m.totalBytes, m.durTotal, m.sizeMoment, m.tfdtSum,
+          m.dataOffSum, m.timescale))
+    }
 
   // ------------------------------------------- MP3 (ID3v2 + frame walk)
   //
@@ -3430,18 +3271,8 @@ object MediaPipeline {
 
   /** MP3-staged media table: every doc with id % 3 == 1 a COMPLETE MP3
     * ([[sampleMp3]]), the rest bare text. */
-  def mp3TableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 1) sampleMp3(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def mp3TableStaged(s: SparkSession, dir: String): DataFrame =
+    staged(s, docIds(s, dir))(id => if (id % 3 == 1) sampleMp3(id) else bare(id))
 
   case class Mp3Stats(doc_id: Long, source: String, n_frames: Int,
                       data_bytes: Long, kbps_sum: Long, n_padded: Int,
@@ -3449,18 +3280,14 @@ object MediaPipeline {
                       title: String, tag_ver: Int, has_vbr: Int,
                       toc_sum: Long, vbr_quality: Int)
 
-  /** MP3 frame-walk pass: the decode is the filter. */
-  def decodedMp3(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mp3TableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeMp3(r.media).map(m =>
-          Mp3Stats(r.doc_id, r.source, m.nFrames, m.dataBytes, m.kbpsSum,
-            m.nPadded, m.sampleRate, m.durationMs, m.id3Bytes, m.title,
-            m.tagVer, m.hasVbr, m.tocSum, m.vbrQuality))
-      })
-      .toDF()
-  }
+  /** MP3 frame-walk pass. */
+  def decodedMp3(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, mp3TableStaged(s, dir)) { r =>
+      decodeMp3(r.media).map(m =>
+        Mp3Stats(r.doc_id, r.source, m.nFrames, m.dataBytes, m.kbpsSum,
+          m.nPadded, m.sampleRate, m.durationMs, m.id3Bytes, m.title,
+          m.tagVer, m.hasVbr, m.tocSum, m.vbrQuality))
+    }
 
   // --------------------------------- JPEG entropy (coefficient) decode
   //
@@ -4284,19 +4111,7 @@ object MediaPipeline {
     * baseline JPEG ([[pixelJpeg]]), the rest bare text — the PNG/GIF
     * staging discipline. */
   def jpegCoeffTableStaged(s: SparkSession, dir: String): DataFrame =
-    jpegCoeffMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
-
-  def jpegCoeffMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 0) pixelJpeg(id)
-          else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+    staged(s, docIds(s, dir))(id => if (id % 3 == 0) pixelJpeg(id) else bare(id))
 
   /** MIXED-mode JPEG staging: every 3rd doc is a complete JPEG — half of
     * them BASELINE ([[pixelJpeg]], id/3 even — keeping the restart-
@@ -4305,39 +4120,25 @@ object MediaPipeline {
     * decoder must dispatch on the SOF marker per file; the baseline
     * coefficient oracle applies to the mix verbatim. */
   def jpegMixedCoeffTableStaged(s: SparkSession, dir: String): DataFrame =
-    jpegMixedCoeffMediaOf(s, graft.Tables.documents(s, dir).select(col("doc_id"), col("source")))
+    staged(s, docIds(s, dir)) { id =>
+      if (id % 3 == 0) {
+        if ((id / 3) % 2 == 0) pixelJpeg(id) else pixelJpegProgressive(id)
+      } else bare(id)
+    }
 
-  def jpegMixedCoeffMediaOf(s: SparkSession, ids: DataFrame): DataFrame = {
-    import s.implicits._
-    ids.as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) =>
-        val media =
-          if (id % 3 == 0) {
-            if ((id / 3) % 2 == 0) pixelJpeg(id) else pixelJpegProgressive(id)
-          } else s"doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  /** The [[JpegCoeffStats]] row of `r`, if its bytes decode as a JPEG. */
+  private def jpegCoeffStats(r: MediaRow): Option[JpegCoeffStats] =
+    decodeJpegCoeffs(r.media).map(c =>
+      JpegCoeffStats(r.doc_id, r.source, c.width, c.height, c.nBlocks,
+        c.dcSum, c.acAbsSum, c.nNonzeroAc, c.moment))
 
   /** JPEG coefficient-decode pass over the mixed corpus. */
   def decodedJpegCoeffsMixed(s: SparkSession, dir: String): DataFrame =
-    decodedJpegCoeffsOf(s, jpegMixedCoeffTableStaged(s, dir))
+    decodePass(s, jpegMixedCoeffTableStaged(s, dir))(jpegCoeffStats)
 
-  /** JPEG coefficient-decode pass: the decode is the filter. */
+  /** JPEG coefficient-decode pass over the baseline corpus. */
   def decodedJpegCoeffs(s: SparkSession, dir: String): DataFrame =
-    decodedJpegCoeffsOf(s, jpegCoeffTableStaged(s, dir))
-
-  def decodedJpegCoeffsOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeJpegCoeffs(r.media).map(c =>
-          JpegCoeffStats(r.doc_id, r.source, c.width, c.height, c.nBlocks,
-            c.dcSum, c.acAbsSum, c.nNonzeroAc, c.moment))
-      })
-      .toDF()
-  }
+    decodePass(s, jpegCoeffTableStaged(s, dir))(jpegCoeffStats)
 
   // --------------------------------- TIFF / EXIF (IFD walk, both endians)
   //
@@ -4569,37 +4370,20 @@ object MediaPipeline {
   /** Mixed corpus for the EXIF gate: ids % 3 == 1 staged as full TIFFs
     * (both endians by id parity; trailing junk QUOTES the "II*\0" magic
     * so resync-by-signature parsers split), everything else bare text. */
-  def tiffTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 3 == 1)
-            tiffFile(id, "II*\u0000decoy".getBytes("US-ASCII") ++ payload)
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def tiffTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir) { (id, text) =>
+      if (id % 3 == 1) tiffFile(id, "II*\u0000decoy".getBytes("US-ASCII") ++ text)
+      else text
+    }
 
-  /** TIFF/EXIF decode pass: the parse is the filter, as every gate. */
+  /** TIFF/EXIF decode pass. */
   def decodedTiff(s: SparkSession, dir: String): DataFrame =
-    decodedTiffOf(s, tiffTableStaged(s, dir))
-
-  def decodedTiffOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeTiffFields(r.media).map(f =>
-          TiffMeta(r.doc_id, r.source, r.media.length.toLong, f.endian,
-            f.width, f.height, f.orientation, f.make, f.resQ, f.iso,
-            f.expDen, f.nIfds))
-      })
-      .toDF()
-  }
+    decodePass(s, tiffTableStaged(s, dir)) { r =>
+      decodeTiffFields(r.media).map(f =>
+        TiffMeta(r.doc_id, r.source, r.media.length.toLong, f.endian,
+          f.width, f.height, f.orientation, f.make, f.resQ, f.iso,
+          f.expDen, f.nIfds))
+    }
 
   // ------------------------------- Ogg (RFC 3533 page walk + packet framing)
   //
@@ -4979,35 +4763,19 @@ object MediaPipeline {
   /** Mixed corpus for the FLAC gate: ids % 3 == 0 staged as FLAC
     * metadata sections (junk after the last block quotes "fLaC");
     * everything else bare text. */
-  def flacTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 3 == 0) flacFile(id, "fLaC decoy".getBytes("US-ASCII") ++ payload)
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+  def flacTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir) { (id, text) =>
+      if (id % 3 == 0) flacFile(id, "fLaC decoy".getBytes("US-ASCII") ++ text)
+      else text
+    }
 
   def decodedFlac(s: SparkSession, dir: String): DataFrame =
-    decodedFlacOf(s, flacTableStaged(s, dir))
-
-  def decodedFlacOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeFlacFields(r.media).map(f =>
-          FlacMeta(r.doc_id, r.source, r.media.length.toLong, f.rate,
-            f.channels, f.bps, f.samples, f.md5Hex, f.nBlocks, f.padLen,
-            f.vendor, f.artist))
-      })
-      .toDF()
-  }
+    decodePass(s, flacTableStaged(s, dir)) { r =>
+      decodeFlacFields(r.media).map(f =>
+        FlacMeta(r.doc_id, r.source, r.media.length.toLong, f.rate,
+          f.channels, f.bps, f.samples, f.md5Hex, f.nBlocks, f.padLen,
+          f.vendor, f.artist))
+    }
 
   // ----------------------- FLAC frame decode (subframes + Rice residuals)
   //
@@ -5641,81 +5409,51 @@ object MediaPipeline {
 
   /** Mixed corpus for the FLAC PCM gate: ids % 3 == 0 staged as complete
     * FLAC files with real frames; everything else bare text (refused by
-    * the decode — decode-is-the-filter). */
-  def flacPcmTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val media =
-          if (id % 3 == 0) flacPcmFile(id)
-          else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+    * the decode). */
+  def flacPcmTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir)((id, text) => if (id % 3 == 0) flacPcmFile(id) else text)
 
-  def decodedFlacPcm(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    flacPcmTableStaged(s, dir).as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeFlacPcm(r.media).map { p =>
-          var sumAbs = 0L; var sumSq = 0L; var mom = 0L
-          var maxS = Int.MinValue; var minS = Int.MaxValue
-          var n = 0L
-          var c = 0
-          while (c < p.channels) {
-            val arr = p.samples(c)
-            var j = 0
-            while (j < arr.length) {
-              val v = arr(j)
-              sumAbs += math.abs(v).toLong
-              sumSq += v.toLong * v
-              mom += (c + 1).toLong * (j + 1) * v
-              if (v > maxS) maxS = v
-              if (v < minS) minS = v
-              n += 1
-              j += 1
-            }
-            c += 1
+  def decodedFlacPcm(s: SparkSession, dir: String): DataFrame =
+    decodePass(s, flacPcmTableStaged(s, dir)) { r =>
+      decodeFlacPcm(r.media).map { p =>
+        var sumAbs = 0L; var sumSq = 0L; var mom = 0L
+        var maxS = Int.MinValue; var minS = Int.MaxValue
+        var n = 0L
+        var c = 0
+        while (c < p.channels) {
+          val arr = p.samples(c)
+          var j = 0
+          while (j < arr.length) {
+            val v = arr(j)
+            sumAbs += math.abs(v).toLong
+            sumSq += v.toLong * v
+            mom += (c + 1).toLong * (j + 1) * v
+            if (v > maxS) maxS = v
+            if (v < minS) minS = v
+            n += 1
+            j += 1
           }
-          FlacPcmStats(r.doc_id, r.source, p.channels, p.nFrames, n,
-            if (p.md5Ok) 1 else 0, sumAbs, sumSq, maxS, minS, mom)
+          c += 1
         }
-      })
-      .toDF()
-  }
-  def oggTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) =>
-        val payload = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val media =
-          if (id % 3 == 2) oggFile(id, "OggS decoy".getBytes("US-ASCII") ++ payload)
-          else payload
-        MediaRow(id, src, media)
-      })
-      .toDF()
-  }
+        FlacPcmStats(r.doc_id, r.source, p.channels, p.nFrames, n,
+          if (p.md5Ok) 1 else 0, sumAbs, sumSq, maxS, minS, mom)
+      }
+    }
 
-  /** Ogg decode pass: the walk is the filter, as every gate. */
+  def oggTableStaged(s: SparkSession, dir: String): DataFrame =
+    stagedText(s, dir) { (id, text) =>
+      if (id % 3 == 2) oggFile(id, "OggS decoy".getBytes("US-ASCII") ++ text)
+      else text
+    }
+
+  /** Ogg decode pass. */
   def decodedOgg(s: SparkSession, dir: String): DataFrame =
-    decodedOggOf(s, oggTableStaged(s, dir))
-
-  def decodedOggOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeOggFields(r.media).map(f =>
-          OggMeta(r.doc_id, r.source, r.media.length.toLong, f.nPages,
-            f.nPackets, f.nSpanning, f.payloadBytes, f.payloadSum,
-            f.granuleMoment, f.serial))
-      })
-      .toDF()
-  }
+    decodePass(s, oggTableStaged(s, dir)) { r =>
+      decodeOggFields(r.media).map(f =>
+        OggMeta(r.doc_id, r.source, r.media.length.toLong, f.nPages,
+          f.nPackets, f.nSpanning, f.payloadBytes, f.payloadSum,
+          f.granuleMoment, f.serial))
+    }
 
   // ─────────── perceptual-hash (aHash) near-dup fixture (round 16) ───────────
   // IMAGE near-duplicate detection — the visual twin of simhash over text:
@@ -5799,14 +5537,8 @@ object MediaPipeline {
   /** aHash-staged media table: one mosaic BMP per document. Built
     * in-memory per pass like [[mediaTableStaged]] — the oracle replays
     * the value model, never these bytes. */
-  def ahashTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) => MediaRow(id, src, ahashBmp(id)) })
-      .toDF()
-  }
+  def ahashTableStaged(s: SparkSession, dir: String): DataFrame =
+    staged(s, docIds(s, dir))(ahashBmp)
 
   // ───────── aHash incremental-ingest batch (mm_ahash_incremental) ─────────
   // The image twin of dedup_incremental_neardup's constructed batch,
@@ -5843,15 +5575,14 @@ object MediaPipeline {
 
   /** The arriving image batch: docs with doc_id%10 ∈ {4, 7}, staged
     * under the batch value model (oracle replays the model). */
-  def ahashBatchStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  def ahashBatchStaged(s: SparkSession, dir: String): DataFrame =
+    staged(s, batchIds(s, dir))(ahashBatchBmp)
+
+  /** The arriving batch's (doc_id, source) rows: doc_id%10 ∈ {4, 7}. */
+  private def batchIds(s: SparkSession, dir: String): DataFrame =
     graft.Tables.documents(s, dir)
       .filter(col("doc_id") % 10 === 4 || col("doc_id") % 10 === 7)
       .select(col("doc_id"), col("source"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) => MediaRow(id, src, ahashBatchBmp(id)) })
-      .toDF()
-  }
 
   /** Per-image average-hash row: the 64-bit hash split into two NONNEGATIVE
     * 32-bit halves (h_hi = blocks 0-31 with block 0 at bit 31, h_lo =
@@ -5923,20 +5654,14 @@ object MediaPipeline {
       (hi, lo, moment)
     }
 
-  /** aHash decode pass: decode-as-filter like every pixel gate. */
+  /** aHash decode pass over the aHash-staged corpus. */
   def decodedAhash(s: SparkSession, dir: String): DataFrame =
     decodedAhashOf(s, ahashTableStaged(s, dir))
 
-  def decodedAhashOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodeAhash(r.media).map { case (hi, lo, m) =>
-          AhashRow(r.doc_id, r.source, hi, lo, m)
-        }
-      })
-      .toDF()
-  }
+  def decodedAhashOf(s: SparkSession, mediaDf: DataFrame): DataFrame =
+    decodePass(s, mediaDf) { r =>
+      decodeAhash(r.media).map { case (hi, lo, m) => AhashRow(r.doc_id, r.source, hi, lo, m) }
+    }
 
   // ─────────── perceptual-hash (pHash) near-dup fixture (round 16) ───────────
   // The DCT member of the perceptual family: 8×8 downsample (the aHash
@@ -6006,14 +5731,8 @@ object MediaPipeline {
     * [[gray64Bmp]], the shared layout. */
   def phashBmp(id: Long): Array[Byte] = gray64Bmp((x, y) => phashPxValue(id, x, y))
 
-  def phashTableStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) => MediaRow(id, src, phashBmp(id)) })
-      .toDF()
-  }
+  def phashTableStaged(s: SparkSession, dir: String): DataFrame =
+    staged(s, docIds(s, dir))(phashBmp)
 
   /** Per-image pHash row: h_hi carries AC coefficients 1..31 (bit
     * 31-idx), h_lo coefficients 32..63 (bit 63-idx) — both nonnegative;
@@ -6067,16 +5786,10 @@ object MediaPipeline {
   def decodedPhash(s: SparkSession, dir: String): DataFrame =
     decodedPhashOf(s, phashTableStaged(s, dir))
 
-  def decodedPhashOf(s: SparkSession, mediaDf: DataFrame): DataFrame = {
-    import s.implicits._
-    mediaDf.as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        decodePhash(r.media).map { case (hi, lo, m) =>
-          PhashRow(r.doc_id, r.source, hi, lo, m)
-        }
-      })
-      .toDF()
-  }
+  def decodedPhashOf(s: SparkSession, mediaDf: DataFrame): DataFrame =
+    decodePass(s, mediaDf) { r =>
+      decodePhash(r.media).map { case (hi, lo, m) => PhashRow(r.doc_id, r.source, hi, lo, m) }
+    }
 
   // ──────── pHash incremental-ingest batch (mm_phash_incremental) ────────
   // The spectral twin of the aHash ingest batch, exercising the edit
@@ -6120,13 +5833,6 @@ object MediaPipeline {
   /** The arriving image batch for the pHash ingest gate: docs with
     * doc_id%10 ∈ {4, 7}, staged under the batch value model (the oracle
     * replays the model, never these bytes). */
-  def phashBatchStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.Tables.documents(s, dir)
-      .filter(col("doc_id") % 10 === 4 || col("doc_id") % 10 === 7)
-      .select(col("doc_id"), col("source"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, src) => MediaRow(id, src, phashBatchBmp(id)) })
-      .toDF()
-  }
+  def phashBatchStaged(s: SparkSession, dir: String): DataFrame =
+    staged(s, batchIds(s, dir))(phashBatchBmp)
 }

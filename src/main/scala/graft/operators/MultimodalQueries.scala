@@ -89,19 +89,13 @@ object MultimodalQueries extends QueryPack {
     // byte stream for PCM samples; the plumbing (iterator-batched decode,
     // flatMap to per-window rows, no shuffle until the ORDER BY) is what
     // this pins.
-    "mm_audio_energy" -> ((s, d) => {
-      import s.implicits._
-      MediaPipeline.mediaTable(s, d).as[MediaPipeline.MediaRow]
-        .mapPartitions { rows =>
-          rows.flatMap { r =>
-            r.media.grouped(256).zipWithIndex.map { case (chunk, w) =>
-              (r.doc_id, w, chunk.length, chunk.map(b => (b & 0xff).toLong).sum)
-            }
-          }
-        }
+    "mm_audio_energy" -> ((s, d) =>
+      MediaPipeline.decodePass(s, MediaPipeline.mediaTable(s, d))(r =>
+        r.media.grouped(256).zipWithIndex.map { case (chunk, w) =>
+          (r.doc_id, w, chunk.length, chunk.map(b => (b & 0xff).toLong).sum)
+        })
         .toDF("doc_id", "win", "n_bytes", "sum_bytes")
-        .orderBy("doc_id", "win")
-    }),
+        .orderBy("doc_id", "win")),
 
     // Resize plan: target bounding box 224×224 preserving aspect ratio —
     // pure metadata arithmetic (the real resize would be a mapInPandas/

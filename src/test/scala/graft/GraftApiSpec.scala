@@ -476,7 +476,7 @@ class GraftApiSpec extends SparkSpec {
 
   test("txCommit/txRead facade: append, overwrite, time travel, manifest") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tx_api_").toFile.getPath
+    val dir = tempDir("graft_tx_api_").toFile.getPath
     Graft.txCommit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir, 0)
     val f0 = Graft.txActiveFiles(dir, 0)
     Graft.txCommit(Seq((9L, "z")).toDF("k", "s"), dir, 1,
@@ -496,7 +496,7 @@ class GraftApiSpec extends SparkSpec {
   test("txCommitStats/txReadWhere facade: stats recorded, disjoint range reads empty") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_txst_api_").toFile.getPath
+    val dir = tempDir("graft_txst_api_").toFile.getPath
     Graft.txCommitStats((1L to 40L).map(k => (k, s"r$k")).toDF("k", "s")
       .repartitionByRange(4, col("k")), dir, 0, statsCol = "k")
     assert(Graft.txReadWhere(spark, dir, "k", 5, 8).count() == 4)

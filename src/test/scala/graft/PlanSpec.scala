@@ -284,7 +284,7 @@ class PlanSpec extends SparkSpec {
 
   test("partitioned lake layout: a day filter prunes the scan to one partition") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lake").toFile.getAbsolutePath
+    val tmp = tempDir("graft-lake").toFile.getAbsolutePath
     val ev = Tables.events(spark, dir).withColumn("day", to_date(col("ts")))
     graft.sources.FileSources.writeParquet(ev, s"$tmp/events_by_day", Seq("day"))
     // Fresh session with AQE off so the FileSourceScanExec is reachable in
@@ -315,7 +315,7 @@ class PlanSpec extends SparkSpec {
     // Manifest pruning happens BEFORE the DataFrame exists, so the plan's
     // file index — not a runtime filter — is what shrinks: inputFiles on
     // the pruned read must be exactly the kept files.
-    val dir = java.nio.file.Files.createTempDirectory("plan_txstats_").toFile.getPath
+    val dir = tempDir("plan_txstats_").toFile.getPath
     import spark.implicits._
     val df = (1L to 80L).map(k => (k, s"r$k")).toDF("k", "s")
       .repartitionByRange(8, col("k"))

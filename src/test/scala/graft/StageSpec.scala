@@ -41,24 +41,8 @@ class StageSpec extends SparkSpec {
     "cjk" -> "b028cc5fe1c85fcf7a54a547e38608b23f561a3630469952b4dcbb7c707fbc91",
     "mixed" -> "5c4cabaf3ae5511a3bdfc75b5aa87918c9f6ccd7ef24daa2ea11a9ec537bae3b")
 
-  /** A fresh copy of sf0.001, so the data-dir-keyed stages start empty. */
-  private def freshData(): String = {
-    val src = new File(sf("sf0.001")).toPath
-    val copy = Files.createTempDirectory("graft_stagespec_data")
-    Files.walk(src).forEach { p =>
-      val to = copy.resolve(src.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
-    }
-    copy.toString
-  }
-
-  private def rm(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
-
-  private val dataDir = freshData()
-  private val fixtureRoot = Files.createTempDirectory("graft_stagespec_fix").toFile
+  private val dataDir = sf0001Copy("graft_stagespec_data")
+  private val fixtureRoot = tempDir("graft_stagespec_fix").toFile
 
   private def fixDir(name: String): String = new File(fixtureRoot, name).getPath
 
@@ -135,11 +119,6 @@ class StageSpec extends SparkSpec {
 
   private lazy val staged: Unit = sites.foreach(_._3())
 
-  override def afterAll(): Unit = {
-    Seq(fixtureRoot, new File(dataDir), new File(Stage.root(dataDir))).foreach(rm)
-    super.afterAll()
-  }
-
   test("every marker-staged fixture dir holds the pinned bytes") {
     assert(sites.map(_._1).toSet == Pinned.keySet)
     staged
@@ -164,23 +143,21 @@ class StageSpec extends SparkSpec {
   }
 
   test("a dir holding only a superseded marker is restaged") {
-    val data = freshData()
-    val crawl = Files.createTempDirectory("graft_stagespec_crawl").toFile
-    try {
-      // mixed: a V1 staging's files (marker and id%3-routed leftovers)
-      // are wiped before the V2 files are written.
-      val mixed = new File(Stage.dir(data, "mixed"))
-      mixed.mkdirs()
-      Seq("_STAGED_MIXED_V1", "doc0.epub", "doc101.docx").foreach(n =>
-        Files.write(new File(mixed, n).toPath, "v1".getBytes(UTF_8)))
-      SourceQueries.queries("pipeline_mixed_extract")(spark, data)
-      assert(digest(mixed.getPath) == Pinned("mixed"))
+    val data = sf0001Copy("graft_stagespec_data")
+    val crawl = tempDir("graft_stagespec_crawl").toFile
+    // mixed: a V1 staging's files (marker and id%3-routed leftovers)
+    // are wiped before the V2 files are written.
+    val mixed = new File(Stage.dir(data, "mixed"))
+    mixed.mkdirs()
+    Seq("_STAGED_MIXED_V1", "doc0.epub", "doc101.docx").foreach(n =>
+      Files.write(new File(mixed, n).toPath, "v1".getBytes(UTF_8)))
+    SourceQueries.queries("pipeline_mixed_extract")(spark, data)
+    assert(digest(mixed.getPath) == Pinned("mixed"))
 
-      // crawl: the retired V1/V2 markers are removed on restage.
-      Seq("_STAGED_WARC_CRAWL_V1", "_STAGED_WARC_CRAWL_V2").foreach(n =>
-        assert(new File(crawl, n).createNewFile()))
-      WarcSource.stageCrawlFixture(spark, data, crawl.getPath)
-      assert(digest(crawl.getPath) == Pinned("warc_crawl"))
-    } finally Seq(crawl, new File(data), new File(Stage.root(data))).foreach(rm)
+    // crawl: the retired V1/V2 markers are removed on restage.
+    Seq("_STAGED_WARC_CRAWL_V1", "_STAGED_WARC_CRAWL_V2").foreach(n =>
+      assert(new File(crawl, n).createNewFile()))
+    WarcSource.stageCrawlFixture(spark, data, crawl.getPath)
+    assert(digest(crawl.getPath) == Pinned("warc_crawl"))
   }
 }

@@ -17,7 +17,7 @@ class TablesSpec extends SparkSpec {
     // Stage a minimal events.parquet whose ts is TIMESTAMP_NTZ (parquet
     // TIMESTAMP(MICROS) isAdjustedToUTC=false — one of the two physical
     // encodings driver fixtures have shipped).
-    val dir = java.nio.file.Files.createTempDirectory("graft_ntz_").toFile.getAbsolutePath
+    val dir = tempDir("graft_ntz_").toFile.getAbsolutePath
     spark.range(1).select(
       lit(7L).as("event_id"), lit(42L).as("user_id"), lit("click").as("event_type"),
       lit(java.sql.Timestamp.valueOf("2026-01-02 03:04:05.123456"))
@@ -92,14 +92,7 @@ class TablesSpec extends SparkSpec {
 
   test("evictDir drops and unpersists one session's frames for one dir only") {
     import graft.operators.{DedupQueries, IvfCodebook}
-    def fixtureCopy(): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_evict_")
-      for (t <- Seq("documents", "embeddings"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(sf("sf0.001"), s"$t.parquet"), d.resolve(s"$t.parquet"))
-      d.toString
-    }
-    val (dir, otherDir) = (fixtureCopy(), fixtureCopy())
+    val (dir, otherDir) = (sf0001Copy("graft_evict_"), sf0001Copy("graft_evict_"))
     val other = spark.newSession()
     Seq(spark, other).foreach(graft.functions.expressions.GraftFunctions.ensureRegistered)
     // One frame per owner: a fixture relation, the near-dup pair index (a

@@ -17,7 +17,7 @@ class IngestOpsSpec extends SparkSpec {
   /** Write a crafted documents.parquet under a temp dir, return the dir. */
   private def stageDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_spec_")
+    val dir = tempDir("graft_ingest_spec_")
       .toFile.getAbsolutePath
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
@@ -176,7 +176,7 @@ class IngestOpsSpec extends SparkSpec {
     // srcA term sum = |2·12−4·4| + |2·12−4·4| + |0−4·4| = 8+8+16 = 32
     //   → ppm = 32e6 / (4·12) = 666666
     // srcC = |0−16| + |0−16| + |4·12−16| = 16+16+32 = 64 → ppm 1333333
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_spec_")
+    val dir = tempDir("graft_drift_spec_")
       .toFile.getAbsolutePath
     val rows = Seq(
       (1L, "en", "srcA"), (2L, "en", "srcA"), (3L, "de", "srcA"), (4L, "de", "srcA"),

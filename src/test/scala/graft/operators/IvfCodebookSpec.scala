@@ -52,11 +52,8 @@ class IvfCodebookSpec extends SparkSpec {
     def asSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getSeq[Double](1).toList, r.getDouble(2))).toSet
     val first = asSet(IvfCodebook.centroids(spark, dir).collect())
-    val copy = java.nio.file.Files.createTempDirectory("ivf_refit_corpus")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"),
-      copy.resolve("embeddings.parquet"))
-    val second = asSet(IvfCodebook.centroids(spark, copy.toString).collect())
+    val copy = sf0001Copy("ivf_refit_corpus")
+    val second = asSet(IvfCodebook.centroids(spark, copy).collect())
     assert(first == second, "independent refit produced a different codebook")
   }
 
@@ -81,10 +78,7 @@ class IvfCodebookSpec extends SparkSpec {
     // exist yet: the per-path fit lock must serialize the writes, and
     // both callers must come back with the same codebook (no clobbered
     // stage, no FILE_NOT_EXIST).
-    val copy = java.nio.file.Files.createTempDirectory("ivf_race_corpus")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"),
-      copy.resolve("embeddings.parquet"))
+    val copy = sf0001Copy("ivf_race_corpus")
     def asSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getSeq[Double](1).toList, r.getDouble(2))).toSet
     val sessions = Seq(spark.newSession(), spark.newSession())
@@ -94,7 +88,7 @@ class IvfCodebookSpec extends SparkSpec {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       val fits = sessions.map(s => scala.concurrent.Future(
-        asSet(IvfCodebook.centroids(s, copy.toString).collect())))
+        asSet(IvfCodebook.centroids(s, copy).collect())))
       val Seq(a, b) = fits.map(f =>
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration("120s")))
       assert(a == b, "racing sessions saw different codebooks")

@@ -15,7 +15,7 @@ class PlannerOpsSpec extends SparkSpec {
 
   private def stageDocs(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_planner_spec_")
+    val dir = tempDir("graft_planner_spec_")
       .toFile.getAbsolutePath
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -206,7 +206,7 @@ class PlannerOpsSpec extends SparkSpec {
 
   test("dq_outliers flags exactly the rows beyond 3 MAD of a hand-built group") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_outlier_spec_")
+    val dir = tempDir("graft_outlier_spec_")
       .toFile.getAbsolutePath
     // Group A: cents {100, 200, 300, 400, 100000} → med 300.0 = 3.00;
     // adev {200, 100, 0, 100, 99700} → MAD 100.0; threshold 300 →
@@ -226,7 +226,7 @@ class PlannerOpsSpec extends SparkSpec {
 
   test("dq_outliers median interpolates exactly on even counts (.5 in cents)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_outlier_spec2_")
+    val dir = tempDir("graft_outlier_spec2_")
       .toFile.getAbsolutePath
     // Even count: cents {100, 200, 300, 400} → med 250.0, adev
     // {150, 50, 50, 150} → MAD 100.0 — both land on exact doubles, the

@@ -99,15 +99,9 @@ class PqSpec extends SparkSpec {
     assert(row.getBoolean(3))
   }
 
-  private lazy val freshCopy = {
-    // A new data dir ⇒ a new stage path, so the fit runs instead of
-    // reusing a stage an earlier run left behind.
-    val copy = java.nio.file.Files.createTempDirectory("pq_pin_corpus")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"),
-      copy.resolve("embeddings.parquet"))
-    copy.toString
-  }
+  // A new data dir ⇒ a new stage path, so the fit runs instead of
+  // reusing a stage an earlier run left behind.
+  private lazy val freshCopy = sf0001Copy("pq_pin_corpus")
 
   /** SHA-256 over (m, cid, dim, every component's bits) in (m, cid) order. */
   private def digest(codebook: org.apache.spark.sql.DataFrame): String = {

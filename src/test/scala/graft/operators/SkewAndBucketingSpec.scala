@@ -452,7 +452,7 @@ class SkewAndBucketingSpec extends SparkSpec {
   }
 
   test("hive-style partitioned layout prunes partitions at plan time") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toFile.getAbsolutePath + "/docs"
+    val out = tempDir("graft-part").toFile.getAbsolutePath + "/docs"
     Tables.documents(spark, dir).write.mode("overwrite").partitionBy("lang").parquet(out)
     val q = spark.read.parquet(out).filter(col("lang") === "en").select("doc_id")
     val plan = q.queryExecution.executedPlan.toString

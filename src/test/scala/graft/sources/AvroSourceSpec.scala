@@ -10,7 +10,7 @@ import graft.SparkSpec
 class AvroSourceSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-avro-$tag").toFile.getAbsolutePath
+    tempDir(s"graft-avro-$tag").toFile.getAbsolutePath
 
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),

@@ -77,56 +77,43 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("dirFingerprint tracks listing changes and ignores walk-order noise") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toFile
-    try {
-      val f1 = new java.io.File(dir, "a.parquet")
-      java.nio.file.Files.writeString(f1.toPath, "one")
-      val fp1 = FileSources.dirFingerprint(dir.getPath)
-      assert(fp1 == FileSources.dirFingerprint(dir.getPath), "deterministic")
-      val f2 = new java.io.File(dir, "b.parquet")
-      java.nio.file.Files.writeString(f2.toPath, "two")
-      val fp2 = FileSources.dirFingerprint(dir.getPath)
-      assert(fp1 != fp2, "a new file must change the fingerprint")
-      // Regenerate a.parquet with different length → changes again.
-      java.nio.file.Files.writeString(f1.toPath, "regenerated")
-      assert(FileSources.dirFingerprint(dir.getPath) != fp2)
-    } finally {
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-      dir.delete(): Unit
-    }
+    val dir = tempDir("graft_fp").toFile
+    val f1 = new java.io.File(dir, "a.parquet")
+    java.nio.file.Files.writeString(f1.toPath, "one")
+    val fp1 = FileSources.dirFingerprint(dir.getPath)
+    assert(fp1 == FileSources.dirFingerprint(dir.getPath), "deterministic")
+    val f2 = new java.io.File(dir, "b.parquet")
+    java.nio.file.Files.writeString(f2.toPath, "two")
+    val fp2 = FileSources.dirFingerprint(dir.getPath)
+    assert(fp1 != fp2, "a new file must change the fingerprint")
+    // Regenerate a.parquet with different length → changes again.
+    java.nio.file.Files.writeString(f1.toPath, "regenerated")
+    assert(FileSources.dirFingerprint(dir.getPath) != fp2)
   }
 
   test("tableFingerprint sees only its tables' files, not staging siblings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tfp").toFile
-    try {
-      java.nio.file.Files.writeString(
-        new java.io.File(dir, "documents.parquet").toPath, "docs-v1")
-      val fp1 = FileSources.tableFingerprint(dir.getPath, Seq("documents"))
-      assert(fp1 == FileSources.tableFingerprint(dir.getPath, Seq("documents")))
-      // Unrelated staging under the same source dir (the in-session
-      // fixture case) must NOT invalidate a maintained index.
-      val staged = new java.io.File(dir, "staged_fixture")
-      staged.mkdir()
-      java.nio.file.Files.writeString(
-        new java.io.File(staged, "shard00.tar").toPath, "bytes")
-      java.nio.file.Files.writeString(
-        new java.io.File(dir, "orders.parquet").toPath, "other-table")
-      assert(FileSources.tableFingerprint(dir.getPath, Seq("documents")) == fp1,
-        "sibling staging must not change a scoped fingerprint")
-      // Regenerating the covered table MUST change it.
-      java.nio.file.Files.writeString(
-        new java.io.File(dir, "documents.parquet").toPath, "docs-v2-longer")
-      val fp2 = FileSources.tableFingerprint(dir.getPath, Seq("documents"))
-      assert(fp2 != fp1)
-      // An absent covered table is a distinct state, not an empty hash.
-      val fpAbsent = FileSources.tableFingerprint(dir.getPath, Seq("embeddings"))
-      assert(fpAbsent != FileSources.tableFingerprint(dir.getPath, Seq("documents")))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
+    val dir = tempDir("graft_tfp").toFile
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "documents.parquet").toPath, "docs-v1")
+    val fp1 = FileSources.tableFingerprint(dir.getPath, Seq("documents"))
+    assert(fp1 == FileSources.tableFingerprint(dir.getPath, Seq("documents")))
+    // Unrelated staging under the same source dir (the in-session
+    // fixture case) must NOT invalidate a maintained index.
+    val staged = new java.io.File(dir, "staged_fixture")
+    staged.mkdir()
+    java.nio.file.Files.writeString(
+      new java.io.File(staged, "shard00.tar").toPath, "bytes")
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "orders.parquet").toPath, "other-table")
+    assert(FileSources.tableFingerprint(dir.getPath, Seq("documents")) == fp1,
+      "sibling staging must not change a scoped fingerprint")
+    // Regenerating the covered table MUST change it.
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "documents.parquet").toPath, "docs-v2-longer")
+    val fp2 = FileSources.tableFingerprint(dir.getPath, Seq("documents"))
+    assert(fp2 != fp1)
+    // An absent covered table is a distinct state, not an empty hash.
+    val fpAbsent = FileSources.tableFingerprint(dir.getPath, Seq("embeddings"))
+    assert(fpAbsent != FileSources.tableFingerprint(dir.getPath, Seq("documents")))
   }
 }

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions.col
 class FileSourcesSpec extends SparkSpec {
 
   private def tempDirWith(files: (String, String)*): String = {
-    val dir = Files.createTempDirectory("graft-src").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-src").toFile
     files.foreach { case (name, content) =>
       Files.writeString(new java.io.File(dir, name).toPath, content)
     }
@@ -27,7 +26,7 @@ class FileSourcesSpec extends SparkSpec {
     // resync), gzip cannot. Values are deterministic so the count pins
     // that the split loses and duplicates nothing.
     import org.apache.spark.sql.functions.{concat, lit}
-    val dir = Files.createTempDirectory("graft-bz2split").toFile.getAbsolutePath
+    val dir = tempDir("graft-bz2split").toFile.getAbsolutePath
     val df = spark.range(20000).select(col("id"),
       concat(lit("pad-the-line-so-blocks-exist-"), col("id")).as("s"))
     df.coalesce(1).write.mode("overwrite").option("compression", "bzip2").json(s"$dir/bz")
@@ -196,8 +195,7 @@ class FileSourcesSpec extends SparkSpec {
     // empty files.
     val rnd = new scala.util.Random(101326)
     for (round <- 1 to 4) {
-      val dir = Files.createTempDirectory("graft-raw").toFile
-      dir.deleteOnExit()
+      val dir = tempDir("graft-raw").toFile
       val contents = Vector.tabulate(rnd.nextInt(5) + 3) { i =>
         val body =
           if (i == 0) Array.emptyByteArray
@@ -302,7 +300,7 @@ class FileSourcesSpec extends SparkSpec {
 
   test("writeParquet partitions by requested columns") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-sink").toFile.getAbsolutePath + "/out"
+    val tmp = tempDir("graft-sink").toFile.getAbsolutePath + "/out"
     val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("v", "k")
     FileSources.writeParquet(df, tmp, Seq("k"))
     val back = spark.read.parquet(tmp)
@@ -314,7 +312,7 @@ class FileSourcesSpec extends SparkSpec {
     import spark.implicits._
     // A lake ingests v1 files, then the producer adds a column — readers
     // must see the union schema with nulls for old files.
-    val lake = Files.createTempDirectory("graft-evolve").toFile.getAbsolutePath
+    val lake = tempDir("graft-evolve").toFile.getAbsolutePath
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$lake/gen=1")
     Seq((2L, "b", 9.5)).toDF("id", "name", "score").write.parquet(s"$lake/gen=2")
     val merged = spark.read.option("mergeSchema", "true").parquet(lake)
@@ -326,7 +324,7 @@ class FileSourcesSpec extends SparkSpec {
 
   test("ORC round-trips with predicate pushdown reaching the scan") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-orc").toFile.getAbsolutePath + "/li"
+    val tmp = tempDir("graft-orc").toFile.getAbsolutePath + "/li"
     val rows = (1 to 100).map(i => (i.toLong, i % 7, s"name$i"))
     FileSources.writeOrc(rows.toDF("id", "grp", "name"), tmp)
     val back = FileSources.orc(spark, tmp)
@@ -341,7 +339,7 @@ class FileSourcesSpec extends SparkSpec {
 
   test("ORC zstd writes carry the requested codec and real stripes (reader metadata)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-orc-meta").toFile.getAbsolutePath + "/z"
+    val tmp = tempDir("graft-orc-meta").toFile.getAbsolutePath + "/z"
     (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .coalesce(1).write.mode("overwrite").option("compression", "zstd").orc(tmp)
     val orcFile = new java.io.File(tmp).listFiles()
@@ -367,7 +365,7 @@ class FileSourcesSpec extends SparkSpec {
 
   test("writeOrc partitions by requested columns (partition-pruned reads)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-orc-part").toFile.getAbsolutePath + "/out"
+    val tmp = tempDir("graft-orc-part").toFile.getAbsolutePath + "/out"
     val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("v", "k")
     FileSources.writeOrc(df, tmp, Seq("k"))
     assert(new java.io.File(tmp).listFiles().exists(_.getName.startsWith("k=")))

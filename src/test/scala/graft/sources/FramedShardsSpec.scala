@@ -8,11 +8,9 @@ import graft.SparkSpec
 class FramedShardsSpec extends SparkSpec {
 
   private def truncated(name: String, bytes: Array[Byte]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_framed_")
+    val dir = tempDir("graft_framed_")
     val p = dir.resolve(name)
-    dir.toFile.deleteOnExit()
     java.nio.file.Files.write(p, bytes.dropRight(7))
-    p.toFile.deleteOnExit()
     p.toString
   }
 

@@ -8,7 +8,7 @@ import graft.SparkSpec
 class NotebookSourceSpec extends SparkSpec {
 
   private def stageDir(ids: Seq[Long]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nb").toFile.getAbsolutePath
+    val dir = tempDir("graft-nb").toFile.getAbsolutePath
     ids.foreach { id =>
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/nb$id.ipynb"),
@@ -47,7 +47,7 @@ class NotebookSourceSpec extends SparkSpec {
   }
 
   test("a malformed notebook yields null cells, not garbage rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nb-bad").toFile.getAbsolutePath
+    val dir = tempDir("graft-nb-bad").toFile.getAbsolutePath
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/nb1.ipynb"),
       "{not json".getBytes("UTF-8"))
     // from_json returns null for unparsable input → posexplode emits

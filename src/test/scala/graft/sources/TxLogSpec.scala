@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
   * time-travel read's row-level identity with the pre-merge table. */
 class TxLogSpec extends SparkSpec {
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("txlog_spec_").toFile
-    d.deleteOnExit()
-    d.getPath
-  }
+  private def freshDir(): String = tempDir("txlog_spec_").toFile.getPath
 
   private def commitLines(dir: String, v: Long): Array[String] = {
     val f = new java.io.File(dir, f"_log/$v%020d.json")

@@ -74,7 +74,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("records() fails loudly on an unclean shard unless tolerateUnclean") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_spec_")
+    val dir = tempDir("graft_warc_spec_")
       .toFile.getAbsolutePath
     val good = s"$dir/good.warc"; val bad = s"$dir/bad.warc"
     java.nio.file.Files.write(java.nio.file.Paths.get(good),
@@ -141,7 +141,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("httpResponses extracts only response records that parse as HTTP") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_http_spec_")
+    val dir = tempDir("graft_warc_http_spec_")
       .toFile.getAbsolutePath
     val f = s"$dir/mix.warc"
     val bytes =
@@ -160,7 +160,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("the staged fixture round-trips: 24 clean shards, 156 responses, decoys intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_fix_")
+    val dir = tempDir("graft_warc_fix_")
       .toFile.getAbsolutePath
     val paths = WarcSource.stageFixture(dir)
     assert(paths.size == 24)
@@ -372,7 +372,7 @@ class WarcSourceSpec extends SparkSpec {
     // warc_ingest_live's claim at the record level (the oracle pins the
     // aggregate): the binaryFile FileStreamSource → parse → append-sink
     // pipeline yields exactly the batch reader's record set.
-    val dir = java.nio.file.Files.createTempDirectory("warc_live_spec").toString
+    val dir = tempDir("warc_live_spec").toString
     val paths = WarcSource.stageFixture(dir)
     def key(r: org.apache.spark.sql.Row) = r.getValuesMap[Any](
       Seq("file", "idx", "rec_type", "uri", "payload_len", "payload_md5"))
@@ -423,7 +423,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("httpTexts decodes the staged charset fixture per its model") {
-    val dir = java.nio.file.Files.createTempDirectory("warc_cs_spec").toString
+    val dir = tempDir("warc_cs_spec").toString
     val paths = WarcSource.stageCharsetFixture(dir)
     val rows = WarcSource.httpTexts(spark, paths).collect()
     assert(rows.length == 8 * 7)

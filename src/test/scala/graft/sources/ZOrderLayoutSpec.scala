@@ -46,7 +46,7 @@ class ZOrderLayoutSpec extends SparkSpec {
   test("z-ordered layout halves per-file dim ranges vs hash layout") {
     val li = graft.Tables.lineitem(spark, sf("sf0.001"))
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toFile.getAbsolutePath
+    val tmp = tempDir("graft-zorder").toFile.getAbsolutePath
 
     FileSources.writeZOrdered(li, s"$tmp/zordered", "l_partkey", "l_suppkey", nFiles = 16)
     li.repartition(16).write.parquet(s"$tmp/hashed")

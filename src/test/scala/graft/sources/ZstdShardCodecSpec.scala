@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class ZstdShardCodecSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-zst-$tag").toFile.getAbsolutePath
+    tempDir(s"graft-zst-$tag").toFile.getAbsolutePath
 
   private def listZst(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles.toSeq

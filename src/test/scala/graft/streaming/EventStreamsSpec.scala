@@ -230,7 +230,7 @@ class EventStreamsSpec extends SparkSpec {
   test("streaming parquet SINK: append-mode file sink + checkpoint round-trips") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-ssink").toFile.getAbsolutePath
+    val base = tempDir("graft-ssink").toFile.getAbsolutePath
     val mem = MemoryStream[Ev]
     mem.addData(Ev(1, ts(0), 1, "a", 1.0), Ev(2, ts(1), 2, "b", 2.0))
     val q = mem.toDF().select(col("event_id"), col("user_id"), col("event_type"))
@@ -252,7 +252,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("fromParquetDir streams staged fixture events with proper timestamps") {
     // Stage the fixture's single events.parquet FILE into a stream dir.
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf("sf0.001") + "/events.parquet"),
       dir.resolve("batch-0.parquet"))
@@ -460,7 +460,7 @@ class EventStreamsSpec extends SparkSpec {
     // LocalRelation after optimization.
     val df = spark.createDataFrame(rows, schema)
       .withColumn("ts", col("ts") + expr("INTERVAL 7200 SECONDS"))
-    val base = java.nio.file.Files.createTempDirectory("graft_wlp_").toFile
+    val base = tempDir("graft_wlp_").toFile
     val direct = s"${base.getAbsolutePath}/direct.parquet"
     assert(EventStreams.writeLocalParquet(df, direct),
       "sentinel frame did not take the jobless staging path")
@@ -485,7 +485,7 @@ class EventStreamsSpec extends SparkSpec {
     import spark.implicits._
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("event_type", StringType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stage_").toFile
+    val srcDir = tempDir("graft_stage_").toFile
     val files = 40
     val rowsPerFile = 1000
     val q = spark.readStream.schema(schema).parquet(srcDir.getAbsolutePath)

@@ -9,7 +9,8 @@ import scala.util.control.NonFatal
   * frame without a checkpoint shows up as a repeated subtree). Not a
   * declared query; never run by the driver.
   *
-  * Usage: sbt "runMain graft.PlanDump [sfDir] [outDir]"
+  * Usage: sbt "runMain graft.PlanDump [sfDir] [outDir]"; like Bench and
+  * Verify, SPARK_GRAFT_ONLY=q1,q2 limits the sweep to those queries.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,7 +20,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     var failed = 0
-    for ((n, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for ((n, fn) <- SparkEntry.selectedQueries.toSeq.sortBy(_._1)) {
       try {
         val f = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -427,8 +427,7 @@ object Stress {
                               maxStateRows: Long, removedRows: Long,
                               sinkRows: Long, maxBatchSec: Double, totalSec: Double)
     def streamStateRun(nUsers: Int): StreamStateRes = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory("graft_stress_stream_").toFile.getAbsolutePath
+      val base = java.nio.file.Files.createTempDirectory("graft_stress_stream_").toFile.getAbsolutePath
       val srcDir = s"$base/src"
       new java.io.File(srcDir).mkdirs()
       val sess = spark.newSession()
@@ -436,21 +435,15 @@ object Stress {
       val slabs = 6
       val perSlab = nUsers.toLong * 2
       val epoch0 = 1700000000L
-      def stageSlab(k: Int): Unit = {
-        val tmp = s"$base/f$k"
-        // Two events per user per slab, 0 and 90 s apart-ish (< 30-min
-        // gap ⇒ one session per user per slab; slabs 1 h apart ⇒ a NEW
-        // session each slab, the long-tail pattern).
-        sess.range(perSlab).select(
+      // Two events per user per slab, 0 and 90 s apart-ish (< 30-min
+      // gap ⇒ one session per user per slab; slabs 1 h apart ⇒ a NEW
+      // session each slab, the long-tail pattern).
+      def stageSlab(k: Int): Unit =
+        graft.streaming.EventStreams.stageOneFile(sess.range(perSlab).select(
             (col("id") % nUsers).as("user_id"),
             timestamp_seconds(lit(epoch0 + k * 3600L) + (col("id") % 2L) * 90L).as("ts"),
-            lit(1.0).as("value"))
-          .coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file under $tmp"))
-        Files.move(part.toPath, Paths.get(s"$srcDir/slab$k.parquet")): Unit
-      }
+            lit(1.0).as("value")),
+          s"$base/f$k", s"$srcDir/slab$k.parquet")
       stageSlab(0)
       val schema = sess.read.parquet(s"$srcDir/slab0.parquet").schema
       val stream = sess.readStream.schema(schema)

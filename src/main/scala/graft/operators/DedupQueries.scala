@@ -655,6 +655,16 @@ object DedupQueries extends QueryPack {
       .agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2 && col("nd") <= maxDocsPerGram)
       .select("gram")
+    // Known log noise, harmless: the lazy cut still plans `gg` through
+    // AQE, which runs the join's shuffle stages while the checkpoint RDD
+    // is built (on call, before any action). The map task of `eligible`'s
+    // second aggregate shuffle can complete after its stage's metric
+    // accumulators are gone from Spark's accumulator registry; the scheduler
+    // then logs "Failed to update accumulator … attempted to access
+    // non-existent accumulator" once per metric (9 at sf0.001), and goes
+    // on: the stage finishes, its map output is registered and read, and
+    // only that task's metric values are lost. Bisected in PlanDump at
+    // sf0.001; the query matches its oracle at every SF.
     val gg = g.join(eligible, "gram").localCheckpoint(eager = false)
     val pairs = gg.select(col("gram"), col("doc_id").as("da"), col("pos").as("pa"))
       .join(gg.select(col("gram"), col("doc_id").as("db"), col("pos").as("pb")), "gram")

@@ -164,7 +164,7 @@ object StreamingQueries extends QueryPack {
     // The flagship word count executed LIVE as an unbounded-aggregation
     // streaming run (complete-mode state snapshot through foreachBatch;
     // see EventStreams.runWordCountLive): the documents fixture arrives
-    // as three micro-batches, so the word state genuinely accumulates
+    // as two micro-batches, so the word state genuinely accumulates
     // across batches — gated against the SAME DuckDB oracle as the batch
     // `wordcount` twin. Closes the last spec-only streaming runtime.
     "stream_wordcount_live" -> ((s, d) =>

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.expressions.GraftFunctions
 import graft.sources.FileSources.rmTree
 
 /** Structured Streaming surface (SURVEY.md §2.2 I — ABSENT in the
@@ -150,8 +151,8 @@ object EventStreams {
     }
   }
 
-  /** Sink base dirs leaked by [[runLive]]: the returned frame reads its
-    * sink lazily, so the dir must outlive the call — but a bench run
+  /** Base dirs leaked by [[liveRun]]: a returned frame reads its sink
+    * lazily, so the dir must outlive the call — but a bench run
     * invokes each live gate up to ~4 times, so per-invocation leaks
     * accumulate (round-9 ADVICE). One JVM shutdown hook deletes every
     * tracked base; the footprint is bounded per-JVM, not per-invocation. */
@@ -206,22 +207,144 @@ object EventStreams {
     }
   }
 
-  /** Shared mechanics of the live streaming gates (`stream_*_live`): run
-    * `transform` as an ACTUAL Structured Streaming query over the
-    * `dataDir` events fixture and return the sink read back as a batch
-    * frame — so the gate's CORRECTNESS row is computed from a streaming
-    * sink, not the batch twin (round-8/9 VERDICTs).
+  /** Moves the one part file a Spark write left under `dir` to `dest`.
+    * Staged source files must be one file each so the file ↔ micro-batch
+    * mapping is exact: a second part file would mean the move drops rows,
+    * and none means an empty slice, so both fail loudly. */
+  private def movePart(dir: String, dest: String): Unit = {
+    val d = new java.io.File(dir)
+    val parts = if (d.isDirectory) d.listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      else Array.empty[java.io.File]
+    if (parts.length != 1)
+      sys.error(s"expected exactly one part file under $dir, found ${parts.length}")
+    java.nio.file.Files.move(parts.head.toPath, java.nio.file.Paths.get(dest)): Unit
+  }
+
+  /** Writes `df` as the single parquet file `dest`, through `tmp` when it
+    * needs a Spark write. The sentinel/doctored frames are 1-row
+    * LocalRelations, so the common case takes
+    * [[writeLocalParquet]]'s jobless path (~5 ms) instead of a full Spark
+    * write job + commit protocol (~0.12 s each, two per sentinel gate per
+    * run). */
+  private[graft] def stageOneFile(df: DataFrame, tmp: String, dest: String): Unit =
+    if (!writeLocalParquet(df, dest)) {
+      df.coalesce(1).write.parquet(tmp)
+      movePart(tmp, dest)
+      rmTree(tmp)
+    }
+
+  /** One live run: its child session and its dirs under `base` — the
+    * stream source `src`, the checkpoint `ckpt` and the sink `out`. Built
+    * only by [[liveRun]]. */
+  private final class LiveRun(val sess: SparkSession, val base: String) {
+    val srcDir = s"$base/src"
+    val ckpt = s"$base/ckpt"
+    val out = s"$base/out"
+
+    /** Stages `df` as the source file `name`.parquet (see [[stageOneFile]]). */
+    def stageOne(df: DataFrame, name: String): Unit =
+      stageOneFile(df, s"$base/$name.tmp", s"$srcDir/$name.parquet")
+
+    /** Stages `df` as `n` source files, slice k holding the rows with
+      * `key % n == k`, in ONE pass over `df`: partitionBy writes the slice
+      * subdirs, and repartitioning by the slice key puts each slice in one
+      * task, so each subdir holds a single part file. Slice k gets the
+      * forced mtime (k+1)·10⁶ ms: FileStreamSource orders files by mtime,
+      * so slice 0 is always micro-batch 0 (the txlog gate's version-0
+      * audit pins which half landed first). */
+    def stageSlices(df: DataFrame, key: String, n: Int): Unit = {
+      val tmp = s"$base/staged"
+      df.withColumn("b", (col(key) % n).cast("int"))
+        .repartition(n, col("b"))
+        .write.partitionBy("b").parquet(tmp)
+      for (k <- 0 until n) {
+        val dest = s"$srcDir/b$k.parquet"
+        movePart(s"$tmp/b=$k", dest)
+        new java.io.File(dest).setLastModified((k + 1) * 1000000L): Unit
+      }
+      rmTree(tmp)
+    }
+
+    /** The staged slices as a parquet stream, one file per micro-batch. */
+    def slices(schema: org.apache.spark.sql.types.StructType): DataFrame =
+      sess.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
+
+    /** `df` into the append-mode parquet sink at [[out]]. */
+    def appendSink(df: DataFrame): DataStreamWriter[Row] =
+      df.writeStream.format("parquet").option("path", out).outputMode("append")
+
+    /** Starts `writer` checkpointed at [[ckpt]] and drains everything
+      * staged; with a `followUp`, runs it (it may stage more files) and
+      * drains again. The query is stopped whatever happens. */
+    def drain(writer: DataStreamWriter[Row], followUp: Option[() => Unit] = None): Unit = {
+      val q = writer.option("checkpointLocation", ckpt).start()
+      try {
+        q.processAllAvailable()
+        followUp.foreach { f => f(); q.processAllAvailable() }
+      } finally q.stop()
+    }
+  }
+
+  /** The lifecycle every live gate runs through — the streaming twin of
+    * the reference job handle's start → wait → close. Per invocation (so
+    * concurrent sessions and repeated bench runs never collide) it makes
+    * a fresh `graft_<tag>_live_` temp base, tracked for cleanup at JVM
+    * exit, and ONE child session for `body`, which stages its source
+    * files and [[LiveRun.drain]]s its query. Once `body` returns, the
+    * source staging and the checkpoint are dead and are removed at once;
+    * only what the result reads (the sink) outlives the call.
     *
-    * Mechanics (all per-invocation temp dirs — concurrent sessions and
-    * repeated bench runs can never collide):
+    * The child session's confs (the parent's frames and confs are
+    * untouched; sessions share only the SparkContext):
+    *  - 2 shuffle partitions: every micro-batch pays a state-store
+    *    load+commit and a sink task per partition, and the fixtures'
+    *    per-key state fits one partition with room to spare. Results are
+    *    partition-count-independent (the gates' oracles check it); a
+    *    production job sizes this to its key cardinality instead.
+    *  - the parent's session time zone.
+    *  - no no-data micro-batches: each re-runs the full state-store
+    *    load+commit cycle on every stateful partition (~0.4–0.6 s
+    *    measured at 4 partitions) purely to re-evaluate a watermark, and
+    *    every gate's emissions ride data batches (see [[runLive]]). A
+    *    production job that relies on prompt watermark-only emission
+    *    keeps the default.
+    *  - 2 retained batches: the runs are short and throwaway, so keeping
+    *    the default 100 checkpoint generations only adds commit-log IO.
+    *  - the nanos-as-long parquet read (see [[fromParquetDir]]), plus the
+    *    caller's `sessionConfs`. */
+  private def liveRun[A](spark: SparkSession, tag: String,
+                         sessionConfs: Map[String, String] = Map.empty)(body: LiveRun => A): A = {
+    val base = java.nio.file.Files.createTempDirectory(s"graft_${tag}_live_")
+      .toFile.getAbsolutePath
+    trackForCleanup(base)
+    val sess = spark.newSession()
+    sess.conf.set("spark.sql.shuffle.partitions", "2")
+    sess.conf.set("spark.sql.session.timeZone",
+      spark.conf.get("spark.sql.session.timeZone", "UTC"))
+    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    sess.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    if (!sess.conf.getOption(nanosKey).contains("true")) sess.conf.set(nanosKey, "true")
+    sessionConfs.foreach { case (k, v) => sess.conf.set(k, v) }
+    val run = new LiveRun(sess, base)
+    new java.io.File(run.srcDir).mkdirs()
+    try body(run) finally Seq(run.srcDir, run.ckpt).foreach(rmTree)
+  }
+
+  /** Shared mechanics of the live EVENT gates: run `transform` as an
+    * ACTUAL Structured Streaming query over the `dataDir` events fixture
+    * and return the sink read back as a batch frame — so the gate's
+    * CORRECTNESS row is computed from a streaming sink, not the batch twin
+    * (round-8/9 VERDICTs). Runs on the [[liveRun]] scaffold:
     *  1. stage events.parquet (a straight file copy) — plus the optional
     *     `batch0Extra` sentinel as its own 1-row file — as micro-batch 0
-    *     of a file-stream source dir;
+    *     of the file-stream source dir;
     *  2. run readStream → `transform` → APPEND-mode parquet sink with a
     *     checkpoint (the real exactly-once pipeline);
     *  3. after batch 0 commits, stage the (≤ 1) `followups` frame as its
-    *     own source file and drain it with ONE `processAllAvailable`;
-    *  4. stop, return the sink (caller filters its tagged rows).
+    *     own source file and drain it;
+    *  4. return the sink (caller filters its tagged rows).
     *
     * Deterministic-flush contract for watermark-append transforms: the
     * FIRST sentinel (+2h) shares MICRO-BATCH 0 with the fixture via
@@ -236,105 +359,34 @@ object EventStreams {
     * real window/session end (≤ max(ts)+30min), so every real group is
     * emitted exactly once in that single follow-up batch. Two
     * micro-batches total, and NO reliance on no-data micro-batches —
-    * which is why the per-run session disables them outright
-    * (noDataMicroBatches.enabled=false): each no-data batch re-runs the
-    * full state-store load+commit cycle on every stateful partition
-    * (~0.4–0.6 s measured at 4 partitions) purely to re-evaluate a
-    * watermark this protocol never consults between data batches. A
-    * production job that relies on prompt watermark-only emission keeps
-    * the default; these gates' emissions all ride data batches. */
+    * which is why the scaffold's session can disable them outright. */
   private[graft] def runLive(spark: SparkSession, dataDir: String,
                              transform: (() => DataFrame) => DataFrame,
                              followups: LiveStage => Seq[DataFrame],
                              sessionConfs: Map[String, String] = Map.empty,
-                             batch0Extra: LiveStage => Option[DataFrame] = _ => None): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_live_").toFile.getAbsolutePath
-    trackForCleanup(base)
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-
-    // The run gets its OWN session: micro-batch cost scales with the
-    // state-store/sink task count (= shuffle partitions × #batches), and
-    // 4 partitions are plenty for the per-key state here while the parent
-    // session keeps its cluster-sized setting. Results are
-    // partition-count-independent; the parent session's frames and confs
-    // are untouched (sessions share only the SparkContext).
-    val sess = spark.newSession()
-    // 2 partitions, not 4: every micro-batch pays a state-store
-    // load+commit per stateful partition, and the fixtures' per-key state
-    // fits one partition with room to spare — halving the partition count
-    // halves the dominant fixed cost of each of the two batches. Results
-    // are partition-count-independent (asserted by the gates themselves);
-    // a production job sizes this to its key cardinality instead.
-    sess.conf.set("spark.sql.shuffle.partitions", "2")
-    sess.conf.set("spark.sql.session.timeZone",
-      spark.conf.get("spark.sql.session.timeZone", "UTC"))
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // These runs are two-batch and throwaway: retaining the default 100
-    // checkpoint generations only adds commit-log IO per batch.
-    sess.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!sess.conf.getOption(nanosKey).contains("true")) sess.conf.set(nanosKey, "true")
-    sessionConfs.foreach { case (k, v) => sess.conf.set(k, v) }
-    val stage = new LiveStage(sess, s"$dataDir/events.parquet")
-    /** Writes `df` as a single parquet file at `dest` (staged source files
-      * must be one file each so file↔micro-batch mapping is exact). The
-      * sentinel/doctored frames are 1-row driver-local relations, so the
-      * common case takes [[writeLocalParquet]]'s jobless path (~5 ms)
-      * instead of a full Spark write job + commit protocol (~0.12 s each,
-      * two per sentinel gate per run). */
-    def stageOneFile(df: DataFrame, tmp: String, dest: String): Unit = {
-      if (writeLocalParquet(df, dest)) return
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file under $tmp"))
-      Files.move(part.toPath, Paths.get(dest)): Unit
+                             batch0Extra: LiveStage => Option[DataFrame] = _ => None): DataFrame =
+    liveRun(spark, "events", sessionConfs) { run =>
+      val fixture = s"$dataDir/events.parquet"
+      val stage = new LiveStage(run.sess, fixture)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(fixture),
+        java.nio.file.Paths.get(s"${run.srcDir}/batch0.parquet"))
+      batch0Extra(stage).foreach(run.stageOne(_, "batch0b"))
+      // A FACTORY rather than a frame: a transform that needs several
+      // independent sources (a two-source stream-stream join) calls it once
+      // per side; single-source transforms call it once.
+      run.drain(run.appendSink(transform(() => fromParquetDir(run.sess, run.srcDir,
+          maxFilesPerTrigger = 2, knownSchema = Some(stage.schema)))), Some(() => {
+        // Batch 0 has folded every real event into state.
+        val fus = followups(stage)
+        // With maxFilesPerTrigger=2, two follow-up files could share one
+        // micro-batch and lose the between-batch watermark advance; every
+        // gate stages ≤ 1 today, so fail loudly rather than silently merge.
+        require(fus.size <= 1,
+          s"runLive stages at most one follow-up batch (got ${fus.size})")
+        fus.foreach(run.stageOne(_, "z0"))
+      }))
+      spark.read.parquet(run.out)
     }
-    // Stage batch 0: the straight fixture copy, plus — when the transform
-    // needs a watermark-advancing sentinel — the sentinel as its OWN
-    // 1-row file; maxFilesPerTrigger=2 below guarantees the two initial
-    // files share the first micro-batch (watermark semantics are
-    // per-BATCH, not per-file, so the co-batched sentinel cannot
-    // late-drop the real events).
-    Files.copy(Paths.get(s"$dataDir/events.parquet"), Paths.get(s"$srcDir/batch0.parquet"))
-    batch0Extra(stage).foreach { extra =>
-      stageOneFile(extra, s"$base/b0", s"$srcDir/batch0b.parquet")
-      rmTree(s"$base/b0")
-    }
-
-    // A FACTORY rather than a frame: a transform that needs several
-    // independent sources (a two-source stream-stream join) calls it once
-    // per side; single-source transforms call it once.
-    val q = transform(() => fromParquetDir(sess, srcDir,
-        maxFilesPerTrigger = 2, knownSchema = Some(stage.schema)))
-      .writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .start()
-    val fuDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      q.processAllAvailable() // batch 0: every real event folded into state
-      val fus = followups(stage)
-      // With maxFilesPerTrigger=2, two follow-up files could share one
-      // micro-batch and lose the between-batch watermark advance; every
-      // gate stages ≤ 1 today, so fail loudly rather than silently merge.
-      require(fus.size <= 1,
-        s"runLive stages at most one follow-up batch (got ${fus.size})")
-      fus.zipWithIndex.foreach { case (df, i) =>
-        fuDirs += s"$base/fu$i"
-        stageOneFile(df, s"$base/fu$i", s"$srcDir/z$i.parquet")
-      }
-      q.processAllAvailable() // the follow-up micro-batch, if staged
-    } finally q.stop()
-    // The source staging and checkpoint are dead once the run stopped;
-    // only the sink outlives this call (the returned frame reads it
-    // lazily) — reclaimed by the shutdown hook.
-    (Seq(srcDir, s"$base/ckpt") ++ fuDirs).foreach(rmTree)
-    spark.read.parquet(s"$base/out")
-  }
 
   /** [[windowedCounts]] live — the execution behind `stream_windowed_live`:
     * sentinels are tagged by event_type (the output carries it) and their
@@ -552,61 +604,24 @@ object EventStreams {
     * when the dictionary fits executor memory (word counts, label
     * rollups); an unbounded key space would pair update mode with an
     * idempotent sink merge instead (the dedup gates pin that shape). */
-  def runWordCountLive(spark: SparkSession, dataDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_live_wc_").toFile.getAbsolutePath
-    trackForCleanup(base)
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-    val sess = spark.newSession()
-    // 2 partitions, the runLive rationale: per-batch state-store/sink
-    // task count is the fixed cost, per-key state is tiny (r22 Lab:
-    // 4 -> 2 measured ~5% on each of the three 4-partition gates).
-    sess.conf.set("spark.sql.shuffle.partitions", "2")
-    val docs = sess.read.parquet(s"$dataDir/documents.parquet").select("doc_id", "text")
-    // Two deterministic slices → two micro-batches. Any split works —
-    // the aggregate is order-independent — but >1 batch is the point: it
-    // forces real cross-batch state accumulation. ONE pass stages both
-    // (partitionBy writes slice subdirs; repartition by the slice key
-    // makes each subdir a single part file), instead of per-slice
-    // fixture scans.
-    val tmp = s"$base/staged"
-    docs.withColumn("b", (col("doc_id") % 2).cast("int"))
-      .repartition(2, col("b"))
-      .write.partitionBy("b").parquet(tmp)
-    for (k <- 0 until 2) {
-      val dir = new java.io.File(s"$tmp/b=$k")
-      // A slice with no rows writes no subdir — fine, the remaining
-      // slices still give >1 micro-batch on every fixture.
-      if (dir.isDirectory) {
-        val parts = dir.listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        // repartition(2, b) co-locates each b in ONE task, so exactly one
-        // part file per subdir; more would mean the move below drops rows.
-        if (parts.length != 1)
-          sys.error(s"expected exactly one part file under $tmp/b=$k, found ${parts.length}")
-        Files.move(parts.head.toPath, Paths.get(s"$srcDir/b$k.parquet"))
-      }
+  def runWordCountLive(spark: SparkSession, dataDir: String): DataFrame =
+    liveRun(spark, "wc") { run =>
+      val docs = run.sess.read.parquet(s"$dataDir/documents.parquet").select("doc_id", "text")
+      // Any split works — the aggregate is order-independent — but >1
+      // batch is the point: it forces real cross-batch state accumulation.
+      run.stageSlices(docs, "doc_id", 2)
+      run.drain(streamingWordCount(run.slices(docs.schema))
+        .writeStream
+        .outputMode("complete")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("overwrite").parquet(run.out)
+        })
+      spark.read.parquet(run.out)
     }
-    rmTree(tmp)
-    val stream = sess.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = streamingWordCount(stream)
-      .writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(s"$base/out")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Seq(srcDir, s"$base/ckpt").foreach(rmTree)
-    spark.read.parquet(s"$base/out")
-  }
 
   /** Streaming count-min sketch maintenance, LIVE — the execution behind
     * `stream_cms_live`: the events fixture arrives as three micro-batches
-    * (file-stream source, maxFilesPerTrigger=1); each batch builds its
+    * (file-stream source, see [[sketchLive]]); each batch builds its
     * OWN CMS artifact over the batch's user_ids (graft_cms_agg inside
     * foreachBatch) and appends it as one ~16 KB parquet row — the
     * per-window sketch a production frequency monitor persists. After
@@ -626,62 +641,15 @@ object EventStreams {
     * trigger and the merge reads only those rows — frequency tracking
     * over an unbounded key space with O(batches · 16 KB) total state. */
   def runCmsLive(spark: SparkSession, dataDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import graft.functions.expressions.GraftFunctions
-    val base = Files.createTempDirectory("graft_live_cms_").toFile.getAbsolutePath
-    trackForCleanup(base)
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "2")
-    GraftFunctions.ensureRegistered(sess)
-    val ev = sess.read.parquet(s"$dataDir/events.parquet")
-      .select("event_id", "user_id")
-    // Three deterministic slices → three micro-batches (same staging
-    // discipline as runWordCountLive).
-    val tmp = s"$base/staged"
-    ev.withColumn("b", (col("event_id") % 3).cast("int"))
-      .repartition(3, col("b"))
-      .write.partitionBy("b").parquet(tmp)
-    for (k <- 0 until 3) {
-      val dir = new java.io.File(s"$tmp/b=$k")
-      if (dir.isDirectory) {
-        val parts = dir.listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        if (parts.length != 1)
-          sys.error(s"expected exactly one part file under $tmp/b=$k, found ${parts.length}")
-        Files.move(parts.head.toPath, Paths.get(s"$srcDir/b$k.parquet"))
-      }
-    }
-    rmTree(tmp)
-    val partsDir = s"$base/parts"
-    val stream = sess.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // The per-trigger sketch build: one artifact row per non-empty
-        // batch. (ensureRegistered is idempotent; the micro-batch frame
-        // may live in a cloned session.)
-        GraftFunctions.ensureRegistered(batch.sparkSession)
-        if (!batch.isEmpty)
-          batch.agg(GraftFunctions.cmsAggCol(col("user_id").cast("string")).as("cms"))
-            .withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(partsDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Seq(srcDir, s"$base/ckpt").foreach(rmTree)
-    val merged = sess.read.parquet(partsDir)
-      .agg(GraftFunctions.cmsMergeCol(col("cms")).as("cms"),
-        count(lit(1)).as("n_batches"))
-    val exact = sess.read.parquet(s"$dataDir/events.parquet")
+    val merged = sketchLive(spark, dataDir, "cms", "user_id",
+      GraftFunctions.cmsAggCol, GraftFunctions.cmsMergeCol)
+    val exact = merged.sparkSession.read.parquet(s"$dataDir/events.parquet")
       .select(col("user_id").cast("long").as("k"))
       .groupBy("k").agg(count(lit(1)).as("exact_cnt"))
     exact.orderBy(col("exact_cnt").desc, col("k")).limit(20)
       .crossJoin(broadcast(merged))
       .withColumn("est_cnt",
-        GraftFunctions.cmsEstimateCol(col("cms"), col("k").cast("string")))
+        GraftFunctions.cmsEstimateCol(col("sketch"), col("k").cast("string")))
       .select(col("k"), col("exact_cnt"), col("est_cnt"),
         (col("est_cnt") >= col("exact_cnt")).as("no_underestimate"),
         col("n_batches"))
@@ -704,56 +672,44 @@ object EventStreams {
     * merge slip changes the k-th minimum and hash-fails. Scale: O(k)
     * state per trigger, O(batches · 2 KB) persisted. */
   def runKmvLive(spark: SparkSession, dataDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import graft.functions.expressions.GraftFunctions
-    val base = Files.createTempDirectory("graft_live_kmv_").toFile.getAbsolutePath
-    trackForCleanup(base)
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "2")
-    GraftFunctions.ensureRegistered(sess)
-    val ev = sess.read.parquet(s"$dataDir/events.parquet").select("event_id")
-    val tmp = s"$base/staged"
-    ev.withColumn("b", (col("event_id") % 3).cast("int"))
-      .repartition(3, col("b"))
-      .write.partitionBy("b").parquet(tmp)
-    for (k <- 0 until 3) {
-      val dir = new java.io.File(s"$tmp/b=$k")
-      if (dir.isDirectory) {
-        val parts = dir.listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        if (parts.length != 1)
-          sys.error(s"expected exactly one part file under $tmp/b=$k, found ${parts.length}")
-        Files.move(parts.head.toPath, Paths.get(s"$srcDir/b$k.parquet"))
-      }
-    }
-    rmTree(tmp)
-    val partsDir = s"$base/parts"
-    val stream = sess.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        GraftFunctions.ensureRegistered(batch.sparkSession)
-        if (!batch.isEmpty)
-          batch.agg(GraftFunctions.kmvAggCol(col("event_id").cast("string")).as("kmv"))
-            .withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(partsDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Seq(srcDir, s"$base/ckpt").foreach(rmTree)
-    val merged = sess.read.parquet(partsDir)
-      .agg(GraftFunctions.kmvMergeCol(col("kmv")).as("kmv"),
-        count(lit(1)).as("n_batches"))
-    val exact = sess.read.parquet(s"$dataDir/events.parquet")
+    val merged = sketchLive(spark, dataDir, "kmv", "event_id",
+      GraftFunctions.kmvAggCol, GraftFunctions.kmvMergeCol)
+    val exact = merged.sparkSession.read.parquet(s"$dataDir/events.parquet")
       .agg(countDistinct(col("event_id")).as("n_exact"))
     exact.crossJoin(broadcast(merged))
       .select(col("n_exact"),
-        GraftFunctions.kmvEstimateCol(col("kmv")).as("kmv_est"),
+        GraftFunctions.kmvEstimateCol(col("sketch")).as("kmv_est"),
         col("n_batches"))
   }
+
+  /** The sketch-per-batch runner behind [[runCmsLive]] and [[runKmvLive]]:
+    * the events fixture's `key` column arrives as three micro-batches
+    * (event_id % 3 slices); each batch builds its OWN artifact with
+    * `build` over the key as a string and appends it as one parquet row.
+    * Returns the 1-row `merge` of those artifacts (`sketch`) with the
+    * number of batches that built one (`n_batches`), in the run's
+    * session, where the graft functions are registered. */
+  private def sketchLive(spark: SparkSession, dataDir: String, tag: String, key: String,
+                         build: Column => Column, merge: Column => Column): DataFrame =
+    liveRun(spark, tag) { run =>
+      GraftFunctions.ensureRegistered(run.sess)
+      val ev = run.sess.read.parquet(s"$dataDir/events.parquet")
+        .select(Seq("event_id", key).distinct.map(col): _*)
+      run.stageSlices(ev, "event_id", 3)
+      val partsDir = s"${run.base}/parts"
+      run.drain(run.slices(ev.schema).writeStream
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          // ensureRegistered is idempotent; the micro-batch frame may
+          // live in a cloned session.
+          GraftFunctions.ensureRegistered(batch.sparkSession)
+          if (!batch.isEmpty)
+            batch.agg(build(col(key).cast("string")).as("sketch"))
+              .withColumn("batch_id", lit(bid))
+              .write.mode("append").parquet(partsDir)
+        })
+      run.sess.read.parquet(partsDir)
+        .agg(merge(col("sketch")).as("sketch"), count(lit(1)).as("n_batches"))
+    }
 
   /** Custom state machine via flatMapGroupsWithState (≡ §2.2 J's
     * UDAF-shaped reduce, but incremental): per-user running count +
@@ -947,72 +903,55 @@ object EventStreams {
     * Structured Streaming needs a concrete Encoder). */
   case class AvroDocRow(doc_id: Long, lang: String, source: String, n_chars: Long)
 
-  /** Shared scaffold for the live SHARD-arrival gates: stage the shard
-    * files into a fresh stream source dir (COPIES, ordinal-prefixed —
-    * arbitrary caller paths may share a basename across directories,
+  /** The live SHARD-arrival runner on the [[liveRun]] scaffold: stage
+    * the shard files into the stream source dir (COPIES, ordinal-prefixed
+    * — arbitrary caller paths may share a basename across directories,
     * and Hadoop-scheme path strings are accepted), run a binaryFile
     * FileStreamSource → per-shard `decode` → append parquet sink across
     * `filesPerTrigger`-file micro-batches, return the sink as a batch
-    * frame. Same per-invocation temp-dir/session discipline as
-    * [[runLive]] (own 2-partition session, tracked sink dir,
-    * checkpoint+staging reclaimed eagerly). binaryFile's schema is
-    * fixed by the format, but FileStreamSource still demands it
-    * explicitly (no streaming-time inference). */
+    * frame. binaryFile's schema is fixed by the format, but
+    * FileStreamSource still demands it explicitly (no streaming-time
+    * inference). */
   private def shardStreamLive[T <: Product : scala.reflect.runtime.universe.TypeTag](
       spark: SparkSession, shardPaths: Seq[String], filesPerTrigger: Int,
-      tag: String)(decode: (String, Array[Byte]) => Seq[T]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory(s"graft_${tag}_live_").toFile.getAbsolutePath
-    trackForCleanup(base)
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-    shardPaths.zipWithIndex.foreach { case (p, i) =>
-      // Hadoop Path, not raw URI parsing: a plain local path with a
-      // colon in a segment, or a file: URI with an encoded char, trips
-      // java.net.URI; Path normalizes both and only strips a scheme
-      // when one is actually present (round-18 ADVICE).
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val local =
-        if (hp.toUri.getScheme == null) p else hp.toUri.getPath
-      val name = hp.getName
-      Files.copy(Paths.get(local), Paths.get(f"$srcDir/$i%05d~$name")): Unit
-    }
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "2")
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    sess.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    import sess.implicits._
-    implicit val enc: org.apache.spark.sql.Encoder[T] =
-      org.apache.spark.sql.Encoders.product[T]
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
-    val q = sess.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .load(srcDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val staged = path.substring(path.lastIndexOf('/') + 1)
-        decode(staged.substring(staged.indexOf('~') + 1), bytes) // drop ordinal
+      tag: String)(decode: (String, Array[Byte]) => Seq[T]): DataFrame =
+    liveRun(spark, tag) { run =>
+      shardPaths.zipWithIndex.foreach { case (p, i) =>
+        // Hadoop Path, not raw URI parsing: a plain local path with a
+        // colon in a segment, or a file: URI with an encoded char, trips
+        // java.net.URI; Path normalizes both and only strips a scheme
+        // when one is actually present (round-18 ADVICE).
+        val hp = new org.apache.hadoop.fs.Path(p)
+        val local =
+          if (hp.toUri.getScheme == null) p else hp.toUri.getPath
+        java.nio.file.Files.copy(java.nio.file.Paths.get(local),
+          java.nio.file.Paths.get(f"${run.srcDir}/$i%05d~${hp.getName}")): Unit
       }
-      .toDF()
-      .writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Seq(srcDir, s"$base/ckpt").foreach(rmTree)
-    spark.read.parquet(s"$base/out")
-  }
+      import run.sess.implicits._
+      implicit val enc: org.apache.spark.sql.Encoder[T] =
+        org.apache.spark.sql.Encoders.product[T]
+      val binarySchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("path",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("modificationTime",
+          org.apache.spark.sql.types.TimestampType),
+        org.apache.spark.sql.types.StructField("length",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("content",
+          org.apache.spark.sql.types.BinaryType)))
+      run.drain(run.appendSink(run.sess.readStream.format("binaryFile")
+        .schema(binarySchema)
+        .option("maxFilesPerTrigger", filesPerTrigger)
+        .load(run.srcDir)
+        .select(col("path"), col("content"))
+        .as[(String, Array[Byte])]
+        .flatMap { case (path, bytes) =>
+          val staged = path.substring(path.lastIndexOf('/') + 1)
+          decode(staged.substring(staged.indexOf('~') + 1), bytes) // drop ordinal
+        }
+        .toDF()))
+      spark.read.parquet(run.out)
+    }
 
   /** stream_txlog_live: the streaming-LAKEHOUSE sink — events arriving
     * as a stream land in a [[graft.sources.TxLog]] transaction-log
@@ -1021,80 +960,33 @@ object EventStreams {
     * (what Delta's streaming sink does): on failure-replay of a batch,
     * the version is already committed and the write SKIPS — TxLog's
     * atomic hard-link commit makes the check race-free, so the table can
-    * never hold a batch's rows twice. Two real micro-batches
-    * (maxFilesPerTrigger=1 over two staged files with forced mtime
-    * order); returns the table dir for log-replayed reads — the gate
-    * time-travels to version 0 (batch 0 alone) AND reads the latest
-    * snapshot, auditing both against the batch model. */
-  def runTxLogSinkLive(spark: SparkSession, dataDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_txlog_live_").toFile.getAbsolutePath
-    trackForCleanup(base)
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "2")
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    sess.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!sess.conf.getOption(nanosKey).contains("true")) sess.conf.set(nanosKey, "true")
-    val ev = graft.Tables.events(sess, dataDir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    // ONE pass stages both halves (the runWordCountLive/runCmsLive
-    // staging discipline): partitionBy writes the slice subdirs and the
-    // repartition by slice key makes each subdir a single part file —
-    // previously two coalesce(1) write jobs each re-scanned the fixture.
-    val tmp = s"$base/staged"
-    ev.withColumn("b", (col("event_id") % 2).cast("int"))
-      .repartition(2, col("b"))
-      .write.partitionBy("b").parquet(tmp)
-    for (k <- 0 until 2) {
-      val dir = new java.io.File(s"$tmp/b=$k")
-      val parts = if (dir.isDirectory) dir.listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        else Array.empty[java.io.File]
-      if (parts.length != 1)
-        sys.error(s"expected exactly one part file under $tmp/b=$k, found ${parts.length}")
-      Files.move(parts.head.toPath, Paths.get(s"$srcDir/batch$k.parquet")): Unit
-      // Forced mtime order: FileStreamSource batches by timestamp, and
-      // the gate's version-0 audit pins WHICH half landed first.
-      new java.io.File(s"$srcDir/batch$k.parquet").setLastModified((k + 1) * 1000000L): Unit
+    * never hold a batch's rows twice. Two real micro-batches (two staged
+    * slices, even event_ids first); returns the table dir for
+    * log-replayed reads — the gate time-travels to version 0 (batch 0
+    * alone) AND reads the latest snapshot, auditing both against the
+    * batch model. */
+  def runTxLogSinkLive(spark: SparkSession, dataDir: String): String =
+    liveRun(spark, "txlog") { run =>
+      val ev = graft.Tables.events(run.sess, dataDir)
+        .select(col("event_id"), col("user_id"), col("value"))
+      run.stageSlices(ev, "event_id", 2)
+      val tableDir = s"${run.base}/table"
+      run.drain(run.slices(ev.schema).writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          // Idempotent replay: a version file appears only via an atomic
+          // link(2) publication, so existence == that batch is fully
+          // committed — skip, exactly once. (A concurrent loser of the
+          // rename race would throw out of commit(), failing the query
+          // loudly rather than double-landing rows; single-writer here,
+          // so the check suffices.)
+          if (!new java.io.File(tableDir, f"_log/$batchId%020d.json").exists()) {
+            // commitData = writer-unique data dir + atomic commit with the
+            // batch's schema recorded in the trailer (the schema contract).
+            graft.sources.TxLog.commitData(df, tableDir, batchId, "append"): Unit
+          }
+        })
+      tableDir
     }
-    rmTree(tmp)
-    val tableDir = s"$base/table"
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-    // Not fromParquetDir: that helper normalizes a `ts` column the
-    // events fixture carries; this projection deliberately has none.
-    val q = sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // Idempotent replay: a version file appears only via an atomic
-        // link(2) publication,
-        // so existence == that batch is fully committed — skip, exactly
-        // once. (A concurrent loser of the rename race would throw out
-        // of commit(), failing the query loudly rather than double-
-        // landing rows; single-writer here, so the check suffices.)
-        if (!new java.io.File(tableDir, f"_log/$batchId%020d.json").exists()) {
-          // commitData = writer-unique data dir + atomic commit with the
-          // batch's schema recorded in the trailer (the schema contract).
-          graft.sources.TxLog.commitData(df, tableDir, batchId, "append"): Unit
-        }
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Seq(srcDir, s"$base/ckpt").foreach(rmTree)
-    tableDir
-  }
 
   /** avro_ingest_live: OCF shards arriving as a STREAM — binaryFile
     * FileStreamSource → per-shard DataFileReader parse → append parquet
@@ -1145,10 +1037,7 @@ object EventStreams {
     * At 100 TB this is the shape that matters: shards arrive
     * continuously, each is one task in some micro-batch, and the sink's
     * commit log makes re-processing after failure exactly-once.
-    *
-    * Same per-invocation temp-dir/session discipline as [[runLive]]
-    * (own 2-partition session, tracked sink dir, checkpoint+staging
-    * reclaimed eagerly). */
+    * Runs through [[shardStreamLive]] on the [[liveRun]] scaffold. */
   def warcRecordsLive(spark: SparkSession, shardPaths: Seq[String],
                       filesPerTrigger: Int = 8): DataFrame =
     shardStreamLive[graft.sources.WarcSource.WarcRecord](

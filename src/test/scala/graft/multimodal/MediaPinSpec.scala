@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
   * every staged table, so each decoder also meets every other format. */
 class MediaPinSpec extends SparkSpec {
   import MediaPipeline._
+  import MediaPinSpec.digest
 
   /** Frame name → SHA-256 of its output (see [[digest]]). */
   private val Pinned: Map[String, String] = Map(
@@ -158,22 +159,6 @@ class MediaPinSpec extends SparkSpec {
     "decodedPhashOf" -> (() => decodedPhashOf(spark, allStaged)),
     "mm_audio_energy" -> (() => MultimodalQueries.queries("mm_audio_energy")(spark, dir)))
 
-  private def sha256(bytes: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
-      .map(b => f"${b & 0xff}%02x").mkString
-
-  private def cell(v: Any): String = v match {
-    case b: Array[Byte] => s"bin:${sha256(b)}"
-    case null => "null"
-    case x => x.toString
-  }
-
-  /** SHA-256 over the schema and the sorted rendered rows of `df`. */
-  private def digest(df: DataFrame): String = {
-    val rows = df.collect().map((r: Row) => r.toSeq.map(cell).mkString("|")).sorted
-    sha256((df.schema.simpleString +: rows).mkString("\n").getBytes(UTF_8))
-  }
-
   test("every public stager and decode pass is pinned") {
     assert((stagers ++ passes).map(_._1).toSet == Pinned.keySet)
   }
@@ -185,5 +170,23 @@ class MediaPinSpec extends SparkSpec {
       val d = digest(df)
       assert(Pinned.get(name).contains(d), s"$name -> \"$d\"")
     }
+  }
+}
+
+object MediaPinSpec {
+  private def sha256(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  private def cell(v: Any): String = v match {
+    case b: Array[Byte] => s"bin:${sha256(b)}"
+    case null => "null"
+    case x => x.toString
+  }
+
+  /** SHA-256 over the schema and the sorted rendered rows of `df`. */
+  def digest(df: DataFrame): String = {
+    val rows = df.collect().map((r: Row) => r.toSeq.map(cell).mkString("|")).sorted
+    sha256((df.schema.simpleString +: rows).mkString("\n").getBytes(UTF_8))
   }
 }

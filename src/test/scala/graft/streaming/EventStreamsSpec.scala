@@ -476,6 +476,18 @@ class EventStreamsSpec extends SparkSpec {
       spark.range(5).toDF("event_id"), s"${base.getAbsolutePath}/nope.parquet"))
   }
 
+  test("stageOneFile stages a non-local frame as one file through a Spark write") {
+    // The fallback path (Stress's slabs take it): no LocalRelation, so a
+    // coalesced Spark write whose single part file is moved into place.
+    val base = tempDir("graft_stage_one_").toFile.getAbsolutePath
+    val df = spark.range(1000).selectExpr("id AS event_id", "id % 7 AS user_id")
+    EventStreams.stageOneFile(df, s"$base/tmp", s"$base/one.parquet")
+    assert(!new java.io.File(s"$base/tmp").exists(), "staging dir left behind")
+    val back = spark.read.parquet(s"$base/one.parquet")
+    assert(back.inputFiles.length == 1)
+    assert(back.orderBy("event_id").collect().toSeq == df.orderBy("event_id").collect().toSeq)
+  }
+
   test("writeLocalParquet stages whole files under a running ProcessingTime(0) stream") {
     // A live gate stages its follow-up file into the dir its stream is
     // polling. Each file must appear whole (a micro-batch that lists a

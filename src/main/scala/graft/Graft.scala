@@ -170,22 +170,24 @@ object Graft {
     functions.expressions.GraftFunctions.ensureRegistered(spark)
     // Collision-proof artifact name: the probe frame may legitimately
     // carry its own "bloom" column (and drop() would silently eat it).
-    // Resolve the artifact by NAME first — a positional head() would
-    // silently probe the wrong column of an augmented artifact frame.
-    val artCol =
-      if (bloom.columns.contains("bloom")) "bloom"
-      else {
-        require(bloom.columns.length == 1,
-          s"bloom frame needs a 'bloom' column or exactly one column, got ${bloom.columns.mkString(", ")}")
-        bloom.columns.head
-      }
     val art = bloom.agg(functions.expressions.GraftFunctions
-      .bloomMergeCol(col(artCol)).as("__graft_bloom"))
+      .bloomMergeCol(col(artifactColumn(bloom, "bloom"))).as("__graft_bloom"))
     df.crossJoin(broadcast(art))
       .filter(functions.expressions.GraftFunctions
         .bloomContainsCol(col("__graft_bloom"), col(keyCol).cast("string")))
       .drop("__graft_bloom")
   }
+
+  /** The artifact column of a sketch frame: the column named `name`,
+    * else the frame's only column. By name first: a positional read would
+    * silently take the wrong column of an augmented artifact frame. */
+  private def artifactColumn(frame: DataFrame, name: String): String =
+    if (frame.columns.contains(name)) name
+    else {
+      require(frame.columns.length == 1,
+        s"$name frame needs a '$name' column or exactly one column, got ${frame.columns.mkString(", ")}")
+      frame.columns.head
+    }
 
   /** CDC latest-record compaction over ANY change log: the newest row
     * per `keyCol` by `orderCol`, via max(struct(...)) so partial
@@ -696,15 +698,8 @@ object Graft {
   def cmsEstimate(spark: SparkSession, df: DataFrame, keyCol: String,
                   cms: DataFrame): DataFrame = {
     functions.expressions.GraftFunctions.ensureRegistered(spark)
-    val artCol =
-      if (cms.columns.contains("cms")) "cms"
-      else {
-        require(cms.columns.length == 1,
-          s"cms frame needs a 'cms' column or exactly one column, got ${cms.columns.mkString(", ")}")
-        cms.columns.head
-      }
     val art = cms.agg(functions.expressions.GraftFunctions
-      .cmsMergeCol(col(artCol)).as("__graft_cms"))
+      .cmsMergeCol(col(artifactColumn(cms, "cms"))).as("__graft_cms"))
     df.crossJoin(broadcast(art))
       .withColumn("est_cnt", functions.expressions.GraftFunctions
         .cmsEstimateCol(col("__graft_cms"), col(keyCol).cast("string")))
@@ -727,15 +722,8 @@ object Graft {
     * then estimated. Returns a 1-row (est: long) frame. */
   def kmvUnion(spark: SparkSession, sketches: DataFrame): DataFrame = {
     functions.expressions.GraftFunctions.ensureRegistered(spark)
-    val artCol =
-      if (sketches.columns.contains("kmv")) "kmv"
-      else {
-        require(sketches.columns.length == 1,
-          s"kmv frame needs a 'kmv' column or exactly one column, got ${sketches.columns.mkString(", ")}")
-        sketches.columns.head
-      }
     sketches
-      .agg(functions.expressions.GraftFunctions.kmvMergeCol(col(artCol)).as("kmv"))
+      .agg(functions.expressions.GraftFunctions.kmvMergeCol(col(artifactColumn(sketches, "kmv"))).as("kmv"))
       .select(functions.expressions.GraftFunctions.kmvEstimateCol(col("kmv")).as("est"))
   }
 
@@ -744,8 +732,8 @@ object Graft {
     * frame; exact when both sketches are exact. */
   def kmvIntersect(spark: SparkSession, a: DataFrame, b: DataFrame): DataFrame = {
     functions.expressions.GraftFunctions.ensureRegistered(spark)
-    a.select(col(a.columns.head).as("__a"))
-      .crossJoin(broadcast(b.select(col(b.columns.head).as("__b"))))
+    a.select(col(artifactColumn(a, "kmv")).as("__a"))
+      .crossJoin(broadcast(b.select(col(artifactColumn(b, "kmv")).as("__b"))))
       .select(functions.expressions.GraftFunctions
         .kmvIntersectCol(col("__a"), col("__b")).as("est"))
   }

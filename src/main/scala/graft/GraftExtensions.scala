@@ -1,43 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.expressions.{BloomContains, BloomMergeAgg, BloomSketchAgg, DotProduct, MinHashSketch, RobustStatsAgg}
+import graft.functions.expressions.GraftFunctions
 
 /** SparkSessionExtensions entry point — enable with
   * `spark.sql.extensions=graft.GraftExtensions` to make graft's native
   * expressions available in any session (SQL included) without imperative
-  * registration. */
+  * registration. It injects the same table, [[GraftFunctions.all]], that
+  * `GraftFunctions.ensureRegistered` registers, so both paths serve the
+  * same functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      graft.functions.expressions.GraftFunctions.dotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSketch].getName, "graft_minhash"),
-      graft.functions.expressions.GraftFunctions.minhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomSketchAgg].getName, "graft_bloom_agg"),
-      graft.functions.expressions.GraftFunctions.bloomAggBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),
-      graft.functions.expressions.GraftFunctions.bloomProbeBuilder))
-    // Added in round 6 to ensureRegistered; the extensions path must stay
-    // at parity or a pure-SQL session can build and probe blooms but not
-    // merge a grouped build.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_merge"),
-      new ExpressionInfo(classOf[BloomMergeAgg].getName, "graft_bloom_merge"),
-      graft.functions.expressions.GraftFunctions.bloomMergeBuilder))
-    // Round 14: one-pass median/MAD/outlier audit (see RobustStatsAgg).
-    ext.injectFunction((
-      FunctionIdentifier("graft_robust_stats"),
-      new ExpressionInfo(classOf[RobustStatsAgg].getName, "graft_robust_stats"),
-      graft.functions.expressions.GraftFunctions.robustStatsBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(ext.injectFunction)
 }

@@ -11,7 +11,11 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY also limits the dumped oracles to these queries.
     val selected = SparkEntry.selectedQueries
+    // Stamped in the log4j lines' clock format, so a burst of Spark
+    // warnings on stderr can be attributed to the query that was running.
+    val clock = java.time.format.DateTimeFormatter.ofPattern("yy/MM/dd HH:mm:ss")
     selected.foreach { case (name, fn) =>
+      System.err.println(s"[verify] ${java.time.LocalDateTime.now.format(clock)} start $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>

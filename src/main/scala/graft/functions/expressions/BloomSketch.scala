@@ -118,67 +118,26 @@ case class BloomMergeAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int,
     override val inputAggBufferOffset: Int)
-  extends TypedImperativeAggregate[Array[Byte]] {
+  extends ArtifactMergeAgg("bloom") {
 
   def this(child: Expression) = this(child, 0, 0)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom_merge expects a binary bloom artifact, got ${child.dataType.catalogString}")
+  override protected def validate(art: Array[Byte]): Unit =
+    BloomSketch.validate(art, "graft_bloom_merge")
 
-  // Empty marker until the first artifact arrives — the artifact's own
-  // header fixes the shape, so the buffer can't pre-commit to one.
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  // graft_bloom_merge is SQL-exposed, so `art` can be ANY binary column —
-  // two matching garbage blobs would previously merge silently into an
-  // artifact graft_bloom_contains misreads. Enforce the same header
-  // invariants emptyArtifact establishes before touching a byte.
-  private def requireArtifact(art: Array[Byte]): Unit = {
-    // >= 12 (header + at least one bitset word), matching the contains-side
-    // minimum — a 4-byte header-only blob would merge fine here and then be
-    // rejected by every later probe, deferring the failure from its source.
-    require(art.length >= 12 && (art.length - 4) % 8 == 0,
-      s"graft_bloom_merge: ${art.length} B is not a bloom artifact " +
-        "(expected [int32 numHashes][>=1 8-byte bitset words])")
-    val numHashes = ByteBuffer.wrap(art).getInt()
-    require(numHashes > 0 && numHashes <= 16,
-      s"graft_bloom_merge: artifact header numHashes=$numHashes outside [1,16] " +
-        "— not a graft_bloom artifact")
+  override protected def combine(buf: Array[Byte], art: Array[Byte]): Array[Byte] = {
+    require(buf.length == art.length &&
+        ByteBuffer.wrap(buf).getInt() == ByteBuffer.wrap(art).getInt(),
+      s"graft_bloom_merge: mismatched artifact shapes (${buf.length} B / " +
+        s"${art.length} B) — filters built with different numBits/numHashes cannot merge")
+    var i = 4 // headers equal; OR only the bitset words
+    while (i < buf.length) { buf(i) = (buf(i) | art(i)).toByte; i += 1 }
+    buf
   }
 
-  private def orInto(buf: Array[Byte], art: Array[Byte]): Array[Byte] =
-    if (art.isEmpty) buf
-    else if (buf.isEmpty) { requireArtifact(art); art.clone() }
-    else {
-      requireArtifact(art)
-      require(buf.length == art.length &&
-          ByteBuffer.wrap(buf).getInt() == ByteBuffer.wrap(art).getInt(),
-        s"graft_bloom_merge: mismatched artifact shapes (${buf.length} B / " +
-          s"${art.length} B) — filters built with different numBits/numHashes cannot merge")
-      var i = 4 // headers equal; OR only the bitset words
-      while (i < buf.length) { buf(i) = (buf(i) | art(i)).toByte; i += 1 }
-      buf
-    }
+  override protected def empty(): Array[Byte] = BloomSketch.emptyArtifact()
 
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buf else orInto(buf, v.asInstanceOf[Array[Byte]])
-  }
-
-  override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = orInto(b1, b2)
-
-  override def eval(buf: Array[Byte]): Any =
-    if (buf.isEmpty) BloomSketch.emptyArtifact() else buf
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_bloom_merge"
-  override def children: Seq[Expression] = Seq(child)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -281,15 +240,10 @@ object BloomSketch {
     * through). Bit addressing matches eval()'s big-endian long layout,
     * pinned against the aggregate build in BloomSketchSpec. */
   def addToArtifact(artifact: Array[Byte], key: String): Unit = {
-    // Same header contract merge/contains enforce: a malformed artifact in
-    // the streaming-state path must fail fast here, not scribble bytes or
-    // silently no-op.
-    require(artifact.length >= 12 && (artifact.length - 4) % 8 == 0,
-      s"addToArtifact: ${artifact.length} B is not a bloom artifact " +
-        "(expected [int32 numHashes][>=1 8-byte bitset words])")
+    // A malformed artifact in the streaming-state path must fail fast
+    // here, not scribble bytes or silently no-op.
+    validate(artifact, "addToArtifact")
     val numHashes = ByteBuffer.wrap(artifact).getInt()
-    require(numHashes > 0 && numHashes <= 16,
-      s"addToArtifact: artifact header numHashes=$numHashes outside [1,16] — not a graft_bloom artifact")
     val numBits = (artifact.length - 4) * 8
     val (h1, h2) = kmHashes(key)
     var j = 0
@@ -303,23 +257,30 @@ object BloomSketch {
     }
   }
 
+  /** The bloom artifact header check, shared by every reader: at least
+    * one bitset word after the header (a 4-byte header-only blob would
+    * make a probe divide by numBits = 0), and numHashes in the range the
+    * aggregate allows. An arbitrary binary whose leading int32 is <= 0
+    * would make a probe vacuously TRUE for every key. `who` prefixes the
+    * failure. */
+  private[expressions] def validate(art: Array[Byte], who: String): Unit = {
+    require(art.length >= 12 && (art.length - 4) % 8 == 0,
+      s"$who: ${art.length} B is not a bloom artifact " +
+        "(expected [int32 numHashes][>=1 8-byte bitset words])")
+    val numHashes = ByteBuffer.wrap(art).getInt()
+    require(numHashes > 0 && numHashes <= 16,
+      s"$who: artifact header numHashes=$numHashes outside [1,16] — not a graft_bloom artifact")
+  }
+
   /** Static probe shared by the interpreted and codegen paths.
     *
-    * Header-validated like graft_bloom_merge: graft_bloom_contains is
-    * SQL-exposed, and an arbitrary binary whose leading int32 is <= 0
-    * would make the probe loop vacuously TRUE for every key — silently
-    * keeping every probe row — while a 4-byte blob would divide by
-    * numBits = 0. Three int compares per probe, noise next to the two
+    * Header-validated like graft_bloom_merge, since graft_bloom_contains
+    * is SQL-exposed. Three int compares per probe, noise next to the two
     * hashes kmHashes computes anyway. */
   def contains(artifact: Array[Byte], key: String): Boolean = {
+    validate(artifact, "graft_bloom_contains")
     val bb = ByteBuffer.wrap(artifact)
-    require(artifact.length >= 12 && (artifact.length - 4) % 8 == 0,
-      s"graft_bloom_contains: ${artifact.length} B is not a bloom artifact " +
-        "(expected [int32 numHashes][>=1 8-byte bitset words])")
     val numHashes = bb.getInt()
-    require(numHashes > 0 && numHashes <= 16,
-      s"graft_bloom_contains: artifact header numHashes=$numHashes outside [1,16] " +
-        "— not a graft_bloom artifact")
     val numBits = (artifact.length - 4) * 8
     val (h1, h2) = kmHashes(key)
     var j = 0

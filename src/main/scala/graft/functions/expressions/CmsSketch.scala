@@ -152,69 +152,33 @@ case class CmsMergeAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int,
     override val inputAggBufferOffset: Int)
-  extends TypedImperativeAggregate[Array[Byte]] {
+  extends ArtifactMergeAgg("CMS") {
 
   def this(child: Expression) = this(child, 0, 0)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cms_merge expects a binary CMS artifact, got ${child.dataType.catalogString}")
+  override protected def validate(art: Array[Byte]): Unit =
+    CmsSketch.validate(art, "graft_cms_merge")
 
-  // Empty marker until the first artifact arrives — the artifact's own
-  // header fixes the shape, so the buffer can't pre-commit to one.
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def requireArtifact(art: Array[Byte]): Unit = {
-    require(art.length >= 8 + 8 && (art.length - 8) % 8 == 0,
-      s"graft_cms_merge: ${art.length} B is not a CMS artifact " +
-        "(expected [int32 depth][int32 width][depth*width int64 counters])")
-    val bb = ByteBuffer.wrap(art)
-    val depth = bb.getInt(); val width = bb.getInt()
-    require(depth > 0 && depth <= 16 && width > 1 && width <= (1 << 20) &&
-        art.length == 8 + 8 * depth * width,
-      s"graft_cms_merge: artifact header depth=$depth width=$width inconsistent " +
-        s"with ${art.length} B — not a graft_cms artifact")
-  }
-
-  private def sumInto(buf: Array[Byte], art: Array[Byte]): Array[Byte] =
-    if (art.isEmpty) buf
-    else if (buf.isEmpty) { requireArtifact(art); art.clone() }
-    else {
-      requireArtifact(art)
-      require(buf.length == art.length &&
-          java.util.Arrays.equals(buf, 0, 8, art, 0, 8),
-        s"graft_cms_merge: mismatched artifact shapes (${buf.length} B / " +
-          s"${art.length} B) — sketches built with different depth/width cannot merge")
-      val b = ByteBuffer.wrap(buf)
-      val a = ByteBuffer.wrap(art)
-      var off = 8
-      while (off < buf.length) {
-        b.putLong(off, b.getLong(off) + a.getLong(off))
-        off += 8
-      }
-      buf
+  override protected def combine(buf: Array[Byte], art: Array[Byte]): Array[Byte] = {
+    require(buf.length == art.length &&
+        java.util.Arrays.equals(buf, 0, 8, art, 0, 8),
+      s"graft_cms_merge: mismatched artifact shapes (${buf.length} B / " +
+        s"${art.length} B) — sketches built with different depth/width cannot merge")
+    val b = ByteBuffer.wrap(buf)
+    val a = ByteBuffer.wrap(art)
+    var off = 8
+    while (off < buf.length) {
+      b.putLong(off, b.getLong(off) + a.getLong(off))
+      off += 8
     }
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buf else sumInto(buf, v.asInstanceOf[Array[Byte]])
+    buf
   }
-
-  override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = sumInto(b1, b2)
 
   // An all-null/empty group yields the default-shape zero sketch: every
   // estimate 0, which IS the sketch of an empty stream.
-  override def eval(buf: Array[Byte]): Any =
-    if (buf.isEmpty) CmsSketch.emptyArtifact() else buf
+  override protected def empty(): Array[Byte] = CmsSketch.emptyArtifact()
 
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_cms_merge"
-  override def children: Seq[Expression] = Seq(child)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
@@ -291,22 +255,31 @@ object CmsSketch {
     bb.array()
   }
 
+  /** The CMS artifact header check, shared by every reader: depth and
+    * width in the ranges the aggregate allows, and a length that holds
+    * exactly depth·width counters. `who` prefixes the failure. */
+  private[expressions] def validate(art: Array[Byte], who: String): Unit = {
+    require(art.length >= 8 + 8 && (art.length - 8) % 8 == 0,
+      s"$who: ${art.length} B is not a CMS artifact " +
+        "(expected [int32 depth][int32 width][depth*width int64 counters])")
+    val bb = ByteBuffer.wrap(art)
+    val depth = bb.getInt(); val width = bb.getInt()
+    require(depth > 0 && depth <= 16 && width > 1 && width <= (1 << 20) &&
+        art.length == 8 + 8 * depth * width,
+      s"$who: artifact header depth=$depth width=$width inconsistent " +
+        s"with ${art.length} B — not a graft_cms artifact")
+  }
+
   /** Static probe shared by the interpreted and codegen paths.
     *
     * Header-validated like the bloom probes: graft_cms_estimate is
     * SQL-exposed, so an arbitrary binary must fail loudly, not index out
     * of bounds or return a garbage minimum. */
   def estimate(artifact: Array[Byte], key: String): Long = {
+    validate(artifact, "graft_cms_estimate")
     val bb = ByteBuffer.wrap(artifact)
-    require(artifact.length >= 8 + 8 && (artifact.length - 8) % 8 == 0,
-      s"graft_cms_estimate: ${artifact.length} B is not a CMS artifact " +
-        "(expected [int32 depth][int32 width][depth*width int64 counters])")
     val depth = bb.getInt()
     val width = bb.getInt()
-    require(depth > 0 && depth <= 16 && width > 1 && width <= (1 << 20) &&
-        artifact.length == 8 + 8 * depth * width,
-      s"graft_cms_estimate: artifact header depth=$depth width=$width inconsistent " +
-        s"with ${artifact.length} B — not a graft_cms artifact")
     val h = JvmHash.h60p(key)
     var min = Long.MaxValue
     var i = 0

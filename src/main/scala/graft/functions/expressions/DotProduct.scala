@@ -1,11 +1,9 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
 
 /** Native codegen dot product over array<float|double> columns.
   *
@@ -101,215 +99,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration + Column-level helpers. */
-object GraftFunctions {
-  private val dotInfo = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-  private val minhashInfo = new ExpressionInfo(classOf[MinHashSketch].getName, "graft_minhash")
-  private val bloomAggInfo = new ExpressionInfo(classOf[BloomSketchAgg].getName, "graft_bloom_agg")
-  private val bloomProbeInfo = new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains")
-  private val bloomMergeInfo = new ExpressionInfo(classOf[BloomMergeAgg].getName, "graft_bloom_merge")
-  private val robustStatsInfo = new ExpressionInfo(classOf[RobustStatsAgg].getName, "graft_robust_stats")
-  private val cmsAggInfo = new ExpressionInfo(classOf[CmsSketchAgg].getName, "graft_cms_agg")
-  private val cmsEstimateInfo = new ExpressionInfo(classOf[CmsEstimate].getName, "graft_cms_estimate")
-  private val cmsMergeInfo = new ExpressionInfo(classOf[CmsMergeAgg].getName, "graft_cms_merge")
-  private val kmvAggInfo = new ExpressionInfo(classOf[KmvSketchAgg].getName, "graft_kmv_agg")
-  private val kmvEstimateInfo = new ExpressionInfo(classOf[KmvEstimate].getName, "graft_kmv_estimate")
-  private val kmvMergeInfo = new ExpressionInfo(classOf[KmvMergeAgg].getName, "graft_kmv_merge")
-  private val kmvIntersectInfo = new ExpressionInfo(classOf[KmvIntersect].getName, "graft_kmv_intersect")
-
-  /** Idempotently registers graft's native expressions in the session's
-    * function registry. (Also injectable globally via
-    * `spark.sql.extensions=graft.GraftExtensions`.) */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"), dotInfo, dotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_minhash"), minhashInfo, minhashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_contains"), bloomProbeInfo, bloomProbeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_merge"), bloomMergeInfo, bloomMergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_robust_stats"), robustStatsInfo, robustStatsBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cms_agg"), cmsAggInfo, cmsAggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cms_estimate"), cmsEstimateInfo, cmsEstimateBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cms_merge"), cmsMergeInfo, cmsMergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kmv_agg"), kmvAggInfo, kmvAggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kmv_estimate"), kmvEstimateInfo, kmvEstimateBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kmv_merge"), kmvMergeInfo, kmvMergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_kmv_intersect"), kmvIntersectInfo, kmvIntersectBuilder)
-  }
-
-  /** Strict arity — `children.head, children(1)` would throw a raw
-    * IndexOutOfBounds on a 1-arg call and silently DROP a third arg. */
-  private[graft] val dotBuilder: Seq[Expression] => Expression = {
-    case Seq(x, y) => DotProduct(x, y)
-    case other => throw new IllegalArgumentException(
-      s"graft_dot expects exactly 2 arguments, got ${other.size}")
-  }
-
-  /** Strict arity: silently dropping extra args would hand back a
-    * 32-hash sketch to a caller who asked for a different width. */
-  private[graft] val minhashBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new MinHashSketch(child)
-    case other => throw new IllegalArgumentException(
-      s"graft_minhash expects exactly 1 argument, got ${other.size}")
-  }
-
-  /** graft_bloom_agg(key) or graft_bloom_agg(key, numBits, numHashes) —
-    * sizing params must be integer literals (they fix the buffer shape). */
-  private[graft] val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new BloomSketchAgg(child)
-    case Seq(child, bits, hashes) =>
-      def lit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_bloom_agg: $what must be an integer literal, got $other")
-      }
-      BloomSketchAgg(child, lit(bits, "numBits"), lit(hashes, "numHashes"), 0, 0)
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_agg expects 1 or 3 arguments, got ${other.size}")
-  }
-
-  private[graft] val bloomProbeBuilder: Seq[Expression] => Expression = {
-    case Seq(bloom, key) => BloomContains(bloom, key)
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_contains expects exactly 2 arguments, got ${other.size}")
-  }
-
-  private[graft] val bloomMergeBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new BloomMergeAgg(child)
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_merge expects exactly 1 argument, got ${other.size}")
-  }
-
-  private[graft] val robustStatsBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new RobustStatsAgg(child)
-    case other => throw new IllegalArgumentException(
-      s"graft_robust_stats expects exactly 1 argument, got ${other.size}")
-  }
-
-  /** graft_cms_agg(key) or graft_cms_agg(key, depth, width) — sizing
-    * params must be integer literals (they fix the buffer shape). */
-  private[graft] val cmsAggBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new CmsSketchAgg(child)
-    case Seq(child, depth, width) =>
-      def lit(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_cms_agg: $what must be an integer literal, got $other")
-      }
-      CmsSketchAgg(child, lit(depth, "depth"), lit(width, "width"), 0, 0)
-    case other => throw new IllegalArgumentException(
-      s"graft_cms_agg expects 1 or 3 arguments, got ${other.size}")
-  }
-
-  private[graft] val cmsEstimateBuilder: Seq[Expression] => Expression = {
-    case Seq(cms, key) => CmsEstimate(cms, key)
-    case other => throw new IllegalArgumentException(
-      s"graft_cms_estimate expects exactly 2 arguments, got ${other.size}")
-  }
-
-  private[graft] val cmsMergeBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new CmsMergeAgg(child)
-    case other => throw new IllegalArgumentException(
-      s"graft_cms_merge expects exactly 1 argument, got ${other.size}")
-  }
-
-  /** graft_kmv_agg(key) or graft_kmv_agg(key, k) — k must be an integer
-    * literal (it fixes the buffer shape). */
-  private[graft] val kmvAggBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new KmvSketchAgg(child)
-    case Seq(child, kExpr) =>
-      val k = kExpr match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv_agg: k must be an integer literal, got $other")
-      }
-      KmvSketchAgg(child, k, 0, 0)
-    case other => throw new IllegalArgumentException(
-      s"graft_kmv_agg expects 1 or 2 arguments, got ${other.size}")
-  }
-
-  private[graft] val kmvEstimateBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => KmvEstimate(child)
-    case other => throw new IllegalArgumentException(
-      s"graft_kmv_estimate expects exactly 1 argument, got ${other.size}")
-  }
-
-  private[graft] val kmvMergeBuilder: Seq[Expression] => Expression = {
-    case Seq(child) => new KmvMergeAgg(child)
-    case other => throw new IllegalArgumentException(
-      s"graft_kmv_merge expects exactly 1 argument, got ${other.size}")
-  }
-
-  private[graft] val kmvIntersectBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => KmvIntersect(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_kmv_intersect expects exactly 2 arguments, got ${other.size}")
-  }
-
-  /** KMV theta sketch build over a string key column (binary artifact). */
-  def kmvAggCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_agg", c)
-
-  /** Distinct-count estimate from a KMV artifact (exact below k). */
-  def kmvEstimateCol(artifact: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_estimate", artifact)
-
-  /** Union of KMV artifacts into one (aggregate; see KmvMergeAgg). */
-  def kmvMergeCol(artifact: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_merge", artifact)
-
-  /** Theta-rule intersection-cardinality estimate of two KMV artifacts. */
-  def kmvIntersectCol(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv_intersect", a, b)
-
-  /** Grouped MinHash signature (array<long> of 32 component minima). */
-  def minhashSketchCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_minhash", c)
-
-  /** Bloom-filter build over a string key column (binary artifact). */
-  def bloomAggCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_bloom_agg", c)
-
-  /** Membership probe: false ⇒ definitely absent, true ⇒ FPR-bounded maybe. */
-  def bloomContainsCol(bloom: Column, key: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_bloom_contains", bloom, key)
-
-  /** OR-union of bloom artifacts into one (aggregate; see BloomMergeAgg). */
-  def bloomMergeCol(artifact: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_bloom_merge", artifact)
-
-  /** Count-min sketch build over a string key column (binary artifact). */
-  def cmsAggCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_cms_agg", c)
-
-  /** Point-frequency estimate: min of the key's d counters — ≥ the true
-    * count always, ≤ true + εN with probability 1−2^−d. */
-  def cmsEstimateCol(cms: Column, key: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_cms_estimate", cms, key)
-
-  /** Merge pre-built CMS artifacts by elementwise counter sum. */
-  def cmsMergeCol(artifact: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_cms_merge", artifact)
-
-  /** dot(a, b) as a Column; requires ensureRegistered on the session. */
-  def dotCol(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
-
-  /** L2 norm via dot(v, v) — same fold order as summing squares. */
-  def normCol(v: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dotCol(v, v))
 }

@@ -134,70 +134,39 @@ case class KmvMergeAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int,
     override val inputAggBufferOffset: Int)
-  extends TypedImperativeAggregate[Array[Byte]] {
+  extends ArtifactMergeAgg("KMV") {
 
   def this(child: Expression) = this(child, 0, 0)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_kmv_merge expects a binary KMV artifact, got ${child.dataType.catalogString}")
+  override protected def validate(art: Array[Byte]): Unit =
+    KmvSketch.validate(art, "graft_kmv_merge")
 
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def union(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (b.isEmpty) a
-    else if (a.isEmpty) { KmvSketch.validate(b, "graft_kmv_merge"); b.clone() }
-    else {
-      KmvSketch.validate(b, "graft_kmv_merge")
-      val (ka, ha) = KmvSketch.parse(a)
-      val (kb, hb) = KmvSketch.parse(b)
-      require(ka == kb,
-        s"graft_kmv_merge: mismatched k ($ka / $kb) — sketches built with " +
-          "different k cannot merge")
-      // Sorted-merge the two ascending arrays, dedup, trim to k.
-      val out = new Array[Long](math.min(ka, ha.length + hb.length))
-      var i = 0; var j = 0; var n = 0
-      var last = -1L
-      while (n < out.length && (i < ha.length || j < hb.length)) {
-        val v =
-          if (j >= hb.length || (i < ha.length && ha(i) <= hb(j))) { val x = ha(i); i += 1; x }
-          else { val x = hb(j); j += 1; x }
-        if (v != last) { out(n) = v; n += 1; last = v }
-      }
-      val bb = ByteBuffer.allocate(8 + 8 * n)
-      bb.putInt(ka); bb.putInt(n)
-      var t = 0
-      while (t < n) { bb.putLong(out(t)); t += 1 }
-      bb.array()
+  override protected def combine(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val (ka, ha) = KmvSketch.parse(a)
+    val (kb, hb) = KmvSketch.parse(b)
+    require(ka == kb,
+      s"graft_kmv_merge: mismatched k ($ka / $kb) — sketches built with " +
+        "different k cannot merge")
+    // Sorted-merge the two ascending arrays, dedup, trim to k.
+    val out = new Array[Long](math.min(ka, ha.length + hb.length))
+    var i = 0; var j = 0; var n = 0
+    var last = -1L
+    while (n < out.length && (i < ha.length || j < hb.length)) {
+      val v =
+        if (j >= hb.length || (i < ha.length && ha(i) <= hb(j))) { val x = ha(i); i += 1; x }
+        else { val x = hb(j); j += 1; x }
+      if (v != last) { out(n) = v; n += 1; last = v }
     }
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      // USER data validates unconditionally — a zero-length binary from
-      // a truncated artifact column must refuse loudly, not pass as an
-      // empty sketch. (union's isEmpty shortcut stays for merge(): an
-      // empty INTERNAL buffer from a row-less partition is legitimate.)
-      val art = v.asInstanceOf[Array[Byte]]
-      KmvSketch.validate(art, "graft_kmv_merge")
-      union(buf, art)
-    }
+    val bb = ByteBuffer.allocate(8 + 8 * n)
+    bb.putInt(ka); bb.putInt(n)
+    var t = 0
+    while (t < n) { bb.putLong(out(t)); t += 1 }
+    bb.array()
   }
 
-  override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = union(b1, b2)
+  override protected def empty(): Array[Byte] = KmvSketch.emptyArtifact()
 
-  override def eval(buf: Array[Byte]): Any =
-    if (buf.isEmpty) KmvSketch.emptyArtifact() else buf
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_kmv_merge"
-  override def children: Seq[Expression] = Seq(child)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =

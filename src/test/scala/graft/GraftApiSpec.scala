@@ -358,6 +358,19 @@ class GraftApiSpec extends SparkSpec {
     assert(Graft.kmvIntersect(spark, ska, skb).collect()(0).getLong(0) == 21L)
   }
 
+  test("kmvIntersect reads the kmv column, not the first one") {
+    import spark.implicits._
+    val ska = Graft.kmvBuild(spark, (1 to 120).map(i => s"u$i").toDF("k"), "k")
+    val skb = Graft.kmvBuild(spark, (100 to 180).map(i => s"u$i").toDF("k"), "k")
+    val tagged = ska.select(lit("a").as("tag"), col("kmv"))
+    assert(Graft.kmvIntersect(spark, tagged, skb).collect()(0).getLong(0) == 21L)
+    assert(Graft.kmvIntersect(spark, skb, tagged).collect()(0).getLong(0) == 21L)
+    val e = intercept[IllegalArgumentException] {
+      Graft.kmvIntersect(spark, ska.select(lit("a").as("tag"), col("kmv").as("sk")), skb)
+    }
+    assert(e.getMessage.contains("kmv frame needs a 'kmv' column or exactly one column, got tag, sk"))
+  }
+
   test("pqFit/pqEncode/pqTopK: the facade pipeline matches the staged sim_pq_adc gate") {
     // Same input, same deterministic fit → the facade's ADC top-10 for
     // vector 0 must equal the oracle-gated sim_pq_adc output.

@@ -209,4 +209,19 @@ class BloomSketchSpec extends SparkSpec {
     assert(addBadHdr.getMessage.contains("outside [1,16]"),
       s"wrong failure: ${addBadHdr.getMessage}")
   }
+
+  test("graft_bloom_merge refuses a zero-length artifact row") {
+    // A truncated artifact is not an empty filter: skipping it would turn
+    // every key it held into a false negative at the probe.
+    import spark.implicits._
+    GraftFunctions.ensureRegistered(spark)
+    val valid = BloomSketch.emptyArtifact()
+    for (arts <- Seq(Seq(Array.emptyByteArray), Seq(valid, Array.emptyByteArray))) {
+      val e = intercept[Exception] {
+        arts.toDF("bf").agg(GraftFunctions.bloomMergeCol(col("bf"))).collect()
+      }
+      assert(e.getMessage.contains("graft_bloom_merge: 0 B is not a bloom artifact"),
+        s"wrong failure: ${e.getMessage}")
+    }
+  }
 }

@@ -93,6 +93,20 @@ class CmsSketchSpec extends SparkSpec {
     intercept[Exception](mergeOf(Seq(a, other)))
   }
 
+  test("merge refuses a zero-length artifact row") {
+    // A truncated artifact is not an empty sketch: skipping it would
+    // undercount every key it held.
+    GraftFunctions.ensureRegistered(spark)
+    val a = artifact(stream, 2)
+    for (arts <- Seq(Seq(Array.emptyByteArray), Seq(a, Array.emptyByteArray))) {
+      val e = intercept[Exception] {
+        arts.toDF("cms").agg(GraftFunctions.cmsMergeCol(col("cms"))).collect()
+      }
+      assert(e.getMessage.contains("graft_cms_merge: 0 B is not a CMS artifact"),
+        s"wrong failure: ${e.getMessage}")
+    }
+  }
+
   test("merging an empty input yields the zero sketch (every estimate 0)") {
     GraftFunctions.ensureRegistered(spark)
     val z = Seq.empty[Array[Byte]].toDF("cms")

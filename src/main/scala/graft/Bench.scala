@@ -13,7 +13,7 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     // Failures are reported with their cause on stderr; stdout stays the
     // two JSON lines.
@@ -147,17 +147,7 @@ object Bench {
     // Fixed-notation doubles (never scientific) keep every line safe for
     // any JSON reader.
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // JSON-escape map keys (round-10 ADVICE): query names are identifier-
-    // style today, but a future name containing a quote or backslash would
-    // silently emit an invalid artifact.
-    def jkey(k: String): String =
-      "\"" + k.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v) => jkey(k) + ":" + fmt(v) }
+    val qs = results.map { case (k, v) => Verify.jsonString(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // Run-condition stamp carried on BOTH output lines: loadavg at start/
@@ -165,7 +155,7 @@ object Bench {
     // queries hit the outlier re-time. A reviewer can now tell a loaded-box
     // artifact from a code regression without re-running anything.
     val rtf = retimedFrom
-      .map { case (k, v) => jkey(k) + ":" + fmt(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Verify.jsonString(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val stamp =
       s""","loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadEnd)},"warmed":$warmed,"retimed":$retimed,"retimed_from":$rtf""" +
       s""","canary_first":${fmt(canaryFirst)},"canary_last":${fmt(canaryLast)},"canary_drift":${fmt(canaryDrift)}"""

@@ -9,15 +9,15 @@ import scala.util.control.NonFatal
   * [[PlanDump]], which writes one for every declared query.
   *
   * Usage: sbt "runMain graft.Lab q1,q2 [draws]"
-  *   SPARK_GRAFT_SF_DIR as in Bench; SPARK_GRAFT_CPUS defaults to the
-  *   machine's core count.
+  *   SPARK_GRAFT_SF_DIR as in Bench; SPARK_GRAFT_CPUS as in every main
+  *   (see [[LocalSession.cpus]]).
   */
 object Lab {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("wordcount").split(",").map(_.trim).filter(_.nonEmpty)
     val draws = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession(sys.env.get("SPARK_GRAFT_CPUS").fold(LocalSession.cores)(_.toInt))
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     def failed(what: String, e: Throwable): Unit =
       System.err.println(s"[lab] $what failed: ${e.getClass.getName}: ${e.getMessage}")

@@ -45,14 +45,17 @@ object SparkEntry {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .fold(queries)(ns => queries.filter(kv => ns(kv._1)))
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. Rendered
-    * at the driver's gate dir (Stage.GateDir) — the three file round-trip
-    * oracles name staging paths derived from the data dir; Verify dumps
-    * `oracleSqlFor(actual dir)` so the dumped SQL always matches the run. */
+  /** The static oracle contract: for each key in queries, equivalent
+    * ANSI SQL runnable by DuckDB on the same parquet tables (omitted for
+    * non-SQL-expressible ops), rendered at the gate dir [[Stage.GateDir]].
+    * The oracles that read staged files name paths derived from the data
+    * dir, so Verify dumps `oracleSqlFor(actual dir)` instead, and the
+    * dumped SQL always matches the run. `QueriesSmokeSpec` and
+    * `OracleSqlPinSpec` read this map. */
   def oracleSql: Map[String, String] = oracleSqlFor(Stage.GateDir)
 
-  /** Oracle SQL rendered for a specific data dir (see QueryPack). */
+  /** Oracle SQL rendered for a specific data dir: every pack's
+    * [[QueryPack.oracleSqlFor]], merged. */
   def oracleSqlFor(dataDir: String): Map[String, String] =
     assembled(packs.map(_.oracleSqlFor(dataDir)))
 

@@ -20,9 +20,10 @@ package graft
   */
 object Stage {
   /** The driver's correctness-gate data dir (TESTDATA.md: Verify runs at
-    * sf=0.01). `SparkEntry.oracleSql` — the static contract map — is
-    * rendered against this dir, so even a consumer that bypasses Verify's
-    * dump gets SQL that is correct at the gate scale factor. */
+    * sf=0.01). `SparkEntry.oracleSql` — the static contract map — is every
+    * pack's `oracleSqlFor` rendered at this dir, so even a consumer that
+    * bypasses Verify's dump gets SQL that is correct at the gate scale
+    * factor, and the oracle pins (`OracleSqlPinSpec`) hash fixed paths. */
   val GateDir = "/root/testdata/sf0.01"
 
   /** Staging root for `dataDir`: a sanitized, human-readable tail plus an

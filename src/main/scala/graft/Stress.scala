@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession(sys.env.get("SPARK_GRAFT_CPUS").fold(LocalSession.cores)(_.toInt))
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     // 10× replication by key-shifted union (shared by every stress

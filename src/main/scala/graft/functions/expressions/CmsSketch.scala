@@ -243,8 +243,31 @@ object CmsSketch {
     s"(${graft.functions.PortableHash.h60pSql(s"('graft-cms-a-' || CAST($i AS VARCHAR))")} % 1000000006 + 1)"
   def rowBSql(i: String): String =
     graft.functions.PortableHash.h60pSql(s"('graft-cms-b-' || CAST($i AS VARCHAR))")
-  def bucketSql(h: String, i: String, width: Int): String =
-    s"(((${rowASql(i)} * $h + ${rowBSql(i)}) % 1000000007) % $width)"
+  private def bucketSql(h: String, i: String): String =
+    s"(((${rowASql(i)} * $h + ${rowBSql(i)}) % 1000000007) % $DefaultWidth)"
+
+  /** The DuckDB replay of a default-shape sketch's point estimates, as
+    * the CTEs `keyed, hashed, counters, probes, est`. `keyed` is the body
+    * of the first: one row per key, `k` BIGINT and its `exact_cnt`.
+    * Counter (i, b) sums the exact counts of the keys that row i buckets
+    * to b; `probes` are the 20 most frequent keys (ties to the smaller
+    * k), and `est` gives each its `est_cnt`, the min over its counters. */
+  def estimateCtesSql(keyed: String): String =
+    s"""keyed AS (
+            $keyed),
+          hashed AS (
+            SELECT k, exact_cnt, seeds.i AS i,
+                   ${bucketSql(graft.functions.PortableHash.h60pSql("CAST(k AS VARCHAR)"), "seeds.i")} AS b
+            FROM keyed CROSS JOIN range($DefaultDepth) seeds(i)),
+          counters AS (
+            SELECT i, b, SUM(exact_cnt) AS cnt FROM hashed GROUP BY 1, 2),
+          probes AS (
+            SELECT k, exact_cnt FROM keyed ORDER BY exact_cnt DESC, k LIMIT 20),
+          est AS (
+            SELECT h.k, MIN(c.cnt) AS est_cnt
+            FROM hashed h JOIN counters c ON h.i = c.i AND h.b = c.b
+            WHERE h.k IN (SELECT k FROM probes)
+            GROUP BY h.k)"""
 
   /** The default-shape all-zero artifact (the sketch of an empty
     * stream) — graft_cms_merge's identity element. */

@@ -100,3 +100,15 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
+
+object DotProduct {
+  /** The DuckDB twin of graft_dot over two `dim`-long DOUBLE lists, for
+    * the oracles: the same index-order left fold. Its lambda parameters
+    * are (x, y), or (u, t) when an operand comes from a table aliased x
+    * or y, so they never shadow the operand. */
+  def sql(a: String, b: String, dim: Int = 64): String = {
+    val (x, y) =
+      if (Seq(a, b).exists(o => o.startsWith("x.") || o.startsWith("y."))) ("u", "t") else ("x", "y")
+    s"list_reduce(list_transform(range($dim), i -> $a[i + 1] * $b[i + 1]), ($x, $y) -> $x + $y)"
+  }
+}

@@ -294,6 +294,37 @@ object KmvSketch {
     else clamp(BigInt(m) * BigInt(Space) / BigInt(th))
   }
 
+  // DuckDB twins of the estimates, for the oracles. Each reads the rank
+  // window of rankSql (columns h, rk, nd) inside an aggregate, one group
+  // per sketch; DefaultK and Space size them like the engine's sketches.
+
+  /** The rank window over the distinct hashes `h` of `hashes`, per `by`
+    * group when one is named: rk is the 1-based ascending rank, nd the
+    * group's distinct count. */
+  def rankSql(hashes: String, by: String = ""): String = {
+    val (cols, part) = if (by.isEmpty) ("h", "") else (s"$by, h", s"PARTITION BY $by")
+    s"SELECT $cols, ROW_NUMBER() OVER ($part ORDER BY h) AS rk, COUNT(*) OVER ($part) AS nd FROM $hashes"
+  }
+
+  /** [[estimate]] of the default-k sketch of one rank-window group: exact
+    * below k, else the HUGEINT floor division, bit-equal to the BigInt. */
+  def estimateSql: String =
+    s"""CASE WHEN MAX(nd) < $DefaultK THEN CAST(MAX(nd) AS BIGINT)
+             ELSE CAST(CAST(${DefaultK - 1} AS HUGEINT) * $Space //
+                  MAX(CASE WHEN rk = $DefaultK THEN h END) AS BIGINT) END"""
+
+  /** [[theta]] of the default-k sketch of one rank-window group. */
+  def thetaSql: String =
+    s"""CASE WHEN MAX(nd) < $DefaultK THEN $Space
+             ELSE MAX(CASE WHEN rk = $DefaultK THEN h END) END"""
+
+  /** [[intersect]]'s theta rule: `matches` retained hashes below `theta`,
+    * scaled back by 2^60/theta unless both sketches are exact. */
+  def intersectSql(matches: String, theta: String): String =
+    s"""CASE WHEN $theta = $Space THEN CAST($matches AS BIGINT)
+             ELSE CAST(CAST($matches AS HUGEINT) * $Space //
+                  $theta AS BIGINT) END"""
+
   private def clamp(v: BigInt): Long =
     if (v > BigInt(Long.MaxValue)) Long.MaxValue else v.toLong
 }

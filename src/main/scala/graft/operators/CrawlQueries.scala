@@ -494,7 +494,7 @@ object CrawlQueries extends QueryPack {
                      'h' || CAST(doc_id % 7 AS VARCHAR) || '.test'
               FROM documents WHERE doc_id % 11 = 0)"""
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     // The cue model replayed from doc_id arithmetic — the oracle never
     // sees SRT text, so every parsed field (timestamps incl. hours,
     // indices, text slices, overlap lags) must be re-derived correctly

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryPack, Stage, Tables}
 import graft.Portable.round6
 import graft.functions.PortableHash._
+import graft.functions.expressions.DotProduct
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -1902,7 +1903,16 @@ object DedupQueries extends QueryPack {
               FLOOR(jac * 1000000 + 0.5) / 1000000 AS jac
        FROM jac WHERE jac >= 0.7 ORDER BY batch_id, corpus_id"""
 
-  override def oracleSqlFor(dataDir: String): Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = {
+    val own = ownOracles(dataDir)
+    // Deliberately the BRUTE-FORCE join: the prefix-filtered Spark plan
+    // must reproduce the naive algorithm's pair set exactly (prefix
+    // filtering admits no false negatives) — algorithm-independence is
+    // the gate.
+    own + ("dedup_prefix_jaccard" -> own("dedup_ngram_jaccard"))
+  }
+
+  private def ownOracles(dataDir: String): Map[String, String] = Map(
     // The IDENTICAL script-gate/segment/shingle/join rule replayed over
     // the same staged parquet: CJK fraction via regexp count (integer
     // threshold), char bigrams via correlated range unnest, word split
@@ -2322,14 +2332,6 @@ object DedupQueries extends QueryPack {
       s"""WITH $shinglesSqlCte
           SELECT da, db, FLOOR(jac*1000000 + 0.5)/1000000 AS jac FROM jac
           WHERE jac >= 0.5 ORDER BY da, db""",
-    // Deliberately the BRUTE-FORCE join: the prefix-filtered Spark plan
-    // must reproduce the naive algorithm's pair set exactly (prefix
-    // filtering admits no false negatives) — algorithm-independence is
-    // the gate.
-    "dedup_prefix_jaccard" ->
-      s"""WITH $shinglesSqlCte
-          SELECT da, db, FLOOR(jac*1000000 + 0.5)/1000000 AS jac FROM jac
-          WHERE jac >= 0.5 ORDER BY da, db""",
     "dedup_threshold_curve" ->
       s"""WITH $shinglesSqlCte,
             b AS (SELECT CAST(LEAST(FLOOR(jac * 10), 9) AS INT) AS bucket FROM jac),
@@ -2370,14 +2372,13 @@ object DedupQueries extends QueryPack {
       s"""WITH $simhashSqlCte
           SELECT doc_id, simhash FROM sim ORDER BY doc_id""",
     "dedup_embed" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      s"""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                     FROM embeddings),
               n AS (SELECT vec_id, label, v,
                            sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
                     FROM e),
               p AS (SELECT a.vec_id AS va, b.vec_id AS vb,
-                           list_reduce(list_transform(range(64), i -> a.v[i + 1] * b.v[i + 1]),
-                                       (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
+                           ${DotProduct.sql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
                     FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id)
          SELECT va, vb, FLOOR(cos*1000000 + 0.5)/1000000 AS cos FROM p
          WHERE cos >= 0.4 ORDER BY va, vb""",
@@ -2394,8 +2395,7 @@ object DedupQueries extends QueryPack {
                      FROM keyed a JOIN keyed b
                        ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id),
             p AS (SELECT c.va, c.vb,
-                         list_reduce(list_transform(range(64), i -> x.v[i + 1] * y.v[i + 1]),
-                                     (u, t) -> u + t) / (x.nrm * y.nrm) AS cos
+                         ${DotProduct.sql("x.v", "y.v")} / (x.nrm * y.nrm) AS cos
                   FROM cand c JOIN n x ON c.va = x.vec_id JOIN n y ON c.vb = y.vec_id)
           SELECT va, vb, FLOOR(cos*1000000 + 0.5)/1000000 AS cos FROM p
           WHERE cos >= 0.4 ORDER BY va, vb""",
@@ -2410,11 +2410,9 @@ object DedupQueries extends QueryPack {
                     FROM e),
               ${SimilarityQueries.centSqlCte(dataDir)},
               sc AS (SELECT a.vec_id, a.v, a.nrm, c.cid,
-                            list_reduce(list_transform(range(64), i -> a.v[i + 1] * c.w[i + 1]),
-                                        (x, y) -> x + y) / (a.nrm * c.wnrm) AS ccos_raw,
+                            ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) AS ccos_raw,
                             ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                              ORDER BY list_reduce(list_transform(range(64), i -> a.v[i + 1] * c.w[i + 1]),
-                                                   (x, y) -> x + y) / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                              ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                      FROM n a, cent c),
               asg AS (SELECT vec_id, v, nrm, cid AS cluster,
                              FLOOR(ccos_raw*1000000 + 0.5)/1000000 AS ccos
@@ -2422,8 +2420,7 @@ object DedupQueries extends QueryPack {
               pr AS (SELECT x.vec_id AS da, y.vec_id AS db
                      FROM asg x JOIN asg y
                        ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-                     WHERE list_reduce(list_transform(range(64), i -> x.v[i + 1] * y.v[i + 1]),
-                                       (u, t) -> u + t) / (x.nrm * y.nrm) >= 0.4),
+                     WHERE ${DotProduct.sql("x.v", "y.v")} / (x.nrm * y.nrm) >= 0.4),
               cedges AS (SELECT da AS a, db AS b FROM pr
                          UNION SELECT db, da FROM pr
                          UNION SELECT da, da FROM pr
@@ -2451,8 +2448,7 @@ object DedupQueries extends QueryPack {
               ${SimilarityQueries.centSqlCte(dataDir)},
               sc AS (SELECT a.vec_id, c.cid AS cl,
                             ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                              ORDER BY list_reduce(list_transform(range(64), i -> a.v[i + 1] * c.w[i + 1]),
-                                                   (x, y) -> x + y) / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                              ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                      FROM n a, cent c),
               probe AS (SELECT vec_id, cl FROM sc WHERE rk <= 2),
               own AS (SELECT vec_id, cl FROM sc WHERE rk = 1),
@@ -2460,12 +2456,9 @@ object DedupQueries extends QueryPack {
                                        greatest(a.vec_id, b.vec_id) AS vb
                        FROM probe a JOIN own b ON a.cl = b.cl AND a.vec_id <> b.vec_id),
               p AS (SELECT c.va, c.vb,
-                           list_reduce(list_transform(range(64), i -> x.v[i + 1] * y.v[i + 1]),
-                                       (u, t) -> u + t) / (x.nrm * y.nrm) AS cos
+                           ${DotProduct.sql("x.v", "y.v")} / (x.nrm * y.nrm) AS cos
                     FROM cand c JOIN n x ON c.va = x.vec_id JOIN n y ON c.vb = y.vec_id)
          SELECT va, vb, FLOOR(cos*1000000 + 0.5)/1000000 AS cos FROM p
          WHERE cos >= 0.4 ORDER BY va, vb"""
   )
-
-  val oracleSql: Map[String, String] = oracleSqlFor(graft.Stage.GateDir)
 }

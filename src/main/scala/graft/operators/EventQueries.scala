@@ -213,7 +213,7 @@ object EventQueries extends QueryPack {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "q_window_rank" ->
       """SELECT event_id, user_id,
                 CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS rn,

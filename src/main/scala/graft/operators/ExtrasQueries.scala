@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.{QueryPack, Tables}
 import graft.Portable.round2
+import graft.functions.PortableHash
+import graft.functions.expressions.{CmsSketch, KmvSketch}
 import org.apache.spark.sql.functions._
 
 /** Remaining relational surface: pivot/unpivot, HLL sketch, EXISTS and
@@ -527,7 +529,17 @@ object ExtrasQueries extends QueryPack {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  /** The CMS oracles' keys: lineitem's part keys with their counts. */
+  private val cmsPartKeys =
+    "SELECT CAST(l_partkey AS BIGINT) AS k, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM lineitem GROUP BY 1"
+
+  def oracleSqlFor(dataDir: String): Map[String, String] = {
+    val own = ownOracles
+    // The UDAF must rank exactly like the window-function top-k.
+    own + ("q_topk_udaf" -> own("q_topk_per_group"))
+  }
+
+  private def ownOracles: Map[String, String] = Map(
     // Estimator lives only on the Spark side; the contract it must meet
     // (≤5% relative error vs the exact distinct counts) is what's checked.
     "q_hll" ->
@@ -586,24 +598,18 @@ object ExtrasQueries extends QueryPack {
          FROM orders o
          LEFT JOIN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING') c
            ON o.o_custkey = c.c_custkey""",
-    // Full estimate recomputation: counter(i,b) = Σ exact counts of the
-    // keys the portable seeded family sends to bucket b in row i; the
-    // estimate is the min over the key's 4 counters. Width 509 and
-    // depth 4 mirror CmsSketch.DefaultWidth/DefaultDepth.
-    // KMV replay: the k smallest distinct h60 hashes are a window rank,
-    // the estimate an exact HUGEINT floor-division — bit-equal to the
-    // engine's BigInt math. 1152921504606846976 = 2^60, the h60 space.
+    // Full estimate recomputation (CmsSketch.estimateCtesSql): the
+    // portable seeded family replayed bucket by bucket, so the oracle
+    // checks the estimates themselves, not just their bounds.
+    // KMV replay (KmvSketch.rankSql / estimateSql): the k smallest
+    // distinct h60 hashes are a window rank, the estimate an exact
+    // HUGEINT floor-division — bit-equal to the engine's BigInt math.
     "q_kmv_distinct" ->
       s"""WITH keys AS (SELECT DISTINCT l_returnflag AS g, CAST(l_partkey AS VARCHAR) AS k
                         FROM lineitem),
-            dh AS (SELECT DISTINCT g, ${graft.functions.PortableHash.h60Sql("k")} AS h FROM keys),
-            r AS (SELECT g, h, ROW_NUMBER() OVER (PARTITION BY g ORDER BY h) AS rk,
-                         COUNT(*) OVER (PARTITION BY g) AS nd FROM dh),
-            est AS (SELECT g,
-                      CASE WHEN MAX(nd) < 256 THEN CAST(MAX(nd) AS BIGINT)
-                           ELSE CAST(CAST(255 AS HUGEINT) * 1152921504606846976 //
-                                MAX(CASE WHEN rk = 256 THEN h END) AS BIGINT) END AS kmv_est
-                    FROM r GROUP BY g),
+            dh AS (SELECT DISTINCT g, ${PortableHash.h60Sql("k")} AS h FROM keys),
+            r AS (${KmvSketch.rankSql("dh", by = "g")}),
+            est AS (SELECT g, ${KmvSketch.estimateSql} AS kmv_est FROM r GROUP BY g),
             ex AS (SELECT l_returnflag AS g,
                           CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_exact
                    FROM lineitem GROUP BY 1)
@@ -613,37 +619,21 @@ object ExtrasQueries extends QueryPack {
                             substr(o_orderpriority, 1, 1) AS p FROM orders),
             a AS (SELECT DISTINCT k FROM o WHERE p IN ('1','2','3')),
             b AS (SELECT DISTINCT k FROM o WHERE p IN ('3','4','5')),
-            ha AS (SELECT DISTINCT ${graft.functions.PortableHash.h60Sql("k")} AS h FROM a),
-            hb AS (SELECT DISTINCT ${graft.functions.PortableHash.h60Sql("k")} AS h FROM b),
-            ra AS (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rk, COUNT(*) OVER () AS nd FROM ha),
-            rb AS (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rk, COUNT(*) OVER () AS nd FROM hb),
-            ta AS (SELECT CASE WHEN MAX(nd) < 256 THEN 1152921504606846976
-                               ELSE MAX(CASE WHEN rk = 256 THEN h END) END AS th,
-                          CASE WHEN MAX(nd) < 256 THEN CAST(MAX(nd) AS BIGINT)
-                               ELSE CAST(CAST(255 AS HUGEINT) * 1152921504606846976 //
-                                    MAX(CASE WHEN rk = 256 THEN h END) AS BIGINT) END AS a_est
-                   FROM ra),
-            tb AS (SELECT CASE WHEN MAX(nd) < 256 THEN 1152921504606846976
-                               ELSE MAX(CASE WHEN rk = 256 THEN h END) END AS th,
-                          CASE WHEN MAX(nd) < 256 THEN CAST(MAX(nd) AS BIGINT)
-                               ELSE CAST(CAST(255 AS HUGEINT) * 1152921504606846976 //
-                                    MAX(CASE WHEN rk = 256 THEN h END) AS BIGINT) END AS b_est
-                   FROM rb),
+            ha AS (SELECT DISTINCT ${PortableHash.h60Sql("k")} AS h FROM a),
+            hb AS (SELECT DISTINCT ${PortableHash.h60Sql("k")} AS h FROM b),
+            ra AS (${KmvSketch.rankSql("ha")}),
+            rb AS (${KmvSketch.rankSql("hb")}),
+            ta AS (SELECT ${KmvSketch.thetaSql} AS th, ${KmvSketch.estimateSql} AS a_est FROM ra),
+            tb AS (SELECT ${KmvSketch.thetaSql} AS th, ${KmvSketch.estimateSql} AS b_est FROM rb),
             hu AS (SELECT DISTINCT h FROM (SELECT h FROM ha UNION ALL SELECT h FROM hb)),
-            ru AS (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rk, COUNT(*) OVER () AS nd FROM hu),
-            tu AS (SELECT CASE WHEN MAX(nd) < 256 THEN CAST(MAX(nd) AS BIGINT)
-                               ELSE CAST(CAST(255 AS HUGEINT) * 1152921504606846976 //
-                                    MAX(CASE WHEN rk = 256 THEN h END) AS BIGINT) END AS union_est
-                   FROM ru),
+            ru AS (${KmvSketch.rankSql("hu")}),
+            tu AS (SELECT ${KmvSketch.estimateSql} AS union_est FROM ru),
             th AS (SELECT LEAST(ta.th, tb.th) AS th FROM ta, tb),
             m AS (SELECT COUNT(*) AS mm FROM
-                    (SELECT h FROM ra WHERE rk <= 256) x
-                    JOIN (SELECT h FROM rb WHERE rk <= 256) y USING (h)
+                    (SELECT h FROM ra WHERE rk <= ${KmvSketch.DefaultK}) x
+                    JOIN (SELECT h FROM rb WHERE rk <= ${KmvSketch.DefaultK}) y USING (h)
                     CROSS JOIN th WHERE h < th.th),
-            ii AS (SELECT CASE WHEN th.th = 1152921504606846976 THEN CAST(m.mm AS BIGINT)
-                               ELSE CAST(CAST(m.mm AS HUGEINT) * 1152921504606846976 //
-                                    th.th AS BIGINT) END AS inter_est
-                   FROM m, th),
+            ii AS (SELECT ${KmvSketch.intersectSql("m.mm", "th.th")} AS inter_est FROM m, th),
             exa AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_a_exact FROM a),
             exb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_b_exact FROM b),
             exu AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_union_exact FROM
@@ -652,59 +642,23 @@ object ExtrasQueries extends QueryPack {
           SELECT n_a_exact, a_est, n_b_exact, b_est, n_union_exact, union_est,
                  n_inter_exact, inter_est
           FROM exa, exb, exu, exi, ta, tb, tu, ii""",
-    "q_cms_freq" -> {
-      import graft.functions.PortableHash.h60pSql
-      import graft.functions.expressions.CmsSketch
-      s"""WITH keyed AS (
-            SELECT CAST(l_partkey AS BIGINT) AS k, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-            FROM lineitem GROUP BY 1),
-          hashed AS (
-            SELECT k, exact_cnt, seeds.i AS i,
-                   ${CmsSketch.bucketSql(h60pSql("CAST(k AS VARCHAR)"), "seeds.i", 509)} AS b
-            FROM keyed CROSS JOIN range(4) seeds(i)),
-          counters AS (
-            SELECT i, b, SUM(exact_cnt) AS cnt FROM hashed GROUP BY 1, 2),
-          probes AS (
-            SELECT k, exact_cnt FROM keyed ORDER BY exact_cnt DESC, k LIMIT 20),
-          est AS (
-            SELECT h.k, MIN(c.cnt) AS est_cnt
-            FROM hashed h JOIN counters c ON h.i = c.i AND h.b = c.b
-            WHERE h.k IN (SELECT k FROM probes)
-            GROUP BY h.k)
+    "q_cms_freq" ->
+      s"""WITH ${CmsSketch.estimateCtesSql(cmsPartKeys)}
           SELECT p.k, p.exact_cnt, CAST(e.est_cnt AS BIGINT) AS est_cnt,
                  CAST(e.est_cnt - p.exact_cnt AS BIGINT) AS overestimate,
                  e.est_cnt >= p.exact_cnt AS no_underestimate
           FROM probes p JOIN est e ON p.k = e.k
-          ORDER BY p.exact_cnt DESC, p.k"""
-    },
+          ORDER BY p.exact_cnt DESC, p.k""",
     // Merged-partials estimates == single-build estimates (associative
     // counter sums), so the recomputation is the q_cms_freq oracle plus
     // the partial count.
-    "q_cms_merge" -> {
-      import graft.functions.PortableHash.h60pSql
-      import graft.functions.expressions.CmsSketch
-      s"""WITH keyed AS (
-            SELECT CAST(l_partkey AS BIGINT) AS k, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-            FROM lineitem GROUP BY 1),
-          hashed AS (
-            SELECT k, exact_cnt, seeds.i AS i,
-                   ${CmsSketch.bucketSql(h60pSql("CAST(k AS VARCHAR)"), "seeds.i", 509)} AS b
-            FROM keyed CROSS JOIN range(4) seeds(i)),
-          counters AS (
-            SELECT i, b, SUM(exact_cnt) AS cnt FROM hashed GROUP BY 1, 2),
-          probes AS (
-            SELECT k, exact_cnt FROM keyed ORDER BY exact_cnt DESC, k LIMIT 20),
-          est AS (
-            SELECT h.k, MIN(c.cnt) AS est_cnt
-            FROM hashed h JOIN counters c ON h.i = c.i AND h.b = c.b
-            WHERE h.k IN (SELECT k FROM probes)
-            GROUP BY h.k),
+    "q_cms_merge" ->
+      s"""WITH ${CmsSketch.estimateCtesSql(cmsPartKeys)},
           np AS (SELECT CAST(COUNT(DISTINCT l_returnflag) AS BIGINT) AS n_parts
                  FROM lineitem)
           SELECT p.k, p.exact_cnt, CAST(e.est_cnt AS BIGINT) AS est_cnt, np.n_parts
           FROM probes p JOIN est e ON p.k = e.k CROSS JOIN np
-          ORDER BY p.exact_cnt DESC, p.k"""
-    },
+          ORDER BY p.exact_cnt DESC, p.k""",
     "q_approx_topk" ->
       """WITH toks AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
             exact AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks GROUP BY w
@@ -723,14 +677,6 @@ object ExtrasQueries extends QueryPack {
                   WHERE c.c_nationkey = n.n_nationkey
                   ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
          ORDER BY n.n_name, t.o_totalprice DESC, t.o_orderkey""",
-    "q_topk_udaf" ->
-      """SELECT o_orderpriority, rk, FLOOR(price*100 + 0.5)/100 AS price FROM (
-           SELECT o_orderpriority,
-                  CAST(ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                    ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rk,
-                  o_totalprice AS price
-           FROM orders)
-         WHERE rk <= 5 ORDER BY o_orderpriority, rk""",
     "q_pivot" -> {
       val cols = eventTypes.map(t =>
         s"CAST(COUNT(*) FILTER (event_type = '$t') AS BIGINT) AS \"$t\"").mkString(", ")

@@ -68,7 +68,7 @@ object IvfCodebook {
   private val FitVersion = 1
 
   /** The staged codebook parquet for `dataDir` — the oracle CTEs name
-    * this path (see the packs' oracleSqlFor overrides). */
+    * this path (see the packs' `oracleSqlFor`). */
   def stagePath(dataDir: String): String =
     Stage.dir(dataDir, s"ivf_centroids_v$FitVersion")
 

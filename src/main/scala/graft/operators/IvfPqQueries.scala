@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryPack, Tables}
 import graft.Portable.round6
 import graft.functions.PortableHash
+import graft.functions.expressions.DotProduct
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -197,11 +198,6 @@ object IvfPqQueries extends QueryPack {
       .orderBy(col("adc").desc, col("vec_id"))
   }
 
-  private def dot64Sql(a: String, b: String) =
-    s"list_reduce(list_transform(range(64), i -> $a[i + 1] * $b[i + 1]), (x, y) -> x + y)"
-  private def subDotSql(a: String, b: String) =
-    s"list_reduce(list_transform(range(${PqCodebook.SubDim}), i -> $a[i + 1] * $b[i + 1]), (x, y) -> x + y)"
-
   /** Shared CTE chain: IVF assignment (the knnIvfSql rule), residuals,
     * residual codebook from its staged bytes, the argmin-d² encode. */
   private def ivfpqCte(dataDir: String) =
@@ -215,7 +211,7 @@ object IvfPqQueries extends QueryPack {
         asg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
                   SELECT a.vec_id, a.v, a.nrm, c.cid,
                          ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                           ORDER BY ${dot64Sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                           ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                   FROM n a, cent c) WHERE rk = 1),
         res AS (SELECT a.vec_id, a.cluster,
                        list_transform(range(64), i -> a.v[i + 1] - c.w[i + 1]) AS r
@@ -231,7 +227,7 @@ object IvfPqQueries extends QueryPack {
                         list_reduce(list_transform(sub, x -> x * x), (a, b) -> a + b) AS xx
                  FROM subs),
         scored AS (SELECT s.vec_id, s.cluster, s.m, c.cid,
-                          s.xx + c.cc - 2 * ${subDotSql("s.sub", "c.w")} AS d2
+                          s.xx + c.cc - 2 * ${DotProduct.sql("s.sub", "c.w", PqCodebook.SubDim)} AS d2
                    FROM subn s JOIN rcb c ON s.m = c.m),
         codes AS (SELECT vec_id, cluster, m, cid AS code FROM (
                     SELECT vec_id, cluster, m, cid,
@@ -241,16 +237,16 @@ object IvfPqQueries extends QueryPack {
   /** Probe CTEs: probed cells with their dot(q,c) constants, the
     * raw-query residual LUT, celldot-first left-fold ADC. */
   private def ivfpqAdcCte =
-    s"""pc AS (SELECT c.cid AS cluster, ${dot64Sql("a.v", "c.w")} AS celldot
+    s"""pc AS (SELECT c.cid AS cluster, ${DotProduct.sql("a.v", "c.w")} AS celldot
               FROM n a, cent c WHERE a.vec_id = 0
-              ORDER BY ${dot64Sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid
+              ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid
               LIMIT $QueryNprobe),
         qsubs AS (SELECT t.m AS m,
                          list_transform(range(${PqCodebook.SubDim}),
                            i -> v[t.m * ${PqCodebook.SubDim} + i + 1]) AS sub
                   FROM e CROSS JOIN range(${PqCodebook.M}) t(m)
                   WHERE vec_id = 0),
-        lut AS (SELECT s.m, c.cid, ${subDotSql("s.sub", "c.w")} AS part
+        lut AS (SELECT s.m, c.cid, ${DotProduct.sql("s.sub", "c.w", PqCodebook.SubDim)} AS part
                 FROM qsubs s JOIN rcb c ON s.m = c.m),
         parts AS (SELECT k.vec_id, k.cluster, k.m, l.part
                   FROM codes k JOIN pc ON k.cluster = pc.cluster
@@ -262,7 +258,7 @@ object IvfPqQueries extends QueryPack {
                  FROM parts p JOIN pc ON p.cluster = pc.cluster
                  GROUP BY p.vec_id, p.cluster, pc.celldot)"""
 
-  override def oracleSqlFor(dataDir: String): Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "sim_ivfpq_codes" ->
       s"""WITH ${ivfpqCte(dataDir)}
           SELECT cluster, CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n,
@@ -287,11 +283,11 @@ object IvfPqQueries extends QueryPack {
                           LIMIT $RefineShortlist),
             probe AS (SELECT v FROM e WHERE vec_id = 0),
             refined AS (SELECT s.vec_id, s.cluster, s.adc,
-                               FLOOR(${dot64Sql("a.v", "p.v")} * 1000000 + 0.5) / 1000000 AS dq
+                               FLOOR(${DotProduct.sql("a.v", "p.v")} * 1000000 + 0.5) / 1000000 AS dq
                         FROM e a JOIN shortlist s USING (vec_id), probe p
                         ORDER BY dq DESC, s.vec_id LIMIT 10),
             brute AS (SELECT a.vec_id FROM e a, probe p WHERE a.vec_id <> 0
-                      ORDER BY ${dot64Sql("a.v", "p.v")} DESC, a.vec_id LIMIT 10)
+                      ORDER BY ${DotProduct.sql("a.v", "p.v")} DESC, a.vec_id LIMIT 10)
           SELECT CAST(ROW_NUMBER() OVER (ORDER BY dq DESC, vec_id) AS INT) AS rank,
                  vec_id, cluster, adc, dq,
                  vec_id IN (SELECT vec_id FROM brute) AS in_brute
@@ -299,23 +295,6 @@ object IvfPqQueries extends QueryPack {
     "sim_ivfpq_recall" ->
       s"""WITH ${ivfpqCte(dataDir)},
             $ivfpqAdcCte,
-            shortlist AS (SELECT vec_id FROM adcs
-                          ORDER BY FLOOR(adc * 1000000 + 0.5) / 1000000 DESC, vec_id
-                          LIMIT $RerankShortlist),
-            probe AS (SELECT v FROM e WHERE vec_id = 0),
-            reranked AS (SELECT a.vec_id, ${dot64Sql("a.v", "p.v")} AS dq
-                         FROM e a JOIN shortlist USING (vec_id), probe p
-                         ORDER BY dq DESC, a.vec_id LIMIT 10),
-            brute AS (SELECT a.vec_id, ${dot64Sql("a.v", "p.v")} AS dq
-                      FROM e a, probe p WHERE a.vec_id <> 0
-                      ORDER BY dq DESC, a.vec_id LIMIT 10),
-            hitn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit
-                     FROM reranked JOIN brute USING (vec_id))
-          SELECT 10 AS k, n_hit,
-                 FLOOR(n_hit / 10.0 * 1000000 + 0.5) / 1000000 AS recall,
-                 n_hit >= $RecallFloorHits AS recall_ok
-          FROM hitn"""
+            ${PqQueries.rerankRecallSql(RecallFloorHits)}"""
   )
-
-  val oracleSql: Map[String, String] = oracleSqlFor(graft.Stage.GateDir)
 }

@@ -532,7 +532,7 @@ object MaintenanceQueries extends QueryPack {
                CAST(SUM(upd) AS BIGINT) AS n_updated
         FROM merged GROUP BY 1 ORDER BY o_orderpriority"""
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "q_merge_upsert" -> mergeUpsertSql,
     // Shared verbatim: the bucketed snapshot layout must not move a cent.
     "q_merge_upsert_bucketed" -> mergeUpsertSql,

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.QueryPack
 import graft.Portable.round4
-import graft.multimodal.MediaPipeline
+import graft.functions.expressions.DotProduct
+import graft.multimodal.{HammingBands, MediaPipeline}
 import org.apache.spark.sql.functions._
 
 /** Queries over the multimodal (binary media) pipeline.
@@ -971,7 +972,7 @@ object MultimodalQueries extends QueryPack {
                             CAST(SUM(bm * (512*(bi%8) + 32768*(bi//8) + 14624)) - 6144 AS BIGINT) AS moment
                      FROM blk JOIN gm ON blk.id = gm.id GROUP BY blk.id)"""
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     // ASCII text ⇒ byte value == codepoint; windows replicated with list
     // slices over the per-char codes.
     "mm_audio_energy" ->
@@ -1193,7 +1194,7 @@ object MultimodalQueries extends QueryPack {
                  CAST(SUM(${graft.functions.PortableHash.h60pSql("make")}) AS BIGINT) AS make_checksum
           FROM m GROUP BY 1, 2 ORDER BY source, endian""",
     "mm_embed_topk" ->
-      """WITH meta AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS bytes,
+      s"""WITH meta AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS bytes,
                               (strlen(text) % 640) + 16 AS width,
                               ((strlen(text) * 7) % 480) + 16 AS height
                        FROM documents),
@@ -1206,8 +1207,7 @@ object MultimodalQueries extends QueryPack {
                   FROM feat),
             probe AS (SELECT fv AS pv, nrm AS pnrm FROM n WHERE doc_id = 0),
             scored AS (SELECT a.doc_id,
-                              list_reduce(list_transform(range(8), i -> a.fv[i + 1] * p.pv[i + 1]),
-                                          (x, y) -> x + y) / (a.nrm * p.pnrm) AS cos
+                              ${DotProduct.sql("a.fv", "p.pv", 8)} / (a.nrm * p.pnrm) AS cos
                        FROM n a, probe p WHERE a.doc_id <> 0)
           SELECT doc_id, FLOOR(cos*1000000 + 0.5)/1000000 AS cos FROM scored
           ORDER BY cos DESC, doc_id LIMIT 10""",
@@ -1352,8 +1352,6 @@ object MultimodalQueries extends QueryPack {
     * model): per block b, DC = ((id·31 + b·17) mod 128 − 64)
     * dequantized by q(0); AC nonzero on the stride-23 lattice with the
     * ±[1,15] value rule, dequantized by q(u) = 1 + (u·7 + id) mod 16. */
-  // A def, not a val: `oracleSql` (a val declared ABOVE) builds the map
-  // at object init, and a val here would still be null at that point.
   private def jpegCoeffsSql: String =
     """WITH img AS (SELECT doc_id, source,
                              CAST(8 * (1 + (doc_id % 4)) AS BIGINT) AS w,
@@ -1391,6 +1389,118 @@ object MultimodalQueries extends QueryPack {
                 CAST(SUM(p.dc_moment + a.ac_moment) AS BIGINT) AS moment_total
          FROM per p JOIN pera a USING (doc_id)
          GROUP BY p.source ORDER BY p.source"""
+
+  /** The banded candidates of one 64-bit hash table: each row of `from`
+    * (with `cols`, h_hi and h_lo) once per band, `ck` the band, `cv` its
+    * value. */
+  private def bandedSql(cols: String, from: String, bands: Seq[HammingBands.Band]): String =
+    s"""SELECT $cols, h_hi, h_lo, k.range AS ck,
+               ${HammingBands.duckCaseSql(bands, "k.range")} AS cv
+        FROM $from, range(${bands.length}) k"""
+
+  /** Hamming distance of the 64-bit hashes in rows `a` and `b`. */
+  private def hamSql(a: String, b: String): String =
+    s"bit_count(xor($a.h_hi, $b.h_hi)) + bit_count(xor($a.h_lo, $b.h_lo))"
+
+  /** The perceptual-hash dedup audit over the CTE `hash` (id, source,
+    * h_hi, h_lo): band-collided pairs within t = bands − 1 bits (the
+    * t+1-band layouts guarantee recall at t), then per source the image
+    * audit `ia` (its body given: source, n_img, hash_checksum,
+    * moment_sum) left-joined to the pair audit. */
+  private def hammingAuditSql(bands: Seq[HammingBands.Band], ia: String): String =
+    s"""ch AS (${bandedSql("id, source", "hash", bands)}),
+            pr AS (SELECT DISTINCT a.id AS da, b.id AS db, a.source AS src,
+                          ${hamSql("a", "b")} AS ham
+                   FROM ch a JOIN ch b ON a.ck = b.ck AND a.cv = b.cv AND a.id < b.id
+                   WHERE ${hamSql("a", "b")} <= ${bands.length - 1}),
+            ia AS ($ia),
+            pa AS (SELECT src AS source, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+                          CAST(SUM(ham) AS BIGINT) AS hamming_sum,
+                          CAST(SUM(da*31 + db) AS BIGINT) AS pair_checksum
+                   FROM pr GROUP BY src)
+         SELECT ia.source, ia.n_img, ia.hash_checksum, ia.moment_sum,
+                COALESCE(pa.n_pairs, 0) AS n_pairs,
+                COALESCE(pa.hamming_sum, 0) AS hamming_sum,
+                COALESCE(pa.pair_checksum, 0) AS pair_checksum
+         FROM ia LEFT JOIN pa USING (source) ORDER BY ia.source"""
+
+  /** The incremental probe of batch hashes `bhash` against the corpus
+    * hashes `corpus` (both id, h_hi, h_lo): band-collided (corpus, batch)
+    * pairs within t = bands − 1 bits. */
+  private def bandProbeSql(bands: Seq[HammingBands.Band], corpus: String): String =
+    s"""cch AS (${bandedSql("id", corpus, bands)}),
+            bch AS (${bandedSql("id", "bhash", bands)})
+          SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id,
+                 CAST(${hamSql("c", "b")} AS BIGINT) AS ham
+          FROM cch c JOIN bch b ON c.ck = b.ck AND c.cv = b.cv
+          WHERE ${hamSql("c", "b")} <= ${bands.length - 1}
+          ORDER BY batch_id, corpus_id"""
+
+  /** A staged image fixture's closed-form pixel model. `px` are the
+    * per-pixel columns over (i.doc_id, xs.x, ys.y); a palette model
+    * gives them as index `k` and maps k to r, g, b in `rgb`; `tlLuma`
+    * is the integer luma of the top-left pixel over doc_id. */
+  private case class PixelModel(px: String, rgb: Option[String], tlLuma: String)
+
+  /** The BMP/PPM/PNG model: each channel affine in (id, x, y) mod 251. */
+  private val RgbAffine = PixelModel(
+    """(i.doc_id*31 + xs.x*7 + ys.y*13) % 251 AS r,
+       (i.doc_id*31 + xs.x*7 + ys.y*13 + 101) % 251 AS g,
+       (i.doc_id*31 + xs.x*7 + ys.y*13 + 202) % 251 AS b""",
+    None,
+    """(299*((doc_id*31) % 251) + 587*((doc_id*31 + 101) % 251)
+       + 114*((doc_id*31 + 202) % 251)) // 1000""")
+
+  /** The staged-GIF model composed closed-form: palette index
+    * k(x,y) = (id·31 + (x÷5)·7 + y·13) mod 256 (the x÷5 runs are the
+    * KwKwK forcing), channels = three affine rules over k mod 251 —
+    * exactly what the staging wrote through a REAL LZW compressor and
+    * Spark re-derived by decompressing real bytes. */
+  private val GifPalette = PixelModel(
+    "(i.doc_id*31 + (xs.x // 5)*7 + ys.y*13) % 256 AS k",
+    Some("""(k*3 + doc_id) % 251 AS r,
+            (k*5 + doc_id*2) % 251 AS g,
+            (k*7 + doc_id*3) % 251 AS b"""),
+    """(299*((((doc_id*31) % 256)*3 + doc_id) % 251)
+       + 587*((((doc_id*31) % 256)*5 + doc_id*2) % 251)
+       + 114*((((doc_id*31) % 256)*7 + doc_id*3) % 251)) // 1000""")
+
+  /** Per-source pixel totals of the images kept by `keep` (a doc_id
+    * predicate), each `w` × `h` (SQL over doc_id) under `model`: pixel
+    * count, channel sums, the raster-order red moment and the top-left
+    * luma, recomputed from the value model the staging wrote. */
+  private def pixelTotalsSql(w: String, h: String, keep: String, model: PixelModel): String = {
+    val rgb = model.rgb.fold("")(c =>
+      s"""ch AS (SELECT doc_id, source, w, h, x, y,
+                          $c
+                   FROM px),""")
+    s"""WITH img AS (SELECT doc_id, source,
+                             CAST($w AS BIGINT) AS w,
+                             CAST($h AS BIGINT) AS h
+                      FROM documents WHERE $keep),
+            px AS (SELECT i.doc_id, i.source, i.w, i.h, xs.x, ys.y,
+                          ${model.px}
+                   FROM img i,
+                        LATERAL (SELECT unnest(range(i.w)) AS x) xs,
+                        LATERAL (SELECT unnest(range(i.h)) AS y) ys),
+            $rgb
+            per_doc AS (SELECT doc_id, source, MAX(w*h) AS n_px,
+                               SUM(r) AS r_sum, SUM(g) AS g_sum, SUM(b) AS b_sum,
+                               SUM((y*w + x) * r) AS r_moment
+                        FROM ${if (model.rgb.isEmpty) "px" else "ch"} GROUP BY doc_id, source),
+            tl AS (SELECT doc_id,
+                          ${model.tlLuma} AS tl_luma
+                   FROM img)
+         SELECT p.source, CAST(COUNT(*) AS BIGINT) AS n_img,
+                CAST(SUM(p.n_px) AS BIGINT) AS n_px,
+                CAST(SUM(p.r_sum) AS BIGINT) AS r_total,
+                CAST(SUM(p.g_sum) AS BIGINT) AS g_total,
+                CAST(SUM(p.b_sum) AS BIGINT) AS b_total,
+                CAST(SUM(p.r_moment) AS BIGINT) AS moment_total,
+                CAST(SUM(t.tl_luma) AS BIGINT) AS tl_luma_total
+         FROM per_doc p JOIN tl t USING (doc_id)
+         GROUP BY p.source ORDER BY p.source"""
+  }
 
   private def pixelOracles: Map[String, String] = Map(
     // The whole pipeline recomputed closed-form: the shard/sample model
@@ -1464,34 +1574,17 @@ object MultimodalQueries extends QueryPack {
     // and the same per-source audits.
     "mm_ahash_dedup" ->
       s"""WITH $ahashCorpusHashCte,
-            ch AS (SELECT id, source, h_hi, h_lo, k.range AS ck,
-                          ${graft.multimodal.HammingBands.duckCaseSql(graft.multimodal.HammingBands.ahash, "k.range")} AS cv
-                   FROM hash, range(${graft.multimodal.HammingBands.ahash.length}) k),
-            pr AS (SELECT DISTINCT a.id AS da, b.id AS db, a.source AS src,
-                          bit_count(xor(a.h_hi, b.h_hi)) + bit_count(xor(a.h_lo, b.h_lo)) AS ham
-                   FROM ch a JOIN ch b ON a.ck = b.ck AND a.cv = b.cv AND a.id < b.id
-                   WHERE bit_count(xor(a.h_hi, b.h_hi)) + bit_count(xor(a.h_lo, b.h_lo)) <= 8),
-            ia AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_img,
-                          CAST(SUM(h_hi*3 + h_lo*5) AS BIGINT) AS hash_checksum,
-                          CAST(SUM(moment) AS BIGINT) AS moment_sum
-                   FROM hash GROUP BY source),
-            pa AS (SELECT src AS source, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                          CAST(SUM(ham) AS BIGINT) AS hamming_sum,
-                          CAST(SUM(da*31 + db) AS BIGINT) AS pair_checksum
-                   FROM pr GROUP BY src)
-         SELECT ia.source, ia.n_img, ia.hash_checksum, ia.moment_sum,
-                COALESCE(pa.n_pairs, 0) AS n_pairs,
-                COALESCE(pa.hamming_sum, 0) AS hamming_sum,
-                COALESCE(pa.pair_checksum, 0) AS pair_checksum
-         FROM ia LEFT JOIN pa USING (source) ORDER BY ia.source""",
+            ${hammingAuditSql(HammingBands.ahash,
+              "SELECT source, CAST(COUNT(*) AS BIGINT) AS n_img, " +
+                "CAST(SUM(h_hi*3 + h_lo*5) AS BIGINT) AS hash_checksum, " +
+                "CAST(SUM(moment) AS BIGINT) AS moment_sum FROM hash GROUP BY source")}""",
 
     // The ingest gate replayed: corpus hashes from the shared CTE, batch
     // hashes from the BATCH value model (id%10==7: the corpus blocks +
     // variant deltas + one extra ±90 edit on block (fam+4)%64; id%10==4:
     // the transposed-layout base, no deltas), both banded with the same
     // t+1 layout, hamming ≤ 8 on band-collided (corpus, batch) pairs.
-    "mm_ahash_incremental" -> {
-      val bands = graft.multimodal.HammingBands.ahash
+    "mm_ahash_incremental" ->
       s"""WITH $ahashCorpusHashCte,
             bbase AS (SELECT id, b.range AS bi,
                              (((id//4)*37 + bi*11 + (bi*bi)%7) % 200) + 23 AS bb,
@@ -1518,18 +1611,7 @@ object MultimodalQueries extends QueryPack {
                              CAST(SUM(CASE WHEN bi >= 32 AND bm >= gmean
                                            THEN (CAST(1 AS BIGINT) << (63 - bi)) ELSE 0 END) AS BIGINT) AS h_lo
                       FROM bblk JOIN bgm ON bblk.id = bgm.id GROUP BY bblk.id),
-            cch AS (SELECT id, h_hi, h_lo, k.range AS ck,
-                           ${graft.multimodal.HammingBands.duckCaseSql(bands, "k.range")} AS cv
-                    FROM hash, range(${bands.length}) k),
-            bch AS (SELECT id, h_hi, h_lo, k.range AS ck,
-                           ${graft.multimodal.HammingBands.duckCaseSql(bands, "k.range")} AS cv
-                    FROM bhash, range(${bands.length}) k)
-          SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id,
-                 CAST(bit_count(xor(c.h_hi, b.h_hi)) + bit_count(xor(c.h_lo, b.h_lo)) AS BIGINT) AS ham
-          FROM cch c JOIN bch b ON c.ck = b.ck AND c.cv = b.cv
-          WHERE bit_count(xor(c.h_hi, b.h_hi)) + bit_count(xor(c.h_lo, b.h_lo)) <= 8
-          ORDER BY batch_id, corpus_id"""
-    },
+            ${bandProbeSql(HammingBands.ahash, "hash")}""",
 
     // Block means from the photometric model, then the SAME separable
     // integer DCT (dct8Sql is generated from the Dct8 array), median by
@@ -1565,26 +1647,11 @@ object MultimodalQueries extends QueryPack {
                             CAST(SUM(CASE WHEN u*8 + v >= 32 AND c > med
                                           THEN (CAST(1 AS BIGINT) << (63 - (u*8 + v))) ELSE 0 END) AS BIGINT) AS h_lo
                      FROM cf JOIN md ON cf.id = md.id GROUP BY cf.id),
-            ch AS (SELECT id, source, h_hi, h_lo, k.range AS ck,
-                          ${graft.multimodal.HammingBands.duckCaseSql(graft.multimodal.HammingBands.phash, "k.range")} AS cv
-                   FROM hash, range(${graft.multimodal.HammingBands.phash.length}) k),
-            pr AS (SELECT DISTINCT a.id AS da, b.id AS db, a.source AS src,
-                          bit_count(xor(a.h_hi, b.h_hi)) + bit_count(xor(a.h_lo, b.h_lo)) AS ham
-                   FROM ch a JOIN ch b ON a.ck = b.ck AND a.cv = b.cv AND a.id < b.id
-                   WHERE bit_count(xor(a.h_hi, b.h_hi)) + bit_count(xor(a.h_lo, b.h_lo)) <= 6),
-            ia AS (SELECT h.source, CAST(COUNT(*) AS BIGINT) AS n_img,
-                          CAST(SUM(h.h_hi*3 + h.h_lo*5) AS BIGINT) AS hash_checksum,
-                          CAST(SUM(m.moment) AS BIGINT) AS moment_sum
-                   FROM hash h JOIN mo m ON h.id = m.id GROUP BY h.source),
-            pa AS (SELECT src AS source, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                          CAST(SUM(ham) AS BIGINT) AS hamming_sum,
-                          CAST(SUM(da*31 + db) AS BIGINT) AS pair_checksum
-                   FROM pr GROUP BY src)
-         SELECT ia.source, ia.n_img, ia.hash_checksum, ia.moment_sum,
-                COALESCE(pa.n_pairs, 0) AS n_pairs,
-                COALESCE(pa.hamming_sum, 0) AS hamming_sum,
-                COALESCE(pa.pair_checksum, 0) AS pair_checksum
-         FROM ia LEFT JOIN pa USING (source) ORDER BY ia.source"""
+            ${hammingAuditSql(HammingBands.phash,
+              "SELECT h.source, CAST(COUNT(*) AS BIGINT) AS n_img, " +
+                "CAST(SUM(h.h_hi*3 + h.h_lo*5) AS BIGINT) AS hash_checksum, " +
+                "CAST(SUM(m.moment) AS BIGINT) AS moment_sum " +
+                "FROM hash h JOIN mo m ON h.id = m.id GROUP BY h.source")}"""
     },
 
     // The pHash ingest gate replayed: corpus hashes from the photometric
@@ -1594,8 +1661,7 @@ object MultimodalQueries extends QueryPack {
     // transposed-layout base, no variant deltas), both through the same
     // integer-DCT chain and t+1 banding, hamming ≤ 6 on band-collided
     // (corpus, batch) pairs.
-    "mm_phash_incremental" -> {
-      val bands = graft.multimodal.HammingBands.phash
+    "mm_phash_incremental" ->
       s"""WITH cbb AS (SELECT doc_id AS id, b.range AS bi,
                           ((((doc_id//4)*37 + b.range*11 +
                              (((doc_id//4) + b.range)*((doc_id//4) + b.range)) % 97) % 200) + 23) AS pb
@@ -1619,77 +1685,10 @@ object MultimodalQueries extends QueryPack {
                             ELSE tb END AS bm
                      FROM bbb),
             ${phashChainSql("b", "bblk")},
-            cch AS (SELECT id, h_hi, h_lo, k.range AS ck,
-                           ${graft.multimodal.HammingBands.duckCaseSql(bands, "k.range")} AS cv
-                    FROM chash, range(${bands.length}) k),
-            bch AS (SELECT id, h_hi, h_lo, k.range AS ck,
-                           ${graft.multimodal.HammingBands.duckCaseSql(bands, "k.range")} AS cv
-                    FROM bhash, range(${bands.length}) k)
-          SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id,
-                 CAST(bit_count(xor(c.h_hi, b.h_hi)) + bit_count(xor(c.h_lo, b.h_lo)) AS BIGINT) AS ham
-          FROM cch c JOIN bch b ON c.ck = b.ck AND c.cv = b.cv
-          WHERE bit_count(xor(c.h_hi, b.h_hi)) + bit_count(xor(c.h_lo, b.h_lo)) <= 6
-          ORDER BY batch_id, corpus_id"""
-    },
+            ${bandProbeSql(HammingBands.phash, "chash")}""",
 
-    "mm_bmp_pixels" ->
-      """WITH img AS (SELECT doc_id, source,
-                             CAST((doc_id % 13) + 3 AS BIGINT) AS w,
-                             CAST(((doc_id * 3) % 11) + 2 AS BIGINT) AS h
-                      FROM documents WHERE doc_id % 4 = 0),
-            px AS (SELECT i.doc_id, i.source, i.w, i.h, xs.x, ys.y,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13) % 251 AS r,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13 + 101) % 251 AS g,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13 + 202) % 251 AS b
-                   FROM img i,
-                        LATERAL (SELECT unnest(range(i.w)) AS x) xs,
-                        LATERAL (SELECT unnest(range(i.h)) AS y) ys),
-            per_doc AS (SELECT doc_id, source, MAX(w*h) AS n_px,
-                               SUM(r) AS r_sum, SUM(g) AS g_sum, SUM(b) AS b_sum,
-                               SUM((y*w + x) * r) AS r_moment
-                        FROM px GROUP BY doc_id, source),
-            tl AS (SELECT doc_id,
-                          (299*((doc_id*31) % 251) + 587*((doc_id*31 + 101) % 251)
-                           + 114*((doc_id*31 + 202) % 251)) // 1000 AS tl_luma
-                   FROM img)
-         SELECT p.source, CAST(COUNT(*) AS BIGINT) AS n_img,
-                CAST(SUM(p.n_px) AS BIGINT) AS n_px,
-                CAST(SUM(p.r_sum) AS BIGINT) AS r_total,
-                CAST(SUM(p.g_sum) AS BIGINT) AS g_total,
-                CAST(SUM(p.b_sum) AS BIGINT) AS b_total,
-                CAST(SUM(p.r_moment) AS BIGINT) AS moment_total,
-                CAST(SUM(t.tl_luma) AS BIGINT) AS tl_luma_total
-         FROM per_doc p JOIN tl t USING (doc_id)
-         GROUP BY p.source ORDER BY p.source""",
-    "mm_ppm_pixels" ->
-      """WITH img AS (SELECT doc_id, source,
-                             CAST(((doc_id * 5) % 14) + 3 AS BIGINT) AS w,
-                             CAST(((doc_id * 7) % 12) + 2 AS BIGINT) AS h
-                      FROM documents WHERE doc_id % 4 = 2),
-            px AS (SELECT i.doc_id, i.source, i.w, i.h, xs.x, ys.y,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13) % 251 AS r,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13 + 101) % 251 AS g,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13 + 202) % 251 AS b
-                   FROM img i,
-                        LATERAL (SELECT unnest(range(i.w)) AS x) xs,
-                        LATERAL (SELECT unnest(range(i.h)) AS y) ys),
-            per_doc AS (SELECT doc_id, source, MAX(w*h) AS n_px,
-                               SUM(r) AS r_sum, SUM(g) AS g_sum, SUM(b) AS b_sum,
-                               SUM((y*w + x) * r) AS r_moment
-                        FROM px GROUP BY doc_id, source),
-            tl AS (SELECT doc_id,
-                          (299*((doc_id*31) % 251) + 587*((doc_id*31 + 101) % 251)
-                           + 114*((doc_id*31 + 202) % 251)) // 1000 AS tl_luma
-                   FROM img)
-         SELECT p.source, CAST(COUNT(*) AS BIGINT) AS n_img,
-                CAST(SUM(p.n_px) AS BIGINT) AS n_px,
-                CAST(SUM(p.r_sum) AS BIGINT) AS r_total,
-                CAST(SUM(p.g_sum) AS BIGINT) AS g_total,
-                CAST(SUM(p.b_sum) AS BIGINT) AS b_total,
-                CAST(SUM(p.r_moment) AS BIGINT) AS moment_total,
-                CAST(SUM(t.tl_luma) AS BIGINT) AS tl_luma_total
-         FROM per_doc p JOIN tl t USING (doc_id)
-         GROUP BY p.source ORDER BY p.source""",
+    "mm_bmp_pixels" -> pixelTotalsSql("(doc_id % 13) + 3", "((doc_id * 3) % 11) + 2", "doc_id % 4 = 0", RgbAffine),
+    "mm_ppm_pixels" -> pixelTotalsSql("((doc_id * 5) % 14) + 3", "((doc_id * 7) % 12) + 2", "doc_id % 4 = 2", RgbAffine),
     "mm_resize_exec" ->
       """WITH img AS (SELECT doc_id, source,
                              CAST((doc_id % 13) + 3 AS BIGINT) AS w,
@@ -1715,74 +1714,8 @@ object MultimodalQueries extends QueryPack {
                 CAST(SUM(b_s) AS BIGINT) AS thumb_b,
                 CAST(SUM(m_s) AS BIGINT) AS thumb_moment
          FROM per GROUP BY source ORDER BY source""",
-    "mm_png_pixels" ->
-      """WITH img AS (SELECT doc_id, source,
-                             CAST(((doc_id * 3) % 15) + 3 AS BIGINT) AS w,
-                             CAST(((doc_id * 13) % 10) + 2 AS BIGINT) AS h
-                      FROM documents WHERE doc_id % 3 = 0),
-            px AS (SELECT i.doc_id, i.source, i.w, i.h, xs.x, ys.y,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13) % 251 AS r,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13 + 101) % 251 AS g,
-                          (i.doc_id*31 + xs.x*7 + ys.y*13 + 202) % 251 AS b
-                   FROM img i,
-                        LATERAL (SELECT unnest(range(i.w)) AS x) xs,
-                        LATERAL (SELECT unnest(range(i.h)) AS y) ys),
-            per_doc AS (SELECT doc_id, source, MAX(w*h) AS n_px,
-                               SUM(r) AS r_sum, SUM(g) AS g_sum, SUM(b) AS b_sum,
-                               SUM((y*w + x) * r) AS r_moment
-                        FROM px GROUP BY doc_id, source),
-            tl AS (SELECT doc_id,
-                          (299*((doc_id*31) % 251) + 587*((doc_id*31 + 101) % 251)
-                           + 114*((doc_id*31 + 202) % 251)) // 1000 AS tl_luma
-                   FROM img)
-         SELECT p.source, CAST(COUNT(*) AS BIGINT) AS n_img,
-                CAST(SUM(p.n_px) AS BIGINT) AS n_px,
-                CAST(SUM(p.r_sum) AS BIGINT) AS r_total,
-                CAST(SUM(p.g_sum) AS BIGINT) AS g_total,
-                CAST(SUM(p.b_sum) AS BIGINT) AS b_total,
-                CAST(SUM(p.r_moment) AS BIGINT) AS moment_total,
-                CAST(SUM(t.tl_luma) AS BIGINT) AS tl_luma_total
-         FROM per_doc p JOIN tl t USING (doc_id)
-         GROUP BY p.source ORDER BY p.source""",
-    // The staged-GIF pixel model composed closed-form: palette index
-    // k(x,y) = (id·31 + (x÷5)·7 + y·13) mod 256 (the x÷5 runs are the
-    // KwKwK forcing), channels = three affine rules over k mod 251 —
-    // exactly what the staging wrote through a REAL LZW compressor and
-    // Spark re-derived by decompressing real bytes.
-    "mm_gif_pixels" ->
-      """WITH img AS (SELECT doc_id, source,
-                             CAST(((doc_id * 5) % 33) + 8 AS BIGINT) AS w,
-                             CAST(((doc_id * 11) % 25) + 6 AS BIGINT) AS h
-                      FROM documents WHERE doc_id % 3 = 0),
-            px AS (SELECT i.doc_id, i.source, i.w, i.h, xs.x, ys.y,
-                          (i.doc_id*31 + (xs.x // 5)*7 + ys.y*13) % 256 AS k
-                   FROM img i,
-                        LATERAL (SELECT unnest(range(i.w)) AS x) xs,
-                        LATERAL (SELECT unnest(range(i.h)) AS y) ys),
-            ch AS (SELECT doc_id, source, w, h, x, y,
-                          (k*3 + doc_id) % 251 AS r,
-                          (k*5 + doc_id*2) % 251 AS g,
-                          (k*7 + doc_id*3) % 251 AS b
-                   FROM px),
-            per_doc AS (SELECT doc_id, source, MAX(w*h) AS n_px,
-                               SUM(r) AS r_sum, SUM(g) AS g_sum, SUM(b) AS b_sum,
-                               SUM((y*w + x) * r) AS r_moment
-                        FROM ch GROUP BY doc_id, source),
-            tl AS (SELECT doc_id,
-                          (299*((((doc_id*31) % 256)*3 + doc_id) % 251)
-                           + 587*((((doc_id*31) % 256)*5 + doc_id*2) % 251)
-                           + 114*((((doc_id*31) % 256)*7 + doc_id*3) % 251)) // 1000
-                            AS tl_luma
-                   FROM img)
-         SELECT p.source, CAST(COUNT(*) AS BIGINT) AS n_img,
-                CAST(SUM(p.n_px) AS BIGINT) AS n_px,
-                CAST(SUM(p.r_sum) AS BIGINT) AS r_total,
-                CAST(SUM(p.g_sum) AS BIGINT) AS g_total,
-                CAST(SUM(p.b_sum) AS BIGINT) AS b_total,
-                CAST(SUM(p.r_moment) AS BIGINT) AS moment_total,
-                CAST(SUM(t.tl_luma) AS BIGINT) AS tl_luma_total
-         FROM per_doc p JOIN tl t USING (doc_id)
-         GROUP BY p.source ORDER BY p.source""",
+    "mm_png_pixels" -> pixelTotalsSql("((doc_id * 3) % 15) + 3", "((doc_id * 13) % 10) + 2", "doc_id % 3 = 0", RgbAffine),
+    "mm_gif_pixels" -> pixelTotalsSql("((doc_id * 5) % 33) + 8", "((doc_id * 11) % 25) + 6", "doc_id % 3 = 0", GifPalette),
     // The staged-MP4 sample-table model recomputed closed-form: n
     // samples with sizes 100 + (id·13 + i·31) mod 900, a two-run stts
     // (split a = 1 + id mod (n−1)), 1..3 chunk offsets, media timescale

@@ -594,7 +594,7 @@ object PipelineQueries extends QueryPack {
       s"((($xe >> $i) & 1) << ${2 * i}) + ((($ye >> $i) & 1) << ${2 * i + 1})")
       .mkString(" + ")
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "dq_profile" ->
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                 CAST(SUM(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_qty,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryPack, Tables}
 import graft.Portable.round6
 import graft.functions.PortableHash
+import graft.functions.expressions.DotProduct
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,9 +146,6 @@ object PqQueries extends QueryPack {
       .orderBy(col("adc").desc, col("vec_id"))
   }
 
-  private def subDotSql(a: String, b: String) =
-    s"list_reduce(list_transform(range(${PqCodebook.SubDim}), i -> $a[i + 1] * $b[i + 1]), (x, y) -> x + y)"
-
   /** The shared encode CTE chain: codebook read from the staged bytes,
     * vectors sliced into subspaces, d² scored, argmin coded — the SQL
     * twin of [[pqCodes]]. */
@@ -165,7 +163,7 @@ object PqQueries extends QueryPack {
                         list_reduce(list_transform(sub, x -> x * x), (a, b) -> a + b) AS xx
                  FROM subs),
         scored AS (SELECT s.vec_id, s.m, c.cid,
-                          s.xx + c.cc - 2 * ${subDotSql("s.sub", "c.w")} AS d2
+                          s.xx + c.cc - 2 * ${DotProduct.sql("s.sub", "c.w", PqCodebook.SubDim)} AS d2
                    FROM subn s JOIN cb c ON s.m = c.m),
         codes AS (SELECT vec_id, m, cid AS code FROM (
                     SELECT vec_id, m, cid,
@@ -175,7 +173,7 @@ object PqQueries extends QueryPack {
   /** The ADC CTE chain on top of [[pqCte]]: probe LUT, per-vector parts,
     * ascending-m left-fold sum — the SQL twin of sim_pq_adc's plan. */
   private def adcCte =
-    s"""lut AS (SELECT s.m, c.cid, ${subDotSql("s.sub", "c.w")} AS part
+    s"""lut AS (SELECT s.m, c.cid, ${DotProduct.sql("s.sub", "c.w", PqCodebook.SubDim)} AS part
                FROM subn s JOIN cb c ON s.m = c.m WHERE s.vec_id = 0),
         parts AS (SELECT k.vec_id, k.m, l.part
                   FROM codes k JOIN lut l ON k.m = l.m AND k.code = l.cid
@@ -183,7 +181,24 @@ object PqQueries extends QueryPack {
         adcs AS (SELECT vec_id, list_reduce(list(part ORDER BY m), (a, b) -> a + b) AS adc
                  FROM parts GROUP BY vec_id)"""
 
-  override def oracleSqlFor(dataDir: String): Map[String, String] = Map(
+  /** The rerank recall@10 of an ADC ranking, as CTEs over `e` (vec_id,
+    * v) and `adcs` (vec_id, adc): the top RerankShortlist by ADC,
+    * reranked by exact graft_dot to the probe vec_id = 0, against the
+    * exact top-10, scored by [[SimilarityQueries.recallAt10Sql]]. */
+  private[operators] def rerankRecallSql(floorHits: Int): String =
+    s"""shortlist AS (SELECT vec_id FROM adcs
+                          ORDER BY FLOOR(adc * 1000000 + 0.5) / 1000000 DESC, vec_id
+                          LIMIT $RerankShortlist),
+            probe AS (SELECT v FROM e WHERE vec_id = 0),
+            reranked AS (SELECT a.vec_id, ${DotProduct.sql("a.v", "p.v")} AS dq
+                         FROM e a JOIN shortlist USING (vec_id), probe p
+                         ORDER BY dq DESC, a.vec_id LIMIT 10),
+            brute AS (SELECT a.vec_id, ${DotProduct.sql("a.v", "p.v")} AS dq
+                      FROM e a, probe p WHERE a.vec_id <> 0
+                      ORDER BY dq DESC, a.vec_id LIMIT 10),
+            ${SimilarityQueries.recallAt10Sql("reranked", floorHits)}"""
+
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "sim_pq_codes" ->
       s"""WITH ${pqCte(dataDir)}
           SELECT e.label, CAST(COUNT(DISTINCT k.vec_id) AS BIGINT) AS n,
@@ -202,27 +217,6 @@ object PqQueries extends QueryPack {
     "sim_pq_recall" ->
       s"""WITH ${pqCte(dataDir)},
             $adcCte,
-            shortlist AS (SELECT vec_id FROM adcs
-                          ORDER BY FLOOR(adc * 1000000 + 0.5) / 1000000 DESC, vec_id
-                          LIMIT $RerankShortlist),
-            probe AS (SELECT v FROM e WHERE vec_id = 0),
-            reranked AS (SELECT a.vec_id,
-                                list_reduce(list_transform(range(64), i -> a.v[i + 1] * p.v[i + 1]),
-                                  (x, y) -> x + y) AS dq
-                         FROM e a JOIN shortlist USING (vec_id), probe p
-                         ORDER BY dq DESC, a.vec_id LIMIT 10),
-            brute AS (SELECT a.vec_id,
-                             list_reduce(list_transform(range(64), i -> a.v[i + 1] * p.v[i + 1]),
-                               (x, y) -> x + y) AS dq
-                      FROM e a, probe p WHERE a.vec_id <> 0
-                      ORDER BY dq DESC, a.vec_id LIMIT 10),
-            hitn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit
-                     FROM reranked JOIN brute USING (vec_id))
-          SELECT 10 AS k, n_hit,
-                 FLOOR(n_hit / 10.0 * 1000000 + 0.5) / 1000000 AS recall,
-                 n_hit >= $RecallFloorHits AS recall_ok
-          FROM hitn"""
+            ${rerankRecallSql(RecallFloorHits)}"""
   )
-
-  val oracleSql: Map[String, String] = oracleSqlFor(graft.Stage.GateDir)
 }

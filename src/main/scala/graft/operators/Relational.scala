@@ -206,7 +206,7 @@ object Relational extends QueryPack {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "q1_agg" ->
       """SELECT l_returnflag, l_linestatus,
                 FLOOR((SUM(l_quantity))*100 + 0.5)/100 AS sum_qty,

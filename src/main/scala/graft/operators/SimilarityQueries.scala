@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryPack, Tables}
 import graft.Portable.round6
+import graft.functions.expressions.DotProduct
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -383,14 +384,22 @@ object SimilarityQueries extends QueryPack {
                     sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
              FROM e)"""
 
-  private def cosSql(av: String, bv: String) =
-    s"list_reduce(list_transform(range(64), i -> $av[i + 1] * $bv[i + 1]), (x, y) -> x + y)"
-
   /** The learned-codebook CTE: the oracle reads the SAME staged parquet
     * the Spark plans read ([[IvfCodebook.stagePath]]), so both engines see
     * identical centroid bytes — the fit itself is not re-derived in SQL. */
   private[operators] def centSqlCte(dataDir: String) =
     s"cent AS (SELECT cid, w, wnrm FROM read_parquet('${IvfCodebook.stagePath(dataDir)}/*.parquet'))"
+
+  /** The recall@10 answer over the CTEs `approx` and `brute`, each a
+    * top-10 by vec_id: the hit count, the recall, and whether the hits
+    * reach the gate's `floorHits`. */
+  private[operators] def recallAt10Sql(approx: String, floorHits: Int): String =
+    s"""hitn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit
+                     FROM $approx JOIN brute USING (vec_id))
+          SELECT 10 AS k, n_hit,
+                 FLOOR(n_hit / 10.0 * 1000000 + 0.5) / 1000000 AS recall,
+                 n_hit >= $floorHits AS recall_ok
+          FROM hitn"""
 
   private def knnIvfSql(dataDir: String): String =
     s"""WITH $vecsSqlCte,
@@ -398,10 +407,10 @@ object SimilarityQueries extends QueryPack {
             asg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
                       SELECT a.vec_id, a.v, a.nrm, c.cid,
                              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                               ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                               ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                       FROM n a, cent c) WHERE rk = 1),
             pairs AS (SELECT a.vec_id, a.cluster, b.vec_id AS nn_id,
-                             ${cosSql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
+                             ${DotProduct.sql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
                       FROM asg a JOIN asg b
                         ON a.cluster = b.cluster AND a.vec_id <> b.vec_id),
             ranked AS (SELECT vec_id, cluster, nn_id, cos,
@@ -411,11 +420,11 @@ object SimilarityQueries extends QueryPack {
           SELECT vec_id, cluster, nn_id, FLOOR(cos*1000000 + 0.5)/1000000 AS cos
           FROM ranked WHERE rk = 1 ORDER BY vec_id"""
 
-  override def oracleSqlFor(dataDir: String): Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "sim_topk_brute" ->
       s"""WITH $vecsSqlCte,
             probe AS (SELECT v, nrm FROM n WHERE vec_id = 0),
-            scored AS (SELECT a.vec_id, ${cosSql("a.v", "p.v")} / (a.nrm * p.nrm) AS cos
+            scored AS (SELECT a.vec_id, ${DotProduct.sql("a.v", "p.v")} / (a.nrm * p.nrm) AS cos
                        FROM n a, probe p WHERE a.vec_id <> 0)
           SELECT vec_id, FLOOR(cos*1000000 + 0.5)/1000000 AS cos FROM scored
           ORDER BY cos DESC, vec_id LIMIT 10""",
@@ -425,14 +434,14 @@ object SimilarityQueries extends QueryPack {
             asg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
                       SELECT a.vec_id, a.v, a.nrm, c.cid,
                              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                               ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                               ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                       FROM n a, cent c) WHERE rk = 1),
             pc AS (SELECT c.cid AS cluster
                    FROM n a, cent c WHERE a.vec_id = 0
-                   ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid LIMIT $QueryNprobe),
+                   ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid LIMIT $QueryNprobe),
             probe AS (SELECT v AS w, nrm AS wnrm FROM n WHERE vec_id = 0),
             hits AS (SELECT a.vec_id, a.cluster,
-                            ${cosSql("a.v", "p.w")} / (a.nrm * p.wnrm) AS cos
+                            ${DotProduct.sql("a.v", "p.w")} / (a.nrm * p.wnrm) AS cos
                      FROM asg a JOIN pc ON a.cluster = pc.cluster, probe p
                      WHERE a.vec_id <> 0)
           SELECT vec_id, cluster, FLOOR(cos*1000000 + 0.5)/1000000 AS cos FROM hits
@@ -440,7 +449,7 @@ object SimilarityQueries extends QueryPack {
     "sim_knn_join" ->
       s"""WITH $vecsSqlCte,
             pairs AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id,
-                             ${cosSql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
+                             ${DotProduct.sql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
                       FROM n a JOIN n b ON a.vec_id <> b.vec_id),
             ranked AS (SELECT vec_id, nn_id, cos,
                               ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -455,10 +464,10 @@ object SimilarityQueries extends QueryPack {
             asg AS (SELECT vec_id, label, v, nrm, cid AS cluster FROM (
                       SELECT a.vec_id, a.label, a.v, a.nrm, c.cid,
                              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                               ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                               ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                       FROM n a, cent c) WHERE rk = 1),
             pairs AS (SELECT a.vec_id, b.vec_id AS neg_id,
-                             ${cosSql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
+                             ${DotProduct.sql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
                       FROM asg a JOIN asg b
                         ON a.cluster = b.cluster AND a.vec_id <> b.vec_id
                            AND a.label <> b.label),
@@ -483,7 +492,7 @@ object SimilarityQueries extends QueryPack {
             asg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
                       SELECT a.vec_id, a.v, a.nrm, c.cid,
                              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                               ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                               ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                       FROM n a, cent c) WHERE rk = 1),
             bat AS (SELECT vec_id + 1000000 AS vec_id,
                            list_transform(v, x -> -x) AS v, nrm
@@ -491,13 +500,13 @@ object SimilarityQueries extends QueryPack {
             basg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
                        SELECT b.vec_id, b.v, b.nrm, c.cid,
                               ROW_NUMBER() OVER (PARTITION BY b.vec_id
-                                ORDER BY ${cosSql("b.v", "c.w")} / (b.nrm * c.wnrm) DESC, c.cid) AS rk
+                                ORDER BY ${DotProduct.sql("b.v", "c.w")} / (b.nrm * c.wnrm) DESC, c.cid) AS rk
                        FROM bat b, cent c) WHERE rk = 1),
             upd AS (SELECT vec_id, v, nrm, cluster FROM asg
                     UNION ALL
                     SELECT vec_id, v, nrm, cluster FROM basg),
             pairs AS (SELECT p.vec_id AS qid, u.vec_id AS nn_id,
-                             ${cosSql("p.v", "u.v")} / (p.nrm * u.nrm) AS cos
+                             ${DotProduct.sql("p.v", "u.v")} / (p.nrm * u.nrm) AS cos
                       FROM basg p JOIN upd u
                         ON p.cluster = u.cluster AND p.vec_id <> u.vec_id),
             nn AS (SELECT qid, nn_id FROM (
@@ -525,12 +534,12 @@ object SimilarityQueries extends QueryPack {
             ${centSqlCte(dataDir)},
             sc AS (SELECT a.vec_id, a.v, a.nrm, c.cid AS cluster,
                           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                            ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                            ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                    FROM n a, cent c),
             probes AS (SELECT vec_id, v, nrm, cluster FROM sc WHERE rk <= 2),
             asg AS (SELECT vec_id, v, nrm, cluster FROM sc WHERE rk = 1),
             pairs AS (SELECT a.vec_id, b.vec_id AS nn_id,
-                             ${cosSql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
+                             ${DotProduct.sql("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
                       FROM probes a JOIN asg b
                         ON a.cluster = b.cluster AND a.vec_id <> b.vec_id),
             ranked AS (SELECT vec_id, nn_id, cos,
@@ -549,27 +558,22 @@ object SimilarityQueries extends QueryPack {
             asg AS (SELECT vec_id, v, nrm, cid AS cluster FROM (
                       SELECT a.vec_id, a.v, a.nrm, c.cid,
                              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                               ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
+                               ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid) AS rk
                       FROM n a, cent c) WHERE rk = 1),
             pc AS (SELECT c.cid AS cluster
                    FROM n a, cent c WHERE a.vec_id = 0
-                   ORDER BY ${cosSql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid LIMIT $QueryNprobe),
+                   ORDER BY ${DotProduct.sql("a.v", "c.w")} / (a.nrm * c.wnrm) DESC, c.cid LIMIT $QueryNprobe),
             probe AS (SELECT v AS w, nrm AS wnrm FROM n WHERE vec_id = 0),
             ivf AS (SELECT a.vec_id,
-                           ${cosSql("a.v", "p.w")} / (a.nrm * p.wnrm) AS cos
+                           ${DotProduct.sql("a.v", "p.w")} / (a.nrm * p.wnrm) AS cos
                     FROM asg a JOIN pc ON a.cluster = pc.cluster, probe p
                     WHERE a.vec_id <> 0
                     ORDER BY cos DESC, a.vec_id LIMIT 10),
             brute AS (SELECT a.vec_id,
-                             ${cosSql("a.v", "p.w")} / (a.nrm * p.wnrm) AS cos
+                             ${DotProduct.sql("a.v", "p.w")} / (a.nrm * p.wnrm) AS cos
                       FROM n a, probe p WHERE a.vec_id <> 0
                       ORDER BY cos DESC, a.vec_id LIMIT 10),
-            hitn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit
-                     FROM ivf JOIN brute USING (vec_id))
-          SELECT 10 AS k, n_hit,
-                 FLOOR(n_hit / 10.0 * 1000000 + 0.5)/1000000 AS recall,
-                 n_hit >= $RecallFloorHits AS recall_ok
-          FROM hitn""",
+            ${recallAt10Sql("ivf", RecallFloorHits)}""",
     "embed_quantize" ->
       """WITH e AS (SELECT vec_id, label,
                            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -592,6 +596,4 @@ object SimilarityQueries extends QueryPack {
                  FLOOR(MAX(nrm)*1000000 + 0.5)/1000000 AS max_norm
           FROM n GROUP BY label ORDER BY label"""
   )
-
-  val oracleSql: Map[String, String] = oracleSqlFor(graft.Stage.GateDir)
 }

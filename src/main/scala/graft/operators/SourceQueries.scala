@@ -1246,7 +1246,7 @@ object SourceQueries extends QueryPack {
                        FROM shards GROUP BY 1) d USING (site)
         GROUP BY site, d.n_dirs ORDER BY site"""
 
-  override def oracleSqlFor(dataDir: String): Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "warc_ingest" -> warcIngestSql,
     "warc_ingest_live" -> warcIngestSql,
     "warc_gz_ingest" -> warcIngestSql,
@@ -1792,6 +1792,4 @@ object SourceQueries extends QueryPack {
                   "id || ':' || p || ':' || md5(text)")}) AS BIGINT) AS text_checksum
          FROM t GROUP BY source ORDER BY source"""
   )
-
-  val oracleSql: Map[String, String] = oracleSqlFor(Stage.GateDir)
 }

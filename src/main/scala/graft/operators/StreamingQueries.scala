@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.functions.PortableHash
+import graft.functions.expressions.{CmsSketch, KmvSketch}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
@@ -205,7 +207,26 @@ object StreamingQueries extends QueryPack {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  /** Live gates whose run must converge to a batch query's answer, each
+    * with that twin: the live gate's oracle IS the twin's oracle.
+    * Watermark-complete append output equals the full-history aggregate,
+    * dropDuplicatesWithinWatermark keeps every rk = 1 event exactly once,
+    * and the live joins and folds see every event exactly once. */
+  private val LiveTwins: Seq[(String, String)] = Seq(
+    "stream_windowed_live" -> "stream_windowed_counts",
+    "stream_dedup_live" -> "stream_dedup_first",
+    "stream_funnel_live" -> "stream_funnel_join",
+    "stream_sessionized_live" -> "stream_sessionized",
+    "stream_wordcount_live" -> "wordcount",
+    "stream_ewma_live" -> "q_ewma")
+
+  def oracleSqlFor(dataDir: String): Map[String, String] = {
+    val own = ownOracles
+    val batch = own ++ TextQueries.oracleSqlFor(dataDir) ++ EventQueries.oracleSqlFor(dataDir)
+    own ++ LiveTwins.map { case (live, twin) => live -> batch(twin) }
+  }
+
+  private def ownOracles: Map[String, String] = Map(
     // Version 0 = the even-id micro-batch, latest = everything —
     // recomputed from the raw events table; the Spark side earns the
     // same numbers through per-batch atomic commits + log-replayed
@@ -227,27 +248,7 @@ object StreamingQueries extends QueryPack {
                 CAST(COUNT(*) AS BIGINT) AS n,
                 FLOOR(SUM(value)*100 + 0.5)/100 AS total_value
          FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    // The streaming execution must converge to the identical answer: the
-    // oracle is the same batch SQL (watermark-complete append output ≡
-    // the full-history aggregate).
-    "stream_windowed_live" ->
-      """SELECT CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS win_start_sec, event_type,
-                CAST(COUNT(*) AS BIGINT) AS n,
-                FLOOR(SUM(value)*100 + 0.5)/100 AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
     "stream_dedup_first" ->
-      """WITH r AS (SELECT user_id, event_type, ts, event_id,
-                           ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                             ORDER BY ts, event_id) AS rk
-                    FROM events)
-         SELECT user_id, event_type,
-                CAST(FLOOR(epoch(ts)) AS BIGINT) AS first_sec,
-                event_id AS first_event_id
-         FROM r WHERE rk = 1 ORDER BY user_id, event_type""",
-    // The live dropDuplicatesWithinWatermark run must converge to the
-    // identical rk=1 answer (the doctored duplicate is dropped; every
-    // unique event reaches the sink exactly once).
-    "stream_dedup_live" ->
       """WITH r AS (SELECT user_id, event_type, ts, event_id,
                            ROW_NUMBER() OVER (PARTITION BY user_id, event_type
                              ORDER BY ts, event_id) AS rk
@@ -263,36 +264,8 @@ object StreamingQueries extends QueryPack {
          WHERE c.event_type = 'click' AND p.event_type = 'purchase'
            AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE
          ORDER BY click_id, purchase_id""",
-    // The live two-source join must converge to the identical match set.
-    "stream_funnel_live" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id
-         FROM events c JOIN events p ON p.user_id = c.user_id
-         WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-           AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE
-         ORDER BY click_id, purchase_id""",
     // session_window(gap 30min) ≡ gap-based sessions; end = last ts + gap.
     "stream_sessionized" ->
-      """WITH flagged AS (
-           SELECT user_id, ts, event_id, value,
-                  CASE WHEN LAG(ts,1) OVER w IS NULL
-                            OR ts - LAG(ts,1) OVER w >= INTERVAL 30 MINUTE
-                       THEN 1 ELSE 0 END AS new_sess
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         sess AS (
-           SELECT user_id, ts, value,
-                  SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM flagged)
-         SELECT user_id,
-                CAST(FLOOR(epoch(MIN(ts))) AS BIGINT) AS start_sec,
-                CAST(FLOOR(epoch(MAX(ts) + INTERVAL 30 MINUTE)) AS BIGINT) AS end_sec,
-                CAST(COUNT(*) AS BIGINT) AS n_events,
-                FLOOR(SUM(value)*100 + 0.5)/100 AS session_value
-         FROM sess GROUP BY user_id, sid
-         ORDER BY user_id, start_sec""",
-    // The live session_window run (watermark-complete append output) must
-    // converge to the identical gap-based session answer.
-    "stream_sessionized_live" ->
       """WITH flagged AS (
            SELECT user_id, ts, event_id, value,
                   CASE WHEN LAG(ts,1) OVER w IS NULL
@@ -335,62 +308,25 @@ object StreamingQueries extends QueryPack {
     // Full estimate recomputation over the whole event stream (the
     // merged per-batch sketch is byte-equal to a single build), keyed by
     // user_id; n_batches pins the three-slice staging.
-    "stream_cms_live" -> {
-      import graft.functions.PortableHash.h60pSql
-      import graft.functions.expressions.CmsSketch
-      s"""WITH keyed AS (
-            SELECT CAST(user_id AS BIGINT) AS k, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-            FROM events GROUP BY 1),
-          hashed AS (
-            SELECT k, exact_cnt, seeds.i AS i,
-                   ${CmsSketch.bucketSql(h60pSql("CAST(k AS VARCHAR)"), "seeds.i", 509)} AS b
-            FROM keyed CROSS JOIN range(4) seeds(i)),
-          counters AS (
-            SELECT i, b, SUM(exact_cnt) AS cnt FROM hashed GROUP BY 1, 2),
-          probes AS (
-            SELECT k, exact_cnt FROM keyed ORDER BY exact_cnt DESC, k LIMIT 20),
-          est AS (
-            SELECT h.k, MIN(c.cnt) AS est_cnt
-            FROM hashed h JOIN counters c ON h.i = c.i AND h.b = c.b
-            WHERE h.k IN (SELECT k FROM probes)
-            GROUP BY h.k)
+    "stream_cms_live" ->
+      s"""WITH ${CmsSketch.estimateCtesSql(
+            "SELECT CAST(user_id AS BIGINT) AS k, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM events GROUP BY 1")}
           SELECT p.k, p.exact_cnt, CAST(e.est_cnt AS BIGINT) AS est_cnt,
                  e.est_cnt >= p.exact_cnt AS no_underestimate,
                  CAST(3 AS BIGINT) AS n_batches
           FROM probes p JOIN est e ON p.k = e.k
-          ORDER BY p.exact_cnt DESC, p.k"""
-    },
+          ORDER BY p.exact_cnt DESC, p.k""",
     // KMV live: the merged per-batch artifacts are byte-equal to a
     // single build, so the oracle recomputes the ESTIMATE itself from
     // the k-smallest-hash window — a dropped or doubled batch shifts
     // the k-th minimum and hash-fails (stronger than the CMS bound).
-    "stream_kmv_live" -> {
-      import graft.functions.PortableHash.h60Sql
+    "stream_kmv_live" ->
       s"""WITH dk AS (SELECT DISTINCT CAST(event_id AS VARCHAR) AS k FROM events),
-            dh AS (SELECT DISTINCT ${h60Sql("k")} AS h FROM dk),
-            r AS (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rk,
-                         COUNT(*) OVER () AS nd FROM dh),
-            est AS (SELECT CASE WHEN MAX(nd) < 256 THEN CAST(MAX(nd) AS BIGINT)
-                                ELSE CAST(CAST(255 AS HUGEINT) * 1152921504606846976 //
-                                     MAX(CASE WHEN rk = 256 THEN h END) AS BIGINT) END AS kmv_est
-                    FROM r)
+            dh AS (SELECT DISTINCT ${PortableHash.h60Sql("k")} AS h FROM dk),
+            r AS (${KmvSketch.rankSql("dh")}),
+            est AS (SELECT ${KmvSketch.estimateSql} AS kmv_est FROM r)
           SELECT (SELECT CAST(COUNT(DISTINCT event_id) AS BIGINT) FROM events) AS n_exact,
                  kmv_est, CAST(3 AS BIGINT) AS n_batches
           FROM est"""
-    },
-    // The live complete-mode aggregation must converge to the identical
-    // full-corpus count (same oracle as the batch `wordcount` twin).
-    "stream_wordcount_live" ->
-      """SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-         GROUP BY word ORDER BY word""",
-    // The live custom-state fold must converge to the identical batch
-    // recurrence (same oracle as q_ewma).
-    "stream_ewma_live" ->
-      """WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS series
-                    FROM events GROUP BY user_id)
-         SELECT user_id, CAST(len(series) AS INT) AS n_events,
-                FLOOR(list_reduce(series, (acc, x) -> acc*0.5 + x*0.5)*1000000 + 0.5)/1000000 AS ewma
-         FROM s ORDER BY user_id"""
   )
 }

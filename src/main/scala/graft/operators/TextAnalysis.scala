@@ -1339,7 +1339,7 @@ object TextAnalysis extends QueryPack {
         FROM fin GROUP BY 1 ORDER BY n_tokens"""
   }
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     // The staged composed/decomposed forms rebuilt via chr(), normalized
     // by DuckDB's INDEPENDENT nfc_normalize — the two Unicode
     // implementations (ICU-derived vs java.text.Normalizer) must agree

@@ -408,7 +408,7 @@ object TextModelQueries extends QueryPack {
       .orderBy("lang_true", "lang_pred")
   }
 
-  val oracleSql: Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     // The same integer rank/out-of-place arithmetic replayed from
     // scratch: char trigrams, (count DESC, gram ASC) ranks, penalty 30,
     // argmin with the lexicographic tie-break.

@@ -95,7 +95,7 @@ object TextQueries extends QueryPack {
         .orderBy("doc_id"))
   )
 
-  override def oracleSqlFor(dataDir: String): Map[String, String] = Map(
+  def oracleSqlFor(dataDir: String): Map[String, String] = Map(
     "wordcount" ->
       """SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
          FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -120,6 +120,4 @@ object TextQueries extends QueryPack {
                 CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct
          FROM documents ORDER BY doc_id"""
   )
-
-  val oracleSql: Map[String, String] = oracleSqlFor(Stage.GateDir)
 }

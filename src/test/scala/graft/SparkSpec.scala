@@ -49,13 +49,6 @@ object SparkSpec {
   private val warehouse = Files.createTempDirectory("graft-wh").toFile.getAbsolutePath
   sys.addShutdownHook(FileSources.rmTree(warehouse))
 
-  lazy val session: SparkSession = SparkSession.builder()
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The mains' session at 4 cores, with a temp warehouse dir. */
+  lazy val session: SparkSession = LocalSession(4, "spark.sql.warehouse.dir" -> warehouse)
 }
